@@ -328,9 +328,15 @@ def hex_to_long(d: D) -> D:
 def element(idx0: D, values: list) -> D:
     """Pick ``values[idx0]`` (0-based index expr) from a python list.
 
-    Spark: literal array + element_at (1-based) — constant-folded by
-    Catalyst into one array literal.  DuckDB: list literal subscript
-    (1-based).
+    Spark: array + element_at (1-based).  A numeric list is ONE string
+    literal, ``CAST(split('v1,v2,...', ',') AS ARRAY<DOUBLE|BIGINT>)``:
+    the analyzer sees 3 nodes instead of one literal child per value
+    (the 8192-entry N(0,1) table alone was 135 KB of SQL that Catalyst
+    parsed and analyzed on every build), and ConstantFolding turns it
+    into the same array literal at optimize time.  String→DOUBLE casts
+    are correctly rounded, like the literal parser, so every value is
+    bit-identical to the python float.  Other lists (strings, booleans)
+    stay ``array(lit, ...)``.  DuckDB: list literal subscript (1-based).
     """
     if not values:
         raise ValueError("empty value list")
@@ -341,11 +347,16 @@ def element(idx0: D, values: list) -> D:
         # DuckDB infers DECIMAL[] from fixed-point literals; force DOUBLE[]
         # so downstream arithmetic matches Spark's double semantics
         arr_sql = f"CAST({arr_sql} AS DOUBLE[])"
-    def _spark_item(v):
-        if isinstance(v, str):
-            return _spark_sq(v)
-        return _spark_num(v)
-    spark_arr = "array(" + ", ".join(_spark_item(v) for v in values) + ")"
+    if all(isinstance(v, (int, float)) and not isinstance(v, bool)
+           for v in values):
+        # mixed int/float lists widen to DOUBLE, as array() coerces them
+        folded = ",".join(_fmt_num(v) for v in values)
+        spark_arr = (f"CAST(split('{folded}', ',') AS "
+                     f"ARRAY<{'DOUBLE' if has_float else 'BIGINT'}>)")
+    else:
+        spark_arr = "array(" + ", ".join(
+            _spark_sq(v) if isinstance(v, str) else _spark_num(v)
+            for v in values) + ")"
     ds = f"({arr_sql})[CAST(({idx0.s} + 1) AS BIGINT)]"
     if idx0.cf is None:
         return D(None, ds,

@@ -21,13 +21,14 @@ from pyspark.sql import functions as F
 # expression; changing the corpus width means changing it HERE only.
 EMBED_DIM = 64
 
-# Identifier gate for the string fast paths below (r11 ADVICE): the
-# unrolled expressions interpolate column names into SQL text, so a
-# name needing backtick quoting (spaces, hyphens, dots, reserved
-# words) must fall back to the Column path — same results, no parse
-# error, no dotted-name mis-resolution.  Same alphabet io.column_stats
-# enforces.
-_SAFE_IDENT = re.compile(r"[A-Za-z0-9_]+\Z")
+# Identifier gate for the string fast paths below: the unrolled
+# expressions interpolate column names into SQL text, so only plain
+# identifiers (no leading digit, no spaces, hyphens or dots) take them,
+# and they are interpolated backtick-quoted so a reserved word or a
+# paren-less function name (``current_date``) still resolves to the
+# column.  Anything else falls back to the Column path — same results,
+# no parse error, no dotted-name mis-resolution.
+_SAFE_IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
 
 
 def _ident_ok(name) -> bool:
@@ -48,6 +49,7 @@ def dot(a, b):
     # semantics are unchanged for every input.  Column args (and
     # names the identifier gate rejects) keep the fold form.
     if _ident_ok(a) and _ident_ok(b):
+        a, b = f"`{a}`", f"`{b}`"
         unrolled = "CAST(0.0 AS DOUBLE) + " + " + ".join(
             f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
             for i in range(EMBED_DIM))
@@ -86,6 +88,7 @@ def l2_normalize(v):
     # non-EMBED_DIM-dim input, so semantics are unchanged for every
     # input; names the identifier gate rejects keep the Column form.
     if _ident_ok(v):
+        v = f"`{v}`"
         sq = "CAST(0.0 AS DOUBLE) + " + " + ".join(
             f"CAST({v}[{i}] AS DOUBLE) * CAST({v}[{i}] AS DOUBLE)"
             for i in range(EMBED_DIM))
@@ -372,10 +375,11 @@ def quantize_int8(emb: DataFrame, vec_col: str = "embedding",
     # identifier gate rejects (r11 ADVICE) keep the Column build —
     # same aggregates, just slower to construct.
     if _ident_ok(vec_col):
+        q_col = f"`{vec_col}`"
         stats = emb.selectExpr(
-            *[f"min(element_at({vec_col}, {d + 1})) AS mn{d}"
+            *[f"min(element_at({q_col}, {d + 1})) AS mn{d}"
               for d in range(dim)],
-            *[f"max(element_at({vec_col}, {d + 1})) AS mx{d}"
+            *[f"max(element_at({q_col}, {d + 1})) AS mx{d}"
               for d in range(dim)])
     else:
         stats = emb.agg(
@@ -437,13 +441,16 @@ def knn_graph(emb: DataFrame, k: int = 5, bucket_bits: int = 6,
              F.col("v"), bucket_bits, seed)))
     b = _pin(b)
     b.count()
-    l, r = b.alias("l"), b.alias("r")
-    half = (l.join(r, (F.col("l.bucket") == F.col("r.bucket"))
-                   & (F.col("l.vec_id") < F.col("r.vec_id")))
-            .select(F.col("l.vec_id").alias("a"),
-                    F.col("r.vec_id").alias("b"),
-                    F.round(dot("l.v", "r.v"), 6)
-                    .alias("cosine")))
+    # plain column names on both sides, as semantic_dedup does: dot's
+    # unrolled codegen path takes only plain identifiers, and the
+    # alias-qualified "l.v" would demote this hot pair loop to the
+    # interpreted fold
+    l = b.select(F.col("vec_id").alias("a"), F.col("v").alias("va"),
+                 "bucket")
+    r = b.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"),
+                 "bucket")
+    half = (l.join(r, "bucket").filter(F.col("a") < F.col("b"))
+            .select("a", "b", F.round(dot("va", "vb"), 6).alias("cosine")))
     # single-pass symmetric closure: each half-space pair EXPLODES
     # into its two directed edges — the union-of-projections form
     # referenced `half` twice, and Catalyst does not dedupe repeated

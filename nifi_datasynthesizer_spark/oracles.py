@@ -1195,28 +1195,28 @@ def _km_parts(k: int, iters: int, dim: int, fit: bool = False) -> list:
         return (f"list_sum(list_transform(range(1, {dim + 1}), "
                 f"d -> ({xi}[d] - {c}[d]) * ({xi}[d] - {c}[d])))")
 
-    parts = [f"""c0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS j, xi AS c
+    parts = [f"""c0 AS MATERIALIZED (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS j, xi AS c
        FROM (SELECT vec_id, xi FROM x{fj} ORDER BY vec_id LIMIT {k}))"""]
     prev = "c0"
     for i in range(1, iters + 1):
-        parts.append(f"""d{i} AS (SELECT x.vec_id, x.xi, {prev}.j,
+        parts.append(f"""d{i} AS MATERIALIZED (SELECT x.vec_id, x.xi, {prev}.j,
         {dist('x.xi', f'{prev}.c')} AS dist
         FROM x{fj} CROSS JOIN {prev}),
-a{i} AS (SELECT vec_id, xi, j AS cluster FROM (
+a{i} AS MATERIALIZED (SELECT vec_id, xi, j AS cluster FROM (
           SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
                                        ORDER BY dist, j) AS rn FROM d{i})
         WHERE rn = 1),
-s{i} AS (SELECT cluster, r.d, SUM(xi[r.d]) AS sv, COUNT(*) AS cnt
+s{i} AS MATERIALIZED (SELECT cluster, r.d, SUM(xi[r.d]) AS sv, COUNT(*) AS cnt
         FROM a{i} CROSS JOIN range(1, {dim + 1}) r(d)
         GROUP BY cluster, r.d),
-n{i} AS (SELECT cluster AS j,
+n{i} AS MATERIALIZED (SELECT cluster AS j,
                list(CAST(FLOOR(CAST(sv AS DOUBLE) / cnt) AS BIGINT)
                     ORDER BY d) AS c
         FROM s{i} GROUP BY cluster),
-c{i} AS (SELECT {prev}.j, COALESCE(n{i}.c, {prev}.c) AS c
+c{i} AS MATERIALIZED (SELECT {prev}.j, COALESCE(n{i}.c, {prev}.c) AS c
         FROM {prev} LEFT JOIN n{i} ON n{i}.j = {prev}.j)""")
         prev = f"c{i}"
-    parts.append(f"""fin AS (SELECT x.vec_id, {prev}.j,
+    parts.append(f"""fin AS MATERIALIZED (SELECT x.vec_id, {prev}.j,
         {dist('x.xi', f'{prev}.c')} AS dist
         FROM x CROSS JOIN {prev})""")
     return parts
@@ -1230,11 +1230,11 @@ def fit_sample_pred(fit_mod: int) -> str:
 
 
 def _xfit_part(fit_mod: int) -> str:
-    return f"xfit AS (SELECT vec_id FROM x WHERE {fit_sample_pred(fit_mod)})"
+    return f"xfit AS MATERIALIZED (SELECT vec_id FROM x WHERE {fit_sample_pred(fit_mod)})"
 
 
 def _x_part(table: str) -> str:
-    return f"""x AS (SELECT vec_id,
+    return f"""x AS MATERIALIZED (SELECT vec_id,
   list_transform(embedding,
                  v -> CAST(FLOOR(CAST(v AS DOUBLE) * 1000000) AS BIGINT)) AS xi
   FROM {table})"""
@@ -1324,44 +1324,39 @@ def _pq_parts(m: int, k: int, iters: int, dim: int,
         return (f"list_sum(list_transform(range(1, {sub + 1}), "
                 f"d -> ({xi}[d] - {c}[d]) * ({xi}[d] - {c}[d])))")
 
-    parts = [f"""x AS (SELECT vec_id,
-  list_transform(embedding,
-                 v -> CAST(FLOOR(CAST(v AS DOUBLE) * 1000000) AS BIGINT)) AS xi
-  FROM {table})"""]
-    finals = []
+    parts = [_x_part(table)]
     for s in range(m):
         lo, hi = s * sub + 1, (s + 1) * sub
-        parts.append(f"""xs{s} AS (SELECT vec_id, list_slice(xi, {lo}, {hi}) AS xs FROM {src}),
-cb{s}_0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS j,
+        parts.append(f"""xs{s} AS MATERIALIZED (SELECT vec_id, list_slice(xi, {lo}, {hi}) AS xs FROM {src}),
+cb{s}_0 AS MATERIALIZED (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS j,
                    xs AS c
             FROM (SELECT vec_id, xs FROM xs{s}{fj} ORDER BY vec_id LIMIT {k}))""")
         prev = f"cb{s}_0"
         for it in range(1, iters + 1):
-            parts.append(f"""d{s}_{it} AS (SELECT xs{s}.vec_id, xs{s}.xs, {prev}.j,
+            parts.append(f"""d{s}_{it} AS MATERIALIZED (SELECT xs{s}.vec_id, xs{s}.xs, {prev}.j,
         {dist(f'xs{s}.xs', f'{prev}.c')} AS dist
         FROM xs{s}{fj} CROSS JOIN {prev}),
-a{s}_{it} AS (SELECT vec_id, xs, j AS cluster FROM (
+a{s}_{it} AS MATERIALIZED (SELECT vec_id, xs, j AS cluster FROM (
           SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
                                        ORDER BY dist, j) AS rn FROM d{s}_{it})
         WHERE rn = 1),
-s{s}_{it} AS (SELECT cluster, r.d, SUM(xs[r.d]) AS sv, COUNT(*) AS cnt
+s{s}_{it} AS MATERIALIZED (SELECT cluster, r.d, SUM(xs[r.d]) AS sv, COUNT(*) AS cnt
         FROM a{s}_{it} CROSS JOIN range(1, {sub + 1}) r(d)
         GROUP BY cluster, r.d),
-n{s}_{it} AS (SELECT cluster AS j,
+n{s}_{it} AS MATERIALIZED (SELECT cluster AS j,
                list(CAST(FLOOR(CAST(sv AS DOUBLE) / cnt) AS BIGINT)
                     ORDER BY d) AS c
         FROM s{s}_{it} GROUP BY cluster),
-cb{s}_{it} AS (SELECT {prev}.j, COALESCE(n{s}_{it}.c, {prev}.c) AS c
+cb{s}_{it} AS MATERIALIZED (SELECT {prev}.j, COALESCE(n{s}_{it}.c, {prev}.c) AS c
         FROM {prev} LEFT JOIN n{s}_{it} ON n{s}_{it}.j = {prev}.j)""")
             prev = f"cb{s}_{it}"
-        parts.append(f"""f{s} AS (SELECT vec_id, j AS code, dist FROM (
+        parts.append(f"""f{s} AS MATERIALIZED (SELECT vec_id, j AS code, dist FROM (
           SELECT xs{s}.vec_id, {prev}.j,
                  {dist(f'xs{s}.xs', f'{prev}.c')} AS dist,
                  ROW_NUMBER() OVER (PARTITION BY xs{s}.vec_id
                                     ORDER BY {dist(f'xs{s}.xs', f'{prev}.c')},
                                              {prev}.j) AS rn
           FROM xs{s} CROSS JOIN {prev}) WHERE rn = 1)""")
-        finals.append(f"f{s}")
     return parts, sub
 
 
@@ -1449,11 +1444,11 @@ def _ivfpq_chain(queries_pred: str, n_cells: int, n_probe: int, m: int,
         f"d -> (q.xi[{s * sub} + d] - qc.c[{s * sub} + d] - b{s}.c[d]) * "
         f"(q.xi[{s * sub} + d] - qc.c[{s * sub} + d] - b{s}.c[d])))"
         for s in range(m))
-    xres = f"""asg AS (SELECT vec_id, j AS cell FROM (
+    xres = f"""asg AS MATERIALIZED (SELECT vec_id, j AS cell FROM (
           SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
                                        ORDER BY dist, j) AS rn FROM fin)
         WHERE rn = 1),
-xres AS (SELECT x.vec_id,
+xres AS MATERIALIZED (SELECT x.vec_id,
                 list_transform(range(1, {dim + 1}),
                                d -> x.xi[d] - cc.c[d]) AS xi
          FROM x JOIN asg ON asg.vec_id = x.vec_id
@@ -1461,16 +1456,16 @@ xres AS (SELECT x.vec_id,
     parts = ([_x_part(table)]
              + ([_xfit_part(fit_mod)] if fit_mod else [])
              + km + [xres] + pq[1:])
-    parts.append(f"""q AS (SELECT vec_id AS query_id, xi FROM x WHERE {queries_pred}),
-probes AS (SELECT query_id, j AS cell FROM (
+    parts.append(f"""q AS MATERIALIZED (SELECT vec_id AS query_id, xi FROM x WHERE {queries_pred}),
+probes AS MATERIALIZED (SELECT query_id, j AS cell FROM (
              SELECT q.query_id, cc.j,
                     ROW_NUMBER() OVER (
                       PARTITION BY q.query_id
                       ORDER BY {dist('q.xi', 'cc.c', dim)}, cc.j) AS rn
              FROM q CROSS JOIN c{coarse_iters} cc)
            WHERE rn <= {n_probe}),
-codes AS (SELECT f0.vec_id AS cand_id, {code_cols} FROM f0 {joins}),
-scored AS (SELECT q.query_id, codes.cand_id,
+codes AS MATERIALIZED (SELECT f0.vec_id AS cand_id, {code_cols} FROM f0 {joins}),
+scored AS MATERIALIZED (SELECT q.query_id, codes.cand_id,
                   CAST({adc} AS BIGINT) AS adc_q
            FROM q JOIN probes USING (query_id)
                 JOIN c{coarse_iters} qc ON qc.j = probes.cell

@@ -4,10 +4,14 @@ Equivalent of ``SchemaSampler.java`` (reference generators module) and
 the ``DataSynthesizer`` processor: a schema is a JSON array of field
 specs, each with a ``class`` naming a sampler.  We compile the whole
 schema once into flat column expressions over ``spark.range(n)`` —
-generation is then a single narrow stage: no shuffle, no Python, full
-whole-stage codegen, linearly scalable to any row count / executor
-count.  ``duckdb_sql(n)`` returns the exact replay query used for the
-correctness oracle.
+generation is then a single narrow stage: no shuffle, no Python,
+linearly scalable to any row count / executor count.  The stage is
+compiled code, but not always one whole-stage class: a wide schema's
+fused projection can exceed the 8000-byte method size HotSpot will
+JIT-compile, and the session's ``spark.sql.codegen.hugeMethodLimit``
+then sends it to Spark's split, compiled projection instead of the
+bytecode interpreter (see ``session.get_spark``).  ``duckdb_sql(n)``
+returns the exact replay query used for the correctness oracle.
 """
 
 from __future__ import annotations

@@ -7,10 +7,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+# local-mode driver heap: this share of physical RAM, capped — the
+# rest is left to the OS, Python workers and off-heap buffers
+_HEAP_SHARE = 0.6
+_HEAP_CAP_MB = 24 * 1024
+
+
+def _local_heap() -> str:
+    """Default ``local`` driver heap sized from the host, not a fixed
+    24g that a small host cannot back."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(_HEAP_CAP_MB, int(phys * _HEAP_SHARE) >> 20)}m"
+
+
 def get_spark(app: str = "nifi-datasynthesizer-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(cpus)
     b = (SparkSession.builder.appName(app).master(master)
@@ -34,12 +47,12 @@ def get_spark(app: str = "nifi-datasynthesizer-spark",
          # Arrow for every pandas-UDF boundary
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")
          # in local mode the "driver" heap IS the executor heap for
-         # every worker thread — size it for the thread count, not for
-         # a thin cluster driver (8g across 32 threads = 256 MB each,
-         # pure GC pressure on a 128 GiB box)
+         # every worker thread — size it for the host, not for a thin
+         # cluster driver (8g across 32 threads = 256 MB each, pure GC
+         # pressure on a 128 GiB box)
          .config("spark.driver.memory",
                  os.environ.get("SPARK_DRIVER_MEMORY",
-                                "24g" if master.startswith("local")
+                                _local_heap() if master.startswith("local")
                                 else "8g"))
          # every codegen'd stage is a generated class; a long session
          # running ~100 distinct queries fills the JVM's default 240 MB
@@ -56,6 +69,15 @@ def get_spark(app: str = "nifi-datasynthesizer-spark",
          # caches COMPILED CODE keyed on generated source, never data
          # or results, and benefits any long-lived app identically
          .config("spark.sql.codegen.cache.maxEntries", "8192")
+         # HotSpot never JIT-compiles a method over 8000 bytes of
+         # bytecode (DontCompileHugeMethods), so a whole-stage class
+         # with one such method runs interpreted for good.  The basic
+         # generation schema's fused projection has an 8306-8651-byte
+         # method: 2M rows took 12-13 s interpreted vs 1.6-2.1 s on the
+         # split, compiled projection this limit falls back to (local[4]
+         # on a 4-core host, noop sink).  8000 is the value Spark's docs
+         # recommend on HotSpot
+         .config("spark.sql.codegen.hugeMethodLimit", "8000")
          .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)))
     # avro sink: the spark-avro module is external and needs a network
     # fetch at session start.  Opt-in (env var) rather than default:

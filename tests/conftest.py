@@ -12,7 +12,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def spark():
     from nifi_datasynthesizer_spark import get_spark
-    s = get_spark(app="tests", master="local[8]", shuffle_partitions=8)
+    # local[SPARK_GRAFT_CPUS] (default: every core), as many shuffle
+    # partitions
+    s = get_spark(app="tests")
     yield s
     s.stop()
 

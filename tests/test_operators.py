@@ -2070,6 +2070,39 @@ def test_knn_graph_mutual(spark):
     assert max(len(v) for v in per_src.values()) <= 3
 
 
+def test_similarity_identifier_gate(spark):
+    """dot / l2_normalize interpolate column names into SQL only for
+    plain identifiers, backtick-quoted: a leading-digit name ("1col")
+    takes the Column path instead of failing to parse, and a name that
+    is also a paren-less function ("current_date") still resolves to
+    the column.  Both paths give the fold's values."""
+    import math
+
+    from nifi_datasynthesizer_spark.operators import similarity as S
+
+    assert S._ident_ok("current_date") and S._ident_ok("_v1")
+    assert not S._ident_ok("1col") and not S._ident_ok("l.v")
+    a = [float(k % 7) - 3.0 for k in range(S.EMBED_DIM)]
+    b = [0.5 * k for k in range(S.EMBED_DIM)]
+    df = spark.createDataFrame([(a, b), (a[:3], b[:3])],
+                               "`1col` array<double>, "
+                               "current_date array<double>")
+    want = [sum(x * y for x, y in zip(a, b)),
+            sum(x * y for x, y in zip(a[:3], b[:3]))]
+    for x, y in (("1col", "current_date"), ("current_date", "1col")):
+        got = [r[0] for r in df.select(S.dot(x, y)).collect()]
+        assert got == want
+    norm = [r[0] for r in df.select(S.l2_normalize("current_date"))
+            .collect()]
+    n = math.sqrt(sum(v * v for v in b))
+    assert norm[0] == [v / n for v in b]
+    short = df.selectExpr(
+        "0 AS id", "slice(`current_date`, 1, 3) AS `current_date`")
+    rows = S.quantize_int8(short, vec_col="current_date", id_col="id",
+                           dim=3).collect()
+    assert len(rows) == 2
+
+
 def test_streaming_cdc_state_planted(spark):
     """The stateful CDC fold equals the batch struct-max on a planted
     multi-batch changelog (replayed one file per micro-batch)."""

@@ -59,6 +59,82 @@ def test_generation_codegen(spark):
     assert "*(1)" in p or "codegen" in p.lower()
 
 
+def _expr_nodes(plan, skip=lambda e: False):
+    """Yield every expression node of a logical/physical plan, walking
+    over py4j; ``skip(e)`` prunes a subtree below ``e``."""
+    stack = []
+    node = plan
+    while True:
+        ex = node.expressions()
+        stack.extend(ex.apply(k) for k in range(ex.size()))
+        if node.children().size() == 0:
+            break
+        node = node.children().head()
+    while stack:
+        e = stack.pop()
+        yield e
+        if not skip(e):
+            kids = e.children()
+            stack.extend(kids.apply(k) for k in range(kids.size()))
+
+
+def test_generation_plan_has_no_wide_numeric_arrays(spark):
+    """Plan-size tripwire: numeric pick tables (the 8192-entry N(0,1)
+    quantiles, the 4096-entry exponential quantiles, foreign-key
+    tables) reach Catalyst as one folded string literal, not an
+    N-child array(...).  The per-element form cost 1.0-1.5 s of
+    parse + analysis on every build of the basic schema.  String word
+    lists (400-2400 entries) keep their literal array() form by
+    design, so only numeric CreateArrays are bounded here.  The folded
+    literal must also be gone from the optimized plan: a surviving
+    split() would run once per row."""
+    df = compile_schema(entrymod.SYNTH_BASIC_SCHEMA, seed=1).dataframe(
+        spark, 1000)
+    qe = df._jdf.queryExecution()
+
+    def wide(e):
+        return (e.nodeName() == "CreateArray"
+                and e.children().size() > 64)
+
+    analyzed = list(_expr_nodes(qe.analyzed(), skip=wide))
+    numeric = [e.children().size() for e in analyzed
+               if e.nodeName() == "CreateArray"
+               and e.dataType().elementType().typeName() in ("double",
+                                                             "long")]
+    assert max(numeric, default=0) <= 64, (
+        f"numeric array(...) with {max(numeric)} children: the folded "
+        f"literal form of dual.element() was lost")
+    # normal, gamma and foreign-key columns each read a folded table
+    assert sum(e.nodeName() == "StringSplit" for e in analyzed) >= 3
+    assert not any(e.nodeName() == "StringSplit"
+                   for e in _expr_nodes(qe.optimizedPlan(), skip=wide)), \
+        "folded table literal was not constant-folded"
+
+
+def test_generation_stage_is_jit_compilable(spark):
+    """Codegen tripwire: HotSpot never JIT-compiles a method over 8000
+    bytes of bytecode, so a whole-stage class with such a method runs
+    in the bytecode interpreter (the basic schema's fused projection
+    measured 8306-8651 bytes: 12-13 s for 2M rows instead of 2 s).
+    Either the stage's largest method fits, or the session's
+    hugeMethodLimit is below it so Spark falls back to the split,
+    compiled projection."""
+    df = compile_schema(entrymod.SYNTH_BASIC_SCHEMA, seed=1).dataframe(
+        spark, 1000)
+    plan = df._jdf.queryExecution().executedPlan()
+    while not plan.nodeName().startswith("WholeStageCodegen"):
+        assert plan.children().size() > 0, "no whole-stage codegen stage"
+        plan = plan.children().head()
+    gen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    size = gen.CodeGenerator.compile(plan.doCodeGen()._2())._2() \
+        .maxMethodCodeSize()
+    limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
+    assert size <= 8000 or limit < size, (
+        f"largest generated method is {size} bytes (> 8000, never "
+        f"JIT-compiled) and hugeMethodLimit={limit} keeps the stage "
+        f"whole: it would run interpreted")
+
+
 def test_ann_bruteforce_broadcasts_queries(spark):
     df = entrymod.queries()["ann_bruteforce"](spark, SF)
     p = _plan(df)
@@ -842,6 +918,21 @@ def test_r11opt_knn_graph_single_pass(spark):
     assert "Union" not in p, "union-of-projections crept back"
     assert "InMemoryTableScan" in p
     release_caches()
+
+
+def test_knn_graph_dot_takes_unrolled_path(spark):
+    """embed_knn_graph's pair loop scores cosines with similarity.dot
+    over plain column names, so the unrolled EMBED_DIM-term sum (whole-
+    stage codegen) is in the plan.  An alias-qualified name ("l.v")
+    fails dot's identifier gate and silently demotes the loop to the
+    interpreted zip_with/aggregate fold."""
+    import re
+
+    from nifi_datasynthesizer_spark.operators.dedup import release_caches
+    p = _plan(entrymod.queries()["embed_knn_graph"](spark, SF), "extended")
+    release_caches()
+    assert re.search(r"va#\d+\[63\] \* vb#\d+\[63\]", p), \
+        "knn_graph's dot lost the unrolled fast path"
 
 
 def test_r11opt_column_stats_sketch_flat_construction(spark):

@@ -465,3 +465,54 @@ def test_purchase_log_boost_semantics():
                       "SELECT user_id, COUNT(*) AS cnt FROM t GROUP BY user_id)"
                       ).fetchone()[0]
     assert nper > 5
+
+
+def test_element_numeric_tables_round_trip_exact(spark):
+    """Numeric pick tables reach Spark as one folded string literal
+    (``CAST(split('...', ',') AS ARRAY<...>)``).  Every entry read back
+    through the generated column must be the python value bit for bit
+    and of the same type, or the DuckDB mirror (literal list) drifts."""
+    import math
+    import struct
+
+    from nifi_datasynthesizer_spark import dual as X
+    from nifi_datasynthesizer_spark.rng import quantize_weights
+    from nifi_datasynthesizer_spark.samplers import _EXP_QUANTILES, _n01_table
+
+    fk = quantize_weights(list(range(500)),
+                          [math.pow(k + 1.0, -1.0) for k in range(500)],
+                          table_size=4096)
+    assert len(fk) == 4096
+    idx = X.D(None, "id", "id")
+    for values in (_n01_table(), _EXP_QUANTILES, fk):
+        d = X.element(idx, values)
+        assert "split(" in d.ss and "array(" not in d.ss
+        got = dict(spark.range(len(values)).select("id", d.c.alias("v"))
+                   .collect())
+        assert len(got) == len(values)
+        for k, want in enumerate(values):
+            v = got[k]
+            assert type(v) is type(want), (k, v, want)
+            if isinstance(want, float):
+                assert struct.pack(">d", v) == struct.pack(">d", want), \
+                    (k, v, want)
+            else:
+                assert v == want, (k, v, want)
+
+
+def test_element_mixed_and_string_lists(spark):
+    """A mixed int/float list widens to DOUBLE (as array() coerced it);
+    string lists keep the literal array() form."""
+    from nifi_datasynthesizer_spark import dual as X
+
+    idx = X.D(None, "id", "id")
+    mixed = X.element(idx, [1, 2.5, -3, -0.0, 1e300])
+    assert "ARRAY<DOUBLE>" in mixed.ss
+    got = [v for _, v in sorted(spark.range(5).select(
+        "id", mixed.c.alias("v")).collect())]
+    assert got == [1.0, 2.5, -3.0, -0.0, 1e300]
+    assert str(got[3]) == "-0.0"
+    words = X.element(idx, ["a", "b'c", "d\\e"])
+    assert words.ss.startswith("element_at(array(")
+    assert [v for _, v in sorted(spark.range(3).select(
+        "id", words.c.alias("v")).collect())] == ["a", "b'c", "d\\e"]
