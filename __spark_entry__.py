@@ -1288,9 +1288,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the final table equals the batch daily rollup, so the same SQL
         oracle applies."""
         from nifi_datasynthesizer_spark import streaming as ST
-        _ = _t(spark, sf, "events")  # sets read/timezone confs
-        raw = spark.read.parquet(f"{sf}/events.parquet")
-        src = ST.file_stream(spark, sf, raw.schema,
+        raw_schema = IO.table_schema(spark, sf, "events")
+        src = ST.file_stream(spark, sf, raw_schema,
                              glob_filter="events.parquet")
         ev = IO.normalize_event_ts(src)
         agg = ST.windowed_agg(
@@ -1316,9 +1315,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         exactly equal to the gap duration (intervals are half-open), so
         the oracle uses >= where the batch lag-rule query uses >."""
         from nifi_datasynthesizer_spark import streaming as ST
-        _ = _t(spark, sf, "events")  # sets read/timezone confs
-        raw = spark.read.parquet(f"{sf}/events.parquet")
-        src = ST.file_stream(spark, sf, raw.schema,
+        raw_schema = IO.table_schema(spark, sf, "events")
+        src = ST.file_stream(spark, sf, raw_schema,
                              glob_filter="events.parquet")
         ev = IO.normalize_event_ts(src)
         agg = ST.sessionized_agg(
@@ -1346,11 +1344,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         stream-side shuffle before the aggregation.  Values quantize
         to integer cents pre-agg so the sum is exact across engines."""
         from nifi_datasynthesizer_spark import streaming as ST
-        _ = _t(spark, sf, "events")  # sets read/timezone confs
-        raw = spark.read.parquet(f"{sf}/events.parquet")
+        raw_schema = IO.table_schema(spark, sf, "events")
         cust = _t(spark, sf, "customer").select("c_custkey", "c_nationkey")
         n_cust = cust.count()
-        src = ST.file_stream(spark, sf, raw.schema,
+        src = ST.file_stream(spark, sf, raw_schema,
                              glob_filter="events.parquet")
         ev = src.select(
             (F.col("user_id") % F.lit(n_cust) + 1).alias("ck"),
@@ -1373,8 +1370,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the gated output is the surviving digest SET (deterministic);
         the oracle is the batch distinct over the same digest."""
         from nifi_datasynthesizer_spark import streaming as ST
-        raw = spark.read.parquet(f"{sf}/documents.parquet")
-        src = ST.file_stream(spark, sf, raw.schema,
+        raw_schema = IO.table_schema(spark, sf, "documents")
+        src = ST.file_stream(spark, sf, raw_schema,
                              glob_filter="documents.parquet")
         # offset off epoch: a row AT the initial watermark (epoch 0)
         # would be discarded as late before the dedup state sees it
@@ -1402,9 +1399,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         update-mode row per key."""
         from pyspark.sql import Window as W
         from nifi_datasynthesizer_spark import streaming as ST
-        _ = _t(spark, sf, "events")  # sets read/timezone confs
-        raw = spark.read.parquet(f"{sf}/events.parquet")
-        src = ST.file_stream(spark, sf, raw.schema,
+        raw_schema = IO.table_schema(spark, sf, "events")
+        src = ST.file_stream(spark, sf, raw_schema,
                              glob_filter="events.parquet")
         out = ST.key_counts(src, "event_type", "user_id")
         q_ = ST.run_to_memory(out, "stream_topk", output_mode="update")
@@ -1434,9 +1430,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         which is what lets the drained stream carry the batch
         GROUP BY oracle."""
         from nifi_datasynthesizer_spark import streaming as ST
-        _ = _t(spark, sf, "events")  # sets read/timezone confs
-        raw = spark.read.parquet(f"{sf}/events.parquet")
-        src = ST.file_stream(spark, sf, raw.schema,
+        raw_schema = IO.table_schema(spark, sf, "events")
+        src = ST.file_stream(spark, sf, raw_schema,
                              glob_filter="events.parquet")
         out = ST.key_counts_native(src, "event_type", "user_id")
         q_ = ST.run_to_memory(out, "stream_key_counts_native",
@@ -1465,9 +1460,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         row per key per micro-batch — the final state is the row with
         the largest n (n is monotone per key)."""
         from nifi_datasynthesizer_spark import streaming as ST
-        _ = _t(spark, sf, "events")  # sets read/timezone confs
-        raw = spark.read.parquet(f"{sf}/events.parquet")
-        src = ST.file_stream(spark, sf, raw.schema,
+        raw_schema = IO.table_schema(spark, sf, "events")
+        src = ST.file_stream(spark, sf, raw_schema,
                              glob_filter="events.parquet")
         ev = src.select(
             F.col("user_id").cast("string").alias("user_id"),
@@ -1496,9 +1490,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         aggregate), under the same oracle.  Same quantize-to-cents
         exactness contract; same max-n final-state selection."""
         from nifi_datasynthesizer_spark import streaming as ST
-        _ = _t(spark, sf, "events")  # sets read/timezone confs
-        raw = spark.read.parquet(f"{sf}/events.parquet")
-        src = ST.file_stream(spark, sf, raw.schema,
+        raw_schema = IO.table_schema(spark, sf, "events")
+        src = ST.file_stream(spark, sf, raw_schema,
                              glob_filter="events.parquet")
         ev = src.select(
             F.col("user_id").cast("string").alias("user_id"),
@@ -2733,7 +2726,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import tempfile
 
         from nifi_datasynthesizer_spark import streaming as ST
-        raw = spark.read.parquet(f"{sf}/documents.parquet")
+        raw = _t(spark, sf, "documents")
         corpus = raw.filter(F.col("doc_id") % 7 != 0)
         src = (ST.file_stream(spark, sf, raw.schema,
                               glob_filter="documents.parquet")
@@ -3264,9 +3257,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         max-n row per key equals the batch cdc_apply, deletes
         dropped after the drain."""
         from nifi_datasynthesizer_spark import streaming as ST
-        _ = _t(spark, sf, "events")  # sets read/timezone confs
-        raw = spark.read.parquet(f"{sf}/events.parquet")
-        src = ST.file_stream(spark, sf, raw.schema,
+        raw_schema = IO.table_schema(spark, sf, "events")
+        src = ST.file_stream(spark, sf, raw_schema,
                              glob_filter="events.parquet")
         op = (F.when(F.col("event_type") == "error", "delete")
               .when(F.col("event_type") == "signup", "insert")
@@ -3332,15 +3324,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         availableNow — the result set equals the batch interval join,
         so a plain SQL oracle applies."""
         from nifi_datasynthesizer_spark import streaming as ST
-        _ = _t(spark, sf, "events")  # sets read/timezone confs
-        raw = spark.read.parquet(f"{sf}/events.parquet")
+        raw_schema = IO.table_schema(spark, sf, "events")
         views = IO.normalize_event_ts(
-            ST.file_stream(spark, sf, raw.schema,
+            ST.file_stream(spark, sf, raw_schema,
                            glob_filter="events.parquet")) \
             .filter(F.col("event_type") == "view") \
             .select("event_id", "ts", "user_id")
         buys = IO.normalize_event_ts(
-            ST.file_stream(spark, sf, raw.schema,
+            ST.file_stream(spark, sf, raw_schema,
                            glob_filter="events.parquet")) \
             .filter(F.col("event_type") == "purchase") \
             .select("event_id", "ts", "user_id")
@@ -3369,15 +3360,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         (multipleWatermarkPolicy=min); exactly the rows whose state a
         bounded drain evicts (streaming.interval_join docstring)."""
         from nifi_datasynthesizer_spark import streaming as ST
-        _ = _t(spark, sf, "events")
-        raw = spark.read.parquet(f"{sf}/events.parquet")
+        raw_schema = IO.table_schema(spark, sf, "events")
         views = IO.normalize_event_ts(
-            ST.file_stream(spark, sf, raw.schema,
+            ST.file_stream(spark, sf, raw_schema,
                            glob_filter="events.parquet")) \
             .filter(F.col("event_type") == "view") \
             .select("event_id", "ts", "user_id")
         buys = IO.normalize_event_ts(
-            ST.file_stream(spark, sf, raw.schema,
+            ST.file_stream(spark, sf, raw_schema,
                            glob_filter="events.parquet")) \
             .filter(F.col("event_type") == "purchase") \
             .select("event_id", "ts", "user_id")
@@ -3409,15 +3399,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         term, unlike the left rule (the left row must additionally
         age past its whole match window)."""
         from nifi_datasynthesizer_spark import streaming as ST
-        _ = _t(spark, sf, "events")
-        raw = spark.read.parquet(f"{sf}/events.parquet")
+        raw_schema = IO.table_schema(spark, sf, "events")
         views = IO.normalize_event_ts(
-            ST.file_stream(spark, sf, raw.schema,
+            ST.file_stream(spark, sf, raw_schema,
                            glob_filter="events.parquet")) \
             .filter(F.col("event_type") == "view") \
             .select("event_id", "ts", "user_id")
         buys = IO.normalize_event_ts(
-            ST.file_stream(spark, sf, raw.schema,
+            ST.file_stream(spark, sf, raw_schema,
                            glob_filter="events.parquet")) \
             .filter(F.col("event_type") == "purchase") \
             .select("event_id", "ts", "user_id")
@@ -3444,15 +3433,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         written.  State cost is the same one-window-per-key bound as
         the inner join; only the emission timing differs."""
         from nifi_datasynthesizer_spark import streaming as ST
-        _ = _t(spark, sf, "events")
-        raw = spark.read.parquet(f"{sf}/events.parquet")
+        raw_schema = IO.table_schema(spark, sf, "events")
         views = IO.normalize_event_ts(
-            ST.file_stream(spark, sf, raw.schema,
+            ST.file_stream(spark, sf, raw_schema,
                            glob_filter="events.parquet")) \
             .filter(F.col("event_type") == "view") \
             .select("event_id", "ts", "user_id")
         buys = IO.normalize_event_ts(
-            ST.file_stream(spark, sf, raw.schema,
+            ST.file_stream(spark, sf, raw_schema,
                            glob_filter="events.parquet")) \
             .filter(F.col("event_type") == "purchase") \
             .select("event_id", "ts", "user_id")

@@ -8,7 +8,7 @@ balanced at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..phash import h60
@@ -677,6 +677,18 @@ def longest_repeated_span(docs: DataFrame, min_docs: int = 2,
         lo = search_exact(1, lo - 1)
 
 
+def _cut_with_signature(labels: DataFrame):
+    """``_cut_lineage(labels)`` plus the (label sum, row count)
+    convergence signature, read from the checkpoint job itself: the
+    ``observe`` metrics ride the eager localCheckpoint, so no separate
+    ``agg(...).collect()`` (one SQL execution and two jobs) is run."""
+    obs = Observation()
+    cut = _cut_lineage(labels.observe(
+        obs, F.sum("label").alias("s"), F.count("*").alias("n")))
+    m = obs.get
+    return cut, (m["s"], m["n"])
+
+
 def dup_groups(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     """Connected components over near-dup pairs: every document in a
     transitive duplicate cluster gets the cluster's min doc_id as
@@ -690,7 +702,9 @@ def dup_groups(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     (duplicate clusters are shallow — a handful).  Convergence is
     detected from the label-sum, which is strictly decreasing until
     the fixpoint (labels only ever decrease), so the check is a cheap
-    aggregate, not a join-diff.  Each round localCheckpoints its
+    aggregate, not a join-diff, observed on the round's own
+    checkpoint job (``_cut_with_signature``) rather than run as a
+    separate action.  Each round localCheckpoints its
     labels (``_cut_lineage``) — values bit-identical, DATA lineage
     O(1) deep AND the logical plan truncated: the previous
     persist()-per-round form kept the data O(1) but nested every
@@ -727,20 +741,14 @@ def dup_groups(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     # initialize with round 1 for free: label = min(self, neighbors)
     # straight from the edge aggregation (self-loops make min(src)
     # over dst-groups exactly that)
-    labels = _cut_lineage(edges.groupBy(F.col("dst").alias("node"))
-                          .agg(F.min("src").alias("label")))
-    s0 = labels.agg(F.sum("label").alias("s"),
-                    F.count("*").alias("n")).collect()[0]
-    prev_sig = (s0["s"], s0["n"])
+    labels, prev_sig = _cut_with_signature(
+        edges.groupBy(F.col("dst").alias("node"))
+        .agg(F.min("src").alias("label")))
     for _ in range(max_iter):
-        new_labels = _cut_lineage(
+        labels, sig = _cut_with_signature(
             edges.join(labels, edges.src == labels.node)
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("label").alias("label")))
-        labels = new_labels
-        s = new_labels.agg(F.sum("label").alias("s"),
-                           F.count("*").alias("n")).collect()[0]
-        sig = (s["s"], s["n"])
         if sig == prev_sig:
             break
         prev_sig = sig

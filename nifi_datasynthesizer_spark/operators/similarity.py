@@ -245,7 +245,15 @@ def ann_ivf(emb: DataFrame, queries: DataFrame, k: int = 10,
         # order below the round(·,6) quantum, and this path is never the
         # structural-literal-oracle one (entries pin n_centroids=16).
         import numpy as np
-        crows = sorted(cent.collect(), key=lambda r: r.cell)
+        # one row per cell unless vec_id repeats in the corpus; the
+        # limit caps what such a corpus can collect
+        crows = cent.limit(k_cells + 1).collect()
+        if len(crows) > k_cells:
+            raise ValueError(
+                f"ann_ivf: more than {k_cells} centroid rows for "
+                f"{k_cells} cells — vec_id is not unique in the corpus; "
+                f"deduplicate vec_id first")
+        crows = sorted(crows, key=lambda r: r.cell)
         cells_arr = [int(r.cell) for r in crows]
         C = np.asarray([list(r.cv) for r in crows], dtype=np.float64)
 

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -17,6 +18,27 @@ def spark():
     s = get_spark(app="tests")
     yield s
     s.stop()
+
+
+@contextlib.contextmanager
+def job_group(spark, group: str):
+    """Run the block's jobs under ``group`` and yield a function giving
+    the ids of the group's jobs so far (listener bus drained first, so
+    a finished job is always counted)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+
+    def ids() -> set:
+        bus.waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(group))
+
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def compare_with_duckdb(spark_df, sql: str, sf_dir: str | None = None,

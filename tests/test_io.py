@@ -11,9 +11,12 @@ NotImplementedError carries the exact launch flag a user needs.
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 
 from nifi_datasynthesizer_spark import io as nio
+from tests.conftest import SF_DIR, job_group
 
 
 @pytest.fixture()
@@ -1248,3 +1251,71 @@ def test_avro_resolution_of_java_written_file(spark):
                         {"id": -3.0, "renamed": "y", "flag": True}]
     finally:
         _os.unlink(fname)
+
+
+# ------------------------------------------------ read_table schema memo
+
+def test_table_schema_memo_matches_inference(spark):
+    """For every testdata table the remembered schema is the one a
+    fresh inference gives, cold and warm, and a warm events read
+    returns the same rows as an uncached one."""
+    for name in nio.TABLES:
+        path = f"{SF_DIR}/{name}.parquet"
+        for _ in range(2):
+            got = nio.read_table(spark, SF_DIR, name)
+            raw = spark.read.parquet(path)
+            assert nio.table_schema(spark, SF_DIR, name) == raw.schema, name
+            if name == "events":
+                raw = nio.normalize_event_ts(raw)
+            assert got.schema == raw.schema, name
+    warm = nio.read_table(spark, SF_DIR, "events")
+    cold = nio.normalize_event_ts(
+        spark.read.parquet(f"{SF_DIR}/events.parquet"))
+    assert warm.count() > 0
+    assert warm.exceptAll(cold).isEmpty() and cold.exceptAll(warm).isEmpty()
+
+
+def test_read_table_repeat_runs_no_job(spark, tmp_path):
+    """The first read of a table infers its schema with a Spark job; a
+    repeat read of unchanged files, and its raw schema, submit none."""
+    shutil.copy(f"{SF_DIR}/region.parquet", tmp_path / "region.parquet")
+    with job_group(spark, "memo-repeat") as ids:
+        before = ids()
+        first = nio.read_table(spark, str(tmp_path), "region")
+        cold = ids()
+        again = nio.read_table(spark, str(tmp_path), "region")
+        schema = nio.table_schema(spark, str(tmp_path), "region")
+        assert ids() == cold
+    assert cold - before, "the cold read must infer (test is vacuous)"
+    assert again.schema == first.schema == schema
+
+
+def test_read_table_reinfers_on_change(spark, tmp_path):
+    """A table rewritten at the same path with a different schema, or a
+    changed inference conf, is inferred again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    path = tmp_path / "t.parquet"
+    spark.range(3).write.parquet(str(path))
+    assert nio.read_table(spark, str(tmp_path), "t").columns == ["id"]
+    # rewrite without Spark's schema footer, so binaryAsString applies
+    shutil.rmtree(path)
+    path.mkdir()
+    pq.write_table(pa.table({"s": ["0", "1", "2"],
+                             "b": pa.array([b"x", b"y", b"z"], pa.binary())}),
+                   path / "part-0.parquet")
+    back = nio.read_table(spark, str(tmp_path), "t")
+    assert back.columns == ["s", "b"]
+    assert sorted(r.s for r in back.collect()) == ["0", "1", "2"]
+    assert dict(back.dtypes)["b"] == "binary"
+    conf = "spark.sql.parquet.binaryAsString"
+    spark.conf.set(conf, "true")
+    try:
+        assert dict(nio.read_table(spark, str(tmp_path), "t").dtypes)["b"] \
+            == "string"
+        assert nio.table_schema(spark, str(tmp_path), "t")["b"] \
+            .dataType.simpleString() == "string"
+    finally:
+        spark.conf.unset(conf)
+    assert dict(nio.read_table(spark, str(tmp_path), "t").dtypes)["b"] \
+        == "binary"

@@ -481,6 +481,71 @@ def test_dup_groups_transitive(spark):
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
+def test_dup_groups_one_action_per_round(spark, monkeypatch):
+    """Every round's convergence signature rides that round's own
+    localCheckpoint (DataFrame.observe): one SQL execution per lineage
+    cut and no standalone collect, with the same components."""
+    cuts = []
+    real_cut = DD._cut_lineage
+
+    def counting_cut(df):
+        cuts.append(df)
+        return real_cut(df)
+
+    def no_collect(self):
+        raise AssertionError("dup_groups ran a standalone collect")
+
+    pairs = spark.createDataFrame(
+        [(1, 2, 0.9), (2, 3, 0.8), (3, 4, 0.8), (10, 11, 0.7)],
+        ["a", "b", "est_jaccard"])
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = store.executionsCount()
+    monkeypatch.setattr(DD, "_cut_lineage", counting_cut)
+    monkeypatch.setattr(type(pairs), "collect", no_collect)
+    groups = DD.dup_groups(pairs)
+    bus.waitUntilEmpty()
+    n_execs = store.executionsCount() - before
+    monkeypatch.undo()
+    # initial labels plus one round per label change plus the fixpoint
+    # round: the 1-2-3-4 chain needs 2 changing rounds
+    assert len(cuts) == 4
+    assert n_execs == len(cuts)
+    out = {r.doc_id: r.group_id for r in groups.collect()}
+    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    # no rows: the observed signature is (None, 0) and still arrives
+    empty = spark.createDataFrame([], "a long, b long, est_jaccard double")
+    assert DD.dup_groups(empty).collect() == []
+
+
+def test_column_stats_rejects_leading_digit(spark):
+    """The stack() identifier gate is the similarity one: a name with a
+    leading digit is not an identifier and is rejected up front."""
+    from nifi_datasynthesizer_spark.io import column_stats
+    df = spark.createDataFrame([(1, 2)], "`1col` long, _c2 long")
+    with pytest.raises(ValueError, match="identifier"):
+        column_stats(df, ["1col"])
+    assert column_stats(df, ["_c2"]).collect()[0].n_non_null == 1
+
+
+def test_ann_ivf_centroid_collect_is_bounded(spark, monkeypatch):
+    """The Arrow path collects one centroid row per cell; a corpus with
+    repeated vec_ids would ship more, so the collect is capped at
+    k + 1 rows and fails loudly above k."""
+    def vec(i):
+        return [float(((i * 11 + j * 5) % 17) - 8) for j in range(8)]
+
+    # vec_ids 0 and 20 are both centroid ids (stratified over 402 rows)
+    # and appear twice
+    rows = [(i, vec(i)) for i in range(400)] + [(0, vec(1)), (20, vec(2))]
+    emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    qdf = emb.filter(F.col("vec_id") < 3)
+    monkeypatch.setattr(SIM, "_CELL_ASSIGN_LITERAL_MAX", 0)
+    with pytest.raises(ValueError, match="vec_id is not unique"):
+        SIM.ann_ivf(emb, qdf, k=5, n_centroids=20)
+
+
 def test_stratified_centroid_ids():
     ids = SIM.stratified_centroid_ids(2000, 16)
     assert len(ids) == 16 and ids[0] == 0 and max(ids) < 2000

@@ -11,7 +11,7 @@ import io
 import __spark_entry__ as entrymod
 from nifi_datasynthesizer_spark import compile_schema
 
-from tests.conftest import SF_DIR as SF
+from tests.conftest import SF_DIR as SF, job_group
 
 
 def _plan(df, mode: str = "formatted") -> str:
@@ -972,3 +972,37 @@ def test_r11opt_column_stats_sketch_flat_construction(spark):
     # the audited zero-Expand register shape is unchanged
     p = _plan(df)
     assert "Expand" not in p
+
+
+def test_warm_entry_build_runs_no_job(spark):
+    """Building a registry entry again reads its tables through the
+    per-session schema memo: no schema-inference job while building
+    (q5_nation_revenue reads five tables; the other two read one)."""
+    q = entrymod.queries()
+    names = ("q5_nation_revenue", "events_sessionize", "dedup_minhash")
+    for name in names:
+        q[name](spark, SF)
+    with job_group(spark, "warm-build") as ids:
+        for name in names:
+            before = ids()
+            q[name](spark, SF)
+            assert ids() == before, f"{name}: build ran a job"
+
+
+def test_session_turns_off_call_site_capture(spark):
+    """get_spark() turns off PySpark's per-op call-site capture; a
+    runtime error still raises with its class and error condition (it
+    only loses the Python "DataFrame context" lines)."""
+    import pytest
+    from pyspark.errors import ArithmeticException
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get(
+        "spark.python.sql.dataFrameDebugging.enabled") == "false"
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+            spark.range(1).select(F.lit(1) / F.col("id")).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
