@@ -223,299 +223,38 @@ SAMPLE_RATES = {f"src{i}": (100_000 + (i * 45_000) % 900_000) / 1_000_000
 # -------------------------------------------------------------- queries
 
 # The driver's correctness harness oracles exactly the FIRST 50 entries
-# of queries() in dict-insertion order.  Each round the least-recently
-# driver-verified queries rotate to the front so every operator earns a
-# fresh CORRECTNESS row at most two rounds old.  Round-6 window, per
-# the r5 verdict's prescription: this round's NEW queries first
-# (ann_ivfpq_rerank, events_parse_lines, sketch_topk — never
-# driver-checked), then the 18 r3-greens the r5 cutoff displaced, then
-# the four r5 greens whose RESULTS changed this round (the PQ family
-# now fits its codebooks on a deterministic hash sample), then the
-# oldest r4 greens up to the 50-slot budget.  The leftover r4 greens
-# (events_ewma..synth_weblog, listed in the tail) lead the r7 window;
-# the r5-window queries are freshest and go last via registry order.
-# Wave 3 (same round, later session): each new operator displaces the
-# youngest r4 green from the head — a never-driver-checked query beats
-# a 2-round-old row; the displaced r4 greens lead the tail (r7 queue).
-# Round-7 window, per the r6 verdict's prescription ("freeze new
-# operators, drain the backlog"): one results-changed query first
-# (ann_pq_rerank's entry shortlist is raised 4 -> 8 this round, so its
-# r6 row no longer describes its output), then the 30 late-r6
-# operators that have never earned a driver CORRECTNESS row (exactly
-# the never-driver-checked set the verdict enumerates, in the order
-# the r6 tail declared), then the oldest r4-stale greens up to the
-# 50-slot budget.  After this round the never-driver-checked set is
-# empty and every remaining stale green is queued in _WINDOW_R7_TAIL
-# for r8.
-_WINDOW_R7_HEAD = [
-    # results changed this round — re-verify, not coast: ann_pq_rerank
-    # raised its entry shortlist 4 -> 8; dedup_ngram_jaccard moved to
-    # corpus-scaled three-token blocking (the scale-study fix), and
-    # dedup_agreement composes it
-    "ann_pq_rerank", "dedup_ngram_jaccard", "dedup_agreement",
-    # r6 waves 3-5 overflow — never driver-checked (verdict item #1)
-    "corpus_upsample", "ann_recall_eval", "media_phash_dedup",
-    "text_readability", "corpus_dedup_report", "events_rfm",
-    "graph_label_prop", "io_zorder", "dedup_minhash_eval",
-    "io_schema_evolution", "io_compaction", "events_histogram",
-    "corpus_weighted_sample", "corpus_interleave", "ann_filtered",
-    "dedup_threshold_sweep", "text_quality_calibration",
-    "corpus_span_corruption", "corpus_fim", "events_markov_stationary",
-    "embed_group_drift", "embed_outliers", "events_funnel_windowed",
-    "events_cohort_ltv", "corpus_tokenizer_fertility", "corpus_build",
-    "ann_lsh_multiprobe", "text_langid_eval", "events_ab_assign",
-    "sketch_cms_eval",
-    # oldest r4-stale greens, in the order the r6 tail queued them
-    "dedup_fuzzy", "embed_pca", "text_keywords", "dedup_spans",
-    "text_classify", "text_fluency", "embed_quantize", "text_bm25",
-    "search_rrf", "text_chunks", "text_repetition", "text_pii_scrub",
-    "corpus_sample", "corpus_sample_k", "corpus_decontaminate",
-    "corpus_ngrams", "corpus_shuffle",
-]
-# r4-stale greens that did not fit the 50-slot budget — lead the r8
-# window; r5/r6-green queries are fresher and follow in registry order
-_WINDOW_R7_TAIL = [
-    "corpus_split", "events_sessionize",
-    "events_funnel", "events_ohlc", "events_anomaly", "events_scd2",
-    "events_ewma", "events_gap_fill", "events_rolling", "events_pivot",
-    "events_rollup", "events_cube", "sketch_distinct",
-    "sketch_heavy_hitters", "sketch_merge", "sketch_bloom",
-    "sketch_quantiles", "graph_pagerank", "graph_triangles", "geo_near",
-    "media_features", "media_dedup", "io_roundtrip",
-    "io_signature_store", "streaming_stream_join",
-    "streaming_dedup_cross", "synth_commuter", "synth_weblog",
-]
-assert len(_WINDOW_R7_HEAD) == 50, len(_WINDOW_R7_HEAD)
-assert len(set(_WINDOW_R7_HEAD)) == 50, "duplicate in window head"
-_WINDOW_R7 = _WINDOW_R7_HEAD + _WINDOW_R7_TAIL
-assert len(set(_WINDOW_R7)) == len(_WINDOW_R7), "duplicate in window"
-
-# Round-8 window, per the r7 verdict's prescription: the freeze lifts
-# at window-slack rate — SIX new/changed entries lead (all six
-# pre-validated against DuckDB at sf0.01 AND sf0.1 before this window
-# was declared): streaming_running_totals' entry migrated to the
-# native streaming aggregate (results identical, implementation
-# changed → re-verify, not coast), its applyInPandasWithState twin
-# kept as the custom-state template, the io_rowgroup_audit layout
-# governance operator, and the three derived-config twins that close
-# the r7 verdict's pinned-vs-production gap (dedup_embedding derived
-# bits, ann_ivf derived √n cells, ann_ivf through the >64-cell Arrow
-# assignment kernel).  Then the 28 r4-stale greens _WINDOW_R7_TAIL
-# queued, then the oldest r5 greens to the 50-slot budget.  The
-# remaining r5 greens queue in _WINDOW_R8_TAIL to lead r9.
-_WINDOW_R8_HEAD = [
-    # new/changed this round — never driver-checked (or impl changed)
-    "streaming_running_totals", "streaming_running_totals_pandas",
-    "io_rowgroup_audit", "dedup_embedding_derived",
-    "ann_ivf_derived", "ann_ivf_arrow",
-    # the 28 r4-stale greens, in the order the r7 tail queued them
-    *_WINDOW_R7_TAIL,
-    # oldest r5 greens, registry order, to the 50-slot budget
-    "q1_pricing_summary", "q3_top_orders", "q5_nation_revenue",
-    "events_daily", "events_retention", "events_asof_balance",
+# of queries() in dict-insertion order, so _rotate moves these names to
+# the front: the first 50 are the driver-checked head, the rest lead
+# the next window.  `python scripts/verification_age.py --summary`
+# prints the next head from the CORRECTNESS_r*.json artifacts.
+_WINDOW = [
+    "text_bm25", "corpus_ngrams", "dedup_spans", "text_pii_scrub",
+    "corpus_build", "media_phash_dedup", "graph_label_prop",
+    "text_keywords", "text_fluency", "text_classify",
+    "corpus_tokenizer_fertility", "embed_quantize", "search_rrf",
+    "events_funnel_windowed", "q1_pricing_summary", "q3_top_orders",
+    "q5_nation_revenue", "io_rowgroup_audit", "events_daily",
+    "events_sessionize", "events_retention", "events_asof_balance",
     "events_range_windows", "events_salted_join", "media_resize",
     "streaming_events_daily", "streaming_sessionize",
     "streaming_enrich_nation", "streaming_dedup_docs",
+    "streaming_running_totals", "streaming_running_totals_pandas",
     "synth_basic", "synth_identifiers", "synth_phone_numbers",
-]
-# r5 greens that did not fit the 50-slot budget — lead the r9 window;
-# r6/r7-green queries are fresher and follow in registry order
-_WINDOW_R8_TAIL = [
-    "synth_text_messages", "synth_text_blocks", "remove_path",
-    "synth_markov_text", "synth_markov_sms", "synth_exotic_nested",
-    "synth_vehicle_commuter", "synth_net", "synth_purchases",
-    "synth_weblog_lines", "dedup_minhash", "dedup_groups",
-    "dedup_cross", "dedup_containment", "ann_ivf", "text_embed",
-    "corpus_stats", "corpus_bpe", "corpus_pack", "corpus_mix",
-    "corpus_clean", "media_frames", "text_oov",
-    "text_train_classifier", "corpus_split_groups", "corpus_tokenize",
-    "corpus_dsir", "sketch_hll", "sketch_kmv", "events_transitions",
-]
-assert len(_WINDOW_R8_HEAD) == 50, len(_WINDOW_R8_HEAD)
-assert len(set(_WINDOW_R8_HEAD)) == 50, "duplicate in window head"
-_WINDOW_R8 = _WINDOW_R8_HEAD + _WINDOW_R8_TAIL
-assert len(set(_WINDOW_R8)) == len(_WINDOW_R8), "duplicate in window"
-
-# Round-9 window, per the r8 verdict's prescription: ELEVEN new/
-# changed entries lead (all pre-validated against DuckDB at sf0.01
-# before this window was declared) — the two embedding-dedup entries
-# re-verify because their inputs changed (planted near-dup pairs +
-# the non-floor derive_div=1 derivation, closing r8 "What's wrong"
-# #1), then the nine operators registered this round (ann_ivf_
-# two_level puts the k>>10^4 escape hatch itself under the gate —
-# verdict item 3; streaming_key_counts_native and io_rowgroup_summary
-# are the verdict-item-4 candidates; the rest are production-shaped
-# additions at slack rate).  Then the 30 r5-stale greens
-# _WINDOW_R8_TAIL queued, then the oldest r6 greens to the 50-slot
-# budget.  After this round no query's last driver green predates r6
-# (verdict item 2); the remaining r6 greens queue in _WINDOW_R9_TAIL
-# to lead r10.
-_WINDOW_R9_HEAD = [
-    # new/changed this round — never driver-checked (or input changed)
-    "dedup_embedding", "dedup_embedding_derived", "ann_ivf_two_level",
-    "ann_range_search", "text_boilerplate", "graph_kcore",
-    "geo_grid_density", "io_column_stats", "io_rowgroup_summary",
-    "events_ab_metrics", "streaming_key_counts_native",
-    # the 30 r5-stale greens, in the order the r8 tail queued them
-    *_WINDOW_R8_TAIL,
-    # oldest r6 greens, registry order, to the 50-slot budget
-    "q6_forecast_revenue", "io_bucketed_join", "corpus_filter_report",
-    "io_partition_prune", "events_wau", "streaming_topk",
-    "synth_transactions", "synth_iot", "synth_exotic_scalar",
-]
-# r6 greens that did not fit the 50-slot budget — lead the r10
-# window; r7/r8/r9-green queries are fresher and follow in registry
-# order
-_WINDOW_R9_TAIL = [
-    "synth_registry", "synth_cpoc", "synth_correlate",
-    "synth_correlate_pair", "dedup_exact", "dedup_exact_keep",
-    "dedup_simhash", "ann_bruteforce", "ann_lsh", "text_langid",
-    "text_quality", "text_tokens", "text_fingerprint", "text_entropy",
-    "embed_cluster", "dedup_semantic", "embed_pq", "ann_pq",
-    "ann_ivfpq", "ann_ivfpq_rerank", "corpus_diff", "corpus_balance",
-    "corpus_pack_pairs", "media_segments", "sketch_topk",
-    "events_parse_lines", "events_cdc_apply", "events_attribution",
-    "corpus_token_budget", "corpus_overlap", "graph_components",
-    "events_sequences", "sketch_ams", "corpus_curriculum",
-    "events_dwell", "embed_knn_graph", "streaming_cdc_apply",
-]
-assert len(_WINDOW_R9_HEAD) == 50, len(_WINDOW_R9_HEAD)
-assert len(set(_WINDOW_R9_HEAD)) == 50, "duplicate in window head"
-_WINDOW_R9 = _WINDOW_R9_HEAD + _WINDOW_R9_TAIL
-assert len(set(_WINDOW_R9)) == len(_WINDOW_R9), "duplicate in window"
-
-# Round-10 window, per the r9 verdict's prescription: THIRTEEN new/
-# changed entries lead (all pre-validated against DuckDB at sf0.001
-# and sf0.01 before this window was declared) — the ten operators
-# registered this round (streaming_stream_join_left and the
-# dedup_substring inventory+strip pair are verdict items 3a/3b,
-# synth_commuter_digest is verdict item 4, io_column_stats_sketch is
-# "What's wrong" #3), then the three whose implementation or oracle
-# changed this round (io_column_stats: identifier validation + the
-# ndv-mode refactor; dedup_embedding_derived: oracle max_bits 16→24
-# per r9 ADVICE; io_roundtrip: the avro_io namespace-resolution fixes
-# sit under it).  Then the 37 r6-stale greens _WINDOW_R9_TAIL queued,
-# filling the 50-slot budget exactly.  After this round no query's
-# last driver green predates r7 (verdict item 1); the remaining r7
-# greens queue in _WINDOW_R10_TAIL to lead r11.
-_WINDOW_R10_HEAD = [
-    # new this round — never driver-checked
-    "streaming_stream_join_left", "dedup_substring",
-    "dedup_substring_strip", "synth_commuter_digest", "text_ngram_lm",
-    "events_ab_srm", "graph_jaccard", "dedup_url", "q4_order_priority",
-    "io_column_stats_sketch",
-    # changed implementation/oracle this round — re-verify
-    "io_column_stats", "dedup_embedding_derived", "io_roundtrip",
-    # the 37 r6-stale greens, in the order the r9 tail queued them
-    *_WINDOW_R9_TAIL,
-]
-# r7 greens that did not fit the 50-slot budget — lead the r11
-# window; r8/r9/r10-green queries are fresher and follow in registry
-# order
-_WINDOW_R10_TAIL = [
-    "io_zorder", "io_schema_evolution", "io_compaction", "events_histogram",
-    "events_markov_stationary", "sketch_cms_eval", "events_ab_assign",
-    "events_cohort_ltv", "events_rfm", "corpus_upsample",
-    "dedup_ngram_jaccard", "dedup_agreement", "dedup_threshold_sweep",
-    "dedup_minhash_eval", "corpus_interleave", "corpus_span_corruption",
-    "corpus_fim", "corpus_weighted_sample", "corpus_dedup_report",
-    "dedup_fuzzy", "ann_lsh_multiprobe", "ann_filtered",
-    "embed_group_drift", "embed_outliers", "ann_recall_eval",
-    "text_langid_eval", "text_readability", "text_quality_calibration",
-    "corpus_sample", "corpus_sample_k", "corpus_decontaminate",
-    "text_chunks", "text_repetition", "corpus_shuffle", "ann_pq_rerank",
-    "embed_pca", "text_bm25", "corpus_ngrams", "dedup_spans",
-    "text_pii_scrub", "corpus_build", "media_phash_dedup",
-    "graph_label_prop", "text_keywords", "text_fluency", "text_classify",
-    "corpus_tokenizer_fertility", "embed_quantize", "search_rrf",
-    "events_funnel_windowed",
-]
-assert len(_WINDOW_R10_HEAD) == 50, len(_WINDOW_R10_HEAD)
-assert len(set(_WINDOW_R10_HEAD)) == 50, "duplicate in window head"
-_WINDOW_R10 = _WINDOW_R10_HEAD + _WINDOW_R10_TAIL
-assert len(set(_WINDOW_R10)) == len(_WINDOW_R10), "duplicate in window"
-
-
-# Round-11 window.  The r10 verdict gives two instructions that are
-# arithmetically incompatible at this round's lift rate: "drain all 49
-# r7-stale greens so the floor moves to r8" AND "keep lifting the
-# freeze at ~10-13 production-shaped entries".  9 new entries (never
-# driver-checked — the birth gate is non-negotiable) + 5 whose results
-# or gate changed this round (graph_jaccard now exercises the
-# max_center_degree=8 cap, so its RESULTS changed; dedup_url's oracle
-# gained the scheme gate and the TRACKING_PARAMS-generated predicate;
-# events_ab_srm moved into temporal.srm_report with the in-plan
-# overflow guard; sketch_hll and io_column_stats_sketch sit on the
-# alpha-derivation fix and hll_distinct's include_exact refactor) take
-# 14 slots, so 36 of the 49 queued r7 greens drain (oldest-first, the
-# order _WINDOW_R10_TAIL declared) and the remaining 13 lead r12 via
-# _WINDOW_R11_TAIL.  After r11 the floor is r7 for exactly those 13.
-_WINDOW_R11_HEAD = [
-    # new this round — never driver-checked; all pre-validated against
-    # DuckDB at sf0.001 AND sf0.01 before this window was declared
-    "streaming_stream_join_right", "streaming_stream_join_full",
-    "q10_returned_customers", "q18_large_orders", "q14_promo_revenue",
-    "dedup_substring_max", "corpus_stats_sketch", "graph_distances",
-    "sketch_audience_overlap",
-    # changed results / implementation / oracle this round — re-verify
-    "graph_jaccard", "dedup_url", "events_ab_srm", "sketch_hll",
-    "io_column_stats_sketch",
-    # the 36 oldest r7-stale greens, in _WINDOW_R10_TAIL order
-    *_WINDOW_R10_TAIL[:36],
-]
-# r7 greens that did not fit the 50-slot budget — lead the r12 window
-_WINDOW_R11_TAIL = _WINDOW_R10_TAIL[36:]
-assert len(_WINDOW_R11_HEAD) == 50, len(_WINDOW_R11_HEAD)
-assert len(set(_WINDOW_R11_HEAD)) == 50, "duplicate in window head"
-_WINDOW_R11 = _WINDOW_R11_HEAD + _WINDOW_R11_TAIL
-assert len(set(_WINDOW_R11)) == len(_WINDOW_R11), "duplicate in window"
-
-
-# Round-12 window (optimization round — no new entries, no results
-# changes; every r12 rewrite is proven equivalent by the full oracle
-# replay in tests/).  Per the r11 verdict item 8: keep draining
-# oldest-first.  Post-r11 staleness (scripts/verification_age.py):
-# 14 r7 greens (_WINDOW_R11_TAIL) + 48 r8 greens; the head takes all
-# 14 r7s plus the 36 oldest r8 greens in registry order, moving the
-# last-green floor to r8 (held by the 12 tail entries below).
-# synth_commuter_trace stays the one never-driver-checked entry BY
-# CONSTRUCTION: it has no oracle_sql row (numpy PCG64 is not
-# SQL-expressible — its gate is the synth_commuter_digest twin plus
-# the bit-exactness unit tests), so a window slot cannot verify it
-# and is spent on a drainable query instead.
-_WINDOW_R12_HEAD = [
-    # the 14 r7-stale greens, in the order the r11 tail queued them
-    *_WINDOW_R11_TAIL,
-    # oldest r8 greens, registry order, to the 50-slot budget
-    "q1_pricing_summary", "q3_top_orders", "q5_nation_revenue",
-    "io_rowgroup_audit", "events_daily", "events_sessionize",
-    "events_retention", "events_asof_balance", "events_range_windows",
-    "events_salted_join", "media_resize", "streaming_events_daily",
-    "streaming_sessionize", "streaming_enrich_nation",
-    "streaming_dedup_docs", "streaming_running_totals",
-    "streaming_running_totals_pandas", "synth_basic",
-    "synth_identifiers", "synth_phone_numbers", "synth_commuter",
-    "synth_weblog", "ann_ivf_derived", "ann_ivf_arrow",
+    "synth_commuter", "synth_weblog", "ann_ivf_derived", "ann_ivf_arrow",
     "io_signature_store", "media_features", "media_dedup",
     "graph_pagerank", "geo_near", "graph_triangles",
     "streaming_dedup_cross", "corpus_split", "events_funnel",
     "events_ohlc", "events_anomaly", "events_rolling",
-]
-# r8 greens that did not fit the 50-slot budget — lead the r13 window
-_WINDOW_R12_TAIL = [
+    # past the 50-slot head: leads the next window
     "events_pivot", "events_rollup", "events_cube", "sketch_distinct",
     "sketch_heavy_hitters", "sketch_merge", "sketch_quantiles",
     "sketch_bloom", "events_scd2", "events_ewma", "events_gap_fill",
     "streaming_stream_join",
 ]
-assert len(_WINDOW_R12_HEAD) == 50, len(_WINDOW_R12_HEAD)
-assert len(set(_WINDOW_R12_HEAD)) == 50, "duplicate in window head"
-_WINDOW_R12 = _WINDOW_R12_HEAD + _WINDOW_R12_TAIL
-assert len(set(_WINDOW_R12)) == len(_WINDOW_R12), "duplicate in window"
 
 
 def _rotate(q: dict) -> dict:
-    head = [n for n in _WINDOW_R12 if n in q]
+    head = [n for n in _WINDOW if n in q]
     return {n: q[n] for n in head + [n for n in q if n not in head]}
 
 

@@ -22,6 +22,26 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BENCH_SYNTH_N = int(os.environ.get("SPARK_GRAFT_BENCH_N", "2000000"))
 
 
+# Registry entries the bench does not time.  A typo here would bench
+# the entry instead of skipping it, so tests check every name resolves.
+_NOT_BENCHED = {
+    # timed at BENCH_SYNTH_N rows (commuter: 1k drivers) by _synth_bench
+    "synth_basic", "synth_identifiers", "synth_transactions", "synth_iot",
+    "synth_commuter",
+    # fixed-size generator and fixture entries that never read SF_DIR
+    "synth_phone_numbers", "synth_text_messages", "synth_text_blocks",
+    "synth_markov_sms", "synth_vehicle_commuter", "synth_registry",
+    "synth_commuter_trace", "remove_path", "media_resize",
+    "media_features",
+    # SF-scaled entries kept out of the timed set so the total stays
+    # comparable with earlier bench artifacts
+    "synth_correlate", "synth_correlate_pair", "events_salted_join",
+    "dedup_exact_keep", "text_embed", "corpus_stats", "corpus_shuffle",
+    "streaming_sessionize", "streaming_enrich_nation",
+    "streaming_dedup_docs",
+}
+
+
 def _force(df) -> int:
     df.write.format("noop").mode("overwrite").save()
     return 0
@@ -32,87 +52,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     q = entrymod.queries()
 
-    # analytic + operator queries straight from the driver contract
-    names = ["q1_pricing_summary", "q3_top_orders", "q5_nation_revenue",
-             "events_daily", "dedup_exact", "dedup_minhash", "dedup_simhash",
-             "dedup_ngram_jaccard", "dedup_groups", "text_langid",
-             "text_quality", "text_tokens", "text_fingerprint",
-             "ann_bruteforce", "ann_lsh", "ann_ivf", "dedup_embedding",
-             "corpus_clean", "corpus_sample", "corpus_decontaminate",
-             "text_chunks", "text_repetition", "text_pii_scrub",
-             "synth_markov_text", "synth_cpoc", "synth_exotic_scalar",
-             "synth_exotic_nested", "synth_net", "media_frames",
-             "events_sessionize", "events_retention", "events_asof_balance",
-             "events_range_windows", "streaming_events_daily",
-             "dedup_spans", "corpus_ngrams", "corpus_pack", "corpus_mix",
-             "text_bm25", "embed_cluster", "text_keywords", "text_fluency",
-             "corpus_split", "embed_quantize", "search_rrf",
-             "streaming_stream_join", "events_funnel", "events_ohlc",
-             "events_anomaly", "events_rolling", "events_pivot",
-             "events_rollup", "dedup_cross", "dedup_containment",
-             "embed_pca", "events_scd2", "events_gap_fill",
-             "io_roundtrip", "synth_weblog", "sketch_distinct",
-             "sketch_heavy_hitters", "events_ewma", "media_dedup",
-             "graph_pagerank", "streaming_dedup_cross", "dedup_fuzzy",
-             "graph_triangles", "sketch_bloom", "dedup_semantic",
-             "corpus_sample_k", "sketch_merge",
-             "embed_pq", "text_classify", "events_cube", "geo_near",
-             "io_signature_store", "events_transitions", "ann_pq", "ann_ivfpq",
-             "corpus_bpe", "text_oov", "sketch_quantiles",
-             "synth_weblog_lines", "synth_purchases", "sketch_hll",
-             "text_train_classifier", "corpus_split_groups",
-             "corpus_tokenize", "sketch_kmv", "corpus_dsir", "ann_pq_rerank",
-             "ann_ivfpq_rerank", "events_parse_lines", "sketch_topk",
-             "text_entropy", "dedup_agreement", "corpus_pack_pairs",
-             "corpus_balance", "streaming_topk", "corpus_diff",
-             "events_cdc_apply", "events_attribution",
-             "corpus_token_budget", "corpus_overlap", "graph_components",
-             "events_sequences", "sketch_ams", "corpus_curriculum",
-             "events_dwell", "embed_knn_graph", "streaming_cdc_apply",
-             "media_segments", "q6_forecast_revenue", "io_bucketed_join",
-             "corpus_filter_report", "io_partition_prune", "events_wau",
-             "corpus_upsample", "ann_recall_eval", "media_phash_dedup",
-             "text_readability", "corpus_dedup_report", "events_rfm",
-             "graph_label_prop", "io_zorder", "dedup_minhash_eval",
-             "io_schema_evolution", "io_compaction", "events_histogram",
-             "corpus_weighted_sample", "corpus_interleave", "ann_filtered",
-             "dedup_threshold_sweep", "text_quality_calibration",
-             "corpus_span_corruption", "corpus_fim",
-             "events_markov_stationary", "embed_group_drift",
-             "embed_outliers", "events_funnel_windowed",
-             "events_cohort_ltv", "corpus_tokenizer_fertility",
-             "corpus_build", "ann_lsh_multiprobe", "text_langid_eval",
-             "events_ab_assign", "sketch_cms_eval",
-             # r8 additions: the derived-config twins, the layout
-             # audit, and the native-vs-pandas streaming-totals pair
-             # (the measured Arrow-boundary price, now in the artifact)
-             "io_rowgroup_audit", "dedup_embedding_derived",
-             "ann_ivf_derived", "ann_ivf_arrow",
-             "streaming_running_totals", "streaming_running_totals_pandas",
-             # r9 additions: the two-level assignment gate, native
-             # streaming counters, layout/stats governance, range
-             # search, k-core, boilerplate, grid density, A/B metrics
-             "ann_ivf_two_level", "ann_range_search", "text_boilerplate",
-             "graph_kcore", "geo_grid_density", "io_column_stats",
-             "io_rowgroup_summary", "events_ab_metrics",
-             "streaming_key_counts_native",
-             # r10 additions: left-outer stream join, repeated-span
-             # dedup, commuter digest gate, bigram-LM scoring, SRM
-             # guardrail, neighbor Jaccard, URL dedup, Q4 semi-join,
-             # sketch-ndv column stats
-             "streaming_stream_join_left", "dedup_substring",
-             "dedup_substring_strip", "synth_commuter_digest",
-             "text_ngram_lm", "events_ab_srm", "graph_jaccard",
-             "dedup_url", "q4_order_priority",
-             "io_column_stats_sketch",
-             # r11 additions: right/full outer stream joins, TPC-H
-             # Q10/Q14/Q18, w-free longest repeated span, sketch-mode
-             # corpus stats, bounded BFS, audience-overlap sketches
-             "streaming_stream_join_right", "streaming_stream_join_full",
-             "q10_returned_customers", "q18_large_orders",
-             "q14_promo_revenue", "dedup_substring_max",
-             "corpus_stats_sketch", "graph_distances",
-             "sketch_audience_overlap"]
+    # every registry entry, in registry order, except _NOT_BENCHED
+    names = [n for n in q if n not in _NOT_BENCHED]
 
     # warm the JVM/codegen/parquet-footer paths once so the first timed
     # query measures the query, not JIT compilation

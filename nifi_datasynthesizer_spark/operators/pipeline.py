@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import dedup_exact_keep, dedup_minhash
+from .dedup import _pin, dedup_exact_keep, dedup_minhash
 from .text import lang_id, quality_score
 
 
@@ -43,8 +43,8 @@ def corpus_clean(docs: DataFrame, min_quality: float = 0.0,
         # + quality pipeline re-executes per reference (broadcast-scale
         # joins leave no exchange to reuse).  At cluster scale the same
         # boundary is where you'd checkpoint the cleaned corpus to
-        # parquet between passes.
-        out = out.persist()
+        # parquet between passes.  Pinned, so release_caches() frees it.
+        out = _pin(out)
         pairs = dedup_minhash(out, jaccard_threshold=near_dup_threshold)
         losers = pairs.select(F.col("b").alias("doc_id")).distinct()
         out = out.join(losers, "doc_id", "left_anti")

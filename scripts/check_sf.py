@@ -5,13 +5,17 @@ at the given sf dir (default sf0.01, the driver's gate scale) and
 prints one line per query.  Exits nonzero if any mismatch.
 
 Usage: python scripts/check_sf.py [sf_dir] [query ...]
+
+Awkward-parallelism replay (odd core count, odd shuffle partitions):
+    SPARK_GRAFT_CPUS=5 python scripts/check_sf.py
 """
 from __future__ import annotations
 
+import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from tests.conftest import compare_with_duckdb
@@ -21,8 +25,9 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     from nifi_datasynthesizer_spark import get_spark
-    spark = get_spark(app="check_sf", master="local[16]",
-                      shuffle_partitions=16)
+    # local[SPARK_GRAFT_CPUS] (default: every core), as many shuffle
+    # partitions
+    spark = get_spark(app="check_sf")
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failed = []

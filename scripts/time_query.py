@@ -1,7 +1,7 @@
 """Time individual declared queries in isolation through the noop sink.
 
 Usage:
-    python scripts/r11_time_one.py name [name ...] [--runs N]
+    python scripts/time_query.py name [name ...] [--runs N]
 
 Prints per-query [run1, run2, ...] seconds plus min/median.  Uses the
 same session factory and noop-sink methodology as bench.py so numbers
@@ -30,7 +30,7 @@ def main() -> None:
     for a in sys.argv[1:]:
         if a.startswith("--runs"):
             runs = int(a.split("=", 1)[1])
-    spark = get_spark(app="r11-time-one")
+    spark = get_spark(app="time_query")
     spark.sparkContext.setLogLevel("ERROR")
     q = entrymod.queries()
     # warm JVM/codegen/parquet paths like bench.py

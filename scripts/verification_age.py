@@ -3,9 +3,14 @@
 Reads every checked-in CORRECTNESS_r0N.json, computes each query's
 last full-green driver round (rows+schema+hash, no err), and prints a
 markdown table in registry order with the query's membership in the
-CURRENT declared window (the `_WINDOW_R{N}` the registry leads with).
-This is the single current-state table SURVEY §2 carries; the
-per-round historical tables it replaces live in git history.
+declared `_WINDOW` the registry leads with.  This is the single
+current-state table SURVEY §2 carries; the per-round historical tables
+it replaces live in git history.
+
+`--summary` prints the staleness distribution and the next 50-name
+head for `_WINDOW`: oracle-gated queries never driver-checked first,
+then the oldest last-green, ties in registry order.  Rows-only
+queries are left out: the driver has no oracle to check them with.
 
 Usage: python scripts/verification_age.py [--summary]
 """
@@ -13,18 +18,22 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 from collections import Counter
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-import __spark_entry__ as entrymod
+import __spark_entry__ as entrymod  # noqa: E402
+
+HEAD = 50
 
 
 def last_green() -> dict[str, int]:
     last: dict[str, int] = {}
-    for f in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for f in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         m = re.search(r"_r0*(\d+)\.json$", f)
         if not m:
             continue
@@ -36,20 +45,18 @@ def last_green() -> dict[str, int]:
     return last
 
 
-def current_window() -> tuple[int, list[str]]:
-    rounds = sorted(
-        int(n.split("_R")[1]) for n in vars(entrymod)
-        if re.fullmatch(r"_WINDOW_R\d+", n))
-    n = rounds[-1]
-    return n, list(getattr(entrymod, f"_WINDOW_R{n}"))
+def next_head(queries: list[str], oracles: dict, lg: dict[str, int]) -> list[str]:
+    gated = [q for q in queries if q in oracles]
+    # sorted() is stable, so ties keep registry order; 0 = never checked
+    return sorted(gated, key=lambda q: lg.get(q, 0))[:HEAD]
 
 
 def main() -> int:
     queries = list(entrymod.queries())
     oracles = entrymod.oracle_sql()
     lg = last_green()
-    wn, window = current_window()
-    head = set(window[:50])
+    window = entrymod._WINDOW
+    head = set(window[:HEAD])
     if "--summary" in sys.argv:
         dist = Counter(lg[q] for q in queries if q in lg)
         print(f"registry: {len(queries)} queries, "
@@ -58,8 +65,9 @@ def main() -> int:
               f"{dict(sorted(dist.items()))}")
         print(f"never driver-checked: "
               f"{[q for q in queries if q not in lg]}")
+        print(f"next window head: {next_head(queries, oracles, lg)}")
         return 0
-    print(f"| query | last driver-green | r{wn} window |")
+    print("| query | last driver-green | window |")
     print("|---|---|---|")
     for q in queries:
         g = f"r{lg[q]}" if q in lg else "—"

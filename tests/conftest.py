@@ -41,20 +41,35 @@ def job_group(spark, group: str):
         sc.setLocalProperty("spark.job.description", None)
 
 
-def compare_with_duckdb(spark_df, sql: str, sf_dir: str | None = None,
-                        float_tol: float = 1e-9):
-    """Mirror of the driver's check: run the oracle in DuckDB (tables
-    registered as views), sort columns by name and rows by value, then
-    compare cell-wise."""
-    import duckdb
-    import pandas as pd
+# DuckDB budget for every oracle run: the same on any host, so an
+# oracle that needs more fails everywhere, not only on small hosts
+ORACLE_MEMORY_LIMIT = "4GB"
+ORACLE_THREADS = 4
 
-    con = duckdb.connect()
+
+def oracle_con(sf_dir: str | None):
+    """A DuckDB connection under the oracle budget, with the ``sf_dir``
+    tables registered as views (none when ``sf_dir`` is empty)."""
+    import duckdb
+
+    con = duckdb.connect(config={"memory_limit": ORACLE_MEMORY_LIMIT,
+                                 "threads": ORACLE_THREADS})
     if sf_dir:
         for t in ("region", "nation", "customer", "supplier", "part",
                   "orders", "lineitem", "events", "documents", "embeddings"):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+def compare_with_duckdb(spark_df, sql: str, sf_dir: str | None = None,
+                        float_tol: float = 1e-9):
+    """Mirror of the driver's check: run the oracle in DuckDB (tables
+    registered as views), sort columns by name and rows by value, then
+    compare cell-wise."""
+    import pandas as pd
+
+    con = oracle_con(sf_dir)
     expected = con.sql(sql).df()
     actual = spark_df.toPandas()
 

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_DIR, compare_with_duckdb
+from tests.conftest import SF_DIR, compare_with_duckdb, oracle_con
 
 _queries = entrymod.queries()
 _oracles = entrymod.oracle_sql()
@@ -28,18 +28,25 @@ def test_every_oracle_has_query():
 def test_window_names_resolve():
     """_rotate silently drops window names missing from the registry,
     so a typo would shrink the checked window without any failure —
-    every window entry must name a real query, the head must be
-    exactly the 50 the driver checks, and the registry must lead with
-    it (r5 advice: the stray 51st entry landed OUTSIDE the window)."""
-    assert len(entrymod._WINDOW_R12_HEAD) == 50
-    ghosts = [n for n in entrymod._WINDOW_R12 if n not in _queries]
+    every window entry must name a real query, the window must fill
+    the 50 slots the driver checks, and the registry must lead with
+    it."""
+    window = entrymod._WINDOW
+    assert len(window) >= 50
+    ghosts = [n for n in window if n not in _queries]
     assert not ghosts, f"window names missing from registry: {ghosts}"
-    assert list(_queries)[:50] == entrymod._WINDOW_R12_HEAD
+    assert list(_queries)[:len(window)] == window
+
+
+# schema of the frame each test_oracle_match case built, so the
+# schema check reuses that build instead of running the query again
+_built_schemas: dict = {}
 
 
 @pytest.mark.parametrize("name", sorted(_oracles))
 def test_oracle_match(spark, name):
     df = _queries[name](spark, SF_DIR)
+    _built_schemas[name] = df.schema
     compare_with_duckdb(df, _oracles[name], sf_dir=SF_DIR)
 
 
@@ -48,10 +55,14 @@ def test_canonicalizer_safe_schema(spark, name):
     """The driver's _canon sorts a pandas frame on every column — any
     array/map/struct column raises `unhashable type: list` there (the
     local harness stringifies, the driver does not — round-1 lesson).
-    Oracle-backed queries must emit only atomic columns."""
+    Oracle-backed queries must emit only atomic columns.  Reads the
+    schema test_oracle_match recorded; run alone, it builds the
+    frame."""
     from pyspark.sql.types import ArrayType, MapType, StructType
-    df = _queries[name](spark, SF_DIR)
-    bad = [f.name for f in df.schema.fields
+    schema = _built_schemas.get(name)
+    if schema is None:
+        schema = _queries[name](spark, SF_DIR).schema
+    bad = [f.name for f in schema.fields
            if isinstance(f.dataType, (ArrayType, MapType, StructType))]
     assert not bad, f"{name}: non-atomic driver-visible columns {bad}"
 
@@ -63,12 +74,7 @@ def test_oracle_no_hugeint():
     driver failures in rounds 1, 3 and 4 (events_sessionize, corpus_pack,
     corpus_mix).  DESCRIBE every oracle and refuse HUGEINT/UHUGEINT (and
     the equally pandas-hostile UBIGINT) output columns at the source."""
-    import duckdb
-    con = duckdb.connect()
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents", "embeddings"):
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{SF_DIR}/{t}.parquet')")
+    con = oracle_con(SF_DIR)
     bad: dict[str, list[str]] = {}
     for name, sql in sorted(_oracles.items()):
         desc = con.sql(f"DESCRIBE ({sql})").fetchall()
@@ -77,6 +83,27 @@ def test_oracle_no_hugeint():
         if hits:
             bad[name] = hits
     assert not bad, f"oracles with pandas-hostile integer types: {bad}"
+
+
+def test_oracle_con_caps_memory():
+    """Every oracle runs under one DuckDB budget, not DuckDB's default
+    of 80% of host RAM."""
+    con = oracle_con(None)
+    limit, threads = con.sql("SELECT current_setting('memory_limit'), "
+                             "current_setting('threads')").fetchone()
+    num, unit = limit.split()
+    cap = float(num) * {"KiB": 2**10, "MiB": 2**20, "GiB": 2**30}[unit]
+    assert 3.5e9 < cap <= 4e9, limit
+    assert threads == 4
+
+
+def test_bench_exclusions_resolve():
+    """bench.py times every registry entry outside _NOT_BENCHED, so a
+    misspelt exclusion would silently bench the entry it meant to
+    skip."""
+    import bench
+    ghosts = sorted(bench._NOT_BENCHED - set(_queries))
+    assert not ghosts, f"_NOT_BENCHED names missing from registry: {ghosts}"
 
 
 @pytest.mark.parametrize("name", sorted(set(_queries) - set(_oracles)))

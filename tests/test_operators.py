@@ -1792,6 +1792,25 @@ def test_fit_sample_deterministic_and_pinned(spark):
     release_caches()
 
 
+def test_corpus_clean_near_dup_releases_cache(spark):
+    """corpus_clean's near-dup pass caches the cleaned corpus; the
+    cache must be one release_caches() frees, not a leak."""
+    from nifi_datasynthesizer_spark.operators.dedup import release_caches
+    from nifi_datasynthesizer_spark.operators.pipeline import corpus_clean
+
+    def persisted() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    release_caches()
+    before = persisted()
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    out = corpus_clean(docs, near_dup_threshold=0.8)
+    out.write.format("noop").mode("overwrite").save()
+    assert persisted() - before, "near-dup pass cached nothing"
+    release_caches()
+    assert persisted() - before == set()
+
+
 def test_word_entropy_planted(spark):
     """Exact micro-bit entropies on planted docs: powers of two hit
     the mantissa table exactly (ilog2(2)=1e6, ilog2(4)=2e6)."""
