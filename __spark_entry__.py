@@ -20,6 +20,7 @@ from nifi_datasynthesizer_spark.operators import multimodal as MM
 from nifi_datasynthesizer_spark.operators import similarity as SIM
 from nifi_datasynthesizer_spark.operators import text as TX
 from nifi_datasynthesizer_spark import io as IO
+from nifi_datasynthesizer_spark.oracles import _NORM, _WORDS
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -3201,9 +3202,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 # ------------------------------------------------------------- oracles
 
-_NORM = ("TRIM(REGEXP_REPLACE(REGEXP_REPLACE(LOWER(text), '[^a-z0-9\\s]', ' ', 'g'),"
-         " '\\s+', ' ', 'g'))")
-_WORDS = "STRING_SPLIT_REGEX(LOWER(TRIM(text)), '\\s+')"
 _EN = "('the','and','of','to','is','that','with')"
 
 

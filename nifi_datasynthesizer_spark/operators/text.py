@@ -267,7 +267,7 @@ def train_classifier(docs: DataFrame, dim: int = 16, rounds: int = 16,
     # normalize/hash/label pass over the corpus — rounds× the
     # featurization cost (measured 43 s → 9 s at sf0.1).  The cache
     # holds dim+2 longs per doc, a tiny fraction of the text, and is
-    # released before returning.
+    # released before returning, also when a round raises.
     base = (docs.select(
         xs.alias("xs"),
         F.size(toks).cast("long").alias("nt"),
@@ -275,68 +275,71 @@ def train_classifier(docs: DataFrame, dim: int = 16, rounds: int = 16,
         .otherwise(F.lit(0).cast("long")).alias("y"))
         .filter(F.col("nt") >= 1)).persist()
 
-    dim = dim + 2  # + intercept + length
-    # n and per-feature scales in ONE pass; scale_j estimates the
-    # score's mean SENSITIVITY to w_j (mean of x_j div nt — the
-    # feature's contribution to the normalized score per weight unit)
-    # and acts as a diagonal preconditioner: update_j divides by it,
-    # making the effective step in score units uniform across
-    # features.  Without it the length feature's step is ~nt̄ times a
-    # bucket's, GD saturates the score clamp and oscillates between
-    # the two constant predictions.
-    srow = base.selectExpr(
-        "count(*) AS n",
-        *[f"sum(xs[{j}]) AS a{j}" for j in range(dim)],
-        *[f"sum((xs[{j}] * 1000000) div nt) AS b{j}"
-          for j in range(dim)]).collect()[0]
-    n = int(srow.n)
-    # s_j = E[x_j] · E[x_j/nt] (gradient magnitude × score
-    # sensitivity), in exact integer ppm arithmetic
-    scales = [max(1, (int(srow[f"a{j}"]) // n)
-                  * (int(srow[f"b{j}"]) // n) // 1_000_000)
-              for j in range(dim)]
-    w = [0] * dim
-    lr_cur = lr_num
-    prev_ok: int | None = None
-    traj: list[tuple[int, int, int, int]] = []
-    for r in range(1, rounds + 1):
-        wlit = "array(" + ",".join(f"{v}L" for v in w) + ")"
-        dot = F.expr(
-            f"aggregate(zip_with({wlit}, xs, (a, b) -> a * b), "
-            f"CAST(0 AS BIGINT), (acc, v) -> acc + v)")
-        m = F.expr("GREATEST(CAST(-1000000 AS BIGINT), "
-                   "LEAST(CAST(1000000 AS BIGINT), __dot div nt))")
-        sig = F.expr(f"element_at({slit}, "
-                     "CAST(((__m + 1000000) * 255) div 2000000 AS INT) + 1)")
-        scored = (base.withColumn("__dot", dot)
-                  .withColumn("__m", m)
-                  .withColumn("__sig", sig))
-        # ONE selectExpr batch per round (a select of aggregates with
-        # no groupBy is a global aggregate), not dim+1 Column builds:
-        # the per-Column py4j round-trips recur EVERY round of the fit
-        # loop (the column_stats construction lesson)
-        row = scored.selectExpr(
-            *[f"sum((__sig - y) * xs[{j}]) AS g{j}" for j in range(dim)],
-            "sum(CASE WHEN (__sig >= 500000) = (y = 1000000) "
-            "THEN 1 ELSE 0 END) AS ok").collect()[0]
-        acc_ppm = (int(row.ok) * 1_000_000) // n
-        # backtracking schedule: whenever this round's training
-        # accuracy (measured on the PRE-update weights, i.e. the
-        # result of the previous step) is worse than the round
-        # before, the last step overshot — halve the rate from here
-        # on.  Deterministic (pure integer comparisons on exact
-        # aggregates), so the oracle replays the schedule exactly;
-        # full-batch GD with a quantized sigmoid ping-pongs under any
-        # constant rate because the whole batch crosses the boundary
-        # together.
-        if prev_ok is not None and int(row.ok) < prev_ok:
-            lr_cur = max(1, lr_cur // 2)
-        prev_ok = int(row.ok)
-        w = [w[j] - _tdiv(int(row[f"g{j}"]) * lr_cur,
-                          n * lr_den * scales[j])
-             for j in range(dim)]
-        traj.extend((r, j, w[j], acc_ppm) for j in range(dim))
-    base.unpersist()
+    try:
+        dim = dim + 2  # + intercept + length
+        # n and per-feature scales in ONE pass; scale_j estimates the
+        # score's mean SENSITIVITY to w_j (mean of x_j div nt — the
+        # feature's contribution to the normalized score per weight
+        # unit) and acts as a diagonal preconditioner: update_j
+        # divides by it, making the effective step in score units
+        # uniform across features.  Without it the length feature's
+        # step is ~nt̄ times a bucket's, GD saturates the score clamp
+        # and oscillates between the two constant predictions.
+        srow = base.selectExpr(
+            "count(*) AS n",
+            *[f"sum(xs[{j}]) AS a{j}" for j in range(dim)],
+            *[f"sum((xs[{j}] * 1000000) div nt) AS b{j}"
+              for j in range(dim)]).collect()[0]
+        n = int(srow.n)
+        # s_j = E[x_j] · E[x_j/nt] (gradient magnitude × score
+        # sensitivity), in exact integer ppm arithmetic
+        scales = [max(1, (int(srow[f"a{j}"]) // n)
+                      * (int(srow[f"b{j}"]) // n) // 1_000_000)
+                  for j in range(dim)]
+        w = [0] * dim
+        lr_cur = lr_num
+        prev_ok: int | None = None
+        traj: list[tuple[int, int, int, int]] = []
+        for r in range(1, rounds + 1):
+            wlit = "array(" + ",".join(f"{v}L" for v in w) + ")"
+            dot = F.expr(
+                f"aggregate(zip_with({wlit}, xs, (a, b) -> a * b), "
+                f"CAST(0 AS BIGINT), (acc, v) -> acc + v)")
+            m = F.expr("GREATEST(CAST(-1000000 AS BIGINT), "
+                       "LEAST(CAST(1000000 AS BIGINT), __dot div nt))")
+            sig = F.expr(f"element_at({slit}, "
+                         "CAST(((__m + 1000000) * 255) div 2000000 AS INT)"
+                         " + 1)")
+            scored = (base.withColumn("__dot", dot)
+                      .withColumn("__m", m)
+                      .withColumn("__sig", sig))
+            # ONE selectExpr batch per round (a select of aggregates with
+            # no groupBy is a global aggregate), not dim+1 Column builds:
+            # the per-Column py4j round-trips recur EVERY round of the fit
+            # loop (the column_stats construction lesson)
+            row = scored.selectExpr(
+                *[f"sum((__sig - y) * xs[{j}]) AS g{j}" for j in range(dim)],
+                "sum(CASE WHEN (__sig >= 500000) = (y = 1000000) "
+                "THEN 1 ELSE 0 END) AS ok").collect()[0]
+            acc_ppm = (int(row.ok) * 1_000_000) // n
+            # backtracking schedule: whenever this round's training
+            # accuracy (measured on the PRE-update weights, i.e. the
+            # result of the previous step) is worse than the round
+            # before, the last step overshot — halve the rate from here
+            # on.  Deterministic (pure integer comparisons on exact
+            # aggregates), so the oracle replays the schedule exactly;
+            # full-batch GD with a quantized sigmoid ping-pongs under any
+            # constant rate because the whole batch crosses the boundary
+            # together.
+            if prev_ok is not None and int(row.ok) < prev_ok:
+                lr_cur = max(1, lr_cur // 2)
+            prev_ok = int(row.ok)
+            w = [w[j] - _tdiv(int(row[f"g{j}"]) * lr_cur,
+                              n * lr_den * scales[j])
+                 for j in range(dim)]
+            traj.extend((r, j, w[j], acc_ppm) for j in range(dim))
+    finally:
+        base.unpersist()
     spark = docs.sparkSession
     return spark.createDataFrame(
         traj, "round INT, j INT, w_micro BIGINT, acc_ppm BIGINT")

@@ -12,10 +12,16 @@ Stateful ops: watermarked windowed aggregation, streaming exact dedup,
 and an ``applyInPandasWithState`` running-total operator (the shape a
 custom stateful accumulator needs at scale: state keyed + partitioned
 by group, timeouts for eviction).
+
+State-store sizing is in :func:`state_store_provider`; local sessions
+write every checkpoint file (offset, commit and source logs, state
+deltas) through Spark's FileSystem-based manager, which renames
+without forking a process (``session.get_spark``).
 """
 
 from __future__ import annotations
 
+import json
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -168,6 +174,14 @@ def run_to_memory(stream: DataFrame, name: str, output_mode: str = "append",
             .outputMode(output_mode)
             .trigger(availableNow=available_now)
             .start())
+
+
+def progress(q) -> list[dict]:
+    """The query's ``recentProgress`` as plain dicts: PySpark before
+    3.5 returns dicts, later versions ``StreamingQueryProgress``
+    objects whose ``.json`` carries the same fields."""
+    return [p if isinstance(p, dict) else json.loads(p.json)
+            for p in q.recentProgress]
 
 
 def run_bounded(stream: DataFrame, name: str,

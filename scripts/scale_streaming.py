@@ -75,15 +75,9 @@ def build(spark, replicas: int, dst: str) -> None:
     df.repartition(N_FILES).write.mode("overwrite").parquet(dst)
 
 
-def _progress_dicts(q) -> list[dict]:
-    out = []
-    for p in q.recentProgress:
-        out.append(p if isinstance(p, dict) else json.loads(p.json))
-    return out
-
-
 def drain(stream, mode: str, sink: str = "noop", name: str = "scale_sink"):
     """Run a bounded stream to completion; return (metrics, out_rows)."""
+    from nifi_datasynthesizer_spark import streaming as ST
     w = stream.writeStream.outputMode(mode).trigger(availableNow=True)
     if sink == "memory":
         q = w.format("memory").queryName(name).start()
@@ -91,7 +85,7 @@ def drain(stream, mode: str, sink: str = "noop", name: str = "scale_sink"):
         q = w.format("noop").start()
     try:
         q.awaitTermination()
-        progs = _progress_dicts(q)
+        progs = ST.progress(q)
     finally:
         q.stop()
     input_rows = sum(int(p.get("numInputRows", 0)) for p in progs)

@@ -1504,6 +1504,33 @@ def test_train_classifier_learns(spark):
     assert any(r.w_micro != 0 for r in out if r.round == 16)
 
 
+def test_train_classifier_releases_cache_on_failure(spark, monkeypatch):
+    """A round that raises still releases the featurized cache: the
+    error propagates and no new RDD stays in storage."""
+    def cached() -> set:
+        return {i.id() for i in
+                spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    before = cached()
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    cls = type(docs)
+    real_collect = cls.collect
+    calls = []
+
+    def failing_collect(self):
+        calls.append(1)
+        if len(calls) > 1:  # the scales pass runs; round 1 fails
+            raise RuntimeError("planted round failure")
+        return real_collect(self)
+
+    monkeypatch.setattr(cls, "collect", failing_collect)
+    with pytest.raises(RuntimeError, match="planted round failure"):
+        TX.train_classifier(docs, dim=16, rounds=3)
+    monkeypatch.undo()
+    assert len(calls) == 2
+    assert cached() - before == set()
+
+
 def test_split_by_group_no_leakage(spark):
     """Near-dup docs must land in the SAME split (the leakage the
     id-hash split permits), and the group key equals the cluster

@@ -147,14 +147,12 @@ def test_synthesize_stream_rate_smoke(spark):
 def _drain_ckpt(stream_df, name: str, ckpt: str, mode: str) -> int:
     """availableNow drain against a persistent checkpoint; returns the
     number of input rows THIS run processed (exactly-once accounting)."""
-    import json as _json
     q = (stream_df.writeStream.format("memory").queryName(name)
          .outputMode(mode).option("checkpointLocation", ckpt)
          .trigger(availableNow=True).start())
     try:
         q.awaitTermination()
-        progs = [p if isinstance(p, dict) else _json.loads(p.json)
-                 for p in q.recentProgress]
+        progs = ST.progress(q)
     finally:
         q.stop()
     return sum(int(p.get("numInputRows", 0)) for p in progs)
@@ -255,3 +253,21 @@ def test_state_store_provider_rocksdb(spark, tmp_path):
         got = drain("prov_rocks")
     assert got == base
     assert spark.conf.get(key, None) is None  # restored
+
+
+def test_local_session_checkpoints_without_filecontext(spark, tmp_path):
+    """A local session resolves the checkpoint manager a query uses
+    (``CheckpointFileManager.create`` over the session's Hadoop conf)
+    to the FileSystem-based one: the FileContext default forks
+    ``readlink`` on every rename without a native libhadoop.  The
+    state stores wrap this manager in Spark's checksum manager, which
+    must stay on."""
+    jvm = spark._jvm
+    mgr = (jvm.org.apache.spark.sql.execution.streaming.checkpointing
+           .CheckpointFileManager.create(
+               jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+               spark._jsparkSession.sessionState().newHadoopConf()))
+    assert (mgr.getClass().getSimpleName()
+            == "FileSystemBasedCheckpointFileManager")
+    assert spark.conf.get(
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled") == "true"
