@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nifi_datasynthesizer_spark import compile_schema, synthesizers as SZ
+from nifi_datasynthesizer_spark.cache import pin, released
 from nifi_datasynthesizer_spark.operators import dedup as DD
 from nifi_datasynthesizer_spark.operators import multimodal as MM
 from nifi_datasynthesizer_spark.operators import similarity as SIM
@@ -40,9 +41,8 @@ def _psort(df: DataFrame, *keys: str) -> DataFrame:
     shuffles only the (usually narrow) projected output — measured
     ~2× on the per-document text annotators.  Rows and row order are
     identical (same sort over the same frame).  The pin is released
-    by bench/tests via ``dedup.release_caches()``."""
-    from nifi_datasynthesizer_spark.operators.dedup import _pin
-    return _pin(df).orderBy(*keys)
+    by bench/tests via ``cache.release_caches()``."""
+    return pin(df).orderBy(*keys)
 
 
 # Array columns must leave queries() as strings: the driver's
@@ -2474,11 +2474,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         outdir = tempfile.mkdtemp(prefix="spark_graft_sdc_") + "/pairs"
 
         def handle(batch_df, batch_id):
-            out = DD.dedup_minhash_cross(batch_df, corpus,
-                                         num_hashes=64, bands=16,
-                                         jaccard_threshold=0.5)
-            out.write.mode("append").parquet(outdir)
-            DD.release_caches()
+            with released():
+                out = DD.dedup_minhash_cross(batch_df, corpus,
+                                             num_hashes=64, bands=16,
+                                             jaccard_threshold=0.5)
+                out.write.mode("append").parquet(outdir)
 
         ST.run_foreach_batch(src, handle)
         return spark.read.parquet(outdir).orderBy("a", "b")
@@ -2587,9 +2587,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         threshold top-share selection — fit, scoring, and selection
         all one declarative plan (micro-log2 tables, no libm)."""
         from nifi_datasynthesizer_spark.operators.curation import dsir_weights
-        from nifi_datasynthesizer_spark.operators.dedup import normalize_text
         docs = _t(spark, sf, "documents")
-        w = F.split(normalize_text(F.col("text")), " ")
+        w = F.split(DD.normalize_text(F.col("text")), " ")
         target = F.size(F.array_distinct(w)) * 1000 >= F.size(w) * 600
         return dsir_weights(docs, target).orderBy("doc_id")
     q["corpus_dsir"] = corpus_dsir
@@ -2872,10 +2871,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         stages codegen cleanly.  Real ingestion runs parse alone over
         stored lines and needs neither crutch."""
         from nifi_datasynthesizer_spark.operators import logs as LG
-        from nifi_datasynthesizer_spark.operators.dedup import (
-            _pin, ensure_parallelism)
-        ev = ensure_parallelism(_t(spark, sf, "events"))
-        lines = _pin(LG.format_event_lines(ev))
+        ev = DD.ensure_parallelism(_t(spark, sf, "events"))
+        lines = pin(LG.format_event_lines(ev))
         lines.count()
         return LG.parse_event_lines(lines).orderBy("event_id")
     q["events_parse_lines"] = events_parse_lines

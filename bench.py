@@ -62,7 +62,7 @@ def main() -> None:
            .groupBy("l_returnflag").agg(F.sum("l_quantity")))
     _force(spark.range(1_000_000).select(F.md5(F.col("id").cast("string"))))
 
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
+    from nifi_datasynthesizer_spark.cache import release_caches
 
     # Host CPU-steal inflates a single run 2-4× (r5: the driver recorded
     # dedup_fuzzy at 22.8 s while two back-to-back artifacts and the

@@ -33,6 +33,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import pin
+
 SCALE = 1_000_000
 
 
@@ -294,18 +296,17 @@ def _fit_sample(quant: DataFrame, fit_mod: int | None) -> DataFrame:
     full-corpus passes, and statistically a bounded sample fits the
     same codebooks.  The sample is pinned EAGERLY (iters+1 readers;
     a lazily-pinned frame fanned out in one job degrades to
-    recomputation), released via dedup.release_caches().  The caller
+    recomputation), released via cache.release_caches().  The caller
     must leave >= k sampled rows (fit quality, and both engines
     silently train fewer centroids below that).
     """
     if fit_mod is None:
         return quant
     from ..phash import h60
-    from .dedup import _pin
     samp = quant.filter(F.pmod(
         h60(F.concat(F.col("vec_id").cast("string"), F.lit(":fit"))),
         F.lit(fit_mod)) == 0)
-    samp = _pin(samp)
+    samp = pin(samp)
     samp.count()
     return samp
 
@@ -870,7 +871,7 @@ def semantic_dedup(emb: DataFrame, k: int | None = None, iters: int = 2,
     # both pair-join sides read this frame — unpinned, each side
     # replays the k-means assignment AND the normalization (audited:
     # four corpus scans).  Pin eagerly (the dedup signature-store
-    # pattern; released via dedup.release_caches()).  The pair join
+    # pattern; released via cache.release_caches()).  The pair join
     # below is a cluster-key BROADCAST join (both sides are this
     # frame), so the quadratic dot stage runs at the CACHE's
     # parallelism — no exchange sits between them to rescue it.  A
@@ -881,8 +882,8 @@ def semantic_dedup(emb: DataFrame, k: int | None = None, iters: int = 2,
     # profiled at ~1.4 s of the warm query before the spread).
     # ensure_parallelism is a no-op at scale: a corpus with enough
     # scan partitions is never re-shuffled.
-    from .dedup import _pin, ensure_parallelism
-    both = _pin(ensure_parallelism(both))
+    from .dedup import ensure_parallelism
+    both = pin(ensure_parallelism(both))
     both.count()
     left = both.select(F.col("vec_id").alias("a"), F.col("v").alias("va"),
                        "cluster")
@@ -934,12 +935,11 @@ def pca_power(emb: DataFrame, iters: int = 2, dim: int = 64,
     """
     import math
 
-    from .dedup import _pin
 
     # persisted across iterations: every per-iteration collect() and
     # the final projection re-read the quantized frame, so without the
     # pin the scan+quantize pass re-executes iters+1 times
-    quant = _pin(emb.select("vec_id", _quantize(F.col(vec_col)).alias("xi")))
+    quant = pin(emb.select("vec_id", _quantize(F.col(vec_col)).alias("xi")))
     v = [SCALE // 8] * dim                       # 0.125 · 1e6, unit norm
 
     for _ in range(iters):
@@ -992,12 +992,11 @@ def group_drift(emb: DataFrame, group_col: str = "label",
     deterministic in both engines).  Returns
     (group_a, group_b, cosine) for a < b.
     """
-    from .dedup import _pin
     q = emb.select(F.col(group_col).cast("long").alias("g"),
                    F.posexplode(_quantize(F.col(vec_col)))
                    .alias("pos", "v"))
-    cent = _pin(q.groupBy("g", "pos")
-                .agg(F.expr("sum(v) div count(*)").alias("m")))
+    cent = pin(q.groupBy("g", "pos")
+               .agg(F.expr("sum(v) div count(*)").alias("m")))
     cent.count()
     norms = cent.groupBy("g").agg(F.sum(F.expr("m * m")).alias("nn"))
     a = cent.select(F.col("g").alias("ga"), "pos",
@@ -1042,7 +1041,6 @@ def embedding_outliers(emb: DataFrame, group_col: str = "label",
     """
     from pyspark.sql import Window
 
-    from .dedup import _pin
     q = emb.select(F.col(group_col).cast("long").alias("g"),
                    F.posexplode(_quantize(F.col(vec_col)))
                    .alias("pos", "v"))
@@ -1056,7 +1054,7 @@ def embedding_outliers(emb: DataFrame, group_col: str = "label",
         f"WHEN {g} THEN aggregate(zip_with(xi, array({','.join(str(v) + 'L' for v in cs)}), "
         "(a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"
         for g, cs in sorted(cents.items()))
-    staged = _pin(emb.select(
+    staged = pin(emb.select(
         F.col(group_col).cast("long").alias("g"),
         _quantize(F.col(vec_col)).alias("xi"))
         .select("g", F.expr(f"CASE g {dist_cases} END").alias("d"))

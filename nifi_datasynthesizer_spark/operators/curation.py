@@ -17,8 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import pin
 from ..phash import h60
-from .dedup import _shingles, ensure_parallelism
+from .dedup import (_shingles, dedup_minhash, dup_groups, ensure_parallelism,
+                    normalize_text)
 
 PPM = 1_000_000
 
@@ -102,9 +104,7 @@ def _bpe_fit(docs: DataFrame, rounds: int, text_col: str,
     """Shared BPE fit loop: returns (final segmented vocab frame
     (w, cnt, sym), per-round merge rows) — used by both the
     merge-table query and corpus tokenization."""
-    from .dedup import _pin, normalize_text
-
-    words = _pin(
+    words = pin(
         docs.select(F.explode(F.split(normalize_text(F.col(text_col)),
                                       " ")).alias("w"))
         .filter((F.col("w") != "") & (F.length("w") <= max_word_len))
@@ -170,10 +170,8 @@ def bpe_tokenize(docs: DataFrame, rounds: int = 4,
     fall back to character tokens, the standard byte/char fallback.
     Returns (doc_id, n_words, n_bpe_tokens).
     """
-    from .dedup import _pin, normalize_text
-
     seg, _ = _bpe_fit(docs, rounds, text_col, max_word_len)
-    vocab = _pin(seg.select("w", F.size("sym").alias("ntok")))
+    vocab = pin(seg.select("w", F.size("sym").alias("ntok")))
     d = (docs.select(F.col(id_col),
                      F.explode(F.split(normalize_text(F.col(text_col)),
                                        " ")).alias("w"))
@@ -545,8 +543,6 @@ def dedup_spans(docs: DataFrame, span_words: int = 8,
 
     Returns (doc_id, text, n_spans, n_spans_removed).
     """
-    from .dedup import normalize_text
-
     spans = chunk_words(docs, max_words=span_words, text_col=text_col)
     d = spans.withColumn("digest",
                          F.md5(normalize_text(F.col("chunk_text"))))
@@ -597,8 +593,6 @@ def split_by_group(docs: DataFrame, val_frac: float = 0.1,
     projection.  Same h60-ppm thresholds as the plain split, so the
     expected fractions are unchanged.
     """
-    from .dedup import dedup_minhash, dup_groups
-
     pairs = dedup_minhash(docs, jaccard_threshold=jaccard_threshold)
     groups = dup_groups(pairs)
     joined = docs.select(id_col).join(
@@ -712,7 +706,6 @@ def dsir_weights(docs: DataFrame, target, n_buckets: int = 256,
     feats = (pre.select("doc_id", "is_t", F.explode(grams).alias("f"))
              .select("doc_id", "is_t",
                      F.pmod(h60(F.col("f")), F.lit(n_buckets)).alias("b")))
-    from .dedup import _pin
 
     fit = feats.groupBy("b").agg(
         F.sum(F.when(F.col("is_t"), 1).otherwise(0)).cast("long").alias("ct"),
@@ -722,7 +715,7 @@ def dsir_weights(docs: DataFrame, target, n_buckets: int = 256,
     # unpinned, the plan audit showed SIX parquet scans of the corpus.
     # Pin eagerly (lazily-pinned + fan-out degrades to recomputation);
     # released via release_caches().
-    fit = _pin(fit)
+    fit = pin(fit)
     fit.count()
     tot = fit.agg(F.sum("ct").alias("t_tot"), F.sum("cr").alias("r_tot"))
     d0 = (fit.crossJoin(F.broadcast(tot))
@@ -743,7 +736,7 @@ def dsir_weights(docs: DataFrame, target, n_buckets: int = 256,
     # histogram-threshold chain AND the final selection; pinning it
     # caps the whole operator at TWO corpus text passes (fit build +
     # scoring) instead of six.
-    scored = _pin(scored)
+    scored = pin(scored)
     scored.count()
     binc = F.floor(F.col("logw_micro") / F.lit(float(bin_width)))
     hist = scored.groupBy(binc.alias("bin")).agg(F.count("*").alias("n"))
@@ -871,8 +864,6 @@ def corpus_diff(old_docs: DataFrame, new_docs: DataFrame,
     driver state.  At 100 TB this is the standard two-snapshot
     reconciliation scan.  Returns (id, source, status).
     """
-    from .dedup import normalize_text
-
     def side(df, tag):
         return df.select(
             F.col(id_col),
@@ -916,10 +907,9 @@ def corpus_token_budget(docs: DataFrame, id_col: str = "doc_id",
     pinned narrow token pass, two tiny broadcast joins, one window
     over the boundary sliver.  Returns kept (id, source, n_tokens).
     """
-    from .dedup import _pin
     words = F.split(F.trim(F.col(text_col)), r"\s+")
     prio = h60(F.concat(F.col(id_col).cast("string"), F.lit(f":{salt}")))
-    toks = _pin(docs.select(
+    toks = pin(docs.select(
         F.col(id_col), F.col(source_col).alias("src"),
         F.size(words).cast("long").alias("n_tokens"),
         prio.alias("prio"),
@@ -970,13 +960,12 @@ def corpus_overlap(docs: DataFrame, k: int = 3,
     pair expansion) touches it once.  Returns one row per unordered
     pair with ≥1 shared gram.
     """
-    from .dedup import _pin
     grams = (docs.select(
         F.col(source_col).alias("src"),
         F.explode(_shingles(F.col(text_col), k)).alias("sh"))
         .select("src", h60(F.col("sh")).alias("g"))
         .distinct())
-    grams = _pin(grams)
+    grams = pin(grams)
     grams.count()
     sizes = grams.groupBy("src").agg(F.count("*").alias("n"))
     posting = (grams.groupBy("g")
@@ -1021,10 +1010,9 @@ def corpus_curriculum(docs: DataFrame, stages: int = 4,
     Boundary rule: b_q = min length with CDF ≥ q·N/stages; stage =
     #{q : length > b_q}.  Returns (id, n_words, stage).
     """
-    from .dedup import _pin
     words = F.split(F.trim(F.col(text_col)), r"\s+")
-    toks = _pin(docs.select(F.col(id_col),
-                            F.size(words).cast("long").alias("n_words")))
+    toks = pin(docs.select(F.col(id_col),
+                           F.size(words).cast("long").alias("n_words")))
     toks.count()
     hist = toks.groupBy("n_words").agg(F.count("*").alias("cnt"))
     cum_w = (Window.orderBy("n_words")
@@ -1193,15 +1181,14 @@ def interleave_sources(docs: DataFrame, shards: int = 32, salt: int = 9,
     stripe invariant for the sources still live.  All deterministic
     (h60 draws), retry-safe, oracle-replayable.
     """
-    from .dedup import _pin
     u = h60(F.concat(F.col(id_col).cast("string"), F.lit(f":{salt}")))
     shard = F.pmod(
         h60(F.concat(F.col(id_col).cast("string"), F.lit(f"#{salt}"))),
         F.lit(shards))
     # four consumers (rank, shard counts, source index, source count)
     # — pin the projected frame so the corpus is scanned once
-    base = _pin(docs.select(F.col(id_col), F.col(source_col).alias("src"),
-                            u.alias("u"), shard.alias("shard")))
+    base = pin(docs.select(F.col(id_col), F.col(source_col).alias("src"),
+                           u.alias("u"), shard.alias("shard")))
     base.count()
     rank_w = Window.partitionBy("src", "shard").orderBy("u", id_col)
     ranked = base.select(id_col, "src", "shard",
@@ -1346,10 +1333,9 @@ def corpus_stats_sketch(scored: DataFrame, lang_col: str = "pred_lang",
     Returns (pred_lang, n_docs, avg_quality, p50_words, p90_words,
     vocab_hll) ordered by language.
     """
-    from .dedup import _pin
     from .sketches import hll_distinct
 
-    base = _pin(scored.select(
+    base = pin(scored.select(
         F.col(lang_col).alias("lang"),
         F.col(words_col).cast("long").alias("nw"),
         F.col(quality_col).alias("q"),

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from ..cache import cut, pin
+from ..cache import release_caches  # noqa: F401  (re-exported)
 from ..phash import h60
 
 
@@ -117,40 +119,6 @@ def minhash_signatures(docs: DataFrame, num_hashes: int = 64,
     return sh.select("doc_id", sig.alias("signature"))
 
 
-# Signature frames persisted by the minhash operators, released by
-# release_caches().  A lazy-returning operator cannot unpersist its own
-# intermediates (the caller hasn't materialized yet); pinning them here
-# bounds the leak to the operators run since the last release instead
-# of the whole session.
-_PINNED: list[DataFrame] = []
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    _PINNED.append(df.persist())
-    return df
-
-
-def _cut_lineage(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` and truncate its lineage (localCheckpoint,
-    eager).  Iterative operators that rebuild ``x = f(x)`` per round
-    grow an O(iters)-deep logical plan even when each round's DATA is
-    persisted — Catalyst re-analyzes the whole nested tree every
-    round, so driver-side analysis cost is quadratic in the iteration
-    budget.  Cutting every few rounds keeps analysis depth O(pin_every)
-    while leaving values bit-identical (the checkpoint stores the
-    exact computed partitions).  Blocks are freed by the context
-    cleaner once the frame is unreachable."""
-    return df.localCheckpoint()
-
-
-def release_caches() -> None:
-    """Unpersist every signature/label frame pinned by the dedup
-    operators since the last call.  Safe while results are still held:
-    an unpersisted frame recomputes, it never corrupts."""
-    while _PINNED:
-        _PINNED.pop().unpersist()
-
-
 def _minhash_bands(sig: DataFrame, num_hashes: int, bands: int,
                    max_bucket: int | None) -> DataFrame:
     """(doc_id, band_id, band_hash) — the LSH bucket frame, derived
@@ -206,7 +174,7 @@ def dedup_minhash(docs: DataFrame, num_hashes: int = 64, bands: int = 16,
     # re-ran the whole shingle+hash pipeline over the candidate docs —
     # the round-3 bench regression).  512 B/doc is the materialized
     # signature store a production system keeps anyway.
-    sig = _pin(minhash_signatures(docs, num_hashes, shingle_k))
+    sig = pin(minhash_signatures(docs, num_hashes, shingle_k))
     bands_df = _minhash_bands(sig, num_hashes, bands, max_bucket)
     left = bands_df.select(F.col("doc_id").alias("a"), "band_id", "band_hash")
     right = bands_df.select(F.col("doc_id").alias("b"), "band_id", "band_hash")
@@ -244,13 +212,13 @@ def dedup_minhash_cross(incoming: DataFrame, corpus: DataFrame,
     materialized (bucketed by (band_id, band_hash)) between batches.
     Returns (a=incoming doc_id, b=corpus doc_id, est_jaccard).
     """
-    sig_in = _pin(minhash_signatures(incoming, num_hashes, shingle_k))
+    sig_in = pin(minhash_signatures(incoming, num_hashes, shingle_k))
     # ``corpus_signatures`` is the materialized signature store a
     # production pipeline keeps between batches (written once by
     # minhash_signatures, e.g. as parquet) — passing it skips
     # re-shingling the whole corpus per batch
-    sig_co = _pin(corpus_signatures if corpus_signatures is not None
-                  else minhash_signatures(corpus, num_hashes, shingle_k))
+    sig_co = pin(corpus_signatures if corpus_signatures is not None
+                 else minhash_signatures(corpus, num_hashes, shingle_k))
     in_bands = _minhash_bands(sig_in, num_hashes, bands, max_bucket)
     co_bands = _minhash_bands(sig_co, num_hashes, bands, max_bucket)
     cand_ids = (in_bands.select(F.col("doc_id").alias("a"),
@@ -381,7 +349,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
         w = Window.partitionBy("lb", "tb")
         grams = (grams.withColumn("__bsz", F.count("*").over(w))
                  .filter(F.col("__bsz") <= max_block).drop("__bsz"))
-    grams = _pin(grams)
+    grams = pin(grams)
     grams.count()
     left = grams.select(F.col("doc_id").alias("a"), F.col("g").alias("ga"),
                         "lb", "tb")
@@ -469,7 +437,7 @@ def strip_repeated_substrings(docs: DataFrame, w: int = 8,
     rebuild to '').
     """
     toks = F.split(normalize_text(F.col(text_col)), " ")
-    base = _pin(docs.select("doc_id", toks.alias("w")))
+    base = pin(docs.select("doc_id", toks.alias("w")))
     nw = F.size("w") - F.lit(w - 1)
     slices = [F.slice(F.col("w"), i + 1, nw) for i in range(w)]
     windows = (base.filter(F.size("w") >= w)
@@ -557,9 +525,9 @@ def longest_repeated_span(docs: DataFrame, min_docs: int = 2,
     out_schema = ("span string, span_len long, n_docs long, "
                   "n_occ long, first_doc long")
     toks = F.split(normalize_text(F.col(text_col)), " ")
-    base = _pin(docs
-                .filter(normalize_text(F.col(text_col)) != "")
-                .select("doc_id", toks.alias("w")))
+    base = pin(docs
+               .filter(normalize_text(F.col(text_col)) != "")
+               .select("doc_id", toks.alias("w")))
 
     def windows(L):
         n = F.size("w") - F.lit(L - 1)
@@ -654,8 +622,8 @@ def longest_repeated_span(docs: DataFrame, min_docs: int = 2,
         # search's exact confirmation) and the returned frame share
         # ONE window pass at the winning length — the same single
         # heavy readout the exact-probe form paid.
-        per_doc = _pin(windows(lo).groupBy("span", "doc_id")
-                       .agg(F.count("*").alias("n_in_doc")))
+        per_doc = pin(windows(lo).groupBy("span", "doc_id")
+                      .agg(F.count("*").alias("n_in_doc")))
         out = (per_doc.groupBy("span")
                .agg(F.count("*").alias("n_docs"),
                     F.sum("n_in_doc").alias("n_occ"),
@@ -678,15 +646,15 @@ def longest_repeated_span(docs: DataFrame, min_docs: int = 2,
 
 
 def _cut_with_signature(labels: DataFrame):
-    """``_cut_lineage(labels)`` plus the (label sum, row count)
+    """``cut(labels)`` plus the (label sum, row count)
     convergence signature, read from the checkpoint job itself: the
     ``observe`` metrics ride the eager localCheckpoint, so no separate
     ``agg(...).collect()`` (one SQL execution and two jobs) is run."""
     obs = Observation()
-    cut = _cut_lineage(labels.observe(
+    out = cut(labels.observe(
         obs, F.sum("label").alias("s"), F.count("*").alias("n")))
     m = obs.get
-    return cut, (m["s"], m["n"])
+    return out, (m["s"], m["n"])
 
 
 def dup_groups(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
@@ -705,7 +673,7 @@ def dup_groups(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     aggregate, not a join-diff, observed on the round's own
     checkpoint job (``_cut_with_signature``) rather than run as a
     separate action.  Each round localCheckpoints its
-    labels (``_cut_lineage``) — values bit-identical, DATA lineage
+    labels (``cache.cut``) — values bit-identical, DATA lineage
     O(1) deep AND the logical plan truncated: the previous
     persist()-per-round form kept the data O(1) but nested every
     round's join+agg into the next round's LOGICAL plan, so Catalyst
@@ -732,7 +700,7 @@ def dup_groups(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     # subtrees, so the whole upstream detector executed 4× when edges
     # materialized (r11, measured: the dedup_groups entry 6.8 → 4.3 s
     # warm at sf0.1; one distinct exchange instead of three).
-    edges = _pin(pairs.select(F.explode(F.array(
+    edges = pin(pairs.select(F.explode(F.array(
         F.struct(a.alias("src"), b.alias("dst")),
         F.struct(b.alias("src"), a.alias("dst")),
         F.struct(a.alias("src"), a.alias("dst")),
@@ -822,13 +790,13 @@ def minhash_eval(docs: DataFrame, sample_mod: int = 4,
     recall_ppm, f1_ppm), F1 the ppm harmonic mean.
     """
     thr_ppm = int(round(jaccard_threshold * 1_000_000))
-    sample = _pin(docs.filter(F.col("doc_id") % sample_mod == 0))
-    posts = _pin(sample
-                 .select("doc_id",
-                         F.explode(_shingles(F.col("text"), shingle_k))
-                         .alias("g"))
-                 .select("doc_id", h60(F.col("g")).alias("gh"))
-                 .distinct())
+    sample = pin(docs.filter(F.col("doc_id") % sample_mod == 0))
+    posts = pin(sample
+                .select("doc_id",
+                        F.explode(_shingles(F.col("text"), shingle_k))
+                        .alias("g"))
+                .select("doc_id", h60(F.col("g")).alias("gh"))
+                .distinct())
     sizes = posts.groupBy("doc_id").agg(F.count("*").alias("n"))
     inter = (posts.select(F.col("doc_id").alias("a"), "gh")
              .join(posts.select(F.col("doc_id").alias("b"), "gh"), "gh")
@@ -837,19 +805,19 @@ def minhash_eval(docs: DataFrame, sample_mod: int = 4,
     # truth and pred each feed TWO consumers (the hit join and their
     # own count aggregate) — pinned, or the posting self-join and the
     # banded detector would re-execute per consumer (r11)
-    truth = _pin(inter
-                 .join(sizes.select(F.col("doc_id").alias("a"),
-                                    F.col("n").alias("na")), "a")
-                 .join(sizes.select(F.col("doc_id").alias("b"),
-                                    F.col("n").alias("nb")), "b")
-                 .filter(F.col("i") * 1_000_000
-                         >= thr_ppm * (F.col("na") + F.col("nb")
-                                       - F.col("i")))
-                 .select("a", "b"))
-    pred = _pin(dedup_minhash(sample, num_hashes=num_hashes, bands=bands,
-                              shingle_k=shingle_k,
-                              jaccard_threshold=jaccard_threshold)
+    truth = pin(inter
+                .join(sizes.select(F.col("doc_id").alias("a"),
+                                   F.col("n").alias("na")), "a")
+                .join(sizes.select(F.col("doc_id").alias("b"),
+                                   F.col("n").alias("nb")), "b")
+                .filter(F.col("i") * 1_000_000
+                        >= thr_ppm * (F.col("na") + F.col("nb")
+                                      - F.col("i")))
                 .select("a", "b"))
+    pred = pin(dedup_minhash(sample, num_hashes=num_hashes, bands=bands,
+                             shingle_k=shingle_k,
+                             jaccard_threshold=jaccard_threshold)
+               .select("a", "b"))
     hit = pred.join(truth, ["a", "b"])
     row = (truth.agg(F.count("*").alias("n_truth"))
            .crossJoin(pred.agg(F.count("*").alias("n_pred")))
@@ -938,7 +906,7 @@ def dedup_embedding(emb: DataFrame, threshold: float = 0.95,
         bucket_bits = max(8, (emb.count() // derive_div).bit_length())
     normed = emb.select(F.col("vec_id"),
                         l2_normalize("embedding").alias("v"))
-    bucketed = _pin(normed.withColumn(
+    bucketed = pin(normed.withColumn(
         "bucket", random_hyperplane_bucket(F.col("v"), bucket_bits, seed)))
     bucketed.count()
     cand = (bucketed.select(F.col("vec_id").alias("a"), "bucket")
@@ -1064,7 +1032,7 @@ def fuzzy_pairs(docs: DataFrame, max_dist_ppm: int = 300_000,
     # consumer stages and the whole fan-out degrades to recomputation
     # (measured ~2× on this operator); one count() up front makes
     # every consumer read the built cache.
-    base = _pin(base)
+    base = pin(base)
     base.count()
     # Candidate enumeration + verification as ONE streaming stage
     # (r7 second-decade fix).  The previous shape — slim-key salted
@@ -1183,7 +1151,7 @@ def containment_pairs(docs: DataFrame, n: int = 3,
     # is the slim (doc_id, digest) posting list (MEMORY_AND_DISK —
     # spills, never OOMs); eager count() because a lazily-pinned frame
     # fanned out in one job degrades to recomputation.
-    grams = _pin(grams)
+    grams = pin(grams)
     grams.count()
     sizes = grams.groupBy("doc_id").agg(F.count("*").alias("sz"))
     dfreq = grams.groupBy("g").agg(F.count("*").alias("df"))

@@ -12,9 +12,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _pin
+from ..cache import cut, pin
 
 PPM = 1_000_000
+# Rounds between lineage cuts in pagerank and label_propagation (the
+# registry's 2-3-round budgets never reach a cut).
+_CUT_EVERY = 5
 
 
 def _sym(pairs: DataFrame, src: str, dst: str) -> DataFrame:
@@ -49,14 +52,14 @@ def triangles(pairs: DataFrame) -> DataFrame:
     """
     # single-pass symmetric closure (see _sym), pinned: sym feeds the
     # degree aggregate plus both sides of the rank join (r11)
-    sym = _pin(_sym(pairs, "u", "v"))
+    sym = pin(_sym(pairs, "u", "v"))
     deg = sym.groupBy("u").agg(F.count("*").alias("deg"))
     ranked = (sym
               .join(deg.select(F.col("u").alias("u"),
                                F.col("deg").alias("du")), "u")
               .join(deg.select(F.col("u").alias("v"),
                                F.col("deg").alias("dv")), "v"))
-    oriented = _pin(ranked.filter(
+    oriented = pin(ranked.filter(
         (F.col("du") < F.col("dv")) |
         ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))))
         .select("u", "v", "dv"))
@@ -76,7 +79,7 @@ def triangles(pairs: DataFrame) -> DataFrame:
 
 
 def pagerank(pairs: DataFrame, iters: int = 2,
-             damping_ppm: int = 850_000, pin_every: int = 5) -> DataFrame:
+             damping_ppm: int = 850_000) -> DataFrame:
     """PageRank over the undirected pair graph, quantized to integer
     parts-per-million so every iteration is exact on any engine or
     partitioning (float PageRank drifts with summation order).
@@ -87,20 +90,19 @@ def pagerank(pairs: DataFrame, iters: int = 2,
     double in both engines and loses exactness past 2⁵³ on hub sums).
 
     Scale shape: edges and degrees are computed once and pinned
-    (release with dedup.release_caches); each iteration is one join on
+    (release with cache.release_caches); each iteration is one join on
     the node id + one aggregation — the same key both times, so at
     1000 executors the rank frame stays co-partitioned with edges and
-    only the contribution sums move.  Lineage depth is bounded by
-    ``pin_every``: every ``pin_every`` rounds the rank frame is
-    localCheckpointed (values bit-identical — integer ppm), so
+    only the contribution sums move.  Lineage depth is bounded: every
+    ``_CUT_EVERY`` rounds the rank frame is cut (``cache.cut``,
+    localCheckpoint; values bit-identical — integer ppm), so
     analysis cost stays flat at user-supplied iteration budgets
     instead of growing a nested plan per round.  Symmetric pairs mean
     no dangling nodes by construction.
     """
-    from .dedup import _cut_lineage
     # single-pass symmetric closure (see _sym; r11)
-    edges = _pin(_sym(pairs, "src", "dst"))
-    deg = _pin(edges.groupBy("src").agg(F.count("*").alias("deg")))
+    edges = pin(_sym(pairs, "src", "dst"))
+    deg = pin(edges.groupBy("src").agg(F.count("*").alias("deg")))
     ranks = deg.select(F.col("src").alias("node"),
                        F.lit(PPM).cast("long").alias("r"))
     base = PPM - damping_ppm
@@ -114,8 +116,8 @@ def pagerank(pairs: DataFrame, iters: int = 2,
                  .select("node",
                          F.expr(f"{base} + (s * {damping_ppm}) "
                                 f"div {PPM}").alias("r")))
-        if (i + 1) % pin_every == 0 and i + 1 < iters:
-            ranks = _cut_lineage(ranks)
+        if (i + 1) % _CUT_EVERY == 0 and i + 1 < iters:
+            ranks = cut(ranks)
     return ranks.select(F.col("node").alias("doc_id"),
                         F.col("r").alias("pr_ppm"))
 
@@ -165,8 +167,7 @@ def components(pairs: DataFrame) -> DataFrame:
         F.col("doc_id").alias("node"), F.col("group_id").alias("component"))
 
 
-def label_propagation(pairs: DataFrame, iters: int = 3,
-                      pin_every: int = 5) -> DataFrame:
+def label_propagation(pairs: DataFrame, iters: int = 3) -> DataFrame:
     """Community detection by synchronous label propagation
     (Raghavan et al. 2007) over the undirected pair graph — where
     connected components answer "what is transitively linked", LPA
@@ -182,15 +183,15 @@ def label_propagation(pairs: DataFrame, iters: int = 3,
     bounded by the edge count — then a struct-max per node picks
     (count desc, label asc) without a window sort.  Labels start as
     node ids; edges are pinned once (release with
-    dedup.release_caches).  Lineage depth is bounded by ``pin_every``
-    (localCheckpoint — values bit-identical), so analysis cost stays
-    flat at user-supplied iteration budgets.
+    cache.release_caches).  Lineage depth is bounded by a cut every
+    ``_CUT_EVERY`` rounds (``cache.cut``, localCheckpoint — values
+    bit-identical), so analysis cost stays flat at user-supplied
+    iteration budgets.
 
     Returns (node, community) — community = converged label.
     """
-    from .dedup import _cut_lineage
     # single-pass symmetric closure (see _sym; r11)
-    edges = _pin(_sym(pairs, "src", "dst"))
+    edges = pin(_sym(pairs, "src", "dst"))
     labels = edges.select(F.col("src").alias("node")).distinct() \
         .select("node", F.col("node").alias("lbl"))
     for i in range(iters):
@@ -202,8 +203,8 @@ def label_propagation(pairs: DataFrame, iters: int = 3,
                                     (-F.col("lbl")).alias("neg")))
                      .alias("m")))
         labels = best.select("node", (-F.col("m.neg")).alias("lbl"))
-        if (i + 1) % pin_every == 0 and i + 1 < iters:
-            labels = _cut_lineage(labels)
+        if (i + 1) % _CUT_EVERY == 0 and i + 1 < iters:
+            labels = cut(labels)
     return labels.select("node", F.col("lbl").alias("community"))
 
 
@@ -239,7 +240,7 @@ def neighbor_jaccard(pairs: DataFrame,
     # unpersisted, Spark would recompute the upstream pair pipeline
     # (e.g. the whole minhash LSH) three times.  Built as a
     # single-pass symmetric closure (see _sym; r11)
-    sym = _pin(_sym(pairs, "u", "v"))
+    sym = pin(_sym(pairs, "u", "v"))
     wedge_src = sym
     if max_center_degree is not None:
         centers = (sym.groupBy("u").agg(F.count("*").alias("cdeg"))
@@ -304,7 +305,7 @@ def kcore(pairs: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
     the surviving subgraph.
     """
     # single-pass symmetric closure (see _sym; r11)
-    edges = _pin(_sym(pairs, "src", "dst"))
+    edges = pin(_sym(pairs, "src", "dst"))
     ws, wd = Window.partitionBy("src"), Window.partitionBy("dst")
     for _ in range(rounds):
         edges = (edges
@@ -332,7 +333,7 @@ def bfs_distances(pairs: DataFrame, seeds: DataFrame,
     shuffles, no row blowup beyond the reachable edge set — and the
     DuckDB oracle unrolls the same budget as a depth-bounded
     recursive CTE.  The accumulated frame is localCheckpointed per
-    round (``_cut_lineage``, r12 — it feeds both the next join and
+    round (``cache.cut``, r12 — it feeds both the next join and
     the final readout, and the lazy per-round pin kept the data but
     nested every round's join+agg into the next round's LOGICAL
     plan; the cut stores identical integer partitions and measured
@@ -343,17 +344,15 @@ def bfs_distances(pairs: DataFrame, seeds: DataFrame,
     halves the per-round work at high rounds; with small fixed
     budgets the min-agg form keeps the plan two-shuffle simple.)
     """
-    from .dedup import _cut_lineage
-
     # single-pass symmetric closure (see _sym; r11), pinned: it feeds
     # every BFS round
-    sym = _pin(_sym(pairs, "src", "dst"))
+    sym = pin(_sym(pairs, "src", "dst"))
     dist = seeds.select(F.col(seeds.columns[0]).alias("node"),
                         F.lit(0).alias("d")).distinct()
     for _ in range(rounds):
         nxt = (dist.join(sym, dist.node == sym.src)
                .select(F.col("dst").alias("node"),
                        (F.col("d") + 1).alias("d")))
-        dist = _cut_lineage(dist.unionByName(nxt)
-                            .groupBy("node").agg(F.min("d").alias("d")))
+        dist = cut(dist.unionByName(nxt)
+                   .groupBy("node").agg(F.min("d").alias("d")))
     return dist.select("node", F.col("d").cast("long").alias("dist"))

@@ -14,6 +14,8 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import pin
+
 # The embedding width every unrolled codegen fast path is generated
 # for (r11 ADVICE: previously hardcoded independently in dot,
 # l2_normalize and semantic_dedup's inline cosine).  Non-EMBED_DIM
@@ -442,12 +444,11 @@ def knn_graph(emb: DataFrame, k: int = 5, bucket_bits: int = 6,
     the same trade every LSH stage here makes; raise bucket_bits for
     sparser buckets or union multiple seeds for recall.
     """
-    from .dedup import _pin
     b = (emb.select(F.col("vec_id"),
                     l2_normalize("embedding").alias("v"))
          .withColumn("bucket", random_hyperplane_bucket(
              F.col("v"), bucket_bits, seed)))
-    b = _pin(b)
+    b = pin(b)
     b.count()
     # plain column names on both sides, as semantic_dedup does: dot's
     # unrolled codegen path takes only plain identifiers, and the
@@ -475,8 +476,8 @@ def knn_graph(emb: DataFrame, k: int = 5, bucket_bits: int = 6,
     # both sides) — pinned, or the whole bucket-join + top-k window
     # chain re-executes per side; k·N narrow rows, far smaller than
     # the corpus at any scale
-    edges = _pin(directed.withColumn("rank", F.row_number().over(w))
-                 .filter(F.col("rank") <= k))
+    edges = pin(directed.withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= k))
     edges.count()
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"),
                        F.lit(1).alias("rev"))

@@ -23,8 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import pin
 from ..phash import h60
-from .dedup import normalize_text
+from .dedup import _shingles, ensure_parallelism, normalize_text
 
 PHI = 0.77351  # Flajolet–Martin bias correction constant
 
@@ -239,7 +240,6 @@ def fm_distinct_rollup(df: DataFrame, group_col: str = "event_type",
     row per scope — ``scope`` ∈ ('day', 'group', 'all'), sentinel
     values fill the collapsed keys.
     """
-    from .dedup import _pin
 
     e = (df.select(F.col(group_col).alias("grp"),
                    F.to_date(ts_col).alias("day"),
@@ -251,9 +251,9 @@ def fm_distinct_rollup(df: DataFrame, group_col: str = "event_type",
                  f"ELSE bit_count((r & -r) - 1) + 1 END")
     # the daily register frame IS the stored artifact — pinned so the
     # three scope levels merge registers instead of re-hashing the
-    # corpus (release with dedup.release_caches)
-    daily = _pin(e.select("grp", "day", "b", rho.alias("rho"))
-                 .groupBy("grp", "day", "b").agg(F.max("rho").alias("reg")))
+    # corpus (release with cache.release_caches)
+    daily = pin(e.select("grp", "day", "b", rho.alias("rho"))
+                .groupBy("grp", "day", "b").agg(F.max("rho").alias("reg")))
     per_group = daily.groupBy("grp", "b").agg(F.max("reg").alias("reg"))
     overall = daily.groupBy("b").agg(F.max("reg").alias("reg"))
 
@@ -279,9 +279,9 @@ def fm_distinct_rollup(df: DataFrame, group_col: str = "event_type",
 
     # exact self-check: ONE distinct pass over (grp, day, id) tuples,
     # pinned; coarser exact counts reduce that frame, not the corpus
-    tup = _pin(df.select(F.col(group_col).alias("grp"),
-                         F.to_date(ts_col).alias("day"), F.col(id_col))
-               .distinct())
+    tup = pin(df.select(F.col(group_col).alias("grp"),
+                        F.to_date(ts_col).alias("day"), F.col(id_col))
+              .distinct())
     ex_day = (tup.groupBy("grp", "day")
               .agg(F.count("*").alias("exact_distinct"))
               .select(F.lit("day").alias("scope"),
@@ -453,8 +453,6 @@ def kmv_sketch(docs: DataFrame, group_col: str = "source",
     row per unordered group pair (ga < gb):
     (ga, gb, est_a, est_b, inter_k, kk, jaccard_ppm).
     """
-    from .dedup import _pin, _shingles, ensure_parallelism
-
     two60 = float(1 << 60)
     base = (ensure_parallelism(docs)
             .select(F.col(group_col).alias("grp"),
@@ -477,7 +475,7 @@ def kmv_sketch(docs: DataFrame, group_col: str = "source",
     # a lazily-pinned frame fanned out in one job degrades to
     # recomputation) and register for release_caches().  The cache is
     # k×|groups| rows — driver-tiny at any corpus size.
-    sk = _pin(sk)
+    sk = pin(sk)
     sk.count()
 
     gstats = sk.groupBy("grp").agg(F.count("*").alias("nk"),
@@ -618,10 +616,9 @@ def ams_f2(df: DataFrame, group_col: str = "event_type",
     an exact integer pick from the sorted J-array — no float
     percentile.
     """
-    from .dedup import _pin
-    freq = _pin(df.groupBy(F.col(group_col).alias("grp"),
-                           F.col(id_col).cast("string").alias("x"))
-                .agg(F.count("*").alias("f")))
+    freq = pin(df.groupBy(F.col(group_col).alias("grp"),
+                          F.col(id_col).cast("string").alias("x"))
+               .agg(F.count("*").alias("f")))
     freq.count()
     exact = freq.groupBy("grp").agg(
         F.sum(F.col("f") * F.col("f")).alias("exact_f2"),
@@ -755,8 +752,6 @@ def kmv_id_sketch(df: DataFrame, group_col: str = "event_type",
     (ga, gb, est_a, est_b, inter_k, kk, jaccard_ppm, union_est,
     inter_est).
     """
-    from .dedup import _pin, ensure_parallelism
-
     two60 = float(1 << 60)
     base = (ensure_parallelism(df)
             .select(F.col(group_col).alias("grp"),
@@ -770,7 +765,7 @@ def kmv_id_sketch(df: DataFrame, group_col: str = "event_type",
     wg = Window.partitionBy("grp").orderBy("h")
     sk = (cand.withColumn("rnk", F.row_number().over(wg))
           .filter(F.col("rnk") <= k).select("grp", "h"))
-    sk = _pin(sk)
+    sk = pin(sk)
     sk.count()
 
     gstats = sk.groupBy("grp").agg(F.count("*").alias("nk"),

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import pin
+
 # Cap on the transition-matrix rows markov_stationary may collect to
 # the driver (r11 verdict item 3): |states|² for any sane state
 # vocabulary sits orders of magnitude below this; a high-cardinality
@@ -464,7 +466,6 @@ def frequent_sequences(events: DataFrame, n: int = 3, top_k: int = 20,
     ``ts`` break on the event id; ties in count break on the sequence
     string, so top-k is deterministic cross-engine.
     """
-    from .dedup import _pin
     w = Window.partitionBy(key).orderBy(F.col(ts), F.col(id_col))
     cols = [F.col(state)] + [F.lag(state, -i).over(w).alias(f"s{i}")
                              for i in range(1, n)]
@@ -473,8 +474,8 @@ def frequent_sequences(events: DataFrame, n: int = 3, top_k: int = 20,
     # the aggregate is shared by the ranked output AND the total —
     # pin it or the 1-row total replays the window+scan lineage
     # (the r5 rescan-audit lesson, caught again by the plan audit)
-    counts = _pin(grams.filter(F.col("last").isNotNull())
-                  .groupBy("seq").agg(F.count("*").alias("support")))
+    counts = pin(grams.filter(F.col("last").isNotNull())
+                 .groupBy("seq").agg(F.count("*").alias("support")))
     counts.count()
     total = counts.agg(F.sum("support").alias("tot"))
     ranked = (counts.crossJoin(F.broadcast(total))
@@ -531,12 +532,11 @@ def rolling_active_users(events: DataFrame, window_days: int = 7,
     have events (no synthetic trailing tail).  Returns (day, wau,
     dau) — the trailing-window and same-day distinct counts.
     """
-    from .dedup import _pin
     day = F.to_date(F.col(ts))
     # the distinct (user, day) frame feeds three consumers (contrib,
     # report-day set, dau) — pin it so the corpus is scanned once
-    pairs = _pin(events.select(F.col(key).alias("u"),
-                               day.alias("d")).distinct())
+    pairs = pin(events.select(F.col(key).alias("u"),
+                              day.alias("d")).distinct())
     pairs.count()
     contrib = (pairs.select(
         "u", "d",
@@ -576,22 +576,21 @@ def rfm_segments(events: DataFrame, key: str = "user_id",
     corpus max day.  Returns (user, r_days, f_events, m_cents,
     r_score, f_score, m_score, segment) with segment = r·100+f·10+m.
     """
-    from .dedup import _pin
     day = F.to_date(F.col(ts))
-    per = _pin(events
-               .select(F.col(key), day.alias("d"),
-                       F.floor(F.col(value) * 100).cast("long")
-                       .alias("cents"))
-               .groupBy(key)
-               .agg(F.max("d").alias("last_day"),
-                    F.count("*").cast("long").alias("f_events"),
-                    F.sum("cents").alias("m_cents")))
+    per = pin(events
+              .select(F.col(key), day.alias("d"),
+                      F.floor(F.col(value) * 100).cast("long")
+                      .alias("cents"))
+              .groupBy(key)
+              .agg(F.max("d").alias("last_day"),
+                   F.count("*").cast("long").alias("f_events"),
+                   F.sum("cents").alias("m_cents")))
     per.count()
     anchor = per.agg(F.max("last_day").alias("anchor"))
-    per2 = _pin(per.crossJoin(F.broadcast(anchor))
-                .select(key,
-                        F.datediff("anchor", "last_day").cast("long")
-                        .alias("r_days"), "f_events", "m_cents"))
+    per2 = pin(per.crossJoin(F.broadcast(anchor))
+               .select(key,
+                       F.datediff("anchor", "last_day").cast("long")
+                       .alias("r_days"), "f_events", "m_cents"))
     per2.count()
 
     def bounds(col: str):
@@ -629,8 +628,7 @@ def rfm_segments(events: DataFrame, key: str = "user_id",
 def markov_stationary(events: DataFrame, iters: int = 10,
                       key: str = "user_id", ts: str = "ts",
                       state: str = "event_type",
-                      id_col: str = "event_id",
-                      pin_every: int = 5) -> DataFrame:
+                      id_col: str = "event_id") -> DataFrame:
     """Stationary distribution of the user-journey Markov chain —
     'where do journeys spend their time at equilibrium', the chain-
     level summary the raw transition matrix doesn't give (a state can
@@ -652,9 +650,8 @@ def markov_stationary(events: DataFrame, iters: int = 10,
     lost remainder mass is the documented quantization, mirrored
     exactly by the oracle).  States with no outgoing edges shed their
     mass — the standard dangling-state behavior without damping.
-    ``pin_every`` is retained for signature compatibility; the
-    driver loop has no lineage to cut.  Returns (state, pi_ppm) at
-    the final round.
+    The driver loop has no lineage to cut.  Returns (state, pi_ppm)
+    at the final round.
     """
     from pyspark.sql import types as T
     w = Window.partitionBy(key).orderBy(F.col(ts), F.col(id_col))
@@ -720,11 +717,10 @@ def cohort_ltv(events: DataFrame, key: str = "user_id", ts: str = "ts",
     division.  Returns (cohort_day, age_days, n_users, cents,
     cum_cents, ltv_cents_per_user).
     """
-    from .dedup import _pin
     day = F.to_date(F.col(ts))
-    ev = _pin(events.select(F.col(key).alias("u"), day.alias("d"),
-                            F.floor(F.col(value) * 100).cast("long")
-                            .alias("cents")))
+    ev = pin(events.select(F.col(key).alias("u"), day.alias("d"),
+                           F.floor(F.col(value) * 100).cast("long")
+                           .alias("cents")))
     ev.count()
     first = ev.groupBy("u").agg(F.min("d").alias("cohort_day"))
     sizes = first.groupBy("cohort_day").agg(

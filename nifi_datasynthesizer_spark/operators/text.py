@@ -11,6 +11,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import pin, released
+from .dedup import _shingles, ensure_parallelism, normalize_text
+
 # stopword beacons per language — tiny, high-precision function-word sets
 _LANG_MARKERS = {
     "en": ["the", "and", "of", "to", "is", "that", "with"],
@@ -122,7 +125,6 @@ def hash_embed(docs: DataFrame, dim: int = 16,
     the md5 pass.
     """
     from ..phash import h60
-    from .dedup import normalize_text
 
     toks = F.split(normalize_text(F.col(text_col)), " ")
     hs_expr = F.transform(toks, lambda s: h60(s) % dim)
@@ -164,7 +166,6 @@ def classify_score(docs: DataFrame, dim: int = 64, seed: int = 11,
     in DuckDB.  Returns (doc_id, n_tokens, dot_q, score_ppm).
     """
     from ..phash import h60, h60_py
-    from .dedup import normalize_text
 
     weights = [(h60_py(f"w{seed}:{b}") % 2001) - 1000 for b in range(dim)]
     wlit = F.expr("array(" + ",".join(f"{w}L" for w in weights) + ")")
@@ -239,7 +240,6 @@ def train_classifier(docs: DataFrame, dim: int = 16, rounds: int = 16,
     each round's training accuracy measured on its PRE-update weights.
     """
     from ..phash import h60
-    from .dedup import ensure_parallelism, normalize_text
 
     sig_tab = _logistic_ppm_table()
     slit = "array(" + ",".join(f"{v}L" for v in sig_tab) + ")"
@@ -268,14 +268,13 @@ def train_classifier(docs: DataFrame, dim: int = 16, rounds: int = 16,
     # featurization cost (measured 43 s → 9 s at sf0.1).  The cache
     # holds dim+2 longs per doc, a tiny fraction of the text, and is
     # released before returning, also when a round raises.
-    base = (docs.select(
-        xs.alias("xs"),
-        F.size(toks).cast("long").alias("nt"),
-        F.when(label, F.lit(1_000_000).cast("long"))
-        .otherwise(F.lit(0).cast("long")).alias("y"))
-        .filter(F.col("nt") >= 1)).persist()
-
-    try:
+    with released():
+        base = pin(docs.select(
+            xs.alias("xs"),
+            F.size(toks).cast("long").alias("nt"),
+            F.when(label, F.lit(1_000_000).cast("long"))
+            .otherwise(F.lit(0).cast("long")).alias("y"))
+            .filter(F.col("nt") >= 1))
         dim = dim + 2  # + intercept + length
         # n and per-feature scales in ONE pass; scale_j estimates the
         # score's mean SENSITIVITY to w_j (mean of x_j div nt — the
@@ -338,8 +337,6 @@ def train_classifier(docs: DataFrame, dim: int = 16, rounds: int = 16,
                               n * lr_den * scales[j])
                  for j in range(dim)]
             traj.extend((r, j, w[j], acc_ppm) for j in range(dim))
-    finally:
-        base.unpersist()
     spark = docs.sparkSession
     return spark.createDataFrame(
         traj, "round INT, j INT, w_micro BIGINT, acc_ppm BIGINT")
@@ -358,8 +355,6 @@ def oov_rate(docs: DataFrame, vocab_size: int = 100,
     join, no second shuffle.  Returns (doc_id, n_tokens, n_oov,
     oov_ppm).
     """
-    from .dedup import normalize_text
-
     toks = F.split(normalize_text(F.col(text_col)), " ")
     wc = (docs.select(F.explode(toks).alias("w"))
           .filter(F.col("w") != "")
@@ -385,9 +380,7 @@ def fingerprint(docs: DataFrame, text_col: str = "text",
     hashes are needed).  h60 (portable md5-derived hash, phash.py)
     keeps the sketch replayable in the DuckDB oracle."""
     from ..phash import h60
-    from .dedup import _shingles, normalize_text
 
-    from .dedup import ensure_parallelism
     docs = ensure_parallelism(docs)
     grams = _shingles(F.col(text_col), ngram)
     # hash the grams once into a materialized column; min and max then
@@ -431,8 +424,6 @@ def tfidf_keywords(docs: DataFrame, k: int = 3,
     a (score, word) tie-break, immune to last-ulp ln() differences
     between engines.
     """
-    from .dedup import ensure_parallelism, normalize_text
-
     docs = ensure_parallelism(docs)
     words = (docs.select(F.col(id_col),
                          F.explode(F.split(normalize_text(F.col(text_col)),
@@ -443,9 +434,8 @@ def tfidf_keywords(docs: DataFrame, k: int = 3,
     # each replays the corpus explode (plan audit: 3 corpus scans).
     # The pinned frame is the aggregated slim posting list; eager
     # count() per the lazily-pinned-fan-out rule; released via
-    # dedup.release_caches().
-    from .dedup import _pin
-    tf = _pin(tf)
+    # cache.release_caches().
+    tf = pin(tf)
     tf.count()
     df_ = tf.groupBy("word").agg(F.count("*").alias("df"))
     # corpus size as a broadcast 1-row aggregate — keeps the operator
@@ -486,8 +476,6 @@ def bigram_fluency(docs: DataFrame, text_col: str = "text",
     The LM join is the only corpus-sized exchange; in production the
     LM side would be built on a sample and broadcast.
     """
-    from .dedup import ensure_parallelism, normalize_text
-
     docs = ensure_parallelism(docs)
     toks = F.split(normalize_text(F.col(text_col)), " ")
     pairs = (docs.select(F.col(id_col), toks.alias("__toks"))
@@ -506,10 +494,9 @@ def bigram_fluency(docs: DataFrame, text_col: str = "text",
     # the LM table is |bigram vocab|-bounded but its lineage is the
     # corpus bigram explode, and THREE consumers read it (prefix
     # counts, probs, and the per-doc join build) — pin it (eagerly;
-    # released via dedup.release_caches()) so the corpus pays the
+    # released via cache.release_caches()) so the corpus pays the
     # explode twice (LM build + per-doc pass), not three times.
-    from .dedup import _pin
-    lm2 = _pin(lm2)
+    lm2 = pin(lm2)
     lm2.count()
     lm1 = lm2.groupBy("w1").agg(F.sum("c2").alias("c1"))
     probs = lm2.join(lm1, "w1").select(
@@ -675,14 +662,13 @@ def ngram_lm_score(docs: DataFrame, holdout_mod: int = 5,
     train slice.  No Python rows, no driver-side model.
     """
     from ..phash import h60
-    from .dedup import _pin, normalize_text
 
     toks = F.split(normalize_text(F.col(text_col)), " ")
     # pinned: the tokenized corpus feeds the bigram explode twice
     # (train counts, holdout scoring) plus the unigram counts —
     # unpersisted, the source would rescan three times.  Release via
-    # dedup.release_caches().
-    base = _pin(docs.select(
+    # cache.release_caches().
+    base = pin(docs.select(
         "doc_id", toks.alias("w"),
         (F.pmod(h60(F.col("doc_id").cast("string")), holdout_mod) == 0)
         .alias("is_holdout")))
@@ -744,7 +730,6 @@ def bigram_boilerplate(docs: DataFrame, min_df: int = 3,
     bigrams — the same interpreter trap as
     clustering._ASSIGN_LITERAL_MAX_CELLS).  Still shuffle-free.
     """
-    from .dedup import normalize_text
     toks = F.split(normalize_text(F.col(text_col)), " ")
     n1 = F.greatest(F.size("w") - 1, F.lit(0))
     bi = (docs.select("doc_id", toks.alias("w"))

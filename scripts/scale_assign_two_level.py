@@ -21,11 +21,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
-DST = os.environ.get("SPARK_GRAFT_SCALE_DST", "/root/repo/.scale/emb2m")
+DST = os.environ.get("SPARK_GRAFT_SCALE_DST", f"{ROOT}/.scale/emb2m")
 OUT = os.environ.get("SPARK_GRAFT_SCALE_OUT", "scale_out_assign2l.json")
 
 
@@ -33,7 +34,7 @@ def main() -> int:
     from nifi_datasynthesizer_spark import get_spark
     from nifi_datasynthesizer_spark.io import read_table
     from nifi_datasynthesizer_spark.operators import clustering as CL
-    from nifi_datasynthesizer_spark.operators.dedup import _pin, release_caches
+    from nifi_datasynthesizer_spark.cache import pin, release_caches
 
     spark = get_spark(app="scale_assign2l")
     spark.sparkContext.setLogLevel("ERROR")
@@ -46,7 +47,7 @@ def main() -> int:
     emb = read_table(spark, DST, "embeddings")
     n = emb.count()
     k = max(8, math.isqrt(n))
-    quant = _pin(emb.select(
+    quant = pin(emb.select(
         "vec_id", CL._quantize(F.col("embedding")).alias("xi")))
     quant.count()
     cent_ids = sorted({(j * n) // k for j in range(k)})

@@ -38,7 +38,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
@@ -47,9 +48,9 @@ from pyspark.sql import functions as F
 #   SPARK_GRAFT_SCALE_OUT=scale_out_sf10.json python scripts/scale_check.py ...
 # For a third decade, derive 10x FROM the second-decade corpus (the
 # replica transforms are source-agnostic):
-#   SPARK_GRAFT_SCALE_SRC=/root/repo/.scale/sf10 ... REPLICAS=10 DST=.scale/sf100
+#   SPARK_GRAFT_SCALE_SRC=.scale/sf10 ... REPLICAS=10 DST=.scale/sf100
 SRC = os.environ.get("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-DST = os.environ.get("SPARK_GRAFT_SCALE_DST", "/root/repo/.scale/sf1")
+DST = os.environ.get("SPARK_GRAFT_SCALE_DST", f"{ROOT}/.scale/sf1")
 REPLICAS = int(os.environ.get("SPARK_GRAFT_SCALE_REPLICAS", "10"))
 OUT = os.environ.get("SPARK_GRAFT_SCALE_OUT", "scale_out.json")
 
@@ -165,7 +166,7 @@ def _write_one(parts, path, spark) -> None:
 def main() -> int:
     import __spark_entry__ as entrymod
     from nifi_datasynthesizer_spark import get_spark
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
+    from nifi_datasynthesizer_spark.cache import release_caches
 
     args = [a for a in sys.argv[1:] if a != "--rebuild"]
     names = args or TOP

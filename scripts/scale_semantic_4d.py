@@ -31,12 +31,13 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
 SRC = os.environ.get("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-DST = os.environ.get("SPARK_GRAFT_SCALE_DST", "/root/repo/.scale/emb2m")
+DST = os.environ.get("SPARK_GRAFT_SCALE_DST", f"{ROOT}/.scale/emb2m")
 REPLICAS = int(os.environ.get("SPARK_GRAFT_SCALE_REPLICAS", "1000"))
 OUT = os.environ.get("SPARK_GRAFT_SCALE_OUT", "scale_out_semantic4d.json")
 DIM = 64
@@ -79,7 +80,7 @@ def main() -> int:
     from nifi_datasynthesizer_spark import get_spark
     from nifi_datasynthesizer_spark.io import read_table
     from nifi_datasynthesizer_spark.operators import clustering as CL
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
+    from nifi_datasynthesizer_spark.cache import release_caches
 
     spark = get_spark(app="scale_semantic_4d")
     spark.sparkContext.setLogLevel("ERROR")

@@ -37,13 +37,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 
 SRC = os.environ.get("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
-BASE = os.environ.get("SPARK_GRAFT_SCALE_STREAM_DIR",
-                      "/root/repo/.scale/stream")
+BASE = os.environ.get("SPARK_GRAFT_SCALE_STREAM_DIR", f"{ROOT}/.scale/stream")
 OUT = os.environ.get("SPARK_GRAFT_SCALE_OUT", "scale_out_streaming.json")
 N_FILES = 16
 # e.g. SPARK_GRAFT_SCALE_STREAM_SCALES=1,10,100 for a second decade

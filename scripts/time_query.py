@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from nifi_datasynthesizer_spark import get_spark  # noqa: E402
-from nifi_datasynthesizer_spark.operators.dedup import release_caches  # noqa: E402
+from nifi_datasynthesizer_spark.cache import release_caches  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

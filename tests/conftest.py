@@ -5,6 +5,9 @@ import os
 
 import pytest
 
+# the repository root, for subprocesses that import the checkout under test
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # single source of truth for the test-data root: every test reads the
 # smallest SF through this so a relocated dataset is a one-env change
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -18,6 +21,25 @@ def spark():
     s = get_spark(app="tests")
     yield s
     s.stop()
+
+
+@pytest.fixture(autouse=True)
+def _release_and_check_caches():
+    """After every test, release the frames pinned through ``cache``
+    and check that Spark's SQL cache list is empty: a bare
+    ``.persist()`` left behind fails the test that made it.  Never
+    starts a session; without an active one there is nothing to do."""
+    yield
+    from pyspark.sql import SparkSession
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        return
+    from nifi_datasynthesizer_spark.cache import release_caches
+    release_caches()
+    leaked = not spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    if leaked:
+        spark.catalog.clearCache()   # fail this test only, not the next
+    assert not leaked, "a cached frame outlived release_caches()"
 
 
 @contextlib.contextmanager

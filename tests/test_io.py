@@ -16,7 +16,7 @@ import shutil
 import pytest
 
 from nifi_datasynthesizer_spark import io as nio
-from tests.conftest import SF_DIR, job_group
+from tests.conftest import ROOT, SF_DIR, job_group
 
 
 @pytest.fixture()
@@ -732,7 +732,7 @@ def test_cli_avro_output(spark, tmp_path):
         [sys.executable, "-m", "nifi_datasynthesizer_spark",
          "--schema", str(sfile), "--count", "200", "--format", "avro",
          "--output", out, "--threads", "2"],
-        cwd="/root/repo", capture_output=True, text=True, timeout=300)
+        cwd=ROOT, capture_output=True, text=True, timeout=300)
     assert r.returncode == 0, r.stderr[-2000:]
     from nifi_datasynthesizer_spark import avro_io as AV
     back = AV.read_avro(spark, out)

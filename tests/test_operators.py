@@ -5,6 +5,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from nifi_datasynthesizer_spark import cache as CA
+from nifi_datasynthesizer_spark.cache import release_caches
 from nifi_datasynthesizer_spark.operators import dedup as DD
 from nifi_datasynthesizer_spark.operators import multimodal as MM
 from nifi_datasynthesizer_spark.operators import similarity as SIM
@@ -486,7 +488,7 @@ def test_dup_groups_one_action_per_round(spark, monkeypatch):
     localCheckpoint (DataFrame.observe): one SQL execution per lineage
     cut and no standalone collect, with the same components."""
     cuts = []
-    real_cut = DD._cut_lineage
+    real_cut = DD.cut
 
     def counting_cut(df):
         cuts.append(df)
@@ -502,7 +504,7 @@ def test_dup_groups_one_action_per_round(spark, monkeypatch):
     bus = spark.sparkContext._jsc.sc().listenerBus()
     bus.waitUntilEmpty()
     before = store.executionsCount()
-    monkeypatch.setattr(DD, "_cut_lineage", counting_cut)
+    monkeypatch.setattr(DD, "cut", counting_cut)
     monkeypatch.setattr(type(pairs), "collect", no_collect)
     groups = DD.dup_groups(pairs)
     bus.waitUntilEmpty()
@@ -1303,36 +1305,35 @@ def test_pagerank_planted(spark):
     assert out == out2                                # integer-exact
 
 
-def test_power_iteration_lineage_bounded(spark):
+def test_power_iteration_lineage_bounded(spark, monkeypatch):
     """r6 verdict item: deep user-supplied iteration budgets must not
-    grow the analyzed plan without bound.  pin_every localCheckpoints
-    the per-round frame, so at iters=25 the final plan is one pin
-    interval deep, not 25 — and the cut changes no values (the
-    checkpoint stores the exact integer-ppm partitions)."""
-    from nifi_datasynthesizer_spark.operators.graph import pagerank
-    from nifi_datasynthesizer_spark.operators.temporal import \
-        markov_stationary
+    grow the analyzed plan without bound.  pagerank cuts the per-round
+    frame every ``_CUT_EVERY`` rounds, so at iters=25 the final plan
+    is one cut interval deep, not 25 — and the cut changes no values
+    (the checkpoint stores the exact integer-ppm partitions)."""
+    from nifi_datasynthesizer_spark.operators import graph as G
     pairs = spark.createDataFrame([(0, k) for k in range(1, 6)], ["a", "b"])
+    cuts = []
+
+    def counting_cut(df):
+        cuts.append(df)
+        return CA.cut(df)
+
+    def ranks(cut_every):
+        monkeypatch.setattr(G, "_CUT_EVERY", cut_every)
+        return {r.doc_id: r.pr_ppm
+                for r in G.pagerank(pairs, iters=6).collect()}
+
+    monkeypatch.setattr(G, "cut", counting_cut)
     # values identical with and without lineage cuts
-    cut = {r.doc_id: r.pr_ppm
-           for r in pagerank(pairs, iters=6, pin_every=2).collect()}
-    uncut = {r.doc_id: r.pr_ppm
-             for r in pagerank(pairs, iters=6, pin_every=100).collect()}
-    assert cut == uncut
-    ev = spark.createDataFrame(
-        [(1, i, "ab"[i % 2], i) for i in range(8)] +
-        [(2, i, "bc"[i % 2], 100 + i) for i in range(8)],
-        ["user_id", "ts", "event_type", "event_id"])
-    mcut = {r.event_type: r.pi_ppm
-            for r in markov_stationary(ev, iters=6, pin_every=2).collect()}
-    muncut = {r.event_type: r.pi_ppm
-              for r in markov_stationary(ev, iters=6,
-                                         pin_every=100).collect()}
-    assert mcut == muncut and len(mcut) == 3
-    # analyzed-plan size at iters=25 ~= one pin interval (iters=5), so
+    assert ranks(2) == ranks(100)
+    assert len(cuts) == 2          # after rounds 2 and 4, none at 100
+    monkeypatch.undo()
+
+    # analyzed-plan size at iters=25 ~= one cut interval (iters=5), so
     # analysis cost is flat in the iteration budget
     def plan_len(iters):
-        df = pagerank(pairs, iters=iters, pin_every=5)
+        df = G.pagerank(pairs, iters=iters)
         return len(df._jdf.queryExecution().analyzed().toString())
     assert plan_len(25) <= 1.5 * plan_len(5)
 
@@ -1796,7 +1797,6 @@ def test_fit_sample_deterministic_and_pinned(spark):
     the cache instead of re-scanning the corpus, and fit_mod=1 must
     reproduce the full-fit codebooks bit-for-bit."""
     from nifi_datasynthesizer_spark.operators import clustering as CL
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     from nifi_datasynthesizer_spark.phash import h60_py
     import pyspark.sql.functions as SF
 
@@ -1822,7 +1822,6 @@ def test_fit_sample_deterministic_and_pinned(spark):
 def test_corpus_clean_near_dup_releases_cache(spark):
     """corpus_clean's near-dup pass caches the cleaned corpus; the
     cache must be one release_caches() frees, not a leak."""
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     from nifi_datasynthesizer_spark.operators.pipeline import corpus_clean
 
     def persisted() -> set:
@@ -1836,6 +1835,45 @@ def test_corpus_clean_near_dup_releases_cache(spark):
     assert persisted() - before, "near-dup pass cached nothing"
     release_caches()
     assert persisted() - before == set()
+
+
+def _sql_cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_released_frees_own_pins_when_body_raises(spark):
+    """``released()`` unpersists the pins made inside its block also
+    when the block raises, and the error propagates."""
+    with pytest.raises(RuntimeError, match="planted"):
+        with CA.released():
+            CA.pin(spark.range(10)).count()
+            assert not _sql_cache_empty(spark)
+            raise RuntimeError("planted")
+    assert _sql_cache_empty(spark)
+
+
+def test_released_keeps_earlier_pins(spark):
+    """Pins made before the block belong to the caller: the block
+    releases only its own, release_caches() the rest.  The dedup
+    module still re-exports the one release_caches."""
+    outer = CA.pin(spark.range(5))
+    with CA.released():
+        inner = CA.pin(spark.range(7))
+    assert outer.storageLevel.useMemory
+    assert not inner.storageLevel.useMemory
+    DD.release_caches()
+    assert not outer.storageLevel.useMemory
+    assert _sql_cache_empty(spark)
+
+
+def test_cut_never_enters_sql_cache(spark):
+    """A lineage cut is a local checkpoint, not a cache entry: nothing
+    for release_caches() to free, and the values are unchanged."""
+    df = spark.range(20).selectExpr("id", "id * 3 AS x")
+    cut = CA.cut(df)
+    assert _sql_cache_empty(spark)
+    assert sorted(cut.collect()) == sorted(df.collect())
+    assert _sql_cache_empty(spark)
 
 
 def test_word_entropy_planted(spark):
@@ -1983,7 +2021,6 @@ def test_corpus_token_budget_planted(spark):
     hash-priority prefix order."""
     from nifi_datasynthesizer_spark.operators.curation import \
         corpus_token_budget
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     from nifi_datasynthesizer_spark.phash import h60_py
     rows = [(i, " ".join(["w"] * (3 + i % 5)),
              "big" if i < 40 else "small") for i in range(52)]
@@ -2019,7 +2056,6 @@ def test_corpus_token_budget_plan(spark):
     from nifi_datasynthesizer_spark.io import read_table
     from nifi_datasynthesizer_spark.operators.curation import \
         corpus_token_budget
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     docs = read_table(spark, SF_DIR, "documents")
     plan = corpus_token_budget(docs)._jdf.queryExecution() \
         .executedPlan().toString()
@@ -2032,7 +2068,6 @@ def test_corpus_overlap_planted(spark):
     """Planted containment: source b's gram set is a subset of a's,
     c shares nothing."""
     from nifi_datasynthesizer_spark.operators.curation import corpus_overlap
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     rows = [(0, "one two three four five six", "a"),
             (1, "one two three four", "b"),
             (2, "seven eight nine ten eleven", "c")]
@@ -2053,7 +2088,6 @@ def test_corpus_overlap_plan(spark):
     size joins broadcast)."""
     from nifi_datasynthesizer_spark.io import read_table
     from nifi_datasynthesizer_spark.operators.curation import corpus_overlap
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     docs = read_table(spark, SF_DIR, "documents")
     plan = corpus_overlap(docs)._jdf.queryExecution() \
         .executedPlan().toString()
@@ -2066,7 +2100,6 @@ def test_identity_edges_and_components_planted(spark):
     """Chain edges preserve components without cliques; hot keys are
     dropped; components label by min node."""
     import datetime as dt
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     from nifi_datasynthesizer_spark.operators.graph import (
         components, identity_edges)
     t = dt.datetime(2024, 1, 1)
@@ -2115,7 +2148,6 @@ def test_ams_f2_estimates(spark):
     """Exact F2 matches by construction; the sketch estimate is
     within a constant factor on a skewed planted distribution."""
     import datetime as dt
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     from nifi_datasynthesizer_spark.operators.sketches import ams_f2
     t = dt.datetime(2024, 1, 1)
     # group g: user 1 appears 8x, users 2..5 once -> F2 = 64 + 4 = 68
@@ -2134,7 +2166,6 @@ def test_corpus_curriculum_planted(spark):
     are monotone in length, boundary rule is CDF >= q*N/stages."""
     from nifi_datasynthesizer_spark.operators.curation import \
         corpus_curriculum
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     # lengths: 1,1,2,2,3,3,4,4 -> quartile bounds b1=1, b2=2, b3=3
     rows = [(i, " ".join(["w"] * (1 + i // 2))) for i in range(8)]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
@@ -2163,7 +2194,6 @@ def test_knn_graph_mutual(spark):
     """Top-k bound, mutual symmetry, and self-edges excluded on the
     real embeddings table."""
     from nifi_datasynthesizer_spark.io import read_table
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     from nifi_datasynthesizer_spark.operators.similarity import knn_graph
     emb = read_table(spark, SF_DIR, "embeddings").limit(200)
     edges = knn_graph(emb, k=3).collect()
@@ -2469,8 +2499,7 @@ def test_label_prop_refines_components(spark):
     """Label propagation can only split within connectivity: every
     LPA community must be contained in exactly one connected
     component (communities refine components, never bridge them)."""
-    from nifi_datasynthesizer_spark.operators.dedup import (
-        dedup_minhash, release_caches)
+    from nifi_datasynthesizer_spark.operators.dedup import dedup_minhash
     from nifi_datasynthesizer_spark.operators.graph import (
         components, label_propagation)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")

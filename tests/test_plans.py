@@ -10,6 +10,7 @@ import io
 
 import __spark_entry__ as entrymod
 from nifi_datasynthesizer_spark import compile_schema
+from nifi_datasynthesizer_spark.cache import release_caches
 
 from tests.conftest import SF_DIR as SF, job_group
 
@@ -171,7 +172,6 @@ def test_ngram_jaccard_blocks_on_token_band(spark):
     side); a slim-key join + re-attach-by-id was measured 148× at the
     100× corpus because the re-attach moves pairs × |grams| bytes and
     pairs outnumber docs ~10× — see ngram_jaccard_pairs' docstring."""
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     df = entrymod.queries()["dedup_ngram_jaccard"](spark, SF)
     p = _plan(df, "simple")     # tree mode: scan columns inline
     release_caches()
@@ -188,7 +188,6 @@ def test_dedup_embedding_slim_candidate_join(spark):
     per candidate would be the dominant shuffle byte cost at
     100 TB)."""
     import re
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     df = entrymod.queries()["dedup_embedding"](spark, SF)
     p = _plan(df, "simple")     # tree mode: scan columns inline
     release_caches()
@@ -203,7 +202,6 @@ def test_dedup_embedding_slim_candidate_join(spark):
 def test_sketch_merge_reads_cached_registers(spark):
     """The group/all scopes must MAX-merge the pinned daily register
     frame (InMemory scans), not re-hash the corpus per scope."""
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     df = entrymod.queries()["sketch_merge"](spark, SF)
     p = _plan(df)
     release_caches()
@@ -320,7 +318,6 @@ def test_fuzzy_pairs_blocks_on_two_keys(spark):
     r7 second-decade shape streams prune+DP in the join stage: no
     InMemoryRelation may sit above the band join (a pairs-sized
     cache measured 133× at the 100× corpus)."""
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     df = entrymod.queries()["dedup_fuzzy"](spark, SF)
     p = _plan(df)
     release_caches()
@@ -597,7 +594,6 @@ def test_r6_operators_scan_counts(spark):
     lineage); sketch_topk's two scans are the count + retained sides
     by design; ann_ivfpq_rerank's two scans are the code chain and
     the re-rank vector attach by design."""
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     expect = {"events_parse_lines": 1, "sketch_topk": 2,
               "ann_ivfpq_rerank": 2}
     for name, want in expect.items():
@@ -636,7 +632,6 @@ def test_wave3_operators_scan_counts(spark):
     embed_knn_graph (pinned bucket frame feeds both join sides),
     events_attribution / events_dwell / events_sequences (single
     events scan), sketch_ams (pinned frequency frame)."""
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     expect = {"corpus_token_budget": 1, "corpus_overlap": 1,
               "embed_knn_graph": 1, "events_attribution": 1,
               "events_dwell": 1, "events_sequences": 1,
@@ -687,7 +682,6 @@ def test_wave4_operators_scan_counts(spark):
     pinned minhash signature lineage (2); dedup_minhash_eval reads
     the sampled corpus for postings plus the pinned signature pass
     (2)."""
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     expect = {"text_readability": 1, "io_zorder": 1, "events_rfm": 1,
               "corpus_dedup_report": 2, "dedup_minhash_eval": 2,
               "events_histogram": 1, "corpus_weighted_sample": 1,
@@ -732,7 +726,6 @@ def test_r8_operators_scan_counts(spark):
     candidate join and both payload re-attaches reuse the pin);
     exchanges stay bounded (per-query top-k windows and the bucket
     join — never a second corpus-sized shuffle)."""
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     expect = {"ann_ivf_derived": (4, 4), "ann_ivf_arrow": (3, 3),
               "dedup_embedding_derived": (2, 1)}
     for name, (want_scans, want_exch) in expect.items():
@@ -794,7 +787,6 @@ def test_r10_operators_plan_audit(spark):
     the multi-use plans — InMemoryTableScan present, ONE parquet scan
     of the corpus, exchange counts bounded (the unpinned regression
     re-ran the whole upstream pipeline 3x)."""
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     q = entrymod.queries()
 
     p = _plan(q["q4_order_priority"](spark, SF))
@@ -858,7 +850,6 @@ def test_r11_operators_plan_audit(spark):
     one pinned corpus scan.  sketch_audience_overlap: the only
     corpus-sized work is one events scan into the pinned k-row
     sketches."""
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     q = entrymod.queries()
 
     p = _plan(q["q10_returned_customers"](spark, SF))
@@ -913,7 +904,6 @@ def test_r11opt_knn_graph_single_pass(spark):
     double-execution shape is back.  The pinned edge frame
     (InMemoryTableScan) is what keeps the mutual-flag self-join from
     replaying the bucket-join + top-k window chain per side."""
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     p = _plan(entrymod.queries()["embed_knn_graph"](spark, SF))
     assert "Union" not in p, "union-of-projections crept back"
     assert "InMemoryTableScan" in p
@@ -928,7 +918,6 @@ def test_knn_graph_dot_takes_unrolled_path(spark):
     interpreted zip_with/aggregate fold."""
     import re
 
-    from nifi_datasynthesizer_spark.operators.dedup import release_caches
     p = _plan(entrymod.queries()["embed_knn_graph"](spark, SF), "extended")
     release_caches()
     assert re.search(r"va#\d+\[63\] \* vb#\d+\[63\]", p), \

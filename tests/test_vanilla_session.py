@@ -9,6 +9,8 @@ from __future__ import annotations
 import subprocess
 import sys
 
+from tests.conftest import ROOT
+
 _SCRIPT = r"""
 import sys
 from pyspark.sql import SparkSession
@@ -20,7 +22,7 @@ spark = (SparkSession.builder.appName("vanilla")
          .config("spark.driver.memory", "4g")
          .getOrCreate())
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 import __spark_entry__ as E
 from tests.conftest import compare_with_duckdb
 
@@ -38,7 +40,7 @@ print("ALL-VANILLA-OK")
 
 
 def test_driver_contract_under_vanilla_session():
-    r = subprocess.run([sys.executable, "-c", _SCRIPT], cwd="/root/repo",
+    r = subprocess.run([sys.executable, "-c", _SCRIPT, ROOT], cwd=ROOT,
                        capture_output=True, text=True, timeout=600)
     assert "ALL-VANILLA-OK" in r.stdout, (
         f"stdout tail: {r.stdout[-2000:]}\nstderr tail: {r.stderr[-2000:]}")
