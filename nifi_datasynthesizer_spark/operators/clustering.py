@@ -1,4 +1,5 @@
-"""Distributed embedding clustering (Lloyd's k-means).
+"""Distributed embedding clustering (Lloyd's k-means) and product
+quantization.
 
 Semantic-dedup / topic-bucketing step of an embedding pipeline:
 every vector gets a cluster id, clusters get centroids.  Distinct
@@ -8,32 +9,43 @@ the product, so each iteration is a distributed pass.
 
 Plan shape for 100 TB per iteration:
 
-- assignment is a pure narrow projection: the k centroids are plan
-  literals (k × dim ints), the per-row argmin is an array expression
-  — no join, no shuffle, no row blowup (same pattern as ann_ivf cell
-  assignment);
-- the centroid update is ONE aggregation to k rows (map-side partial
-  sums over 64 per-dimension columns), collected to the driver —
-  k × dim integers, not data;
+- assignment is a pure narrow map: at small k the centroids are plan
+  literals and the per-row argmin is an array expression, at large k
+  an Arrow map — no join, no shuffle, no row blowup either way;
+- each centroid update is ONE Arrow pass that ships per-partition
+  partial sums (at most k × (dim + 2) integers per codebook)
+  straight to the driver — k × dim integers, not data;
 - the final pass emits (vec_id, cluster, dist_q) without collecting.
+
+k-means is product quantization with one codebook, so k-means, PQ
+and IVF-PQ train through the same Lloyd round and every Arrow pass
+finds nearest centroids with the one kernel :func:`_nearest`.
 
 Exactness across engines: embeddings are quantized to integer
 micro-units (``floor(x * 1e6)``), so distances are exact int64
 arithmetic (|Δ|² ≤ 4e12 · dim ≪ 2⁶³), per-cluster sums are exact,
 and the centroid refresh ``floor(sum / count)`` is a single IEEE
 double division + floor — bit-identical in Spark, Python and DuckDB.
-Init is the k lowest-vec_id vectors (one TakeOrdered); empty
-clusters keep their previous centroid.
+Init is the k lowest-vec_id vectors (one TakeOrdered, which also
+gives the vector width); empty clusters keep their previous centroid.
 """
 
 from __future__ import annotations
 
 import math
+import sys
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark import cloudpickle
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cache import pin
+
+# The Arrow passes' task closures call _nearest and _xi: ship this
+# module's functions by value, so Python workers need not import the
+# package (a driver that only put it on sys.path still runs them).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 SCALE = 1_000_000
 
@@ -71,6 +83,48 @@ def _argmin_sql(d_sql: str, k: int) -> str:
             f"(acc, e) -> IF(e.dist < acc.dist, e, acc))")
 
 
+def _nearest(X: np.ndarray, B: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The nearest-centroid kernel of every Arrow pass in this module.
+
+    ``X`` is an (n, dim) int64 matrix of micro-unit vectors and ``B``
+    an (m, k, sub) int64 stack of ``m`` codebooks; codebook ``s``
+    covers columns ``[s·sub, (s+1)·sub)`` of ``X`` (m=1, sub=dim is
+    plain k-means).  Returns ``(codes, dist)``: the (n, m) int32 code
+    of the nearest centroid in each subspace, and the (n,) int64 sum
+    of those minimum squared distances.
+
+    - Exact: each distance is int64 ``|x|² − 2x·c + |c|²`` over
+      micro-units (terms ≤ ~6e15 at dim 64, ≪ 2⁶³), equal to the SQL
+      fold's Σ(a − b)².
+    - Tie-break: ``argmin`` keeps the FIRST minimum, the smallest
+      centroid index — the rule of :func:`_argmin_sql` and of the
+      DuckDB oracles.
+    - Memory: rows are taken ``(1 << 22) // k`` at a time, so one
+      distance block holds ~2²² cells whatever k is.
+    """
+    m, k, sub = B.shape
+    b2 = (B * B).sum(axis=2)
+    codes = np.empty((len(X), m), dtype=np.int32)
+    dist = np.zeros(len(X), dtype=np.int64)
+    step = max(1, (1 << 22) // k)
+    for lo in range(0, len(X), step):
+        x = X[lo:lo + step]
+        rows = np.arange(len(x))
+        for s in range(m):
+            xs = x[:, s * sub:(s + 1) * sub]
+            d = ((xs * xs).sum(axis=1, keepdims=True)
+                 - 2 * (xs @ B[s].T) + b2[s][None, :])
+            a = d.argmin(axis=1)
+            codes[lo:lo + len(x), s] = a
+            dist[lo:lo + len(x)] += d[rows, a]
+    return codes, dist
+
+
+def _xi(pdf) -> np.ndarray:
+    """The ``xi`` column of an Arrow batch as an (n, dim) int64 matrix."""
+    return np.asarray(pdf["xi"].tolist(), dtype=np.int64)
+
+
 # k·dim literal cells above which _assign switches from the SQL fold
 # to the Arrow path: higher-order functions are interpreted (never
 # whole-stage codegen), and the fold allocates one zip_with array per
@@ -86,12 +140,11 @@ def _assign(quant: DataFrame, centroids: list[list[int]]) -> DataFrame:
 
     Small k: narrow single-pass fold argmin over the k distance
     expressions (plan literals, no join, no shuffle).  Large k (the
-    derived k≈√n SemDeDup path): Arrow-batched mapInPandas carrying
-    the centroid matrix as a task closure — exact int64 micro-unit
-    arithmetic (x² − 2x·C + C², values ≤ ~6e15 ≪ 2⁶³) and argmin's
-    first-minimum tie-break, so both paths are bit-identical; row
-    chunking bounds the distance block at ~2²² cells so executor
-    memory is flat in k.  Still a narrow map: no shuffle either way.
+    derived k≈√n SemDeDup path): Arrow-batched mapInPandas running
+    :func:`_nearest` with the centroid matrix in the task closure —
+    the same exact int64 distances and first-minimum tie-break, so
+    both paths are bit-identical and executor memory is flat in k.
+    Still a narrow map: no shuffle either way.
     """
     k, dim = len(centroids), len(centroids[0])
     if k * dim <= _ASSIGN_LITERAL_MAX_CELLS:
@@ -101,27 +154,14 @@ def _assign(quant: DataFrame, centroids: list[list[int]]) -> DataFrame:
                         F.expr("CAST(__m.j AS INT)").alias("cluster"),
                         F.col("__m.dist").alias("dist_q")))
 
-    import numpy as np
-
-    C = np.asarray(centroids, dtype=np.int64)
-    c2 = (C * C).sum(axis=1)
-    row_step = max(1, (1 << 22) // k)
+    C = np.asarray([centroids], dtype=np.int64)
 
     def gen(batches):
         import pandas as pd
         for pdf in batches:
-            X = np.asarray(pdf["xi"].tolist(), dtype=np.int64)
-            cl = np.empty(len(X), dtype=np.int32)
-            dq = np.empty(len(X), dtype=np.int64)
-            for lo in range(0, len(X), row_step):
-                x = X[lo:lo + row_step]
-                d = ((x * x).sum(axis=1, keepdims=True)
-                     - 2 * (x @ C.T) + c2[None, :])
-                j = d.argmin(axis=1)   # first min — same tie-break as the fold
-                cl[lo:lo + len(x)] = j
-                dq[lo:lo + len(x)] = d[np.arange(len(x)), j]
+            code, dq = _nearest(_xi(pdf), C)
             yield pd.DataFrame({"vec_id": pdf["vec_id"], "xi": pdf["xi"],
-                                "cluster": cl, "dist_q": dq})
+                                "cluster": code[:, 0], "dist_q": dq})
 
     return quant.mapInPandas(
         gen, schema="vec_id long, xi array<bigint>, cluster int, dist_q long")
@@ -150,8 +190,6 @@ def assign_two_level(quant: DataFrame, centroids: list[list[int]],
     exactly like IVF probing, and the probe width is the
     recall-vs-cost lever (the IMI / hierarchical-IVF construction).
     """
-    import numpy as np
-
     C = np.asarray(centroids, dtype=np.int64)
     k, dim = C.shape
     g = max(2, math.isqrt(k))
@@ -182,7 +220,7 @@ def assign_two_level(quant: DataFrame, centroids: list[list[int]],
     def gen(batches):
         import pandas as pd
         for pdf in batches:
-            X = np.asarray(pdf["xi"].tolist(), dtype=np.int64)
+            X = _xi(pdf)
             n = len(X)
             Xf = X.astype(np.float64)
             ds = ((Xf * Xf).sum(axis=1, keepdims=True)
@@ -215,73 +253,6 @@ def assign_two_level(quant: DataFrame, centroids: list[list[int]],
 
     return quant.mapInPandas(
         gen, schema="vec_id long, xi array<bigint>, cluster int, dist_q long")
-
-
-def _lloyd_round_np(quant: DataFrame, centroids: list[list[int]],
-                    xi_col: str = "xi") -> list[list[int]]:
-    """One fused Lloyd round (assign + centroid update) as a single
-    Arrow-batched partial-sums pass — bit-identical to the
-    assign-then-posexplode-update pair it replaces (exact int64
-    micro-unit distances, numpy first-minimum argmin = the SQL fold's
-    tie-break, integer partial sums are order-free, and the refresh
-    is the same ``floor(float(sum)/count)`` IEEE op; empty clusters
-    keep their previous centroid).
-
-    Motivation (r11, guide §4.2/§1.2): the literal-SQL round builds a
-    NEW k·dim-literal argmin tree every iteration (the centroid
-    literals change), so each round pays full analysis + codegen of
-    an interpreted-HOF expression forest before touching a row, then
-    explodes to (cluster, d) rows for the update shuffle.  This pass
-    ships only the ≤ k×(dim+2) partial sums per partition and runs
-    the distance grid through numpy's vectorized int64 kernels —
-    measured 5-8× per round at sf0.1 and strictly less work per row
-    at any scale (the `_ASSIGN_LITERAL_MAX_CELLS` lesson applied to
-    the training loop).  No shuffle: partials collect straight to the
-    driver, like the k-row aggregation they replace.
-    """
-    import numpy as np
-
-    C = np.asarray(centroids, dtype=np.int64)
-    k, dim = C.shape
-    c2 = (C * C).sum(axis=1)
-    row_step = max(1, (1 << 22) // k)
-
-    def gen(batches):
-        import pandas as pd
-        sums = np.zeros((k, dim), dtype=np.int64)
-        cnts = np.zeros(k, dtype=np.int64)
-        for pdf in batches:
-            X = np.asarray(pdf[xi_col].tolist(), dtype=np.int64)
-            for lo in range(0, len(X), row_step):
-                x = X[lo:lo + row_step]
-                d = ((x * x).sum(axis=1, keepdims=True)
-                     - 2 * (x @ C.T) + c2[None, :])
-                a = d.argmin(axis=1)    # first min — the fold's tie-break
-                np.add.at(sums, a, x)
-                cnts += np.bincount(a, minlength=k)
-        nz = np.flatnonzero(cnts)
-        if len(nz):
-            yield pd.DataFrame({"j": nz.astype("int32"),
-                                "sv": list(sums[nz]),
-                                "cnt": cnts[nz]})
-
-    rows = (quant.select(F.col(xi_col).alias(xi_col))
-            .mapInPandas(gen, schema="j int, sv array<bigint>, cnt long")
-            .collect())
-    sums: dict[int, list[int]] = {}
-    cnts: dict[int, int] = {}
-    for r in rows:
-        j = int(r.j)
-        if j in sums:
-            sums[j] = [a + int(b) for a, b in zip(sums[j], r.sv)]
-            cnts[j] += int(r.cnt)
-        else:
-            sums[j] = [int(b) for b in r.sv]
-            cnts[j] = int(r.cnt)
-    return [
-        [math.floor(float(sums[j][d]) / cnts[j]) for d in range(dim)]
-        if j in sums else centroids[j]
-        for j in range(k)]
 
 
 def _fit_sample(quant: DataFrame, fit_mod: int | None) -> DataFrame:
@@ -344,56 +315,45 @@ def cluster_embeddings(emb: DataFrame, k: int = 8, iters: int = 2,
     Returns (vec_id, cluster, dist_q) — dist_q is the exact squared
     L2 distance in micro-unit² integers.
     """
-    dim = len(emb.select(vec_col).first()[0])
     quant = emb.select("vec_id", _quantize(F.col(vec_col)).alias("xi"))
-    fitq = _fit_sample(quant, fit_mod)
-
-    first = (fitq.orderBy("vec_id").limit(k).collect())
-    centroids = [list(r.xi) for r in first]
-
-    for _ in range(iters):
-        # r11: fused Arrow partial-sums round (bit-identical — see
-        # _lloyd_round_np); the FINAL full-corpus assignment below
-        # stays the narrow centroid-literal argmin (it is the product
-        # and its plan shape is the audited one)
-        centroids = _lloyd_round_np(fitq, centroids)
-
+    (centroids,), _ = _pq_train(quant, 1, k, iters, fit_mod,
+                                "cluster_embeddings")
+    # the final full-corpus assignment is the product: it stays the
+    # narrow centroid-literal argmin (the audited plan shape)
     return (_assign(quant, centroids)
             .select("vec_id", "cluster", "dist_q"))
 
 
-def _pq_train_round_np(quant: DataFrame,
-                       books: list[list[list[int]]],
-                       sub: int) -> list[list[list[int]]]:
-    """One fused PQ-Lloyd round over ALL m subspaces as a single
-    Arrow-batched partial-sums pass — the :func:`_lloyd_round_np`
-    construction applied per subspace slice.  Bit-identical to the
-    exploded literal-SQL round it replaces (exact int64 sub-distances,
-    numpy first-min argmin, order-free integer partial sums, the same
-    ``floor(float(sum)/count)`` refresh); ships m·k×(sub+2) partials
-    per partition instead of re-analyzing/codegening an m·k-aggregate
-    interpreted-HOF forest per iteration (the literals change every
-    round, so nothing was cached between rounds)."""
-    import numpy as np
+def _train_round_np(quant: DataFrame,
+                    books: list[list[list[int]]]) -> list[list[list[int]]]:
+    """One Lloyd round over all ``m`` codebooks (m=1: k-means) as ONE
+    Arrow-batched partial-sums pass.  Each task assigns its rows with
+    :func:`_nearest` and ships only its ≤ m·k×(sub+2) per-centroid
+    partial sums and counts; the driver merges them and refreshes
+    every centroid as ``floor(float(sum) / count)``, the oracle's IEEE
+    op.  Integer partial sums are order-free, so the result is
+    bit-identical to an assign-then-aggregate round.  A centroid no
+    row chose keeps its previous value.
 
-    m = len(books)
-    k = len(books[0])
+    This is the training loop's version of the
+    ``_ASSIGN_LITERAL_MAX_CELLS`` lesson: a literal-SQL round would
+    build a new k·dim-literal argmin tree every iteration (the
+    centroids change), paying full analysis and codegen of an
+    interpreted-HOF forest before touching a row.  No shuffle: the
+    partials collect straight to the driver."""
     B = np.asarray(books, dtype=np.int64)          # (m, k, sub)
-    b2 = (B * B).sum(axis=2)                       # (m, k)
+    m, k, sub = B.shape
 
     def gen(batches):
         import pandas as pd
         sums = np.zeros((m, k, sub), dtype=np.int64)
         cnts = np.zeros((m, k), dtype=np.int64)
         for pdf in batches:
-            X = np.asarray(pdf["xi"].tolist(), dtype=np.int64)
+            X = _xi(pdf)
+            codes, _ = _nearest(X, B)
             for s in range(m):
-                xs = X[:, s * sub:(s + 1) * sub]
-                d = ((xs * xs).sum(axis=1, keepdims=True)
-                     - 2 * (xs @ B[s].T) + b2[s][None, :])
-                a = d.argmin(axis=1)   # first min — the fold's tie-break
-                np.add.at(sums[s], a, xs)
-                cnts[s] += np.bincount(a, minlength=k)
+                np.add.at(sums[s], codes[:, s], X[:, s * sub:(s + 1) * sub])
+                cnts[s] += np.bincount(codes[:, s], minlength=k)
         s_idx, j_idx = np.nonzero(cnts)
         if len(s_idx):
             yield pd.DataFrame({"s": s_idx.astype("int32"),
@@ -407,50 +367,58 @@ def _pq_train_round_np(quant: DataFrame,
     sums: dict[tuple[int, int], list[int]] = {}
     cnts: dict[tuple[int, int], int] = {}
     for r in rows:
-        key = (int(r.s), int(r.j))
-        if key in sums:
-            sums[key] = [a + int(b) for a, b in zip(sums[key], r.sv)]
-            cnts[key] += int(r.cnt)
-        else:
-            sums[key] = [int(b) for b in r.sv]
-            cnts[key] = int(r.cnt)
+        key = (r.s, r.j)
+        sums[key] = [a + int(b)
+                     for a, b in zip(sums.get(key, [0] * sub), r.sv)]
+        cnts[key] = cnts.get(key, 0) + int(r.cnt)
     return [
-        [[math.floor(float(sums[(s, j)][d]) / cnts[(s, j)])
-          for d in range(sub)]
+        [[math.floor(float(v) / cnts[(s, j)]) for v in sums[(s, j)]]
          if (s, j) in sums else books[s][j]
          for j in range(k)]
         for s in range(m)]
 
 
+def _pq_train(quant, m: int, k: int, iters: int,
+              fit_mod: int | None = None,
+              op: str = "_pq_train") -> tuple[list[list[list[int]]], int]:
+    """Train ``m`` per-subspace codebooks of ``k`` centroids (m=1 is
+    plain k-means) on (vec_id, xi) and return ``(books, dim)``.
+
+    ONE init collect, the k lowest-vec_id rows, seeds every codebook
+    (slices of the same rows) and gives the vector width ``dim``, so
+    no separate job probes it; each subspace is ``dim // m`` wide.
+    Then ``iters`` rounds of :func:`_train_round_np`, each ONE job for
+    all m codebooks.  ``fit_mod`` trains on the pinned hash sample
+    (:func:`_fit_sample`); encode and assignment stay full-corpus.
+    Fewer than k rows train fewer centroids, as in the oracles.  No
+    rows at all raise a ValueError naming ``op``, the operator."""
+    quant = _fit_sample(quant, fit_mod)
+    first = [list(r.xi) for r in quant.orderBy("vec_id").limit(k).collect()]
+    if not first:
+        raise ValueError(f"{op}: no vectors to train on (the corpus or "
+                         "its fit sample is empty)")
+    dim = len(first[0])
+    sub = dim // m
+    books = [[x[s * sub:(s + 1) * sub] for x in first] for s in range(m)]
+    for _ in range(iters):
+        books = _train_round_np(quant, books)
+    return books, dim
+
+
 def _ivfpq_cells_np(quant: DataFrame,
                     coarse: list[list[int]]) -> DataFrame:
-    """(vec_id, cell, xi=residual) in ONE Arrow-batched narrow pass —
-    the coarse-cell argmin and the residual subtraction fused;
-    bit-identical to the literal-argmin + ``zip_with`` subtraction
-    projection pair it replaces (exact int64 micro-unit distances,
-    numpy first-min argmin, integer subtraction).  Still no join and
-    no shuffle; one pass instead of two chained projections over an
-    n_cells·dim-literal tree."""
-    import numpy as np
-
+    """(vec_id, cell, xi=residual) in ONE Arrow-batched narrow pass:
+    the coarse-cell code from :func:`_nearest` and the residual
+    ``x − c(cell)`` in exact integers.  No join, no shuffle."""
     C = np.asarray(coarse, dtype=np.int64)
-    n_cells = len(C)
-    c2 = (C * C).sum(axis=1)
-    row_step = max(1, (1 << 22) // n_cells)
 
     def gen(batches):
         import pandas as pd
         for pdf in batches:
-            X = np.asarray(pdf["xi"].tolist(), dtype=np.int64)
-            cl = np.empty(len(X), dtype=np.int32)
-            for lo in range(0, len(X), row_step):
-                x = X[lo:lo + row_step]
-                d = ((x * x).sum(axis=1, keepdims=True)
-                     - 2 * (x @ C.T) + c2[None, :])
-                cl[lo:lo + len(x)] = d.argmin(axis=1)
-            R = X - C[cl]
+            X = _xi(pdf)
+            cl = _nearest(X, C[None])[0][:, 0]
             yield pd.DataFrame({"vec_id": pdf["vec_id"], "cell": cl,
-                                "xi": list(R)})
+                                "xi": list(X - C[cl])})
 
     return (quant.select("vec_id", "xi")
             .mapInPandas(gen,
@@ -458,75 +426,31 @@ def _ivfpq_cells_np(quant: DataFrame,
 
 
 def _pq_codes_np(quant: DataFrame, books: list[list[list[int]]],
-                 sub: int, id_col: str = "vec_id",
+                 id_col: str = "vec_id",
                  extra: dict[str, str] | None = None) -> DataFrame:
     """PQ encode pass as one Arrow-batched narrow map: per row the m
-    per-subspace first-min codes plus the summed quantization
-    distortion — bit-identical to the m-argmin-struct literal
-    projection it replaces (exact int64 micro-unit sub-distances,
-    numpy first-min argmin, integer distortion sum), without
-    analyzing/codegening an m·k-aggregate interpreted-HOF forest.
-    Returns (``id_col``[, extra...], code array<int>, dist_q long);
-    still a narrow map — no join, no shuffle (guide §4.2).  ``extra``
-    maps passthrough column names to their DDL types (e.g. the IVF
-    cell id riding alongside the residual)."""
-    import numpy as np
-
+    per-subspace codes and the summed quantization distortion from
+    :func:`_nearest`, without analyzing/codegening an m·k-aggregate
+    interpreted-HOF forest.  Returns (``id_col``[, extra...],
+    code array<int>, dist_q long); still a narrow map — no join, no
+    shuffle.  ``extra`` maps passthrough column names to their DDL
+    types (e.g. the IVF cell id riding alongside the residual)."""
     extra = extra or {}
-    m = len(books)
-    B = np.asarray(books, dtype=np.int64)          # (m, k, sub)
-    b2 = (B * B).sum(axis=2)
+    B = np.asarray(books, dtype=np.int64)
 
     def gen(batches):
         import pandas as pd
         for pdf in batches:
-            X = np.asarray(pdf["xi"].tolist(), dtype=np.int64)
-            n = len(X)
-            codes = np.empty((n, m), dtype=np.int32)
-            dq = np.zeros(n, dtype=np.int64)
-            for s in range(m):
-                xs = X[:, s * sub:(s + 1) * sub]
-                d = ((xs * xs).sum(axis=1, keepdims=True)
-                     - 2 * (xs @ B[s].T) + b2[s][None, :])
-                a = d.argmin(axis=1)
-                codes[:, s] = a
-                dq += d[np.arange(n), a]
-            out = {id_col: pdf[id_col]}
-            for c in extra:
-                out[c] = pdf[c]
-            out["code"] = list(codes)
-            out["dist_q"] = dq
-            yield pd.DataFrame(out)
+            codes, dq = _nearest(_xi(pdf), B)
+            yield pd.DataFrame({id_col: pdf[id_col],
+                                **{c: pdf[c] for c in extra},
+                                "code": list(codes), "dist_q": dq})
 
     extra_ddl = "".join(f"{c} {t}, " for c, t in extra.items())
     return (quant.select(F.col("vec_id").alias(id_col),
                          *extra.keys(), "xi")
             .mapInPandas(gen, schema=f"{id_col} long, {extra_ddl}"
                                      "code array<int>, dist_q long"))
-
-
-def _pq_train(quant, m: int, k: int, iters: int, sub: int,
-              fit_mod: int | None = None) -> list[list[list[int]]]:
-    """Train the m per-subspace codebooks.  ONE init collect serves
-    all m codebooks (slices of the same first-k rows), and each Lloyd
-    pass trains ALL subspaces in ONE job: the per-subspace assignments
-    are independent narrow expressions, so they stack into an exploded
-    (s, cluster, d, v) frame whose partial sums shuffle m·k·sub rows
-    total.  (Per-subspace loops cost ~3 driver jobs each — 24 for m=8
-    — pure scheduling/codegen overhead repeated per subspace.)
-    ``fit_mod`` trains every codebook on the pinned hash sample
-    (:func:`_fit_sample`) — the encode pass stays full-corpus."""
-    quant = _fit_sample(quant, fit_mod)
-    first = quant.orderBy("vec_id").limit(k).collect()
-    books: list[list[list[int]]] = [
-        [list(r.xi)[s * sub:(s + 1) * sub] for r in first]
-        for s in range(m)]
-    for _ in range(iters):
-        # r11: fused Arrow partial-sums round (bit-identical; kills
-        # the per-iteration m·k-literal plan rebuild — see
-        # _pq_train_round_np)
-        books = _pq_train_round_np(quant, books, sub)
-    return books
 
 
 def pq_encode(emb: DataFrame, m: int = 8, k: int = 16, iters: int = 1,
@@ -539,30 +463,78 @@ def pq_encode(emb: DataFrame, m: int = 8, k: int = 16, iters: int = 1,
     fit in RAM; IVF-PQ = ann_ivf's cells + these codes for in-cell
     asymmetric distances).
 
-    Plan shape: codebook training is ``m × iters`` narrow
-    aggregations, each reducing to k rows of ``sub``-dim integer sums
-    (the collect-k-literals pattern of cluster_embeddings; at 100 TB
-    train on a sample like similarity.kmeans_centroids — the encode
-    pass is the full-corpus work and it is a single narrow projection
-    with all m codebooks bound as plan literals).  Exactness: integer
-    micro-unit arithmetic end-to-end, first-k init, floor(sum/cnt)
-    refresh — DuckDB replays codes and distortions bit-exactly.
-    Returns (vec_id, pq_code 'c0,...,cm-1', dist_q = Σ subspace
-    distortion in micro-unit²).
+    Plan shape: codebook training is ``iters`` Arrow passes, each
+    training all m codebooks and shipping only partial sums to the
+    driver (:func:`_pq_train`; at 100 TB pass ``fit_mod`` to train on
+    a sample).  The encode is the full-corpus work: ONE narrow Arrow
+    map with the codebooks in the task closure (:func:`_pq_codes_np`).
+    Exactness: integer micro-unit arithmetic end-to-end, first-k init,
+    floor(sum/cnt) refresh — DuckDB replays codes and distortions
+    bit-exactly.  Returns (vec_id, pq_code 'c0,...,cm-1', dist_q = Σ
+    subspace distortion in micro-unit²).
     """
-    dim = len(emb.select(vec_col).first()[0])
-    sub = dim // m
     quant = emb.select("vec_id", _quantize(F.col(vec_col)).alias("xi"))
-    books = _pq_train(quant, m, k, iters, sub, fit_mod)
-    # r11: Arrow-batched encode (bit-identical codes + distortion,
-    # still one narrow map — see _pq_codes_np); the code string is
-    # array_join == the previous concat_ws over per-code casts
-    coded = _pq_codes_np(quant, books, sub)
-    return coded.select(
+    books, _ = _pq_train(quant, m, k, iters, fit_mod, "pq_encode")
+    return _pq_codes_np(quant, books).select(
         "vec_id",
         F.array_join(F.transform("code", lambda c: c.cast("string")), ",")
         .alias("pq_code"),
         "dist_q")
+
+
+def _queries(queries: DataFrame, vec_col: str):
+    """The one driver collect of a search's query set: returns the
+    quantized queries as [(query_id, qx)] in id order, and the same
+    rows as the (query_id, qx) frame of the exact re-rank stage."""
+    rows = [(int(r.vec_id), list(r.xi)) for r in
+            queries.select("vec_id", _quantize(F.col(vec_col)).alias("xi"))
+            .orderBy("vec_id").collect()]
+    return rows, queries.sparkSession.createDataFrame(
+        rows, "query_id bigint, qx array<bigint>")
+
+
+def _lut(x: list[int], books: list[list[list[int]]]) -> list[int]:
+    """ADC lookup table of one query: the exact squared distance from
+    each ``sub``-wide slice of ``x`` to every centroid of its
+    subspace's codebook, flattened subspace-major (m·k entries)."""
+    sub = len(books[0][0])
+    return [sum((a - b) * (a - b)
+                for a, b in zip(x[s * sub:(s + 1) * sub], c))
+            for s, book in enumerate(books) for c in book]
+
+
+def _adc(quant: DataFrame, books: list[list[list[int]]],
+         luts: list[tuple], cell: bool = False) -> DataFrame:
+    """Asymmetric-distance scoring shared by the PQ and IVF-PQ
+    searches.  ``quant`` is PQ-encoded (one narrow Arrow map), the
+    per-query ``luts`` rows — (query_id, lut), or (query_id, cell,
+    lut) when a probed ``cell`` gates them — broadcast against it, and
+    each candidate's score is m LUT lookups + adds.  Returns the
+    unranked (query_id, cand_id, adc_q) frame."""
+    m, kb = len(books), len(books[0])
+    keys = ["cell"] if cell else []
+    coded = (_pq_codes_np(quant, books, id_col="cand_id",
+                          extra=dict.fromkeys(keys, "int"))
+             .select("cand_id", *keys,
+                     *[F.col("code")[s].alias(f"c{s}") for s in range(m)]))
+    qdf = F.broadcast(quant.sparkSession.createDataFrame(
+        luts, "query_id bigint, "
+        + "".join(f"{c} bigint, " for c in keys) + "lut array<bigint>"))
+    score = " + ".join(f"element_at(lut, {s * kb} + c{s} + 1)"
+                       for s in range(m))
+    return ((coded.join(qdf, keys) if keys else coded.crossJoin(qdf))
+            .filter(F.col("cand_id") != F.col("query_id"))
+            .withColumn("adc_q", F.expr(score))
+            .select("query_id", "cand_id", "adc_q"))
+
+
+def _top(scored: DataFrame, n: int, by: str = "adc_q") -> DataFrame:
+    """Per-query top ``n`` by (``by``, cand_id), numbered in ``rank``:
+    the query_id window every search here ends in (the only shuffle,
+    and it is on query_id — the corpus is never shuffled)."""
+    w = Window.partitionBy("query_id").orderBy(F.asc(by), F.asc("cand_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= n))
 
 
 def pq_search(emb: DataFrame, queries: DataFrame, k_top: int = 10,
@@ -578,63 +550,29 @@ def pq_search(emb: DataFrame, queries: DataFrame, k_top: int = 10,
     arithmetic at all, which is PQ's point (memory bandwidth, not
     FLOPs).
 
-    Plan shape: encode = one narrow projection (codebook literals);
-    scoring = broadcast the (query_id, LUT) frame across the coded
-    corpus; top-k = window rank shuffled on query_id only — the
-    corpus is never shuffled (same skeleton as ann_bruteforce).  All
-    arithmetic is exact int64 micro-units, so DuckDB replays ranks
-    bit-exactly.  Returns (query_id, cand_id, adc_q, rank).
+    Plan shape: encode = one narrow Arrow map; scoring = broadcast
+    the (query_id, LUT) frame across the coded corpus; top-k = window
+    rank shuffled on query_id only — the corpus is never shuffled
+    (same skeleton as ann_bruteforce).  All arithmetic is exact int64
+    micro-units, so DuckDB replays ranks bit-exactly.  Returns
+    (query_id, cand_id, adc_q, rank).
     """
-    scored = _adc_scored(emb, queries, m, k, iters, vec_col, fit_mod)[0]
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_q"),
-                                               F.asc("cand_id"))
-    return (scored
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_top)
-            .select("query_id", "cand_id", "adc_q", "rank"))
+    scored = _adc_scored(emb, queries, m, k, iters, vec_col, fit_mod,
+                         "pq_search")[0]
+    return _top(scored, k_top).select("query_id", "cand_id", "adc_q", "rank")
 
 
 def _adc_scored(emb, queries, m: int, k: int, iters: int, vec_col: str,
-                fit_mod: int | None = None):
+                fit_mod: int | None, op: str):
     """Shared ADC machinery: returns (scored, quant, qxi, dim) where
     ``scored`` is the unranked (query_id, cand_id, adc_q) frame,
     ``quant`` the integer-quantized corpus, and ``qxi`` the
     driver-sized (query_id, qx) integer query frame for exact
     re-rank stages."""
-    dim = len(emb.select(vec_col).first()[0])
-    sub = dim // m
     quant = emb.select("vec_id", _quantize(F.col(vec_col)).alias("xi"))
-    books = _pq_train(quant, m, k, iters, sub, fit_mod)
-
-    # r11: Arrow-batched encode (bit-identical, narrow — _pq_codes_np)
-    coded = (_pq_codes_np(quant, books, sub, id_col="cand_id")
-             .select("cand_id",
-                     *[F.col("code")[s].alias(f"c{s}") for s in range(m)]))
-
-    spark = emb.sparkSession
-    qrows = (queries.select("vec_id",
-                            _quantize(F.col(vec_col)).alias("xi"))
-             .orderBy("vec_id").collect())
-    luts = []
-    for r in qrows:
-        xi = list(r.xi)
-        flat = []
-        for s in range(m):
-            qs = xi[s * sub:(s + 1) * sub]
-            for c in books[s]:
-                flat.append(sum((a - b) * (a - b) for a, b in zip(qs, c)))
-        luts.append((int(r.vec_id), flat))
-    qdf = spark.createDataFrame(luts, ["query_id", "lut"])
-    score = " + ".join(f"element_at(lut, {s * k} + c{s} + 1)"
-                       for s in range(m))
-    scored = (coded.crossJoin(F.broadcast(qdf))
-              .filter(F.col("cand_id") != F.col("query_id"))
-              .withColumn("adc_q", F.expr(score))
-              .select("query_id", "cand_id", "adc_q"))
-    qxi = spark.createDataFrame(
-        [(int(r.vec_id), list(r.xi)) for r in qrows],
-        "query_id bigint, qx array<bigint>")
+    books, dim = _pq_train(quant, m, k, iters, fit_mod, op)
+    qrows, qxi = _queries(queries, vec_col)
+    scored = _adc(quant, books, [(q, _lut(x, books)) for q, x in qrows])
     return scored, quant, qxi, dim
 
 
@@ -650,12 +588,7 @@ def _exact_rerank(scored: DataFrame, quant: DataFrame, qxi: DataFrame,
     window.  Returns (query_id, cand_id, adc_q, exact_q, rank)."""
     from functools import reduce
 
-    from pyspark.sql import Window
-
-    ws = Window.partitionBy("query_id").orderBy(F.asc("adc_q"),
-                                                F.asc("cand_id"))
-    short = (scored.withColumn("srank", F.row_number().over(ws))
-             .filter(F.col("srank") <= k_top * shortlist)
+    short = (_top(scored, k_top * shortlist)
              .select("query_id", "cand_id", "adc_q"))
     cand = (quant.withColumnRenamed("vec_id", "cand_id")
             .join(F.broadcast(short), "cand_id")
@@ -666,11 +599,8 @@ def _exact_rerank(scored: DataFrame, quant: DataFrame, qxi: DataFrame,
         range(2, dim + 1),
         (F.element_at("xi", 1) - F.element_at("qx", 1))
         * (F.element_at("xi", 1) - F.element_at("qx", 1)))
-    wr = Window.partitionBy("query_id").orderBy(F.asc("exact_q"),
-                                                F.asc("cand_id"))
-    return (cand.withColumn("exact_q", exact.cast("long"))
-            .withColumn("rank", F.row_number().over(wr))
-            .filter(F.col("rank") <= k_top)
+    return (_top(cand.withColumn("exact_q", exact.cast("long")), k_top,
+                 "exact_q")
             .select("query_id", "cand_id", "adc_q", "exact_q", "rank"))
 
 
@@ -695,7 +625,8 @@ def pq_rerank_search(emb: DataFrame, queries: DataFrame, k_top: int = 10,
     Returns (query_id, cand_id, adc_q, exact_q, rank).
     """
     scored, quant, qxi, dim = _adc_scored(emb, queries, m, k, iters,
-                                          vec_col, fit_mod)
+                                          vec_col, fit_mod,
+                                          "pq_rerank_search")
     return _exact_rerank(scored, quant, qxi, dim, k_top, shortlist)
 
 
@@ -712,10 +643,10 @@ def ivfpq_search(emb: DataFrame, queries: DataFrame, k_top: int = 10,
     |corpus| to ~|corpus|·n_probe/n_cells, and the scored side reads
     codes (m bytes/vector), not vectors.
 
-    Plan shape: the corpus makes ONE narrow pass to (cell, residual)
-    — coarse argmin + integer subtraction against the coarse-centroid
-    literal the cell indexes — and a second narrow pass to m residual
-    PQ codes; the probe gating is an equi-JOIN on the cell id with
+    Plan shape: the corpus makes ONE narrow Arrow pass to (cell,
+    residual) — coarse argmin + integer subtraction of the centroid
+    the cell indexes — and a second narrow pass to m residual PQ
+    codes; the probe gating is an equi-JOIN on the cell id with
     the broadcast (query, probed-cell, LUT) frame, where each probed
     cell gets its own LUT from the query's residual in THAT cell (the
     Jégou et al. residual construction — codes quantize x − c(cell),
@@ -725,14 +656,9 @@ def ivfpq_search(emb: DataFrame, queries: DataFrame, k_top: int = 10,
     ranks bit-exactly.  Returns (query_id, cand_id, adc_q, rank).
     """
     scored = _ivfpq_scored(emb, queries, n_cells, n_probe, m, k, iters,
-                           coarse_iters, vec_col, fit_mod)[0]
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_q"),
-                                               F.asc("cand_id"))
-    return (scored
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_top)
-            .select("query_id", "cand_id", "adc_q", "rank"))
+                           coarse_iters, vec_col, fit_mod,
+                           "ivfpq_search")[0]
+    return _top(scored, k_top).select("query_id", "cand_id", "adc_q", "rank")
 
 
 def ivfpq_rerank_search(emb: DataFrame, queries: DataFrame,
@@ -757,13 +683,13 @@ def ivfpq_rerank_search(emb: DataFrame, queries: DataFrame,
     scored, quant, qxi, dim = _ivfpq_scored(emb, queries, n_cells,
                                             n_probe, m, k, iters,
                                             coarse_iters, vec_col,
-                                            fit_mod)
+                                            fit_mod, "ivfpq_rerank_search")
     return _exact_rerank(scored, quant, qxi, dim, k_top, shortlist)
 
 
 def _ivfpq_scored(emb, queries, n_cells: int, n_probe: int, m: int,
                   k: int, iters: int, coarse_iters: int | None,
-                  vec_col: str, fit_mod: int | None = None):
+                  vec_col: str, fit_mod: int | None, op: str):
     """Shared IVF-PQ machinery: coarse quantizer + residual codebooks
     + probe-gated ADC scoring.  Returns (scored, quant, qxi, dim)
     with ``scored`` the unranked (query_id, cand_id, adc_q) frame over
@@ -775,63 +701,25 @@ def _ivfpq_scored(emb, queries, n_cells: int, n_probe: int, m: int,
     # extra iter with no measurable recall cost
     if coarse_iters is None:
         coarse_iters = iters
-    dim = len(emb.select(vec_col).first()[0])
-    sub = dim // m
     quant = emb.select("vec_id", _quantize(F.col(vec_col)).alias("xi"))
-
-    # coarse quantizer: same deterministic Lloyd loop as
-    # cluster_embeddings (first-k init, posexplode update); with
-    # fit_mod the coarse fit runs on the pinned hash sample
-    fitq = _fit_sample(quant, fit_mod)
-    coarse = [list(r.xi) for r in
-              fitq.orderBy("vec_id").limit(n_cells).collect()]
-    for _ in range(coarse_iters):
-        # r11: fused Arrow partial-sums round (bit-identical — see
-        # _lloyd_round_np)
-        coarse = _lloyd_round_np(fitq, coarse)
-
-    # r11: coarse argmin + residual subtraction fused into one Arrow
-    # pass, and the residual PQ encode Arrow-batched (both
-    # bit-identical — _ivfpq_cells_np / _pq_codes_np)
+    # coarse quantizer: cluster_embeddings' k-means (one codebook of
+    # n_cells); with fit_mod it trains on the pinned hash sample
+    (coarse,), dim = _pq_train(quant, 1, n_cells, coarse_iters, fit_mod,
+                               op)
     resid = _ivfpq_cells_np(quant, coarse)
-    books = _pq_train(resid.select("vec_id", "xi"), m, k, iters, sub,
-                      fit_mod)
-    coded = (_pq_codes_np(resid, books, sub, id_col="cand_id",
-                          extra={"cell": "int"})
-             .select("cand_id", "cell",
-                     *[F.col("code")[s].alias(f"c{s}")
-                       for s in range(m)]))
+    books, _ = _pq_train(resid.select("vec_id", "xi"), m, k, iters,
+                         fit_mod, op)
 
-    qrows = (queries.select("vec_id",
-                            _quantize(F.col(vec_col)).alias("xi"))
-             .orderBy("vec_id").collect())
-    probe_rows = []
-    for r in qrows:
-        xi = list(r.xi)
-        cell_d = sorted(
-            (sum((a - b) * (a - b) for a, b in zip(xi, c)), j)
-            for j, c in enumerate(coarse))
-        for _, cell in cell_d[:n_probe]:
-            qres = [a - b for a, b in zip(xi, coarse[cell])]
-            flat = []
-            for s in range(m):
-                qs = qres[s * sub:(s + 1) * sub]
-                for c in books[s]:
-                    flat.append(sum((a - b) * (a - b)
-                                    for a, b in zip(qs, c)))
-            probe_rows.append((int(r.vec_id), int(cell), flat))
-    spark = emb.sparkSession
-    qdf = spark.createDataFrame(probe_rows, ["query_id", "cell", "lut"])
-    score = " + ".join(f"element_at(lut, {s * k} + c{s} + 1)"
-                       for s in range(m))
-    scored = (coded.join(F.broadcast(qdf), "cell")
-              .filter(F.col("cand_id") != F.col("query_id"))
-              .withColumn("adc_q", F.expr(score))
-              .select("query_id", "cand_id", "adc_q"))
-    qxi = spark.createDataFrame(
-        [(int(r.vec_id), list(r.xi)) for r in qrows],
-        "query_id bigint, qx array<bigint>")
-    return scored, quant, qxi, dim
+    qrows, qxi = _queries(queries, vec_col)
+    luts = []
+    for q, x in qrows:
+        # a query probes its n_probe nearest cells (ties: lower cell),
+        # each with the LUT of its residual in THAT cell
+        near = sorted((d, j) for j, d in enumerate(_lut(x, [coarse])))
+        for _, cell in near[:n_probe]:
+            luts.append((q, cell, _lut([a - b for a, b in
+                                        zip(x, coarse[cell])], books)))
+    return _adc(resid, books, luts, cell=True), quant, qxi, dim
 
 
 def semantic_dedup(emb: DataFrame, k: int | None = None, iters: int = 2,
@@ -862,7 +750,6 @@ def semantic_dedup(emb: DataFrame, k: int | None = None, iters: int = 2,
     from .similarity import l2_normalize
 
     if k is None:
-        import math
         k = max(8, math.isqrt(emb.count()))
     asg = cluster_embeddings(emb, k=k, iters=iters, vec_col=vec_col,
                              fit_mod=fit_mod).select("vec_id", "cluster")
@@ -933,9 +820,6 @@ def pca_power(emb: DataFrame, iters: int = 2, dim: int = 64,
     rescale.  v₀ = (0.125, …): exactly unit-norm at dim 64 and exactly
     representable in micro-units.
     """
-    import math
-
-
     # persisted across iterations: every per-iteration collect() and
     # the final projection re-read the quantized frame, so without the
     # pin the scan+quantize pass re-executes iters+1 times
@@ -1047,9 +931,13 @@ def embedding_outliers(emb: DataFrame, group_col: str = "label",
     cent_rows = (q.groupBy("g", "pos")
                  .agg(F.expr("sum(v) div count(*)").alias("m"))
                  .collect())
+    # centroid width from the data: a fixed width would pad narrower
+    # vectors with zeros (zip_with then yields NULL distances) and
+    # overflow wider ones
+    dim = 1 + max(int(r.pos) for r in cent_rows)
     cents: dict[int, list[int]] = {}
     for r in cent_rows:
-        cents.setdefault(int(r.g), [0] * 64)[int(r.pos)] = int(r.m)
+        cents.setdefault(int(r.g), [0] * dim)[int(r.pos)] = int(r.m)
     dist_cases = " ".join(
         f"WHEN {g} THEN aggregate(zip_with(xi, array({','.join(str(v) + 'L' for v in cs)}), "
         "(a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"

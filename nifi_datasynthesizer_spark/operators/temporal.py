@@ -640,7 +640,7 @@ def markov_stationary(events: DataFrame, iters: int = 10,
     builds the |states|² matrix (shared shape with
     :func:`transition_matrix`).  The matrix is bounded by the state
     vocabulary (event types), not the corpus, so it collects to the
-    driver — the collect-k-literals pattern of clustering._update —
+    driver — the collect-k-literals pattern of clustering._train_round_np —
     and the ``iters`` rounds run as exact integer Python over those
     k² counts instead of ``iters`` tiny join jobs (r11: 10 rounds ×
     join+agg over a |states|²-row frame was pure job-scheduling

@@ -171,6 +171,16 @@ def test_pq_search_planted(spark):
     assert got[1][0] == 1 and got[1][1] == 0   # identical vector first
     assert got[2][0] == 2                       # then the near one
     assert set(got[r][0] for r in (3, 4)) == {3, 4}
+    # k above the row count trains fewer centroids (every row is one),
+    # so every code is exact and ADC equals the exact distance
+    import math
+    xq = {i: [math.floor(v * 1_000_000) for v in e] for i, e in rows}
+    few = pq_search(emb, emb.filter("vec_id = 0"), k_top=4,
+                    m=2, k=8, iters=1).collect()
+    assert len(few) == 4
+    assert all(r.adc_q == sum((a - b) ** 2
+                              for a, b in zip(xq[0], xq[r.cand_id]))
+               for r in few)
 
 
 def test_bpe_merges_planted(spark):
@@ -611,6 +621,62 @@ def test_assign_arrow_matches_literal(spark, monkeypatch):
                  for r in CL._assign(quant, cents).collect())
     assert lit == arw and len(lit) == 300
     assert not any(c == 3 for _, c, _ in arw)   # dup centroid never wins
+    # one training round through the same kernel: dup centroid 3 is
+    # never chosen, so it keeps its value (the empty-cluster rule);
+    # every other centroid is floor(sum / count) over the rows the
+    # literal path assigned to it
+    import math
+    xi = {r.vec_id: list(r.xi) for r in quant.collect()}
+    (trained,) = CL._train_round_np(quant, [cents])
+    assert trained[3] == cents[3]
+    for j in (0, 1, 2, 4):
+        members = [xi[v] for v, c, _ in lit if c == j]
+        assert members
+        assert trained[j] == [math.floor(float(sum(col)) / len(members))
+                              for col in zip(*members)]
+
+
+@pytest.mark.parametrize("op", ["cluster_embeddings", "pq_encode",
+                                "pq_search", "pq_rerank_search",
+                                "ivfpq_search", "ivfpq_rerank_search"])
+def test_empty_corpus_raises_naming_operator(spark, op):
+    """Training on an empty corpus fails loudly at the first-k init,
+    with the operator's name in the message."""
+    from nifi_datasynthesizer_spark.operators import clustering as CL
+    emb = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    args = (emb,) if op in ("cluster_embeddings", "pq_encode") else (emb, emb)
+    with pytest.raises(ValueError, match=f"^{op}: "):
+        getattr(CL, op)(*args)
+
+
+@pytest.mark.parametrize("dim", [4, 70])
+def test_embedding_outliers_any_width(spark, dim):
+    """Centroids take the data's width: at 4 and 70 dims every group
+    gets a threshold and outlier count equal to a plain-Python
+    computation (truncating integer-mean centroids, squared micro-unit
+    distances, bucket = d >> bin_shift, histogram-CDF threshold)."""
+    import math
+
+    from nifi_datasynthesizer_spark.operators.clustering import \
+        embedding_outliers
+    rows = [(i, i % 2, [float(((i * 7 + j * 3) % 11) - 5) / 4
+                        for j in range(dim)]) for i in range(40)]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, label long, embedding array<double>")
+    got = {r.label: (r.n, r.n_outliers, r.thresh_bucket)
+           for r in embedding_outliers(emb).collect()}
+    want = {}
+    for g in (0, 1):
+        xs = [[math.floor(v * 1_000_000) for v in e]
+              for _, lab, e in rows if lab == g]
+        cent = [(abs(t) // len(xs)) * (1 if t >= 0 else -1)
+                for t in map(sum, zip(*xs))]
+        b = [sum((a - c) ** 2 for a, c in zip(x, cent)) >> 30 for x in xs]
+        tb = min(v for v in b
+                 if sum(u <= v for u in b) * 1_000_000 >= 900_000 * len(b))
+        want[g] = (len(b), sum(v > tb for v in b), tb)
+    assert got == want
+    assert any(n_out > 0 for _, n_out, _ in want.values())
 
 
 def test_assign_two_level_exhaustive_equals_flat(spark):
@@ -1813,8 +1879,8 @@ def test_fit_sample_deterministic_and_pinned(spark):
     assert "InMemoryRelation" in samp._jdf.queryExecution() \
         .optimizedPlan().toString()
 
-    b_full = CL._pq_train(quant, m=4, k=8, iters=1, sub=16)
-    b_mod1 = CL._pq_train(quant, m=4, k=8, iters=1, sub=16, fit_mod=1)
+    b_full = CL._pq_train(quant, m=4, k=8, iters=1)
+    b_mod1 = CL._pq_train(quant, m=4, k=8, iters=1, fit_mod=1)
     assert b_full == b_mod1
     release_caches()
 

@@ -262,7 +262,7 @@ def test_geo_near_blocks_on_cell(spark):
 
 def test_pq_encode_pass_is_narrow(spark):
     """The PQ encode pass (the full-corpus work) must be a single
-    narrow projection with all m codebooks bound as literals — no
+    narrow Arrow map with the m codebooks in the task closure — no
     join, no shuffle except the presentation sort."""
     df = entrymod.queries()["embed_pq"](spark, SF)
     p = _plan(df)
@@ -976,6 +976,29 @@ def test_warm_entry_build_runs_no_job(spark):
             before = ids()
             q[name](spark, SF)
             assert ids() == before, f"{name}: build ran a job"
+
+
+def test_kmeans_and_pq_build_jobs(spark):
+    """Building k-means or PQ runs no vector-width probe: the first-k
+    init collect gives the width.  What is left is the fit sample's
+    pinning count (three jobs under AQE), the init collect and one job
+    per Lloyd round, so 6 for both builds below; a seventh means a
+    width probe or a second init collect came back."""
+    from nifi_datasynthesizer_spark.operators import clustering as CL
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    builds = {
+        "cluster_embeddings": lambda: CL.cluster_embeddings(
+            emb, k=8, iters=2, fit_mod=2),
+        "pq_encode": lambda: CL.pq_encode(emb, m=16, k=16, iters=2,
+                                          fit_mod=2),
+    }
+    for name, build in builds.items():
+        build()                      # warm: schema reads and imports
+        release_caches()
+        with job_group(spark, f"build-{name}") as ids:
+            build()
+            assert len(ids()) == 6, (name, len(ids()))
+        release_caches()
 
 
 def test_session_turns_off_call_site_capture(spark):
