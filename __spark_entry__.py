@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nifi_datasynthesizer_spark import compile_schema, synthesizers as SZ
+from nifi_datasynthesizer_spark import streaming as ST
 from nifi_datasynthesizer_spark.cache import pin, released
 from nifi_datasynthesizer_spark.operators import dedup as DD
 from nifi_datasynthesizer_spark.operators import multimodal as MM
@@ -27,6 +28,14 @@ from nifi_datasynthesizer_spark.oracles import _NORM, _WORDS
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from nifi_datasynthesizer_spark.io import read_table
     return read_table(spark, sf_dir, name)
+
+
+def _replay(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """One testdata table replayed as a bounded file stream, one file
+    per micro-batch, in its raw physical schema: the source of every
+    streaming entry (each call is its own stream source)."""
+    return ST.file_stream(spark, sf_dir, IO.table_schema(spark, sf_dir, table),
+                          glob_filter=f"{table}.parquet")
 
 
 def _psort(df: DataFrame, *keys: str) -> DataFrame:
@@ -259,7 +268,11 @@ def _rotate(q: dict) -> dict:
     return {n: q[n] for n in head + [n for n in q if n not in head]}
 
 
-def _stream_tuned(fn, n: int = 8):
+# state-store partitions of every streaming entry's drain
+_STATE_PARTITIONS = 8
+
+
+def _stream_tuned(fn):
     """Start streaming queries under a state-store partition count
     sized to the replayed streams (streaming.state_partitions): state
     partitioning is fixed at first checkpoint, and each partition
@@ -269,10 +282,42 @@ def _stream_tuned(fn, n: int = 8):
     wrapped function returns is batch and runs under the restored
     setting."""
     def wrapped(spark, sf):
-        from nifi_datasynthesizer_spark.streaming import state_partitions
-        with state_partitions(spark, n):
+        with ST.state_partitions(spark, _STATE_PARTITIONS):
             return fn(spark, sf)
     return wrapped
+
+
+def _running_totals(spark: SparkSession, sf: str, op,
+                    table: str) -> DataFrame:
+    """Body of the two streaming_running_totals entries: per-user
+    running sum/count of the replayed events, in integer cents, through
+    the streaming operator ``op`` (``ST.running_totals`` or its native
+    twin), drained into memory table ``table``; the final state per
+    user is its max-n update-mode row."""
+    ev = _replay(spark, sf, "events").select(
+        F.col("user_id").cast("string").alias("user_id"),
+        F.floor(F.col("value") * 100).cast("double").alias("cents"))
+    tbl = ST.run_bounded(op(ev, "user_id", "cents"), table,
+                         output_mode="update")
+    final = tbl.groupBy("key").agg(F.max(F.struct("n", "total")).alias("s"))
+    return (final.select(F.col("key").alias("user_id"),
+                         F.col("s.n").alias("n_events"),
+                         (F.col("s.total") / F.lit(100.0))
+                         .alias("total_value"))
+            .orderBy("user_id"))
+
+
+def _attribution_join(spark: SparkSession, sf: str, how: str) -> DataFrame:
+    """Views joined to same-user purchases within 12 h
+    (``ST.interval_join``, join type ``how``).  Each side is its own
+    replay of the events table, so each keeps its own source and
+    watermark node."""
+    def side(event_type: str) -> DataFrame:
+        return (IO.normalize_event_ts(_replay(spark, sf, "events"))
+                .filter(F.col("event_type") == event_type)
+                .select("event_id", "ts", "user_id"))
+    return ST.interval_join(side("view"), side("purchase"), key="user_id",
+                            ts_col="ts", within="12 hours", how=how)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -1027,11 +1072,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the watermarked windowed-agg operator, drained to completion —
         the final table equals the batch daily rollup, so the same SQL
         oracle applies."""
-        from nifi_datasynthesizer_spark import streaming as ST
-        raw_schema = IO.table_schema(spark, sf, "events")
-        src = ST.file_stream(spark, sf, raw_schema,
-                             glob_filter="events.parquet")
-        ev = IO.normalize_event_ts(src)
+        ev = IO.normalize_event_ts(_replay(spark, sf, "events"))
         agg = ST.windowed_agg(
             ev, "ts", ["event_type"],
             [F.count("*").alias("n_events"),
@@ -1054,11 +1095,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         differs — session_window opens a NEW session when the gap is
         exactly equal to the gap duration (intervals are half-open), so
         the oracle uses >= where the batch lag-rule query uses >."""
-        from nifi_datasynthesizer_spark import streaming as ST
-        raw_schema = IO.table_schema(spark, sf, "events")
-        src = ST.file_stream(spark, sf, raw_schema,
-                             glob_filter="events.parquet")
-        ev = IO.normalize_event_ts(src)
+        ev = IO.normalize_event_ts(_replay(spark, sf, "events"))
         agg = ST.sessionized_agg(
             ev, "ts", ["user_id"],
             [F.count("*").alias("n_events"),
@@ -1083,13 +1120,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         dim side is broadcast — each micro-batch joins map-side, no
         stream-side shuffle before the aggregation.  Values quantize
         to integer cents pre-agg so the sum is exact across engines."""
-        from nifi_datasynthesizer_spark import streaming as ST
-        raw_schema = IO.table_schema(spark, sf, "events")
         cust = _t(spark, sf, "customer").select("c_custkey", "c_nationkey")
         n_cust = cust.count()
-        src = ST.file_stream(spark, sf, raw_schema,
-                             glob_filter="events.parquet")
-        ev = src.select(
+        ev = _replay(spark, sf, "events").select(
             (F.col("user_id") % F.lit(n_cust) + 1).alias("ck"),
             F.floor(F.col("value") * 100).cast("long").alias("cents"))
         joined = ev.join(F.broadcast(cust), ev.ck == cust.c_custkey)
@@ -1109,24 +1142,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         survives inside a micro-batch is partition-order-dependent, so
         the gated output is the surviving digest SET (deterministic);
         the oracle is the batch distinct over the same digest."""
-        from nifi_datasynthesizer_spark import streaming as ST
-        raw_schema = IO.table_schema(spark, sf, "documents")
-        src = ST.file_stream(spark, sf, raw_schema,
-                             glob_filter="documents.parquet")
         # offset off epoch: a row AT the initial watermark (epoch 0)
         # would be discarded as late before the dedup state sees it
-        ev = src.withColumn(
+        ev = _replay(spark, sf, "documents").withColumn(
             "event_time",
             F.timestamp_micros(F.col("doc_id") + F.lit(86_400_000_000)))
         kept = ST.dedup_stream_exact(ev, "event_time", watermark="1 hour")
-        q_ = ST.run_to_memory(kept.select("digest"), "stream_dedup_docs",
-                              output_mode="append")
-        try:
-            q_.awaitTermination()
-        finally:
-            q_.stop()
-        return (spark.table("stream_dedup_docs").select("digest")
-                .distinct().orderBy("digest"))
+        out = ST.run_bounded(kept.select("digest"), "stream_dedup_docs",
+                             output_mode="append")
+        return out.select("digest").distinct().orderBy("digest")
     q["streaming_dedup_docs"] = _stream_tuned(streaming_dedup_docs)
 
     def streaming_topk(spark, sf):
@@ -1138,17 +1162,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         rank.  Counts are monotone so the final state is the max-n
         update-mode row per key."""
         from pyspark.sql import Window as W
-        from nifi_datasynthesizer_spark import streaming as ST
-        raw_schema = IO.table_schema(spark, sf, "events")
-        src = ST.file_stream(spark, sf, raw_schema,
-                             glob_filter="events.parquet")
-        out = ST.key_counts(src, "event_type", "user_id")
-        q_ = ST.run_to_memory(out, "stream_topk", output_mode="update")
-        try:
-            q_.awaitTermination()
-        finally:
-            q_.stop()
-        tbl = spark.table("stream_topk")
+        out = ST.key_counts(_replay(spark, sf, "events"),
+                            "event_type", "user_id")
+        tbl = ST.run_bounded(out, "stream_topk", output_mode="update")
         final = (tbl.groupBy("k1", "k2").agg(F.max("n").alias("n")))
         w = W.partitionBy("k1").orderBy(F.desc("n"), F.asc("k2"))
         return (final.withColumn("rank", F.row_number().over(w))
@@ -1169,18 +1185,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         n is monotone per key, so the final state is the max-n row —
         which is what lets the drained stream carry the batch
         GROUP BY oracle."""
-        from nifi_datasynthesizer_spark import streaming as ST
-        raw_schema = IO.table_schema(spark, sf, "events")
-        src = ST.file_stream(spark, sf, raw_schema,
-                             glob_filter="events.parquet")
-        out = ST.key_counts_native(src, "event_type", "user_id")
-        q_ = ST.run_to_memory(out, "stream_key_counts_native",
-                              output_mode="update")
-        try:
-            q_.awaitTermination()
-        finally:
-            q_.stop()
-        tbl = spark.table("stream_key_counts_native")
+        out = ST.key_counts_native(_replay(spark, sf, "events"),
+                                   "event_type", "user_id")
+        tbl = ST.run_bounded(out, "stream_key_counts_native",
+                             output_mode="update")
         final = tbl.groupBy("k1", "k2").agg(F.max("n").alias("n"))
         return (final.select(F.col("k1").alias("event_type"),
                              F.col("k2").alias("user_id"),
@@ -1199,28 +1207,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         exact and order-independent; update-mode output may hold one
         row per key per micro-batch — the final state is the row with
         the largest n (n is monotone per key)."""
-        from nifi_datasynthesizer_spark import streaming as ST
-        raw_schema = IO.table_schema(spark, sf, "events")
-        src = ST.file_stream(spark, sf, raw_schema,
-                             glob_filter="events.parquet")
-        ev = src.select(
-            F.col("user_id").cast("string").alias("user_id"),
-            F.floor(F.col("value") * 100).cast("double").alias("cents"))
-        out = ST.running_totals_native(ev, "user_id", "cents")
-        q_ = ST.run_to_memory(out, "stream_running_totals",
-                              output_mode="update")
-        try:
-            q_.awaitTermination()
-        finally:
-            q_.stop()
-        tbl = spark.table("stream_running_totals")
-        final = tbl.groupBy("key").agg(
-            F.max(F.struct("n", "total")).alias("s"))
-        return (final.select(F.col("key").alias("user_id"),
-                             F.col("s.n").alias("n_events"),
-                             (F.col("s.total") / F.lit(100.0))
-                             .alias("total_value"))
-                .orderBy("user_id"))
+        return _running_totals(spark, sf, ST.running_totals_native,
+                               "stream_running_totals")
     q["streaming_running_totals"] = _stream_tuned(streaming_running_totals)
 
     def streaming_running_totals_pandas(spark, sf):
@@ -1229,28 +1217,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         per-key transitions Spark cannot express as a native
         aggregate), under the same oracle.  Same quantize-to-cents
         exactness contract; same max-n final-state selection."""
-        from nifi_datasynthesizer_spark import streaming as ST
-        raw_schema = IO.table_schema(spark, sf, "events")
-        src = ST.file_stream(spark, sf, raw_schema,
-                             glob_filter="events.parquet")
-        ev = src.select(
-            F.col("user_id").cast("string").alias("user_id"),
-            F.floor(F.col("value") * 100).cast("double").alias("cents"))
-        out = ST.running_totals(ev, "user_id", "cents")
-        q_ = ST.run_to_memory(out, "stream_running_totals_pd",
-                              output_mode="update")
-        try:
-            q_.awaitTermination()
-        finally:
-            q_.stop()
-        tbl = spark.table("stream_running_totals_pd")
-        final = tbl.groupBy("key").agg(
-            F.max(F.struct("n", "total")).alias("s"))
-        return (final.select(F.col("key").alias("user_id"),
-                             F.col("s.n").alias("n_events"),
-                             (F.col("s.total") / F.lit(100.0))
-                             .alias("total_value"))
-                .orderBy("user_id"))
+        return _running_totals(spark, sf, ST.running_totals,
+                               "stream_running_totals_pd")
     q["streaming_running_totals_pandas"] = _stream_tuned(
         streaming_running_totals_pandas)
 
@@ -2465,11 +2433,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         batch dedup_cross, so the same SQL oracle applies."""
         import tempfile
 
-        from nifi_datasynthesizer_spark import streaming as ST
-        raw = _t(spark, sf, "documents")
-        corpus = raw.filter(F.col("doc_id") % 7 != 0)
-        src = (ST.file_stream(spark, sf, raw.schema,
-                              glob_filter="documents.parquet")
+        corpus = _t(spark, sf, "documents").filter(F.col("doc_id") % 7 != 0)
+        src = (_replay(spark, sf, "documents")
                .filter(F.col("doc_id") % 7 == 0))
         outdir = tempfile.mkdtemp(prefix="spark_graft_sdc_") + "/pairs"
 
@@ -2993,27 +2958,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         scalars per key) over the replayed changelog; the drained
         max-n row per key equals the batch cdc_apply, deletes
         dropped after the drain."""
-        from nifi_datasynthesizer_spark import streaming as ST
-        raw_schema = IO.table_schema(spark, sf, "events")
-        src = ST.file_stream(spark, sf, raw_schema,
-                             glob_filter="events.parquet")
         op = (F.when(F.col("event_type") == "error", "delete")
               .when(F.col("event_type") == "signup", "insert")
               .otherwise("update"))
         # the file stream reads ts as TIMESTAMP_NTZ; the session is
         # pinned UTC, so the cast makes unix_micros equal the batch
         # reader's epoch micros
-        ch = src.select(F.col("user_id"),
-                        F.unix_micros(F.col("ts").cast("timestamp"))
-                        .alias("tus"),
-                        F.col("event_id").alias("seq"), op.alias("op"))
+        ch = _replay(spark, sf, "events").select(
+            F.col("user_id"),
+            F.unix_micros(F.col("ts").cast("timestamp")).alias("tus"),
+            F.col("event_id").alias("seq"), op.alias("op"))
         out = ST.cdc_state(ch, key_col="user_id")
-        q_ = ST.run_to_memory(out, "stream_cdc", output_mode="update")
-        try:
-            q_.awaitTermination()
-        finally:
-            q_.stop()
-        tbl = spark.table("stream_cdc")
+        tbl = ST.run_bounded(out, "stream_cdc", output_mode="update")
         final = (tbl.groupBy("key")
                  .agg(F.max_by(F.struct("last_tus", "last_seq", "last_op"),
                                "n_changes").alias("s"),
@@ -3060,20 +3016,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         sides replayed as watermarked file streams and drained with
         availableNow — the result set equals the batch interval join,
         so a plain SQL oracle applies."""
-        from nifi_datasynthesizer_spark import streaming as ST
-        raw_schema = IO.table_schema(spark, sf, "events")
-        views = IO.normalize_event_ts(
-            ST.file_stream(spark, sf, raw_schema,
-                           glob_filter="events.parquet")) \
-            .filter(F.col("event_type") == "view") \
-            .select("event_id", "ts", "user_id")
-        buys = IO.normalize_event_ts(
-            ST.file_stream(spark, sf, raw_schema,
-                           glob_filter="events.parquet")) \
-            .filter(F.col("event_type") == "purchase") \
-            .select("event_id", "ts", "user_id")
-        j = ST.interval_join(views, buys, key="user_id", ts_col="ts",
-                             within="12 hours")
+        j = _attribution_join(spark, sf, "inner")
         out = ST.run_bounded(j.select(
             F.col("l_event_id").alias("view_id"),
             F.col("r_event_id").alias("purchase_id"),
@@ -3096,20 +3039,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         watermark node sees only its own filtered subtype
         (multipleWatermarkPolicy=min); exactly the rows whose state a
         bounded drain evicts (streaming.interval_join docstring)."""
-        from nifi_datasynthesizer_spark import streaming as ST
-        raw_schema = IO.table_schema(spark, sf, "events")
-        views = IO.normalize_event_ts(
-            ST.file_stream(spark, sf, raw_schema,
-                           glob_filter="events.parquet")) \
-            .filter(F.col("event_type") == "view") \
-            .select("event_id", "ts", "user_id")
-        buys = IO.normalize_event_ts(
-            ST.file_stream(spark, sf, raw_schema,
-                           glob_filter="events.parquet")) \
-            .filter(F.col("event_type") == "purchase") \
-            .select("event_id", "ts", "user_id")
-        j = ST.interval_join(views, buys, key="user_id", ts_col="ts",
-                             within="12 hours", how="left_outer")
+        j = _attribution_join(spark, sf, "left_outer")
         out = ST.run_bounded(j.select(
             F.col("l_event_id").alias("view_id"),
             F.coalesce(F.col("r_event_id"), F.lit(-1))
@@ -3135,20 +3065,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         min(floor_ms(max per-side ts)) - within`` — no ``+ within``
         term, unlike the left rule (the left row must additionally
         age past its whole match window)."""
-        from nifi_datasynthesizer_spark import streaming as ST
-        raw_schema = IO.table_schema(spark, sf, "events")
-        views = IO.normalize_event_ts(
-            ST.file_stream(spark, sf, raw_schema,
-                           glob_filter="events.parquet")) \
-            .filter(F.col("event_type") == "view") \
-            .select("event_id", "ts", "user_id")
-        buys = IO.normalize_event_ts(
-            ST.file_stream(spark, sf, raw_schema,
-                           glob_filter="events.parquet")) \
-            .filter(F.col("event_type") == "purchase") \
-            .select("event_id", "ts", "user_id")
-        j = ST.interval_join(views, buys, key="user_id", ts_col="ts",
-                             within="12 hours", how="right_outer")
+        j = _attribution_join(spark, sf, "right_outer")
         out = ST.run_bounded(j.select(
             F.col("r_event_id").alias("purchase_id"),
             F.coalesce(F.col("l_event_id"), F.lit(-1)).alias("view_id"),
@@ -3169,20 +3086,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pinned bit-exact at sf0.001 and sf0.01 before the oracle was
         written.  State cost is the same one-window-per-key bound as
         the inner join; only the emission timing differs."""
-        from nifi_datasynthesizer_spark import streaming as ST
-        raw_schema = IO.table_schema(spark, sf, "events")
-        views = IO.normalize_event_ts(
-            ST.file_stream(spark, sf, raw_schema,
-                           glob_filter="events.parquet")) \
-            .filter(F.col("event_type") == "view") \
-            .select("event_id", "ts", "user_id")
-        buys = IO.normalize_event_ts(
-            ST.file_stream(spark, sf, raw_schema,
-                           glob_filter="events.parquet")) \
-            .filter(F.col("event_type") == "purchase") \
-            .select("event_id", "ts", "user_id")
-        j = ST.interval_join(views, buys, key="user_id", ts_col="ts",
-                             within="12 hours", how="full_outer")
+        j = _attribution_join(spark, sf, "full_outer")
         out = ST.run_bounded(j.select(
             F.coalesce(F.col("l_event_id"), F.lit(-1)).alias("view_id"),
             F.coalesce(F.col("r_event_id"), F.lit(-1))

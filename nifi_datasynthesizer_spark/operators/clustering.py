@@ -33,21 +33,16 @@ gives the vector width); empty clusters keep their previous centroid.
 from __future__ import annotations
 
 import math
-import sys
 
 import numpy as np
-from pyspark import cloudpickle
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cache import pin
 
-# The Arrow passes' task closures call _nearest and _xi: ship this
-# module's functions by value, so Python workers need not import the
-# package (a driver that only put it on sys.path still runs them).
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
-
 SCALE = 1_000_000
+# most queries one search collects to the driver (one LUT each)
+_MAX_QUERIES = 10_000
 
 
 def _quantize(col):
@@ -482,13 +477,16 @@ def pq_encode(emb: DataFrame, m: int = 8, k: int = 16, iters: int = 1,
         "dist_q")
 
 
-def _queries(queries: DataFrame, vec_col: str):
-    """The one driver collect of a search's query set: returns the
-    quantized queries as [(query_id, qx)] in id order, and the same
-    rows as the (query_id, qx) frame of the exact re-rank stage."""
+def _queries(queries: DataFrame, vec_col: str, op: str):
+    """The one driver collect of a search's query set (at most
+    ``_MAX_QUERIES`` rows): the quantized queries as [(query_id, qx)]
+    in id order, and the same rows as the re-rank stage's frame."""
     rows = [(int(r.vec_id), list(r.xi)) for r in
             queries.select("vec_id", _quantize(F.col(vec_col)).alias("xi"))
-            .orderBy("vec_id").collect()]
+            .orderBy("vec_id").limit(_MAX_QUERIES + 1).collect()]
+    if len(rows) > _MAX_QUERIES:
+        raise ValueError(f"{op}: more than {_MAX_QUERIES} queries to "
+                         f"collect to the driver; search in batches")
     return rows, queries.sparkSession.createDataFrame(
         rows, "query_id bigint, qx array<bigint>")
 
@@ -571,7 +569,7 @@ def _adc_scored(emb, queries, m: int, k: int, iters: int, vec_col: str,
     re-rank stages."""
     quant = emb.select("vec_id", _quantize(F.col(vec_col)).alias("xi"))
     books, dim = _pq_train(quant, m, k, iters, fit_mod, op)
-    qrows, qxi = _queries(queries, vec_col)
+    qrows, qxi = _queries(queries, vec_col, op)
     scored = _adc(quant, books, [(q, _lut(x, books)) for q, x in qrows])
     return scored, quant, qxi, dim
 
@@ -710,7 +708,7 @@ def _ivfpq_scored(emb, queries, n_cells: int, n_probe: int, m: int,
     books, _ = _pq_train(resid.select("vec_id", "xi"), m, k, iters,
                          fit_mod, op)
 
-    qrows, qxi = _queries(queries, vec_col)
+    qrows, qxi = _queries(queries, vec_col, op)
     luts = []
     for q, x in qrows:
         # a query probes its n_probe nearest cells (ties: lower cell),

@@ -26,6 +26,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -126,8 +127,6 @@ def running_totals(stream: DataFrame, key_col: str, value_col: str,
     events per drain — when the state transition IS a native
     aggregate (sums, counts, max_by), ship it native; this shape is
     the template for state Spark cannot express."""
-    from pyspark.sql.streaming.state import GroupState
-
     def update(key, pdfs, state: GroupState):
         import pandas as pd
         total, n = state.get if state.exists else (0.0, 0)
@@ -166,14 +165,19 @@ def running_totals_native(stream: DataFrame, key_col: str,
 
 # ----------------------------------------------------------- sinks
 
-def run_to_memory(stream: DataFrame, name: str, output_mode: str = "append",
-                  available_now: bool = True):
+def run_to_memory(stream: DataFrame, name: str, output_mode: str = "append"):
     """Drain a (finite-so-far) stream into an in-memory table — the
     test/debug sink.  Returns the StreamingQuery (caller awaits)."""
     return (stream.writeStream.format("memory").queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=available_now)
-            .start())
+            .outputMode(output_mode).trigger(availableNow=True).start())
+
+
+def _await(q) -> None:
+    """Wait for a bounded query to end; stop it also when the wait raises."""
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
 
 
 def progress(q) -> list[dict]:
@@ -194,12 +198,7 @@ def run_bounded(stream: DataFrame, name: str,
     aggregation over the same data, which is what lets a streaming
     operator carry a SQL oracle.  Used by the driver contract to put
     the streaming path under the same correctness gate as batch."""
-    q = run_to_memory(stream, name, output_mode=output_mode,
-                      available_now=True)
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    _await(run_to_memory(stream, name, output_mode=output_mode))
     return stream.sparkSession.table(name)
 
 
@@ -348,12 +347,8 @@ def run_foreach_batch(stream: DataFrame, handle) -> None:
     the driver with a regular batch DataFrame; make its writes
     idempotent (append keyed by batch_id or overwrite-by-partition)
     because a failed micro-batch re-runs."""
-    q = (stream.writeStream.foreachBatch(handle)
-         .trigger(availableNow=True).start())
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
+    _await(stream.writeStream.foreachBatch(handle)
+           .trigger(availableNow=True).start())
 
 
 KEY_COUNT_STATE = StructType([StructField("n", LongType())])
@@ -378,8 +373,6 @@ def key_counts(stream: DataFrame, key1: str, key2: str,
     JVM store at 3.8× (1M events) to 18.5× (10M) less drain time
     (measured, scripts/scale_out_streaming_sf100.json); keep this
     shape for custom state and as the streaming_topk template."""
-    from pyspark.sql.streaming.state import GroupState
-
     def update(key, pdfs, state: GroupState):
         import pandas as pd
         (n,) = state.get if state.exists else (0,)
@@ -443,8 +436,6 @@ def cdc_state(stream: DataFrame, key_col: str = "key",
     row per key — which is what lets the drained stream carry the
     SAME SQL oracle as the batch cdc_apply (filter deletes after the
     drain, exactly like the batch operator)."""
-    from pyspark.sql.streaming.state import GroupState
-
     def update(key, pdfs, state: GroupState):
         import pandas as pd
         if state.exists:

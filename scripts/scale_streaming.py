@@ -32,6 +32,7 @@ Writes scripts/scale_out_streaming.json.
 """
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -41,6 +42,8 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
+
+from nifi_datasynthesizer_spark import streaming as ST
 
 SRC = os.environ.get("SPARK_GRAFT_SCALE_SRC", "/root/testdata/sf0.1")
 BASE = os.environ.get("SPARK_GRAFT_SCALE_STREAM_DIR", f"{ROOT}/.scale/stream")
@@ -77,7 +80,6 @@ def build(spark, replicas: int, dst: str) -> None:
 
 def drain(stream, mode: str, sink: str = "noop", name: str = "scale_sink"):
     """Run a bounded stream to completion; return (metrics, out_rows)."""
-    from nifi_datasynthesizer_spark import streaming as ST
     w = stream.writeStream.outputMode(mode).trigger(availableNow=True)
     if sink == "memory":
         q = w.format("memory").queryName(name).start()
@@ -112,9 +114,7 @@ def drain(stream, mode: str, sink: str = "noop", name: str = "scale_sink"):
 def _src(spark, ev_dir: str):
     from nifi_datasynthesizer_spark.io import normalize_event_ts
     raw = spark.read.parquet(ev_dir)
-    s = (spark.readStream.schema(raw.schema)
-         .option("maxFilesPerTrigger", 1).parquet(ev_dir))
-    return normalize_event_ts(s)
+    return normalize_event_ts(ST.file_stream(spark, ev_dir, raw.schema))
 
 
 # ------------------------------------------------------------- operators
@@ -122,7 +122,6 @@ def _src(spark, ev_dir: str):
 
 def op_windowed_daily(spark, ev_dir):
     # state = O(windows x keys): 30 days x 5 types = 150 rows AT ANY SCALE
-    from nifi_datasynthesizer_spark import streaming as ST
     ev = _src(spark, ev_dir)
     agg = ST.windowed_agg(
         ev, "ts", ["event_type"],
@@ -135,7 +134,6 @@ def op_windowed_daily(spark, ev_dir):
 def op_sessionized(spark, ev_dir):
     # state = O(sessions): grows with users (key-shifted replicas), not
     # with events-per-session
-    from nifi_datasynthesizer_spark import streaming as ST
     ev = _src(spark, ev_dir)
     agg = ST.sessionized_agg(
         ev, "ts", ["user_id"],
@@ -145,14 +143,12 @@ def op_sessionized(spark, ev_dir):
 
 def op_running_totals(spark, ev_dir):
     # custom applyInPandasWithState: state = O(users)
-    from nifi_datasynthesizer_spark import streaming as ST
     ev = _src(spark, ev_dir)
     return ST.running_totals(ev, "user_id", "value"), "update", "noop"
 
 
 def op_key_counts(spark, ev_dir):
     # composite-key counters: state = O(users x types)
-    from nifi_datasynthesizer_spark import streaming as ST
     ev = _src(spark, ev_dir)
     return ST.key_counts(ev, "user_id", "event_type"), "update", "noop"
 
@@ -171,7 +167,6 @@ def op_key_counts_native(spark, ev_dir):
 
 def op_cdc_state(spark, ev_dir):
     # latest-change-wins CDC: state = O(keys), four scalars per key
-    from nifi_datasynthesizer_spark import streaming as ST
     ev = _src(spark, ev_dir)
     op = (F.when(F.col("event_type") == "error", "delete")
           .when(F.col("event_type") == "signup", "insert")
@@ -199,7 +194,6 @@ def op_interval_join(spark, ev_dir):
     # the join-window watermark (rows within the horizon), evicted as
     # the watermark advances — the only stateful shape where state is
     # O(rows-in-horizon) on BOTH sides rather than O(keys)
-    from nifi_datasynthesizer_spark import streaming as ST
     ev = _src(spark, ev_dir)
     views = ev.filter(F.col("event_type") == "view") \
         .select("event_id", "ts", "user_id")
@@ -246,15 +240,10 @@ def main() -> int:
     names = sys.argv[1:] or list(OPS)
     spark = get_spark(app="scale_streaming")
     spark.sparkContext.setLogLevel("ERROR")
-    # SPARK_GRAFT_STATE_STORE=rocksdb switches the per-query state
-    # store provider (read at query START, so a session conf set here
-    # applies to every drain): RocksDB keeps state off-heap/on-disk —
+    # SPARK_GRAFT_STATE_STORE=rocksdb runs every drain under the
+    # RocksDB state-store provider: it keeps state off-heap/on-disk —
     # the provider for state that outgrows executor memory at 100 TB.
-    if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider")
+    rocksdb = os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb"
 
     dirs = {}
     for r in SCALES:
@@ -269,27 +258,29 @@ def main() -> int:
         "rows": spark.read.parquet(dirs[r]).count(), "files": N_FILES}
         for r in SCALES}, "ops": {}}
 
-    for name in names:
-        fn = OPS[name]
-        row = {}
-        for r in SCALES:
-            best = None
-            for _ in range(RUNS):
-                stream, mode, sink = fn(spark, dirs[r])
-                t0 = time.perf_counter()
-                m = drain(stream, mode, sink, name=f"{name}_{r}x")
-                m["sec"] = round(time.perf_counter() - t0, 2)
-                if best is None or m["sec"] < best["sec"]:
-                    best = m
-            row[f"sf{r}x"] = best
-            print(f"{name} @{r}x: {best['sec']}s, "
-                  f"in={best['input_rows']} batches={best['batches']} "
-                  f"state={best['state_rows']}")
-        a, b = row[f"sf{SCALES[0]}x"], row[f"sf{SCALES[-1]}x"]
-        row["time_ratio"] = round(b["sec"] / max(a["sec"], 1e-9), 2)
-        row["state_ratio"] = round(
-            b["state_rows"] / max(a["state_rows"], 1), 2)
-        results["ops"][name] = row
+    with (ST.state_store_provider(spark, "rocksdb") if rocksdb
+          else contextlib.nullcontext()):
+        for name in names:
+            fn = OPS[name]
+            row = {}
+            for r in SCALES:
+                best = None
+                for _ in range(RUNS):
+                    stream, mode, sink = fn(spark, dirs[r])
+                    t0 = time.perf_counter()
+                    m = drain(stream, mode, sink, name=f"{name}_{r}x")
+                    m["sec"] = round(time.perf_counter() - t0, 2)
+                    if best is None or m["sec"] < best["sec"]:
+                        best = m
+                row[f"sf{r}x"] = best
+                print(f"{name} @{r}x: {best['sec']}s, "
+                      f"in={best['input_rows']} batches={best['batches']} "
+                      f"state={best['state_rows']}")
+            a, b = row[f"sf{SCALES[0]}x"], row[f"sf{SCALES[-1]}x"]
+            row["time_ratio"] = round(b["sec"] / max(a["sec"], 1e-9), 2)
+            row["state_ratio"] = round(
+                b["state_rows"] / max(a["state_rows"], 1), 2)
+            results["ops"][name] = row
 
     out = os.path.join(os.path.dirname(__file__), OUT)
     with open(out, "w") as f:

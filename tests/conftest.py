@@ -26,9 +26,10 @@ def spark():
 @pytest.fixture(autouse=True)
 def _release_and_check_caches():
     """After every test, release the frames pinned through ``cache``
-    and check that Spark's SQL cache list is empty: a bare
-    ``.persist()`` left behind fails the test that made it.  Never
-    starts a session; without an active one there is nothing to do."""
+    and check that Spark's SQL cache list is empty and no streaming
+    query is active: a bare ``.persist()`` or an undrained stream left
+    behind fails the test that made it.  Never starts a session;
+    without an active one there is nothing to do."""
     yield
     from pyspark.sql import SparkSession
     spark = SparkSession.getActiveSession()
@@ -39,7 +40,12 @@ def _release_and_check_caches():
     leaked = not spark._jsparkSession.sharedState().cacheManager().isEmpty()
     if leaked:
         spark.catalog.clearCache()   # fail this test only, not the next
+    active = spark.streams.active
+    for q in active:
+        q.stop()                     # likewise
     assert not leaked, "a cached frame outlived release_caches()"
+    assert not active, ("streaming queries outlived the test: "
+                        f"{[q.name for q in active]}")
 
 
 @contextlib.contextmanager

@@ -649,6 +649,26 @@ def test_empty_corpus_raises_naming_operator(spark, op):
         getattr(CL, op)(*args)
 
 
+@pytest.mark.parametrize("op", ["pq_search", "pq_rerank_search",
+                                "ivfpq_search", "ivfpq_rerank_search"])
+def test_query_collect_is_bounded(spark, monkeypatch, op):
+    """A search collects at most ``_MAX_QUERIES`` query rows to the
+    driver: one more raises, naming the operator; a set at the cap
+    still searches every query."""
+    from nifi_datasynthesizer_spark.operators import clustering as CL
+    emb = spark.createDataFrame(
+        [(i, [float(i % 5), float(i % 3), float(i % 2), 1.0])
+         for i in range(20)], "vec_id long, embedding array<double>")
+    kw = dict(k_top=2, m=2, k=4, iters=1)
+    if op.startswith("ivfpq"):
+        kw.update(n_cells=2, n_probe=1)
+    monkeypatch.setattr(CL, "_MAX_QUERIES", 2)
+    with pytest.raises(ValueError, match=f"^{op}: more than 2 queries"):
+        getattr(CL, op)(emb, emb.filter("vec_id < 3"), **kw)
+    got = getattr(CL, op)(emb, emb.filter("vec_id < 2"), **kw).collect()
+    assert {r.query_id for r in got} == {0, 1}
+
+
 @pytest.mark.parametrize("dim", [4, 70])
 def test_embedding_outliers_any_width(spark, dim):
     """Centroids take the data's width: at 4 and 70 dims every group
@@ -2333,13 +2353,8 @@ def test_streaming_cdc_state_planted(spark):
         schema = spark.read.parquet(f"{stage}").schema
         st = ST.file_stream(spark, stage, schema)
         out = ST.cdc_state(st)
-        q_ = ST.run_to_memory(out, "t_cdc_state", output_mode="update")
-        try:
-            q_.awaitTermination()
-        finally:
-            q_.stop()
+        tbl = ST.run_bounded(out, "t_cdc_state", output_mode="update")
         from pyspark.sql import functions as F
-        tbl = spark.table("t_cdc_state")
         final = {r.key: r for r in
                  tbl.groupBy("key")
                  .agg(F.max_by(F.struct("last_tus", "last_seq", "last_op"),

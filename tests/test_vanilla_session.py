@@ -2,12 +2,17 @@
 engine confs pre-set (round-1 regression class: read_table relied on
 get_spark()'s nanosAsLong/timezone confs and every events query died
 under the driver's own session).  Runs in a subprocess so the vanilla
-JVM/session cannot inherit the test session's SQLConf."""
+JVM/session cannot inherit the test session's SQLConf.  Likewise a
+Python worker that cannot import the package must still load the
+package functions the driver ships to it."""
 
 from __future__ import annotations
 
+import importlib
 import subprocess
 import sys
+
+import pytest
 
 from tests.conftest import ROOT
 
@@ -44,3 +49,25 @@ def test_driver_contract_under_vanilla_session():
                        capture_output=True, text=True, timeout=600)
     assert "ALL-VANILLA-OK" in r.stdout, (
         f"stdout tail: {r.stdout[-2000:]}\nstderr tail: {r.stderr[-2000:]}")
+
+
+@pytest.mark.parametrize("module, fn", [
+    ("operators.clustering", "_nearest"),
+    ("operators.multimodal", "_decode_image_stub"),
+    ("synthesizers", "simulate_commuters"),
+])
+def test_worker_functions_load_without_the_package(tmp_path, module, fn):
+    """Arrow, mapInPandas and applyInPandas closures call these module
+    functions; a worker loads them in an isolated interpreter outside
+    the repo (no package on its path), so they must be pickled by
+    value."""
+    from pyspark import cloudpickle
+    f = getattr(importlib.import_module(
+        f"nifi_datasynthesizer_spark.{module}"), fn)
+    r = subprocess.run(
+        [sys.executable, "-I", "-c",
+         "import pickle, sys; print(pickle.loads(sys.stdin.buffer.read())"
+         ".__name__)"],
+        input=cloudpickle.dumps(f), cwd=tmp_path, capture_output=True,
+        timeout=120)
+    assert r.stdout.decode().strip() == fn, r.stderr.decode()[-2000:]
