@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from nifi_datasynthesizer_spark import compile_schema, synthesizers as SZ
 from nifi_datasynthesizer_spark import streaming as ST
-from nifi_datasynthesizer_spark.cache import pin, released
+from nifi_datasynthesizer_spark.cache import pin, released, scratch
 from nifi_datasynthesizer_spark.operators import dedup as DD
 from nifi_datasynthesizer_spark.operators import multimodal as MM
 from nifi_datasynthesizer_spark.operators import similarity as SIM
@@ -1676,13 +1676,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["ann_ivf_derived"] = ann_ivf_derived
 
     def ann_ivf_arrow(spark, sf):
-        """ann_ivf pinned ABOVE the literal-argmax ceiling
-        (n_centroids=80 > _CELL_ASSIGN_LITERAL_MAX=64), so the driver
-        row runs the Arrow-batched mapInPandas assignment kernel —
-        the path the derived √n config takes at scale — against the
-        fully relational DuckDB mirror.  Together with
-        ann_ivf_derived this puts BOTH halves of the production plan
-        (the derivation and the Arrow kernel) under CORRECTNESS."""
+        """ann_ivf at 80 cells, a cell count no other entry uses:
+        the Arrow-batched mapInPandas assignment kernel (ann_ivf's one
+        assignment path) against the fully relational DuckDB mirror
+        at five times the 16-cell entry's width."""
         emb = _t(spark, sf, "embeddings")
         queries_df = emb.filter(F.col("vec_id") < 5)
         return (SIM.ann_ivf(emb, queries_df, k=10, n_centroids=80)
@@ -1709,7 +1706,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         cents = [list(r.xi)
                  for r in quant.orderBy("vec_id").limit(80).collect()]
         return (CL.assign_two_level(quant, cents, probe_supers=9)
-                .select("vec_id", "cluster", "dist_q")
                 .orderBy("vec_id"))
     q["ann_ivf_two_level"] = ann_ivf_two_level
 
@@ -1971,12 +1967,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         batch — equals dedup_cross computed from raw text, proving
         the store round-trips losslessly (array<bigint> through the
         sink and back)."""
-        import tempfile
-
         docs = _t(spark, sf, "documents")
         incoming = docs.filter(F.col("doc_id") % 7 == 0)
         corpus = docs.filter(F.col("doc_id") % 7 != 0)
-        path = tempfile.mkdtemp(prefix="spark_graft_sig_") + "/sigs"
+        path = scratch() + "/sigs"
         IO.write(DD.minhash_signatures(corpus, 64, 5), path)
         stored = IO.read(spark, path)
         return (DD.dedup_minhash_cross(incoming, corpus,
@@ -2431,12 +2425,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         static corpus with the batch minhash-cross operator, appending
         to an idempotent sink; the drained union equals the one-shot
         batch dedup_cross, so the same SQL oracle applies."""
-        import tempfile
-
         corpus = _t(spark, sf, "documents").filter(F.col("doc_id") % 7 != 0)
         src = (_replay(spark, sf, "documents")
                .filter(F.col("doc_id") % 7 == 0))
-        outdir = tempfile.mkdtemp(prefix="spark_graft_sdc_") + "/pairs"
+        outdir = scratch() + "/pairs"
 
         def handle(batch_df, batch_id):
             with released():
@@ -2691,11 +2683,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         read back, and aggregated — the result must equal the oracle
         aggregating the generation SQL directly, proving the sink
         loses nothing (values, types, partition column round-trip)."""
-        import tempfile
-
         base = compile_schema(SYNTH_BASIC_SCHEMA, seed=21) \
             .dataframe(spark, 5000)
-        path = tempfile.mkdtemp(prefix="spark_graft_rt_") + "/t"
+        path = scratch() + "/t"
         IO.write(base, path, fmt="parquet", partition_by=["segment"])
         back = IO.read(spark, path, fmt="parquet")
         return (back.groupBy("segment")

@@ -1,22 +1,42 @@
 """The one owner of the intermediate-cache policy.  An operator that
 returns a lazy frame cannot unpersist its own intermediates, so it
-``pin``s them here; callers free them per query (``release_caches``)
+``pin``s them here, and a frame that reads files lazily keeps them in a
+``scratch`` directory; callers free both per query (``release_caches``)
 or per block (``released``).  ``cut`` truncates iterative lineage."""
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 from collections.abc import Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
-# Frames persisted by pin() and not yet released.
+# Frames persisted by pin() and directories made by scratch(), not yet
+# released.
 _PINNED: list[DataFrame] = []
+_SCRATCH: list[str] = []
 
 
 def pin(df: DataFrame) -> DataFrame:
     _PINNED.append(df.persist())
     return df
+
+
+def scratch() -> str:
+    """A new ``spark_graft_*`` temp directory for files a returned
+    frame reads lazily; it is removed with the pins."""
+    d = tempfile.mkdtemp(prefix="spark_graft_")
+    _SCRATCH.append(d)
+    return d
+
+
+def _release(pins: int = 0, dirs: int = 0) -> None:
+    while len(_PINNED) > pins:
+        _PINNED.pop().unpersist()
+    while len(_SCRATCH) > dirs:
+        shutil.rmtree(_SCRATCH.pop(), ignore_errors=True)
 
 
 def cut(df: DataFrame) -> DataFrame:
@@ -43,23 +63,22 @@ def cut(df: DataFrame) -> DataFrame:
 
 
 def release_caches() -> None:
-    """Unpersist every frame pinned since the last call.  Safe while
-    results are still held: an unpersisted frame recomputes, it never
-    corrupts."""
-    while _PINNED:
-        _PINNED.pop().unpersist()
+    """Unpersist every frame pinned and remove every scratch directory
+    made since the last call.  An unpersisted frame still held
+    recomputes, it never corrupts; a frame that reads a removed
+    scratch directory fails, so release only after consuming it."""
+    _release()
 
 
 @contextmanager
 def released() -> Iterator[None]:
-    """Unpersist the pins made inside the block when it exits, normally
-    or by an exception; pins made before the block stay.  The block
-    owns every pin made while it runs, so it must not overlap another
-    thread's pinning (a foreachBatch handler runs while the driver
-    thread only waits on the stream)."""
-    mark = len(_PINNED)
+    """Release the pins and scratch directories made inside the block
+    when it exits, normally or by an exception; those made before the
+    block stay.  The block owns everything made while it runs, so it
+    must not overlap another thread's pinning (a foreachBatch handler
+    runs while the driver thread only waits on the stream)."""
+    marks = len(_PINNED), len(_SCRATCH)
     try:
         yield
     finally:
-        while len(_PINNED) > mark:
-            _PINNED.pop().unpersist()
+        _release(*marks)

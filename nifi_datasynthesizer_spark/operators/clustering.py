@@ -9,9 +9,8 @@ the product, so each iteration is a distributed pass.
 
 Plan shape for 100 TB per iteration:
 
-- assignment is a pure narrow map: at small k the centroids are plan
-  literals and the per-row argmin is an array expression, at large k
-  an Arrow map — no join, no shuffle, no row blowup either way;
+- assignment is a pure narrow Arrow map with the centroids in the
+  task closure — no join, no shuffle, no row blowup;
 - each centroid update is ONE Arrow pass that ships per-partition
   partial sums (at most k × (dim + 2) integers per codebook)
   straight to the driver — k × dim integers, not data;
@@ -51,33 +50,6 @@ def _quantize(col):
                        .cast("long"))
 
 
-def _dists_sql(x_sql: str, cents: list[list[int]]) -> str:
-    """SQL text for the array of exact squared L2 distances from an
-    array expression to each centroid literal.  ONE string for the
-    whole k-wide array: composing it from k ``_dist_expr`` Columns is
-    k × several py4j round-trips PER REFERENCE — the PQ encoder's
-    8 × 16 distances cost ~4.7 s of pure driver time that way, vs
-    milliseconds as text (the same lesson as the round-3
-    dual-expression rewrite)."""
-    def one(c: list[int]) -> str:
-        lit = "array(" + ",".join(f"{v}L" for v in c) + ")"
-        return (f"aggregate(zip_with({x_sql}, {lit}, "
-                f"(a, b) -> (a - b) * (a - b)), 0L, (acc, v) -> acc + v)")
-    return "array(" + ", ".join(one(c) for c in cents) + ")"
-
-
-def _argmin_sql(d_sql: str, k: int) -> str:
-    """Fold the k-wide distance array to struct(dist, j) of its first
-    minimum in ONE pass.  ``array_position(d, array_min(d))`` computes
-    the (HOF-interpreted) distance array twice per row; the fold
-    references it once — and callers put the struct in its own
-    projection so extracting .j and .dist doesn't re-evaluate it."""
-    return (f"aggregate(zip_with({d_sql}, sequence(0, {k - 1}), "
-            f"(x, j) -> struct(x AS dist, j AS j)), "
-            f"struct({1 << 62}L AS dist, -1 AS j), "
-            f"(acc, e) -> IF(e.dist < acc.dist, e, acc))")
-
-
 def _nearest(X: np.ndarray, B: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """The nearest-centroid kernel of every Arrow pass in this module.
 
@@ -89,11 +61,10 @@ def _nearest(X: np.ndarray, B: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     of those minimum squared distances.
 
     - Exact: each distance is int64 ``|x|² − 2x·c + |c|²`` over
-      micro-units (terms ≤ ~6e15 at dim 64, ≪ 2⁶³), equal to the SQL
-      fold's Σ(a − b)².
+      micro-units (terms ≤ ~6e15 at dim 64, ≪ 2⁶³), equal to the
+      oracles' Σ(a − b)².
     - Tie-break: ``argmin`` keeps the FIRST minimum, the smallest
-      centroid index — the rule of :func:`_argmin_sql` and of the
-      DuckDB oracles.
+      centroid index — the rule of the DuckDB oracles.
     - Memory: rows are taken ``(1 << 22) // k`` at a time, so one
       distance block holds ~2²² cells whatever k is.
     """
@@ -120,46 +91,29 @@ def _xi(pdf) -> np.ndarray:
     return np.asarray(pdf["xi"].tolist(), dtype=np.int64)
 
 
-# k·dim literal cells above which _assign switches from the SQL fold
-# to the Arrow path: higher-order functions are interpreted (never
-# whole-stage codegen), and the fold allocates one zip_with array per
-# centroid per row — fine at the oracle-replayed k ≤ 16, ruinous at
-# the derived k ≈ √n (measured: k=447 over 200k rows ran minutes-long
-# stages).  4096 cells = k ≤ 64 at dim 64 keeps every oracle-checked
-# plan on the literal path.
-_ASSIGN_LITERAL_MAX_CELLS = 4096
+# what an assignment pass emits: the vectors stay in the JVM, so only
+# three scalars per row cross back from Python
+_ASSIGNED = "vec_id long, cluster int, dist_q long"
 
 
 def _assign(quant: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """(vec_id, xi) + centroid literals -> (vec_id, xi, cluster, dist_q).
+    """(vec_id, xi) + centroids -> (vec_id, cluster, dist_q).
 
-    Small k: narrow single-pass fold argmin over the k distance
-    expressions (plan literals, no join, no shuffle).  Large k (the
-    derived k≈√n SemDeDup path): Arrow-batched mapInPandas running
-    :func:`_nearest` with the centroid matrix in the task closure —
-    the same exact int64 distances and first-minimum tie-break, so
-    both paths are bit-identical and executor memory is flat in k.
-    Still a narrow map: no shuffle either way.
+    Arrow-batched mapInPandas running :func:`_nearest` with the
+    centroid matrix in the task closure: exact int64 distances, the
+    first-minimum tie-break, executor memory flat in k, and a narrow
+    map (no join, no shuffle) at any k.
     """
-    k, dim = len(centroids), len(centroids[0])
-    if k * dim <= _ASSIGN_LITERAL_MAX_CELLS:
-        am = _argmin_sql(_dists_sql("xi", centroids), k)
-        return (quant.select("vec_id", "xi", F.expr(am).alias("__m"))
-                .select("vec_id", "xi",
-                        F.expr("CAST(__m.j AS INT)").alias("cluster"),
-                        F.col("__m.dist").alias("dist_q")))
-
     C = np.asarray([centroids], dtype=np.int64)
 
     def gen(batches):
         import pandas as pd
         for pdf in batches:
             code, dq = _nearest(_xi(pdf), C)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "xi": pdf["xi"],
+            yield pd.DataFrame({"vec_id": pdf["vec_id"],
                                 "cluster": code[:, 0], "dist_q": dq})
 
-    return quant.mapInPandas(
-        gen, schema="vec_id long, xi array<bigint>, cluster int, dist_q long")
+    return quant.mapInPandas(gen, schema=_ASSIGNED)
 
 
 def assign_two_level(quant: DataFrame, centroids: list[list[int]],
@@ -168,73 +122,64 @@ def assign_two_level(quant: DataFrame, centroids: list[list[int]],
     escape hatch for k ≫ 10⁴ centroids (n ≳ 10⁸ with k=√n), where
     even the Arrow flat argmin's n·k distance grid stops scaling.
 
-    The k centroids are themselves clustered driver-side into
-    g = isqrt(k) super-cells (k rows of int64 — small data, 3 Lloyd
-    passes in numpy); each corpus row then scans the g super-cells
-    (n·√k work) and computes EXACT int64 distances only against the
-    members of its ``probe_supers`` nearest supers (expected
-    n·probe·√k) — total n·√k·(1+probe) vs the flat path's n·k.
-    Same narrow shuffle-free map shape as :func:`_assign`; the
+    The k centroids are themselves clustered on the driver into
+    g = isqrt(k) super-cells (k rows of int64 — small data): 3 Lloyd
+    passes through :func:`_nearest`, refreshed as floor means like
+    :func:`_train_round_np`.  Each corpus row then scans the g
+    super-cells (n·√k work) and computes EXACT int64 distances only
+    against the members of its ``probe_supers`` nearest supers
+    (expected n·probe·√k) — total n·√k·(1+probe) vs the flat path's
+    n·k.  Same narrow shuffle-free map shape as :func:`_assign`; the
     centroid matrix and super-cell index ride the task closure.
 
-    Semantics: member distances use the flat path's exact micro-unit²
-    int64 arithmetic and its first-minimum tie-break (smallest
-    centroid index wins), so with ``probe_supers >= g`` the output is
-    IDENTICAL to :func:`_assign` (every member set is scanned —
-    unit-tested); at smaller probe widths assignment is approximate
-    exactly like IVF probing, and the probe width is the
-    recall-vs-cost lever (the IMI / hierarchical-IVF construction).
+    Semantics: every member scan is :func:`_nearest` over the super's
+    ascending member list — the flat path's exact micro-unit² int64
+    arithmetic and first-minimum tie-break (smallest centroid index
+    wins) — so with ``probe_supers >= g`` the output is IDENTICAL to
+    :func:`_assign` (every member set is scanned — unit-tested); at
+    smaller probe widths assignment is approximate exactly like IVF
+    probing, and the probe width is the recall-vs-cost lever (the IMI
+    / hierarchical-IVF construction).
     """
     C = np.asarray(centroids, dtype=np.int64)
-    k, dim = C.shape
+    k = len(C)
     g = max(2, math.isqrt(k))
     w = min(probe_supers, g)
     # deterministic strided init over the centroid list, then 3 Lloyd
-    # passes on the centroids themselves (floats fine: selection only)
-    init = sorted({(j * k) // g for j in range(g)})
-    S = C[init].astype(np.float64)
-    Cf = C.astype(np.float64)
-    c2f = (Cf * Cf).sum(axis=1)
-    labels = np.zeros(k, dtype=np.int64)
+    # passes on the centroids themselves (the supers only choose which
+    # members get scanned)
+    S = C[sorted({(j * k) // g for j in range(g)})]
     for _ in range(3):
-        d = c2f[:, None] - 2 * (Cf @ S.T) + (S * S).sum(axis=1)[None, :]
-        labels = d.argmin(axis=1)
+        labels = _nearest(C, S[None])[0][:, 0]
         for j in range(len(S)):
-            m = Cf[labels == j]
+            m = C[labels == j]
             if len(m):
-                S[j] = m.mean(axis=0)
+                S[j] = np.floor(m.sum(axis=0) / len(m))
     members = [np.flatnonzero(labels == j) for j in range(len(S))]
     # Lloyd passes can empty a super; probing an empty super wastes a
     # probe slot and — if EVERY probed super were empty — would emit
-    # cluster=-1 instead of an assignment.  Rank empty supers at +inf
-    # so the w probes always land on populated supers (there is at
-    # least one: k centroids have labels).
+    # cluster=-1 instead of an assignment.  Rank empty supers last so
+    # the w probes always land on populated supers (there is at least
+    # one: k centroids have labels).
     empty = np.asarray([len(m) == 0 for m in members], dtype=bool)
-    c2 = (C * C).sum(axis=1)
+    s2 = (S * S).sum(axis=1)
+    top = np.iinfo(np.int64).max
 
     def gen(batches):
         import pandas as pd
         for pdf in batches:
             X = _xi(pdf)
-            n = len(X)
-            Xf = X.astype(np.float64)
-            ds = ((Xf * Xf).sum(axis=1, keepdims=True)
-                  - 2 * (Xf @ S.T) + (S * S).sum(axis=1)[None, :])
-            ds[:, empty] = np.inf
+            ds = (X * X).sum(axis=1, keepdims=True) - 2 * (X @ S.T) + s2
+            ds[:, empty] = top
             probe = np.argsort(ds, axis=1)[:, :w]
-            best = np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
-            cell = np.full(n, -1, dtype=np.int64)
-            x2 = (X * X).sum(axis=1)
-            for j in range(len(S)):
+            best = np.full(len(X), top, dtype=np.int64)
+            cell = np.full(len(X), -1, dtype=np.int64)
+            for j, mem in enumerate(members):
                 rows = np.flatnonzero((probe == j).any(axis=1))
-                mem = members[j]
                 if not len(rows) or not len(mem):
                     continue
-                d = (x2[rows, None] - 2 * (X[rows] @ C[mem].T)
-                     + c2[None, mem])
-                a = d.argmin(axis=1)   # first min within this super
-                dj = d[np.arange(len(rows)), a]
-                cj = mem[a]
+                code, dj = _nearest(X[rows], C[mem][None])
+                cj = mem[code[:, 0]]
                 # lexicographic (dist, centroid-index) update — the
                 # flat argmin's smallest-index tie-break across supers
                 upd = (dj < best[rows]) | ((dj == best[rows])
@@ -242,12 +187,11 @@ def assign_two_level(quant: DataFrame, centroids: list[list[int]],
                 ridx = rows[upd]
                 best[ridx] = dj[upd]
                 cell[ridx] = cj[upd]
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "xi": pdf["xi"],
+            yield pd.DataFrame({"vec_id": pdf["vec_id"],
                                 "cluster": cell.astype(np.int32),
                                 "dist_q": best})
 
-    return quant.mapInPandas(
-        gen, schema="vec_id long, xi array<bigint>, cluster int, dist_q long")
+    return quant.mapInPandas(gen, schema=_ASSIGNED)
 
 
 def _fit_sample(quant: DataFrame, fit_mod: int | None) -> DataFrame:
@@ -313,10 +257,9 @@ def cluster_embeddings(emb: DataFrame, k: int = 8, iters: int = 2,
     quant = emb.select("vec_id", _quantize(F.col(vec_col)).alias("xi"))
     (centroids,), _ = _pq_train(quant, 1, k, iters, fit_mod,
                                 "cluster_embeddings")
-    # the final full-corpus assignment is the product: it stays the
-    # narrow centroid-literal argmin (the audited plan shape)
-    return (_assign(quant, centroids)
-            .select("vec_id", "cluster", "dist_q"))
+    # the final full-corpus assignment is the product: one narrow
+    # Arrow pass (the audited plan shape)
+    return _assign(quant, centroids)
 
 
 def _train_round_np(quant: DataFrame,
@@ -328,14 +271,9 @@ def _train_round_np(quant: DataFrame,
     every centroid as ``floor(float(sum) / count)``, the oracle's IEEE
     op.  Integer partial sums are order-free, so the result is
     bit-identical to an assign-then-aggregate round.  A centroid no
-    row chose keeps its previous value.
-
-    This is the training loop's version of the
-    ``_ASSIGN_LITERAL_MAX_CELLS`` lesson: a literal-SQL round would
-    build a new k·dim-literal argmin tree every iteration (the
-    centroids change), paying full analysis and codegen of an
-    interpreted-HOF forest before touching a row.  No shuffle: the
-    partials collect straight to the driver."""
+    row chose keeps its previous value.  No shuffle: the partials
+    collect straight to the driver, and the changing centroids ride
+    the task closure, not the plan."""
     B = np.asarray(books, dtype=np.int64)          # (m, k, sub)
     m, k, sub = B.shape
 
@@ -729,8 +667,8 @@ def semantic_dedup(emb: DataFrame, k: int | None = None, iters: int = 2,
     in the same centroid cell, so the quadratic cosine search shrinks
     from corpus² to Σ (cluster size)².
 
-    Scale shape: the assignment pass is the narrow centroid-literal
-    argmin of :func:`cluster_embeddings` (no shuffle); the pair search
+    Scale shape: the assignment pass is the narrow Arrow map of
+    :func:`cluster_embeddings` (no shuffle); the pair search
     shuffles once on the cluster id.  ``k=None`` (the production
     default) derives ``max(8, isqrt(n))`` from one corpus count so
     expected cluster size stays √n and total pair work ~n^1.5 at any

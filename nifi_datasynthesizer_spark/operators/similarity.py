@@ -11,6 +11,7 @@ from __future__ import annotations
 import math
 import re
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -170,12 +171,6 @@ def stratified_centroid_ids(n_total: int, n_centroids: int) -> list[int]:
     return sorted({(j * n_total) // n_centroids for j in range(n_centroids)})
 
 
-# cell count above which ann_ivf's per-row assignment switches from the
-# packed-array HOF argmax to the Arrow path (HOFs are interpreted; see
-# clustering._ASSIGN_LITERAL_MAX_CELLS for the same trap and numbers)
-_CELL_ASSIGN_LITERAL_MAX = 64
-
-
 def ann_ivf(emb: DataFrame, queries: DataFrame, k: int = 10,
             n_centroids: int | None = None, n_probe: int = 4,
             centroids: list[list[float]] | None = None) -> DataFrame:
@@ -183,14 +178,18 @@ def ann_ivf(emb: DataFrame, queries: DataFrame, k: int = 10,
     probe only their `n_probe` nearest cells, exact cosine re-rank
     within the probed cells.
 
-    Scale: cell assignment is a NARROW per-row argmax — the whole
-    centroid table rides into every corpus partition as a single
-    broadcast row holding an array<struct<cell,cv>>, and the best cell
-    is an array_max over per-centroid cosines.  No 16× row blowup, no
-    corpus shuffle, no aggregation: at 100 TB the corpus is scanned
-    once and only (cell-pruned) candidate rows ever move.  Queries
-    broadcast; the only exchange keyed on data is the final per-query
-    top-k window over pruned candidates.
+    Scale: cell assignment is a NARROW per-row argmax — the k
+    centroid rows (cells, not data) are collected once and ride every
+    corpus partition in the task closure of an Arrow-batched map that
+    takes the first max of the rounded cosines (ties: smallest cell).
+    The same rows feed the query-probe side, so the corpus is not
+    scanned again for them.  No k× row blowup, no corpus shuffle, no
+    aggregation: at 100 TB the corpus is scanned once and only
+    (cell-pruned) candidate rows ever move.  Queries broadcast; the
+    only exchange keyed on data is the final per-query top-k window
+    over pruned candidates.  The assignment cosines differ from the
+    oracle's only in float summation order, below the round(·, 6)
+    quantum.
 
     ``n_centroids=None`` (the production default) derives
     ``max(16, isqrt(n))`` from one corpus count: a FIXED cell count
@@ -201,77 +200,50 @@ def ann_ivf(emb: DataFrame, queries: DataFrame, k: int = 10,
     point).  Callers that need a structural-literal oracle (the entry
     query's unrolled DuckDB mirror) or a fixed probe fraction (the
     bench recall A/B) pin n_centroids=16 explicitly.
-    At n ≳ 10⁸ (√n ≳ 10⁴ centroids) the single-row packed-array argmax
-    still broadcasts fine (~5 MB at dim 64) but per-row assign cost
-    grows with √n — switch to kmeans_centroids + a two-level coarse
-    quantizer there, same plan shape.
+    At n ≳ 10⁸ (√n ≳ 10⁴ centroids) the centroid matrix still ships
+    fine (~5 MB at dim 64) but per-row assign cost grows with √n —
+    switch to kmeans_centroids + a two-level coarse quantizer there,
+    same plan shape.
     """
     if centroids is not None:
         # explicit (e.g. kmeans_centroids) cells: cell id = list index
-        cent = (emb.sparkSession
-                .createDataFrame([(j, c) for j, c in enumerate(centroids)],
-                                 "cell long, cv array<double>"))
+        crows = [(j, [float(v) for v in c]) for j, c in enumerate(centroids)]
     else:
         n_total = emb.count()  # parquet footer count — cheap at any scale
         if n_centroids is None:
             n_centroids = max(16, math.isqrt(n_total))
         cent_ids = stratified_centroid_ids(n_total, n_centroids)
-        cent = (emb.filter(F.col("vec_id").isin(cent_ids))
-                .select(F.col("vec_id").alias("cell"),
-                        l2_normalize("embedding").alias("cv")))
-    corpus = emb.select(F.col("vec_id").alias("cand_id"),
-                        l2_normalize("embedding").alias("v"))
-    k_cells = len(centroids) if centroids is not None else len(cent_ids)
-    if k_cells <= _CELL_ASSIGN_LITERAL_MAX:
-        # pack all centroids into ONE row; broadcast-nested-loop join of
-        # a 1-row build side = a narrow map with the array in scope
-        cent_arr = cent.agg(
-            F.collect_list(F.struct("cell", "cv")).alias("cents"))
-        best = F.array_max(F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                F.round(dot(F.col("v"), c["cv"]), 6).alias("sim"),
-                (-c["cell"]).alias("negcell"),   # ties → smallest cell
-                c["cell"].alias("cell"))))
-        assigned = (corpus.join(F.broadcast(cent_arr))
-                    .select("cand_id", "v", best["cell"].alias("cell")))
-    else:
-        # derived √n cells: the packed-array argmax is a higher-order
-        # function — interpreted, never codegen'd — and k·dim interpreted
-        # ops/row stops scaling around k ≈ 10² (measured on the 100×
-        # corpus).  Arrow-batched argmax instead: the centroid matrix is
-        # a task closure (k ≤ √n rows collected — cells, not data), rows
-        # stream through numpy, still a narrow shuffle-free map.  Same
-        # argmax + smallest-cell tie-break (C sorted by cell, first-max
-        # argmax); sims differ from the fold only in float summation
-        # order below the round(·,6) quantum, and this path is never the
-        # structural-literal-oracle one (entries pin n_centroids=16).
-        import numpy as np
         # one row per cell unless vec_id repeats in the corpus; the
         # limit caps what such a corpus can collect
-        crows = cent.limit(k_cells + 1).collect()
-        if len(crows) > k_cells:
+        crows = [(r.cell, list(r.cv)) for r in
+                 emb.filter(F.col("vec_id").isin(cent_ids))
+                 .select(F.col("vec_id").alias("cell"),
+                         l2_normalize("embedding").alias("cv"))
+                 .limit(len(cent_ids) + 1).collect()]
+        if len(crows) > len(cent_ids):
             raise ValueError(
-                f"ann_ivf: more than {k_cells} centroid rows for "
-                f"{k_cells} cells — vec_id is not unique in the corpus; "
-                f"deduplicate vec_id first")
-        crows = sorted(crows, key=lambda r: r.cell)
-        cells_arr = [int(r.cell) for r in crows]
-        C = np.asarray([list(r.cv) for r in crows], dtype=np.float64)
+                f"ann_ivf: more than {len(cent_ids)} centroid rows for "
+                f"{len(cent_ids)} cells — vec_id is not unique in the "
+                f"corpus; deduplicate vec_id first")
+    crows.sort()
+    cent = emb.sparkSession.createDataFrame(crows,
+                                            "cell long, cv array<double>")
+    cells = np.asarray([c for c, _ in crows], dtype=np.int64)
+    C = np.asarray([cv for _, cv in crows], dtype=np.float64)
 
-        def gen(batches):
-            import pandas as pd
-            cells_np = np.asarray(cells_arr, dtype=np.int64)
-            for pdf in batches:
-                V = np.asarray(pdf["v"].tolist(), dtype=np.float64)
-                sims = np.round(V @ C.T, 6)
-                j = sims.argmax(axis=1)   # first max → smallest cell
-                yield pd.DataFrame({"cand_id": pdf["cand_id"],
-                                    "v": pdf["v"],
-                                    "cell": cells_np[j]})
+    def gen(batches):
+        import pandas as pd
+        for pdf in batches:
+            V = np.asarray(pdf["v"].tolist(), dtype=np.float64)
+            # first max of the rounded cosines: ties go to the smallest cell
+            j = np.round(V @ C.T, 6).argmax(axis=1)
+            yield pd.DataFrame({"cand_id": pdf["cand_id"], "v": pdf["v"],
+                                "cell": cells[j]})
 
-        assigned = corpus.mapInPandas(
-            gen, schema="cand_id long, v array<double>, cell long")
+    assigned = (emb.select(F.col("vec_id").alias("cand_id"),
+                           l2_normalize("embedding").alias("v"))
+                .mapInPandas(gen, schema="cand_id long, v array<double>, "
+                                         "cell long"))
     q = queries.select(F.col("vec_id").alias("query_id"),
                        l2_normalize("embedding").alias("qv"))
     q_cells = (q.crossJoin(F.broadcast(cent))
@@ -303,8 +275,6 @@ def kmeans_centroids(emb: DataFrame, n_centroids: int = 16,
     order), so ann_ivf keeps stratified ids for its CORRECTNESS entry
     and this is the production recall path (see bench ann_ivf_recall).
     """
-    import numpy as np
-
     m = max(2, int(round(1.0 / max(sample_fraction, 1e-9))))
     sample = (emb.select(l2_normalize("embedding").alias("v"))
               .filter(F.pmod(F.xxhash64(F.col("vec_id") + seed), F.lit(m)) == 0)

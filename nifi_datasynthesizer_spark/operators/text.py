@@ -727,8 +727,7 @@ def bigram_boilerplate(docs: DataFrame, min_df: int = 3,
     per-element ``transform`` lambda: higher-order functions are
     interpreted (never codegen'd), and a lambda that also indexes the
     OUTER array measured ~20× slower here (14 s vs 0.7 s for 266k
-    bigrams — the same interpreter trap as
-    clustering._ASSIGN_LITERAL_MAX_CELLS).  Still shuffle-free.
+    bigrams).  Still shuffle-free.
     """
     toks = F.split(normalize_text(F.col(text_col)), " ")
     n1 = F.greatest(F.size("w") - 1, F.lit(0))

@@ -18,6 +18,7 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from nifi_datasynthesizer_spark.cache import release_caches
 from tests.conftest import compare_with_duckdb
 
 
@@ -49,6 +50,9 @@ def main() -> int:
             print(f"{name}: FAIL {msg}")
             if only:
                 traceback.print_exc()
+        finally:
+            # free the entry's pins and scratch directories
+            release_caches()
     print(f"\n{len(failed)} failures" + (f": {failed}" if failed else ""))
     return 1 if failed else 0
 

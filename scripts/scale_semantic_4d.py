@@ -4,10 +4,9 @@ at a corpus where k = isqrt(n) reaches the THOUSANDS.
 The third-decade harness (scale_check.py) measured the derived-√n-k
 configuration up to 200k vectors (k=447); SURVEY §6 claims the
 assignment path "carries k ≈ thousands comfortably" via the Arrow
-mapInPandas kernel (clustering._assign switches off the literal SQL
-fold above 4096 k·dim cells).  This script measures that claim once:
-2M vectors → k = 1414, fit bounded by fit_mod_for_cap (the production
-combo), pair work contracted at ~n^1.5.
+mapInPandas kernel (clustering._assign).  This script measures that
+claim once: 2M vectors → k = 1414, fit bounded by fit_mod_for_cap
+(the production combo), pair work contracted at ~n^1.5.
 
 The corpus derives embeddings ONLY (semantic_dedup reads nothing
 else): replica k applies a per-replica isometry — dimension

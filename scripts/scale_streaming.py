@@ -85,11 +85,8 @@ def drain(stream, mode: str, sink: str = "noop", name: str = "scale_sink"):
         q = w.format("memory").queryName(name).start()
     else:
         q = w.format("noop").start()
-    try:
-        q.awaitTermination()
-        progs = ST.progress(q)
-    finally:
-        q.stop()
+    ST._await(q)
+    progs = ST.progress(q)
     input_rows = sum(int(p.get("numInputRows", 0)) for p in progs)
     batches = sum(1 for p in progs if int(p.get("numInputRows", 0)) > 0)
     state_rows = 0
@@ -160,9 +157,7 @@ def op_key_counts_native(spark, ev_dir):
     # key_counts is the price of applyInPandasWithState, which buys
     # arbitrary custom state (keep it for state Spark can't express)
     ev = _src(spark, ev_dir)
-    agg = (ev.groupBy("user_id", "event_type")
-           .agg(F.count("*").alias("n")))
-    return agg, "update", "noop"
+    return ST.key_counts_native(ev, "user_id", "event_type"), "update", "noop"
 
 
 def op_cdc_state(spark, ev_dir):

@@ -1,7 +1,10 @@
 from __future__ import annotations
 
 import contextlib
+import glob
 import os
+import shutil
+import tempfile
 
 import pytest
 
@@ -25,27 +28,36 @@ def spark():
 
 @pytest.fixture(autouse=True)
 def _release_and_check_caches():
-    """After every test, release the frames pinned through ``cache``
-    and check that Spark's SQL cache list is empty and no streaming
-    query is active: a bare ``.persist()`` or an undrained stream left
-    behind fails the test that made it.  Never starts a session;
-    without an active one there is nothing to do."""
+    """After every test, release the frames pinned and the directories
+    made through ``cache``, then check that Spark's SQL cache list is
+    empty, no streaming query is active and no new ``spark_graft_*``
+    entry is left in the temp directory: a bare ``.persist()``, an
+    undrained stream or a bare ``mkdtemp`` left behind fails the test
+    that made it.  Never starts a session; without an active one only
+    the temp directory is checked."""
+    pattern = os.path.join(tempfile.gettempdir(), "spark_graft_*")
+    before = set(glob.glob(pattern))
     yield
     from pyspark.sql import SparkSession
     spark = SparkSession.getActiveSession()
-    if spark is None:
-        return
-    from nifi_datasynthesizer_spark.cache import release_caches
-    release_caches()
-    leaked = not spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    if leaked:
-        spark.catalog.clearCache()   # fail this test only, not the next
-    active = spark.streams.active
-    for q in active:
-        q.stop()                     # likewise
+    leaked, active = False, []
+    if spark is not None:
+        from nifi_datasynthesizer_spark.cache import release_caches
+        release_caches()
+        leaked = not spark._jsparkSession.sharedState().cacheManager() \
+            .isEmpty()
+        if leaked:
+            spark.catalog.clearCache()   # fail this test only, not the next
+        active = spark.streams.active
+        for q in active:
+            q.stop()                     # likewise
+    left = sorted(set(glob.glob(pattern)) - before)
+    for d in left:
+        shutil.rmtree(d, ignore_errors=True)   # likewise
     assert not leaked, "a cached frame outlived release_caches()"
     assert not active, ("streaming queries outlived the test: "
                         f"{[q.name for q in active]}")
+    assert not left, f"temp directories outlived the test: {left}"
 
 
 @contextlib.contextmanager

@@ -541,8 +541,8 @@ def test_column_stats_rejects_leading_digit(spark):
     assert column_stats(df, ["_c2"]).collect()[0].n_non_null == 1
 
 
-def test_ann_ivf_centroid_collect_is_bounded(spark, monkeypatch):
-    """The Arrow path collects one centroid row per cell; a corpus with
+def test_ann_ivf_centroid_collect_is_bounded(spark):
+    """ann_ivf collects one centroid row per cell; a corpus with
     repeated vec_ids would ship more, so the collect is capped at
     k + 1 rows and fails loudly above k."""
     def vec(i):
@@ -553,7 +553,6 @@ def test_ann_ivf_centroid_collect_is_bounded(spark, monkeypatch):
     rows = [(i, vec(i)) for i in range(400)] + [(0, vec(1)), (20, vec(2))]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
     qdf = emb.filter(F.col("vec_id") < 3)
-    monkeypatch.setattr(SIM, "_CELL_ASSIGN_LITERAL_MAX", 0)
     with pytest.raises(ValueError, match="vec_id is not unique"):
         SIM.ann_ivf(emb, qdf, k=5, n_centroids=20)
 
@@ -588,25 +587,32 @@ def test_ann_ivf_derived_cells(spark):
     assert floor == floor16
 
 
-def test_ann_ivf_arrow_cells_match_hof(spark, monkeypatch):
-    # the large-k Arrow cell assignment must reproduce the packed-array
-    # HOF argmax (same cells probed, same top-k) on the same corpus
+def test_ann_ivf_cells_match_duckdb(spark):
+    # the Arrow cell assignment (rounded cosines, first max = smallest
+    # cell) must reproduce the relational DuckDB mirror: same cells
+    # probed, same top-k, on a corpus full of exact cosine ties
+    import duckdb
+
+    from nifi_datasynthesizer_spark.oracles import ann_ivf_sql
     rows = [(i, [float(((i * 11 + j * 5) % 17) - 8) for j in range(8)])
             for i in range(400)]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
     qdf = emb.filter(F.col("vec_id") < 3)
-    hof = sorted(map(tuple, SIM.ann_ivf(emb, qdf, k=5,
+    got = sorted(map(tuple, SIM.ann_ivf(emb, qdf, k=5,
                                         n_centroids=20).collect()))
-    monkeypatch.setattr(SIM, "_CELL_ASSIGN_LITERAL_MAX", 0)
-    arw = sorted(map(tuple, SIM.ann_ivf(emb, qdf, k=5,
-                                        n_centroids=20).collect()))
-    assert hof == arw and len(arw) == 15
+    con = duckdb.connect()
+    con.register("embeddings", emb.toPandas())
+    want = sorted(con.sql(ann_ivf_sql(k=5, n_centroids=20,
+                                      query_pred="vec_id < 3")).fetchall())
+    assert got == want and len(got) == 15
 
 
-def test_assign_arrow_matches_literal(spark, monkeypatch):
-    # the large-k Arrow assignment must be bit-identical to the SQL
-    # fold — exact int64 micro-unit distances AND first-minimum
-    # tie-break (centroid 3 duplicates centroid 1: ties go to index 1)
+def test_assign_matches_plain_python(spark):
+    # the Arrow assignment must equal a plain-Python exact-int argmin:
+    # Σ(a − b)² over micro-units and the first minimum (centroid 3
+    # duplicates centroid 1: ties go to index 1)
+    import math
+
     from nifi_datasynthesizer_spark.operators import clustering as CL
     rows = [(i, [float(((i * 13 + j * 7) % 21) - 10) / 3 for j in range(8)])
             for i in range(300)]
@@ -614,23 +620,23 @@ def test_assign_arrow_matches_literal(spark, monkeypatch):
     quant = emb.select("vec_id", CL._quantize(F.col("embedding")).alias("xi"))
     cents = [list(r.xi) for r in quant.orderBy("vec_id").limit(5).collect()]
     cents[3] = list(cents[1])
-    lit = sorted((r.vec_id, r.cluster, r.dist_q)
+    xi = {r.vec_id: list(r.xi) for r in quant.collect()}
+    want = []
+    for v, x in xi.items():
+        d = [sum((a - b) ** 2 for a, b in zip(x, c)) for c in cents]
+        want.append((v, d.index(min(d)), min(d)))
+    got = sorted((r.vec_id, r.cluster, r.dist_q)
                  for r in CL._assign(quant, cents).collect())
-    monkeypatch.setattr(CL, "_ASSIGN_LITERAL_MAX_CELLS", 0)
-    arw = sorted((r.vec_id, r.cluster, r.dist_q)
-                 for r in CL._assign(quant, cents).collect())
-    assert lit == arw and len(lit) == 300
-    assert not any(c == 3 for _, c, _ in arw)   # dup centroid never wins
+    assert got == sorted(want) and len(got) == 300
+    assert not any(c == 3 for _, c, _ in got)   # dup centroid never wins
     # one training round through the same kernel: dup centroid 3 is
     # never chosen, so it keeps its value (the empty-cluster rule);
     # every other centroid is floor(sum / count) over the rows the
-    # literal path assigned to it
-    import math
-    xi = {r.vec_id: list(r.xi) for r in quant.collect()}
+    # reference assigned to it
     (trained,) = CL._train_round_np(quant, [cents])
     assert trained[3] == cents[3]
     for j in (0, 1, 2, 4):
-        members = [xi[v] for v, c, _ in lit if c == j]
+        members = [xi[v] for v, c, _ in want if c == j]
         assert members
         assert trained[j] == [math.floor(float(sum(col)) / len(members))
                               for col in zip(*members)]
@@ -1952,6 +1958,25 @@ def test_released_keeps_earlier_pins(spark):
     assert _sql_cache_empty(spark)
 
 
+def test_scratch_dirs_go_with_the_pins(spark):
+    """``scratch()`` directories follow the pins: ``released()`` removes
+    the ones made inside its block, also when it raises, and
+    ``release_caches()`` the rest, so a frame that reads its files
+    lazily leaves nothing behind once it is consumed."""
+    import os
+
+    outer = CA.scratch()
+    assert os.path.basename(outer).startswith("spark_graft_")
+    with pytest.raises(RuntimeError, match="planted"):
+        with CA.released():
+            inner = CA.scratch()
+            spark.range(3).write.parquet(inner + "/t")
+            raise RuntimeError("planted")
+    assert not os.path.exists(inner) and os.path.isdir(outer)
+    CA.release_caches()
+    assert not os.path.exists(outer)
+
+
 def test_cut_never_enters_sql_cache(spark):
     """A lineage cut is a local checkpoint, not a cache entry: nothing
     for release_caches() to free, and the values are unchanged."""
@@ -2345,9 +2370,11 @@ def test_streaming_cdc_state_planted(spark):
             .write.parquet(f"{d}/f1")
         spark.createDataFrame(rows2, cols).coalesce(1) \
             .write.parquet(f"{d}/f2")
+        import os
         import shutil
         import glob as g
-        stage = tempfile.mkdtemp()
+        stage = f"{d}/stage"
+        os.mkdir(stage)
         for i, src in enumerate(sorted(g.glob(f"{d}/f*/part-*.parquet"))):
             shutil.copy(src, f"{stage}/{i}.parquet")
         schema = spark.read.parquet(f"{stage}").schema

@@ -273,7 +273,7 @@ def test_pq_encode_pass_is_narrow(spark):
 def test_semantic_dedup_pairs_only_within_cluster(spark):
     """SemDeDup's pair join must key on the cluster id (the blocking
     that turns corpus² into Σ cluster²) and the assignment must stay
-    the narrow centroid-literal argmin — no cartesian anywhere."""
+    a narrow map — no cartesian anywhere."""
     df = entrymod.queries()["dedup_semantic"](spark, SF)
     p = _plan(df)
     assert "CartesianProduct" not in p
@@ -336,12 +336,13 @@ def test_fuzzy_pairs_blocks_on_two_keys(spark):
 
 
 def test_ann_ivf_assignment_is_narrow(spark):
-    """IVF cell assignment must be a per-row argmax over the broadcast
-    centroid array — not a crossJoin row-blowup + groupBy argmax that
-    shuffles the whole corpus (r1 weakness)."""
+    """IVF cell assignment must be a per-row argmax in an Arrow map
+    with the centroids in the task closure — not a crossJoin
+    row-blowup + groupBy argmax that shuffles the whole corpus (r1
+    weakness)."""
     df = entrymod.queries()["ann_ivf"](spark, SF)
     p = _plan(df)
-    assert "BroadcastNestedLoopJoin" in p          # 1-row centroid array
+    assert "MapInPandas" in p                       # per-row argmax
     assert "max_by" not in p                        # old groupBy argmax
     assert "hashpartitioning(cand_id" not in p      # corpus never shuffles
 
@@ -716,17 +717,17 @@ def test_rowgroup_audit_prunes_content(spark, tmp_path):
 
 
 def test_r8_operators_scan_counts(spark):
-    """Rescan audit for the r8 entries.  ann_ivf_derived: corpus +
-    centroid + query scans plus the literal-path assignment read (4);
-    ann_ivf_arrow: the Arrow-kernel path folds assignment into the
-    corpus pass (3); dedup_embedding_derived reads the corpus once
+    """Rescan audit for the r8 entries.  ann_ivf_derived and
+    ann_ivf_arrow: the Arrow assignment folds into the corpus pass and
+    the probe side reads the collected centroid rows, so the corpus
+    and query scans are all (2); dedup_embedding_derived reads the corpus once
     into the pinned bucketed frame plus the r9 planted-pair branch —
     a SECOND scan whose vec_id < 10 filter is pushed to parquet, so
     it reads 10 rows regardless of corpus size (2 total; the
     candidate join and both payload re-attaches reuse the pin);
     exchanges stay bounded (per-query top-k windows and the bucket
     join — never a second corpus-sized shuffle)."""
-    expect = {"ann_ivf_derived": (4, 4), "ann_ivf_arrow": (3, 3),
+    expect = {"ann_ivf_derived": (2, 3), "ann_ivf_arrow": (2, 3),
               "dedup_embedding_derived": (2, 1)}
     for name, (want_scans, want_exch) in expect.items():
         df = entrymod.queries()[name](spark, SF)
@@ -999,6 +1000,24 @@ def test_kmeans_and_pq_build_jobs(spark):
             build()
             assert len(ids()) == 6, (name, len(ids()))
         release_caches()
+
+
+def test_ann_ivf_build_jobs(spark):
+    """Building ann_ivf runs the corpus count (two jobs under AQE) and
+    one bounded centroid collect, at a pinned and a derived cell count
+    alike; a fourth job means a second centroid read came back."""
+    from pyspark.sql import functions as F
+
+    from nifi_datasynthesizer_spark.operators import similarity as SIM
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    queries = emb.filter(F.col("vec_id") < 5)
+    for cells in (16, None):
+        def build():
+            return SIM.ann_ivf(emb, queries, k=10, n_centroids=cells)
+        build()                      # warm: schema reads and imports
+        with job_group(spark, f"build-ann_ivf-{cells}") as ids:
+            build()
+            assert len(ids()) == 3, (cells, len(ids()))
 
 
 def test_session_turns_off_call_site_capture(spark):
