@@ -576,32 +576,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         snapshot.  This is how a 100 TB table actually grows columns:
         old files are never rewritten; the reader reconciles
         footers, and downstream aggregates must be NULL-correct."""
-        import shutil
-        import tempfile
-
         docs = _t(spark, sf, "documents")
-        d = tempfile.mkdtemp(prefix="evschema_")
-        try:
-            (docs.filter(F.col("doc_id") % 2 == 0)
-             .select("doc_id")
-             .write.mode("overwrite").parquet(d + "/snap=1"))
-            (docs.filter(F.col("doc_id") % 2 == 1)
-             .select("doc_id",
-                     F.length("text").cast("long").alias("quality"))
-             .write.mode("overwrite").parquet(d + "/snap=2"))
-            merged = (spark.read.option("mergeSchema", "true")
-                      .parquet(d))
-            out = (merged.groupBy("snap")
-                   .agg(F.count("*").alias("n_docs"),
-                        F.count("quality").alias("n_quality"),
-                        F.sum("quality").alias("sum_quality"))
-                   .select(F.col("snap").cast("long").alias("snap"),
-                           "n_docs", "n_quality", "sum_quality")
-                   .orderBy("snap"))
-            rows = out.collect()
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-        return spark.createDataFrame(rows, out.schema)
+        d = scratch()
+        (docs.filter(F.col("doc_id") % 2 == 0)
+         .select("doc_id")
+         .write.mode("overwrite").parquet(d + "/snap=1"))
+        (docs.filter(F.col("doc_id") % 2 == 1)
+         .select("doc_id",
+                 F.length("text").cast("long").alias("quality"))
+         .write.mode("overwrite").parquet(d + "/snap=2"))
+        merged = spark.read.option("mergeSchema", "true").parquet(d)
+        return (merged.groupBy("snap")
+                .agg(F.count("*").alias("n_docs"),
+                     F.count("quality").alias("n_quality"),
+                     F.sum("quality").alias("sum_quality"))
+                .select(F.col("snap").cast("long").alias("snap"),
+                        "n_docs", "n_quality", "sum_quality")
+                .orderBy("snap"))
     q["io_schema_evolution"] = io_schema_evolution
 
     def io_compaction(spark, sf):
@@ -614,38 +605,29 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         bit_xor content digest over (doc_id, text) proves the rewrite
         lost and duplicated nothing."""
         import glob
-        import shutil
-        import tempfile
 
         from nifi_datasynthesizer_spark.phash import h60
         docs = _t(spark, sf, "documents").select("doc_id", "text")
-        d = tempfile.mkdtemp(prefix="compact_")
-        try:
-            docs.repartition(64).write.mode("overwrite") \
-                .parquet(d + "/small")
-            n_before = len(glob.glob(d + "/small/part-*.parquet"))
-            spark.read.parquet(d + "/small").repartition(4) \
-                .write.mode("overwrite").parquet(d + "/compact")
-            n_after = len(glob.glob(d + "/compact/part-*.parquet"))
-            back = spark.read.parquet(d + "/compact")
-            sig = h60(F.concat(F.col("doc_id").cast("string"),
-                               F.lit(":"), F.col("text")))
-            out = back.select(sig.alias("sig")).agg(
-                F.lit(n_before).cast("long").alias("n_files_before"),
-                F.lit(n_after).cast("long").alias("n_files_after"),
-                F.count("*").alias("n_rows"),
-                F.expr("bit_xor(sig)").cast("long").alias("digest"))
-            rows = out.collect()
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-        return spark.createDataFrame(rows, out.schema)
+        d = scratch()
+        docs.repartition(64).write.mode("overwrite").parquet(d + "/small")
+        n_before = len(glob.glob(d + "/small/part-*.parquet"))
+        spark.read.parquet(d + "/small").repartition(4) \
+            .write.mode("overwrite").parquet(d + "/compact")
+        n_after = len(glob.glob(d + "/compact/part-*.parquet"))
+        back = spark.read.parquet(d + "/compact")
+        sig = h60(F.concat(F.col("doc_id").cast("string"),
+                           F.lit(":"), F.col("text")))
+        return back.select(sig.alias("sig")).agg(
+            F.lit(n_before).cast("long").alias("n_files_before"),
+            F.lit(n_after).cast("long").alias("n_files_after"),
+            F.count("*").alias("n_rows"),
+            F.expr("bit_xor(sig)").cast("long").alias("digest"))
     q["io_compaction"] = io_compaction
 
     def _rg_fixture_run(spark, sf, fn):
-        """Build the deterministic three-shape row-group fixture, run
-        ``fn(audit_df)`` over its io.rowgroup_audit frame, and return
-        the collected result rebuilt as a local DataFrame (the temp
-        fixture is gone by the time the driver collects).  Fixture:
+        """Build the deterministic three-shape row-group fixture in a
+        scratch directory and return ``fn(audit_df)`` over its
+        io.rowgroup_audit frame.  Fixture:
         the corpus keyed into 8 ``bucket=N`` partition files (one row
         group each), one ``solid`` single-file export (the pathology:
         every row in one row group → ``oversized``), and one
@@ -654,31 +636,23 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         them as ceil/mod arithmetic).  Audit runs distributed:
         binaryFile listing (paths only, content column pruned) + one
         footer decode task per file."""
-        import shutil
-        import tempfile
-
         import pyarrow as pa
         import pyarrow.parquet as pq
         docs = _t(spark, sf, "documents").select("doc_id")
-        d = tempfile.mkdtemp(prefix="rgaudit_")
-        try:
-            (docs.withColumn("bucket", F.pmod(F.col("doc_id"), F.lit(8)))
-             .repartition(8, "bucket")
-             .write.mode("overwrite").partitionBy("bucket")
-             .parquet(d + "/buckets"))
-            docs.coalesce(1).write.mode("overwrite").parquet(d + "/solid")
-            # bounded fixture write (≤ 800 ids), not a data path
-            hot_ids = [r.doc_id for r in
-                       docs.filter(F.col("doc_id") < 800)
-                       .orderBy("doc_id").collect()]
-            pq.write_table(
-                pa.table({"doc_id": pa.array(hot_ids, pa.int64())}),
-                d + "/hot.parquet", row_group_size=100)
-            out = fn(IO.rowgroup_audit(spark, d, target_rows=500))
-            rows = out.collect()
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-        return spark.createDataFrame(rows, out.schema)
+        d = scratch()
+        (docs.withColumn("bucket", F.pmod(F.col("doc_id"), F.lit(8)))
+         .repartition(8, "bucket")
+         .write.mode("overwrite").partitionBy("bucket")
+         .parquet(d + "/buckets"))
+        docs.coalesce(1).write.mode("overwrite").parquet(d + "/solid")
+        # bounded fixture write (≤ 800 ids), not a data path
+        hot_ids = [r.doc_id for r in
+                   docs.filter(F.col("doc_id") < 800)
+                   .orderBy("doc_id").collect()]
+        pq.write_table(
+            pa.table({"doc_id": pa.array(hot_ids, pa.int64())}),
+            d + "/hot.parquet", row_group_size=100)
+        return fn(IO.rowgroup_audit(spark, d, target_rows=500))
 
     def io_rowgroup_audit(spark, sf):
         """Parquet row-group layout audit (io.rowgroup_audit) over the
@@ -718,30 +692,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         plan-asserted in tests/test_plans.py).  At 100 TB partition
         pruning is the difference between scanning 1/|types| of the
         data and all of it; the rollup equals the unpartitioned SQL."""
-        import shutil
-        import tempfile
-
-        from nifi_datasynthesizer_spark.io import read_table
         ev = _t(spark, sf, "events")
-        d = tempfile.mkdtemp(prefix="evpart_")
-        try:
-            (ev.select("event_id", "ts", "user_id", "event_type",
-                       F.floor(F.col("value") * 100).cast("long")
-                       .alias("cents"))
-             .write.mode("overwrite").partitionBy("event_type")
-             .parquet(d))
-            part = spark.read.parquet(d) \
-                .filter(F.col("event_type") == "purchase")
-            out = (part.groupBy(F.to_date("ts").alias("day"))
-                   .agg(F.count("*").alias("n_events"),
-                        F.sum("cents").alias("cents"))
-                   .orderBy("day"))
-            rows = out.collect()
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-        # materialized before the temp dir vanishes; rebuild a frame
-        # with the same schema for the driver's collect
-        return spark.createDataFrame(rows, out.schema)
+        d = scratch()
+        (ev.select("event_id", "ts", "user_id", "event_type",
+                   F.floor(F.col("value") * 100).cast("long")
+                   .alias("cents"))
+         .write.mode("overwrite").partitionBy("event_type")
+         .parquet(d))
+        part = spark.read.parquet(d) \
+            .filter(F.col("event_type") == "purchase")
+        return (part.groupBy(F.to_date("ts").alias("day"))
+                .agg(F.count("*").alias("n_events"),
+                     F.sum("cents").alias("cents"))
+                .orderBy("day"))
     q["io_partition_prune"] = io_partition_prune
 
     def io_column_stats(spark, sf):

@@ -17,11 +17,8 @@ operator is a py4j round-trip.  A 13-field identifier schema builds a
 pure driver time *per plan*, which at cluster scale (many submitted
 plans) is driver-bound, not executor-bound.  Rendering each column as
 one SQL string and parsing it JVM-side drops that to milliseconds.
-A legacy *thunk mode* (``cf`` = zero-arg Column builder) remains for
-the few constructs that need the Column API (window cumsums bound to
-foreign frames, higher-order folds built with Python lambdas); any
-composition touching a thunk-mode input falls back to Column
-composition transparently.
+Window sums and higher-order folds are SQL text too, so composition
+never leaves the string path.
 
 Only operations with identical semantics in both engines are exposed.
 Notably:
@@ -39,6 +36,8 @@ Notably:
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -85,103 +84,79 @@ def _spark_num(v) -> str:
 
 
 class D:
-    """A dual (Spark SQL, DuckDB SQL) expression.
-
-    String mode (``cf is None``): both sides are SQL text; composition
-    is pure string building — zero py4j traffic until ``.c`` parses the
-    finished column once.  Thunk mode (``cf`` = Column or zero-arg
-    builder): the Spark side is a lazy Column; used only where the
-    Column API is genuinely needed.  Either way the DuckDB side ``s``
-    is always a string, so oracle SQL compiles without Spark.
+    """A dual expression: ``s`` is DuckDB SQL text, ``ss`` Spark SQL
+    text.  Composition is pure string building — zero py4j traffic
+    until ``.c`` parses the finished column once — and oracle SQL
+    compiles without Spark.
     """
 
-    __slots__ = ("cf", "s", "ss", "_cc")
+    __slots__ = ("s", "ss", "_cc")
 
-    def __init__(self, cf, s: str, ss: str | None = None):
-        if cf is None and ss is None:
-            raise ValueError("string-mode D needs a Spark SQL string")
-        self.cf = None if cf is None else (cf if callable(cf) else (lambda: cf))
+    def __init__(self, s: str, ss: str):
         self.s = s
         self.ss = ss
         self._cc = None
 
     @property
     def c(self) -> Column:
-        # Memoized: a Column is an immutable JVM expression handle, and
-        # samplers share subtrees heavily (cumulative chains, reused
-        # draws) — thunk-mode rebuilds would be O(tree²) py4j calls.
+        # Memoized: one parse per column however often it is selected.
         if self._cc is None:
-            self._cc = F.expr(self.ss) if self.cf is None else self.cf()
+            self._cc = F.expr(self.ss)
         return self._cc
 
     # -- arithmetic ----------------------------------------------------
-    def _bin(self, other: "D | int | float", op: str, fn,
-             sop: str | None = None) -> "D":
-        o = lit(other) if not isinstance(other, D) else other
-        ds = f"({self.s} {op} {o.s})"
-        if self.cf is None and o.cf is None:
-            return D(None, ds, f"({self.ss} {sop or op} {o.ss})")
-        return D(lambda: fn(self.c, o.c), ds)
+    def _bin(self, other: "D | int | float", op: str) -> "D":
+        o = lit(other)
+        return D(f"({self.s} {op} {o.s})", f"({self.ss} {op} {o.ss})")
 
     def __add__(self, o):
-        return self._bin(o, "+", lambda a, b: a + b)
+        return self._bin(o, "+")
 
     def __sub__(self, o):
-        return self._bin(o, "-", lambda a, b: a - b)
+        return self._bin(o, "-")
 
     def __mul__(self, o):
-        return self._bin(o, "*", lambda a, b: a * b)
+        return self._bin(o, "*")
 
     def __mod__(self, o):
-        return self._bin(o, "%", lambda a, b: a % b)
+        return self._bin(o, "%")
 
     def __truediv__(self, o):
         # only used with a double operand → double division in both engines
-        return self._bin(o, "/", lambda a, b: a / b)
+        return self._bin(o, "/")
 
     # -- comparisons (used by when-chains) -----------------------------
     def __lt__(self, o):
-        return self._bin(o, "<", lambda a, b: a < b)
+        return self._bin(o, "<")
 
     def __le__(self, o):
-        return self._bin(o, "<=", lambda a, b: a <= b)
+        return self._bin(o, "<=")
 
     def __gt__(self, o):
-        return self._bin(o, ">", lambda a, b: a > b)
+        return self._bin(o, ">")
 
     def __ge__(self, o):
-        return self._bin(o, ">=", lambda a, b: a >= b)
+        return self._bin(o, ">=")
 
     def eq(self, o):
-        return self._bin(o, "=", lambda a, b: a == b)
+        return self._bin(o, "=")
 
     def xor(self, o: "D") -> "D":
-        ds = f"xor({self.s}, {o.s})"
-        if self.cf is None and o.cf is None:
-            return D(None, ds, f"({self.ss} ^ {o.ss})")
-        return D(lambda: self.c.bitwiseXOR(o.c), ds)
-
-
-def strmode(*ds: D) -> bool:
-    """True iff every input composes on the string (zero-py4j) path."""
-    return all(d.cf is None for d in ds)
+        return D(f"xor({self.s}, {o.s})", f"({self.ss} ^ {o.ss})")
 
 
 def lit(v) -> D:
     if isinstance(v, D):
         return v
     if isinstance(v, str):
-        return D(None, _sq(v), _spark_sq(v))
-    return D(None, _fmt_num(v), _spark_num(v))
+        return D(_sq(v), _spark_sq(v))
+    return D(_fmt_num(v), _spark_num(v))
 
 
 def floor(d: D) -> D:
     """floor → BIGINT in both engines (Spark's FLOOR already returns
     BIGINT; DuckDB's returns DOUBLE, hence the cast)."""
-    ds = f"CAST(FLOOR({d.s}) AS BIGINT)"
-    if d.cf is None:
-        return D(None, ds, f"FLOOR({d.ss})")
-    return D(lambda: F.floor(d.c), ds)
+    return D(f"CAST(FLOOR({d.s}) AS BIGINT)", f"FLOOR({d.ss})")
 
 
 def idiv(a: D, b: int) -> D:
@@ -194,91 +169,66 @@ def idiv(a: D, b: int) -> D:
 def band(a: D, mask: int) -> D:
     """Bitwise AND with a constant — replaces ``% 2**k`` on non-negative
     ints (identical result, no division)."""
-    ds = f"({a.s} & {mask})"
-    if a.cf is None:
-        return D(None, ds, f"({a.ss} & {mask}L)")
-    return D(lambda: a.c.bitwiseAND(F.lit(mask)), ds)
+    return D(f"({a.s} & {mask})", f"({a.ss} & {mask}L)")
 
 
 def shiftr(a: D, bits: int) -> D:
     """Arithmetic right shift — replaces ``// 2**bits`` for a >= 0."""
-    ds = f"({a.s} >> {bits})"
-    if a.cf is None:
-        return D(None, ds, f"SHIFTRIGHT({a.ss}, {bits})")
-    return D(lambda: F.shiftright(a.c, bits), ds)
+    return D(f"({a.s} >> {bits})", f"SHIFTRIGHT({a.ss}, {bits})")
 
 
 def _f1(name: str, d: D, spark_name: str | None = None) -> D:
     """Same-name single-arg function in both engines."""
-    ds = f"{name}({d.s})"
-    if d.cf is None:
-        return D(None, ds, f"{spark_name or name}({d.ss})")
-    fn = getattr(F, (spark_name or name).lower())
-    return D(lambda: fn(d.c), ds)
+    return D(f"{name}({d.s})", f"{spark_name or name}({d.ss})")
 
 
 def round_(d: D, n: int) -> D:
-    ds = f"ROUND({d.s}, {n})"
-    if d.cf is None:
-        return D(None, ds, f"ROUND({d.ss}, {n})")
-    return D(lambda: F.round(d.c, n), ds)
+    return D(f"ROUND({d.s}, {n})", f"ROUND({d.ss}, {n})")
 
 
-def _cast(d: D, duck_t: str, spark_t: str, pyt: str) -> D:
-    ds = f"CAST({d.s} AS {duck_t})"
-    if d.cf is None:
-        return D(None, ds, f"CAST({d.ss} AS {spark_t})")
-    return D(lambda: d.c.cast(pyt), ds)
+def _cast(d: D, duck_t: str, spark_t: str) -> D:
+    return D(f"CAST({d.s} AS {duck_t})", f"CAST({d.ss} AS {spark_t})")
 
 
 def cast_long(d: D) -> D:
-    return _cast(d, "BIGINT", "BIGINT", "long")
+    return _cast(d, "BIGINT", "BIGINT")
 
 
 def cast_int(d: D) -> D:
-    return _cast(d, "INTEGER", "INT", "int")
+    return _cast(d, "INTEGER", "INT")
 
 
 def cast_double(d: D) -> D:
-    return _cast(d, "DOUBLE", "DOUBLE", "double")
+    return _cast(d, "DOUBLE", "DOUBLE")
 
 
 def cast_string(d: D) -> D:
-    return _cast(d, "VARCHAR", "STRING", "string")
+    return _cast(d, "VARCHAR", "STRING")
 
 
 def concat(*parts) -> D:
     ds_ = [lit(p) for p in parts]
-    sql = "CONCAT(" + ", ".join(d.s for d in ds_) + ")"
-    if strmode(*ds_):
-        return D(None, sql, "concat(" + ", ".join(d.ss for d in ds_) + ")")
-    return D(lambda: F.concat(*[d.c for d in ds_]), sql)
+    return D("CONCAT(" + ", ".join(d.s for d in ds_) + ")",
+             "concat(" + ", ".join(d.ss for d in ds_) + ")")
 
 
 def lpad(d: D, width: int, pad: str) -> D:
-    ds = f"LPAD(CAST({d.s} AS VARCHAR), {width}, {_sq(pad)})"
-    if d.cf is None:
-        return D(None, ds,
-                 f"lpad(CAST({d.ss} AS STRING), {width}, {_spark_sq(pad)})")
-    return D(lambda: F.lpad(d.c.cast("string"), width, pad), ds)
+    return D(f"LPAD(CAST({d.s} AS VARCHAR), {width}, {_sq(pad)})",
+             f"lpad(CAST({d.ss} AS STRING), {width}, {_spark_sq(pad)})")
 
 
 def least(items: list[D]) -> D:
     if len(items) == 1:
         return items[0]
-    sql = "LEAST(" + ", ".join(d.s for d in items) + ")"
-    if strmode(*items):
-        return D(None, sql, "least(" + ", ".join(d.ss for d in items) + ")")
-    return D(lambda: F.least(*[d.c for d in items]), sql)
+    return D("LEAST(" + ", ".join(d.s for d in items) + ")",
+             "least(" + ", ".join(d.ss for d in items) + ")")
 
 
 def greatest(items: list[D]) -> D:
     if len(items) == 1:
         return items[0]
-    sql = "GREATEST(" + ", ".join(d.s for d in items) + ")"
-    if strmode(*items):
-        return D(None, sql, "greatest(" + ", ".join(d.ss for d in items) + ")")
-    return D(lambda: F.greatest(*[d.c for d in items]), sql)
+    return D("GREATEST(" + ", ".join(d.s for d in items) + ")",
+             "greatest(" + ", ".join(d.ss for d in items) + ")")
 
 
 def reverse(d: D) -> D:
@@ -294,10 +244,8 @@ def upper(d: D) -> D:
 
 
 def substr(d: D, start: int, length: int) -> D:
-    ds = f"SUBSTR({d.s}, {start}, {length})"
-    if d.cf is None:
-        return D(None, ds, f"substr({d.ss}, {start}, {length})")
-    return D(lambda: F.substring(d.c, start, length), ds)
+    return D(f"SUBSTR({d.s}, {start}, {length})",
+             f"substr({d.ss}, {start}, {length})")
 
 
 def length(d: D) -> D:
@@ -311,18 +259,13 @@ def md5(d: D) -> D:
 def hex_lower(d: D) -> D:
     """Integer → lowercase hex string, no leading zeros (Spark ``hex``
     uppercases, DuckDB ``to_hex`` uppercases too — lower both)."""
-    ds = f"LOWER(TO_HEX({d.s}))"
-    if d.cf is None:
-        return D(None, ds, f"lower(hex({d.ss}))")
-    return D(lambda: F.lower(F.hex(d.c)), ds)
+    return D(f"LOWER(TO_HEX({d.s}))", f"lower(hex({d.ss}))")
 
 
 def hex_to_long(d: D) -> D:
     """Hex string → BIGINT (Spark ``conv(x,16,10)``; DuckDB 0x cast)."""
-    ds = f"(('0x' || {d.s})::BIGINT)"
-    if d.cf is None:
-        return D(None, ds, f"CAST(conv({d.ss}, 16, 10) AS BIGINT)")
-    return D(lambda: F.conv(d.c, 16, 10).cast("long"), ds)
+    return D(f"(('0x' || {d.s})::BIGINT)",
+             f"CAST(conv({d.ss}, 16, 10) AS BIGINT)")
 
 
 def element(idx0: D, values: list) -> D:
@@ -357,51 +300,28 @@ def element(idx0: D, values: list) -> D:
         spark_arr = "array(" + ", ".join(
             _spark_sq(v) if isinstance(v, str) else _spark_num(v)
             for v in values) + ")"
-    ds = f"({arr_sql})[CAST(({idx0.s} + 1) AS BIGINT)]"
-    if idx0.cf is None:
-        return D(None, ds,
-                 f"element_at({spark_arr}, CAST(({idx0.ss} + 1) AS INT))")
-    return D(lambda: F.element_at(F.expr(spark_arr), (idx0.c + 1).cast("int")),
-             ds)
+    return D(f"({arr_sql})[CAST(({idx0.s} + 1) AS BIGINT)]",
+             f"element_at({spark_arr}, CAST(({idx0.ss} + 1) AS INT))")
 
 
 def when_chain(pairs: list[tuple[D, D]], otherwise: D) -> D:
     """CASE WHEN cond1 THEN v1 ... ELSE otherwise END."""
     sql = "CASE " + " ".join(f"WHEN {c.s} THEN {v.s}" for c, v in pairs) + \
           f" ELSE {otherwise.s} END"
-    flat = [x for cv in pairs for x in cv] + [otherwise]
-    if strmode(*flat):
-        ssql = "CASE " + " ".join(f"WHEN {c.ss} THEN {v.ss}"
-                                  for c, v in pairs) + \
-               f" ELSE {otherwise.ss} END"
-        return D(None, sql, ssql)
-
-    def build():
-        col = None
-        for cond, val in pairs:
-            col = F.when(cond.c, val.c) if col is None else col.when(cond.c, val.c)
-        return otherwise.c if col is None else col.otherwise(otherwise.c)
-    return D(build, sql)
+    ssql = "CASE " + " ".join(f"WHEN {c.ss} THEN {v.ss}" for c, v in pairs) + \
+           f" ELSE {otherwise.ss} END"
+    return D(sql, ssql)
 
 
 def date_from_days(days: D) -> D:
     """Epoch-day count → DATE, timezone-free in both engines."""
-    ds = f"(DATE '1970-01-01' + CAST({days.s} AS INTEGER))"
-    if days.cf is None:
-        return D(None, ds,
-                 f"date_add(DATE'1970-01-01', CAST({days.ss} AS INT))")
-    return D(lambda: F.date_add(F.to_date(F.lit("1970-01-01")),
-                                days.c.cast("int")), ds)
+    return D(f"(DATE '1970-01-01' + CAST({days.s} AS INTEGER))",
+             f"date_add(DATE'1970-01-01', CAST({days.ss} AS INT))")
 
 
 def array(items: list[D]) -> D:
-    sql = "ARRAY[" + ", ".join(d.s for d in items) + "]"
-    if strmode(*items):
-        return D(None, sql, "array(" + ", ".join(d.ss for d in items) + ")")
-    return D(lambda: F.array(*[d.c for d in items]), sql)
-
-
-_BIND_N = 0
+    return D("ARRAY[" + ", ".join(d.s for d in items) + "]",
+             "array(" + ", ".join(d.ss for d in items) + ")")
 
 
 def bind(val: D, fn) -> D:
@@ -415,32 +335,24 @@ def bind(val: D, fn) -> D:
     subtree per reference.  (Whole-stage codegen's subexpression
     elimination would usually rescue the duplicated form, but HOF-free
     plans aren't guaranteed, and the DuckDB side has no CSE.)
+
+    The lambda variable is named after a digest of ``val``, so the
+    rendered SQL depends only on the expression.  An inner bind whose
+    value reads the outer variable gets another name; one that binds
+    the very same text would reuse the name, so the outer variable is
+    re-derived until the body binds no lambda of that name.
     """
-    global _BIND_N
-    _BIND_N += 1
-    var = f"__b{_BIND_N}"  # unique: nested binds must not shadow in SQL
-
-    body = fn(D(None, var, var))
-    ds = f"(list_transform([{val.s}], {var} -> {body.s}))[1]"
-    if val.cf is None and body.cf is None:
-        return D(None, ds,
-                 f"element_at(transform(array({val.ss}), "
-                 f"{var} -> {body.ss}), 1)")
-
-    def cf():
-        def lam(x):
-            return fn(D(lambda: x, var)).c
-        return F.element_at(F.transform(F.array(val.c), lam), 1)
-
-    return D(cf, ds)
+    var = "__b" + hashlib.sha1(f"{val.s}\0{val.ss}".encode()).hexdigest()[:12]
+    body = fn(D(var, var))
+    while f"{var} ->" in body.s:
+        var = "__b" + hashlib.sha1(var.encode()).hexdigest()[:12]
+        body = fn(D(var, var))
+    return D(f"(list_transform([{val.s}], {var} -> {body.s}))[1]",
+             f"element_at(transform(array({val.ss}), {var} -> {body.ss}), 1)")
 
 
 def struct_(fields: dict[str, D]) -> D:
-    sql = "struct_pack(" + ", ".join(f"{k} := {d.s}"
-                                     for k, d in fields.items()) + ")"
-    if strmode(*fields.values()):
-        ssql = "named_struct(" + ", ".join(
-            f"{_spark_sq(k)}, {d.ss}" for k, d in fields.items()) + ")"
-        return D(None, sql, ssql)
-    return D(lambda: F.struct(*[d.c.alias(k) for k, d in fields.items()]),
-             sql)
+    return D("struct_pack(" + ", ".join(f"{k} := {d.s}"
+                                        for k, d in fields.items()) + ")",
+             "named_struct(" + ", ".join(f"{_spark_sq(k)}, {d.ss}"
+                                         for k, d in fields.items()) + ")")

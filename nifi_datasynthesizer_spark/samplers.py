@@ -3,7 +3,7 @@
 Reference surface: ``nifi-datasynthesizer-generators/src/main/java/com/
 mapr/synth/samplers/*.java`` (one Java class per schema ``class`` key,
 each drawing from a stateful ``java.util.Random``).  Here every sampler
-compiles to a pure, shuffle-free dual expression (Spark Column + DuckDB
+compiles to a pure, shuffle-free dual expression (Spark SQL + DuckDB
 SQL) over the row index — see rng.py for why this is the right design
 for a 1000-executor cluster.
 
@@ -17,12 +17,9 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Window
-from pyspark.sql import functions as F
-
 from . import dual as X
 from . import vocab as V
-from .dual import D
+from .dual import D, _spark_sq
 from .rng import M31, mix, pick, pick_weighted, quantize_weights, salt_of, u01, uint
 
 EPOCH_2013_08_01_S = 1375315200  # DateSampler.java default end epoch
@@ -64,7 +61,7 @@ class Ctx:
             return d
         name = f"__b{len(self.helpers)}_{tag}"
         self.helpers[name] = d
-        return D(None, f'"{name}"', f"`{name}`")
+        return D(f'"{name}"', f"`{name}`")
 
 
 # --------------------------------------------------------------- helpers
@@ -783,17 +780,9 @@ def s_random_walk(spec, ctx):
     tbl = [int(round((q * sd + mean) * unit)) for q in _n01_table()]
     step = X.element(uint(ctx.i, ctx.salt("rw"), 0, _N01_TABLE_SIZE), tbl)
 
-    duck_cum = (f"CAST(SUM({step.s}) OVER (ORDER BY i ROWS UNBOUNDED "
-                f"PRECEDING) AS BIGINT)")
-    if step.cf is None:
-        cum = D(None, duck_cum,
-                f"SUM({step.ss}) OVER (ORDER BY i ROWS UNBOUNDED PRECEDING)")
-    else:
-        def build():
-            w = Window.orderBy(F.col("i")).rowsBetween(
-                Window.unboundedPreceding, 0)
-            return F.sum(step.c).over(w)
-        cum = D(build, duck_cum)
+    cum = D(f"CAST(SUM({step.s}) OVER (ORDER BY i ROWS UNBOUNDED "
+            f"PRECEDING) AS BIGINT)",
+            f"SUM({step.ss}) OVER (ORDER BY i ROWS UNBOUNDED PRECEDING)")
     return (X.cast_double(cum) + float(start * unit)) / float(unit)
 
 
@@ -1087,11 +1076,8 @@ def s_sequence(spec, ctx):
     def _slice(arr: D) -> D:
         if ln_ is None:
             return arr
-        ds = f"LIST_SLICE({arr.s}, 1, CAST({ln_.s} AS BIGINT))"
-        if arr.cf is None and ln_.cf is None:
-            return D(None, ds,
-                     f"slice({arr.ss}, 1, CAST({ln_.ss} AS INT))")
-        return D(lambda: F.slice(arr.c, 1, ln_.c.cast("int")), ds)
+        return D(f"LIST_SLICE({arr.s}, 1, CAST({ln_.s} AS BIGINT))",
+                 f"slice({arr.ss}, 1, CAST({ln_.ss} AS INT))")
 
     items = _seq_elements(base, ctx, n)
     if items and isinstance(items[0], dict):
@@ -1132,11 +1118,8 @@ def s_join(spec, ctx):
     sub = dict(spec["value"])
     r = compile_field(sub, ctx.child("join"))
     arr = _scalar(r)
-    ds = f"ARRAY_TO_STRING({arr.s}, '{sep}')"
-    if arr.cf is None:
-        from .dual import _spark_sq
-        return D(None, ds, f"concat_ws({_spark_sq(sep)}, {arr.ss})")
-    return D(lambda: F.concat_ws(sep, arr.c), ds)
+    return D(f"ARRAY_TO_STRING({arr.s}, '{sep}')",
+             f"concat_ws({_spark_sq(sep)}, {arr.ss})")
 
 
 def _scalar(r) -> D:
@@ -1155,10 +1138,7 @@ def s_array_flatten(spec, ctx):
     sub = dict(spec["value"])
     r = compile_field(sub, ctx.child("flat"))
     arr = _scalar(r)
-    ds = f"flatten({arr.s})"
-    if arr.cf is None:
-        return D(None, ds, f"flatten({arr.ss})")
-    return D(lambda: F.flatten(arr.c), ds)
+    return D(f"flatten({arr.s})", f"flatten({arr.ss})")
 
 
 _LOOKUP_MAX = 100_000

@@ -82,7 +82,7 @@ def compile_schema(schema, seed: int = 0) -> CompiledSchema:
         schema = json.loads(schema)
     if not isinstance(schema, list):
         raise ValueError("schema must be a JSON array of field specs")
-    i = D(None, "i", "i")
+    i = D("i", "i")
     out: list[tuple[str, D]] = []
     helpers: dict[str, D] = {}
     for spec in schema:

@@ -17,7 +17,7 @@ array explosions of unbounded size).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import math
@@ -48,7 +48,7 @@ from .samplers import (
 
 
 def _i() -> D:
-    return D(None, "i", "i")
+    return D("i", "i")
 
 
 def _base(spark: SparkSession, n: int, partitions: int | None = None):
@@ -112,7 +112,7 @@ class Generated:
 
 def _ref(name: str) -> D:
     """Reference a ``lets`` binding (or the row index) by column name."""
-    return D(None, name, name)
+    return D(name, name)
 
 
 # ------------------------------------------------------------------ iot
@@ -134,25 +134,14 @@ def iot_data_flat(n_devices: int = 100, readings: int = 100,
     t = X.cast_long(j * 60) + (X.floor(u01(i, rctx.salt("jit")) * 59.0) % 60) \
         + EPOCH_2013_08_01_S
     step = _normal01(rctx) * 1.0  # sd=1, mean=0 per iot-data.json
-
-    def temp_col():
-        # window keys derived from i (sibling aliases are not visible
-        # inside the same select)
-        w = (Window.partitionBy(F.floor(F.col("i") / readings))
-             .orderBy(F.col("i") % readings)
-             .rowsBetween(Window.unboundedPreceding, 0))
-        return F.sum(step.c).over(w) + F.lit(30.0)
-
-    temp_sql = (f"(SUM({step.s}) OVER (PARTITION BY CAST(FLOOR(i / "
-                f"{float(readings)}) AS BIGINT) ORDER BY (i % {readings}) "
-                f"ROWS UNBOUNDED PRECEDING) + 30.0)")
-    if step.cf is None:
-        temp_d = D(None, temp_sql,
-                   f"(SUM({step.ss}) OVER (PARTITION BY FLOOR(i / "
-                   f"{readings}L) ORDER BY (i % {readings}L) "
-                   f"ROWS UNBOUNDED PRECEDING) + 30.0D)")
-    else:
-        temp_d = D(temp_col, temp_sql)
+    # window keys derived from i (sibling aliases are not visible
+    # inside the same select)
+    temp_d = D(f"(SUM({step.s}) OVER (PARTITION BY CAST(FLOOR(i / "
+               f"{float(readings)}) AS BIGINT) ORDER BY (i % {readings}) "
+               f"ROWS UNBOUNDED PRECEDING) + 30.0)",
+               f"(SUM({step.ss}) OVER (PARTITION BY FLOOR(i / "
+               f"{readings}L) ORDER BY (i % {readings}L) "
+               f"ROWS UNBOUNDED PRECEDING) + 30.0D)")
     cols = [
         ("device_seq", dev),
         ("reading_idx", j),
@@ -313,7 +302,7 @@ def markov_message(words: int = 24, key_size: int = 3, seed: int = 0,
     growth, slightly different bookkeeping, documented divergence).
     ``words`` bounds the step count in both modes.
     """
-    from .dual import _sq
+    from .dual import _spark_sq, _sq
     from .rng import mix, salt_of
 
     text = seed_text if seed_text is not None else _MARKOV_SEED
@@ -323,41 +312,27 @@ def markov_message(words: int = 24, key_size: int = 3, seed: int = 0,
     k0 = uint(i, salt_of("$.markov", seed, "k0"), 0, len(keys))
     draws = [mix(i, salt_of("$.markov", seed, "d", j)) for j in range(steps)]
 
+    # Spark: the transition arrays bound once as struct ``cx``, then one
+    # aggregate over the draws with state (key index k, text so far t)
     arr_i = lambda xs: "array(%s)" % ",".join(f"{x}L" for x in xs)
-    arr_s = lambda xs: "array(%s)" % ",".join(_sq(x) for x in xs)
-
-    def col():
-        ctx = F.struct(
-            F.expr(arr_i(offs)).alias("o"), F.expr(arr_i(cnts)).alias("c"),
-            F.expr(arr_i(nks)).alias("nk"), F.expr(arr_s(ws)).alias("w"),
-            F.expr(arr_s([k for k in keys])).alias("kt"))
-        dcol = F.array(*[d.c for d in draws])
-        k0c = k0.c.cast("long")
-
-        def fold(cx):
-            init = F.struct(
-                k0c.alias("k"),
-                F.element_at(cx["kt"], (k0c + 1).cast("int")).alias("t"))
-
-            def merge(acc, d):
-                k = acc["k"]
-                cnt = F.element_at(cx["c"], (k + 1).cast("int"))
-                slot = (F.element_at(cx["o"], (k + 1).cast("int"))
-                        + F.pmod(d, cnt) + 1).cast("int")
-                word = F.element_at(cx["w"], slot)
-                out = F.when(k < 0, acc)
-                if max_chars is not None:
-                    out = out.when(
-                        F.length(acc["t"]) + 1 + F.length(word) > max_chars,
-                        F.struct(F.lit(-1).cast("long").alias("k"),
-                                 acc["t"].alias("t")))
-                return out.otherwise(F.struct(
-                    F.element_at(cx["nk"], slot).alias("k"),
-                    F.concat(acc["t"], F.lit(" "), word).alias("t")))
-
-            return F.aggregate(dcol, init, merge)["t"]
-
-        return F.element_at(F.transform(F.array(ctx), fold), 1)
+    arr_s = lambda xs: "array(%s)" % ",".join(_spark_sq(x) for x in xs)
+    sslot = ("CAST(element_at(cx.o, CAST(acc.k + 1 AS INT)) + pmod(d, "
+             "element_at(cx.c, CAST(acc.k + 1 AS INT))) + 1 AS INT)")
+    sword = f"element_at(cx.w, {sslot})"
+    sbudget = ("" if max_chars is None else
+               f"WHEN length(acc.t) + 1 + length({sword}) > {max_chars} "
+               f"THEN named_struct('k', CAST(-1 AS BIGINT), 't', acc.t) ")
+    sk0 = f"CAST({k0.ss} AS BIGINT)"
+    ssql = (
+        f"element_at(transform(array(named_struct("
+        f"'o', {arr_i(offs)}, 'c', {arr_i(cnts)}, 'nk', {arr_i(nks)}, "
+        f"'w', {arr_s(ws)}, 'kt', {arr_s(keys)})), "
+        f"cx -> aggregate(array({', '.join(d.ss for d in draws)}), "
+        f"named_struct('k', {sk0}, "
+        f"'t', element_at(cx.kt, CAST({sk0} + 1 AS INT))), "
+        f"(acc, d) -> CASE WHEN acc.k < 0 THEN acc {sbudget}"
+        f"ELSE named_struct('k', element_at(cx.nk, {sslot}), "
+        f"'t', concat(acc.t, ' ', {sword})) END).t), 1)")
 
     o = "[%s]" % ",".join(f"{x}::BIGINT" for x in offs)
     c = "[%s]" % ",".join(f"{x}::BIGINT" for x in cnts)
@@ -380,7 +355,7 @@ def markov_message(words: int = 24, key_size: int = 3, seed: int = 0,
     list_transform({dlist}, d -> {{'t': '', 'k': d::BIGINT}})),
   (a, e) -> CASE WHEN a.k < 0 THEN a {budget}ELSE
     {{'t': a.t || ' ' || ({w})[{slot}], 'k': ({nk})[{slot}]}} END)).t"""
-    return D(col, sql)
+    return D(sql, ssql)
 
 
 def markov_text(n: int, words: int = 24, key_size: int = 3,
@@ -400,14 +375,14 @@ def markov_text(n: int, words: int = 24, key_size: int = 3,
 
     Spark-first shape: the chain is compiled driver-side into flat
     transition arrays (plan constants, like the LSH hyperplanes); each
-    row folds its pre-drawn counter-RNG values through one
-    ``F.aggregate`` whose state is (key index, text so far).  The
+    row folds its pre-drawn counter-RNG values through one SQL
+    ``aggregate`` whose state is (key index, text so far).  The
     transition arrays are bound ONCE via the 1-element-array transform
     (HOF lambdas re-evaluate referenced subtrees per element — an
     unbound 2000-literal array would be rebuilt per step per row).
     The DuckDB mirror is the same fold via ``list_reduce``.
     """
-    rec = D(None, "CAST(i AS BIGINT)", "CAST(i AS BIGINT)")
+    rec = D("CAST(i AS BIGINT)", "CAST(i AS BIGINT)")
     msg = markov_message(words, key_size, seed, seed_text, max_chars)
     return Generated([("rec_id", rec), ("message", msg)], n)
 
@@ -699,7 +674,7 @@ def cpoc_events(spark: SparkSession, n_users: int = 1000, max_tx: int = 16,
                   .alias("j", "x"))
          .filter(F.col("j") < F.col("n_tx")))
     ts, merch, roll = F.col("x.ts"), F.col("x.merchant"), F.col("x.roll")
-    datestr = _fmt_epoch_s(D(None, "ts", "x.ts"), "yyyy-MM-dd HH:mm:ss")
+    datestr = _fmt_epoch_s(D("ts", "x.ts"), "yyyy-MM-dd HH:mm:ss")
     fraud = F.when((F.col("compromised") == 1)
                    & (ts >= w["exploitStart"]) & (ts < w["exploitEnd"]),
                    (roll < cfr).cast("long")
@@ -716,7 +691,7 @@ def cpoc_events_sql(n_users: int = 1000, max_tx: int = 16, seed: int = 0,
                     cfr: float = 0.3, ufr: float = 0.001) -> str:
     """DuckDB oracle mirror of :func:`cpoc_events`."""
     cs, w = _cpoc_parts(n_users, max_tx, seed)
-    datestr = _fmt_epoch_s(D(None, "ts", "ts"), "yyyy-MM-dd HH:mm:ss")
+    datestr = _fmt_epoch_s(D("ts", "ts"), "yyyy-MM-dd HH:mm:ss")
     return f"""
 WITH g AS ({cs.duckdb_sql(n_users)}),
 e AS (SELECT user_id, n_tx,
@@ -785,7 +760,7 @@ def _arr_take_join(items: list[D], n: D, sep: str) -> D:
           + f"], 1, CAST({n.s} AS INT)), '{sep}')")
     ss = ("array_join(slice(array(" + ", ".join(d.ss for d in items)
           + f"), 1, CAST({n.ss} AS INT)), '{sep}')")
-    return D(None, ds, ss)
+    return D(ds, ss)
 
 
 def _q_table(size: int, fn) -> list[float]:
@@ -915,7 +890,7 @@ def weblog(n_users: int = 500, events_per_user: int = 20,
               f"ROWS UNBOUNDED PRECEDING)")
         ss = (f"SUM({val.ss}) OVER (PARTITION BY {part_s} ORDER BY {ordk} "
               f"ROWS UNBOUNDED PRECEDING)")
-        return D(None, ds, ss)
+        return D(ds, ss)
 
     t_us = X.cast_long(wsum(gap_us_r)) + EPOCH_2013_08_01_S * 1_000_000
     session_idx = X.cast_long(wsum(X.cast_long(is_new_r)))
@@ -1029,7 +1004,7 @@ def purchase_log(n_users: int = 300, max_hits: int = 128,
     # cast straight back
     cum = ("CAST((st + SUM(dt) OVER (PARTITION BY u ORDER BY j "
            "ROWS UNBOUNDED PRECEDING)) AS BIGINT)")
-    hit_time = D(None, cum, cum)
+    hit_time = D(cum, cum)
 
     # indicator algebra: c XOR k is 0 iff c = k, so 1 - min(1, c XOR k)
     # is the equality indicator (same trick as the weblog slow words)

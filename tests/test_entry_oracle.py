@@ -38,6 +38,20 @@ def test_window_names_resolve():
     assert list(_queries)[:len(window)] == window
 
 
+def test_rendering_is_pure():
+    """Compiled SQL depends only on schema and seed: compiling a schema
+    again, or building every oracle again, renders the same text on
+    both sides (lambda-variable names included)."""
+    from nifi_datasynthesizer_spark import compile_schema
+
+    a, b = (compile_schema(entrymod.SYNTH_IDENT_SCHEMA, seed=2)
+            for _ in range(2))
+    assert a.duckdb_sql(100) == b.duckdb_sql(100)
+    assert ([d.ss for _, d in a.columns] + [d.ss for d in a.helpers.values()]
+            == [d.ss for _, d in b.columns] + [d.ss for d in b.helpers.values()])
+    assert entrymod.oracle_sql() == _oracles
+
+
 # schema of the frame each test_oracle_match case built, so the
 # schema check reuses that build instead of running the query again
 _built_schemas: dict = {}

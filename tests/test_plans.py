@@ -648,31 +648,17 @@ def test_wave3_operators_scan_counts(spark):
 
 
 def test_partitioned_layout_prunes(spark):
-    """A filter on the partition column must become a PartitionFilters
-    entry (one directory scanned), not a data filter over all rows."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from nifi_datasynthesizer_spark.io import read_table
-    ev = read_table(spark, SF, "events")
-    d = tempfile.mkdtemp(prefix="evpart_t_")
-    try:
-        ev.select("event_id", "ts", "event_type").write \
-            .mode("overwrite").partitionBy("event_type").parquet(d)
-        df = (spark.read.parquet(d)
-              .filter(F.col("event_type") == "purchase")
-              .groupBy().count())
-        p = df._jdf.queryExecution().executedPlan().toString()
-        seg = p.split("PartitionFilters", 1)
-        assert len(seg) == 2, "no PartitionFilters in scan"
-        assert "event_type" in seg[1][:200]
-        # the row-level PushedFilters must NOT re-check the partition col
-        pushed = p.split("PushedFilters", 1)[1][:120]
-        assert "event_type" not in pushed
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    """io_partition_prune's filter on the partition column must become
+    a PartitionFilters entry (one directory scanned), not a data filter
+    over all rows."""
+    df = entrymod.queries()["io_partition_prune"](spark, SF)
+    p = df._jdf.queryExecution().executedPlan().toString()
+    seg = p.split("PartitionFilters", 1)
+    assert len(seg) == 2, "no PartitionFilters in scan"
+    assert "event_type" in seg[1][:200]
+    # the row-level PushedFilters must NOT re-check the partition col
+    pushed = p.split("PushedFilters", 1)[1][:120]
+    assert "event_type" not in pushed
 
 
 def test_wave4_operators_scan_counts(spark):

@@ -9,7 +9,7 @@ def test_table_lookup_threshold_equals_flat():
     from nifi_datasynthesizer_spark.rng import table_lookup
     from nifi_datasynthesizer_spark.dual import D
     table = ["a"] * 5 + ["b"] * 1 + ["c"] * 10  # uneven runs
-    slot = D(None, "i", "i")
+    slot = D("i", "i")
     d = table_lookup(slot, table)
     got = [r[0] for r in duckdb.sql(
         f"SELECT {d.s} FROM range(0, {len(table)}) t(i)").fetchall()]

@@ -382,11 +382,9 @@ def test_markov_model_shape():
     assert all(-1 <= nk < len(keys) for nk in nks)
 
 
-def test_markov_text_matches_python_walk(spark):
-    """The Spark fold must replay MarkovChain.java's walk semantics:
-    start at a (deterministically drawn) key, append a drawn successor,
-    slide the key window — verified against a plain-Python walk over
-    the same compiled model and the same counter-RNG draws."""
+def _check_markov_walk(spark, max_chars):
+    """Compare markov_text against a plain-Python walk over the same
+    compiled model and the same counter-RNG draws."""
     import duckdb
 
     from nifi_datasynthesizer_spark import synthesizers as SZ
@@ -406,21 +404,43 @@ def test_markov_text_matches_python_walk(spark):
     for row in duckdb.sql(
             f"SELECT {sel} FROM range(0, {n}) t(i) ORDER BY i").fetchall():
         k, ds = row[0], row[1:]
-        text = keys[k].split(" ")
+        text = keys[k]
         for d in ds:
             if k < 0:
                 break
             slot = offs[k] + d % cnts[k]
-            text.append(ws[slot])
+            if (max_chars is not None
+                    and len(text) + 1 + len(ws[slot]) > max_chars):
+                break
+            text += " " + ws[slot]
             k = nks[slot]
-        expected.append(" ".join(text))
+        expected.append(text)
 
     got = [r.message for r in
-           SZ.markov_text(n, words=words, seed=seed).df(spark)
-           .orderBy("rec_id").collect()]
+           SZ.markov_text(n, words=words, seed=seed, max_chars=max_chars)
+           .df(spark).orderBy("rec_id").collect()]
     assert got == expected
     # texts branch (not one degenerate walk stamped everywhere)
     assert len(set(got)) > 5
+    if max_chars is not None:
+        # the budget binds on some rows, else this case shows nothing
+        free = SZ.markov_text(n, words=words, seed=seed).sql()
+        longer = duckdb.sql(f"SELECT count(*) FROM ({free}) "
+                            f"WHERE length(message) > {max_chars}").fetchone()
+        assert longer[0] > 0
+
+
+def test_markov_text_matches_python_walk(spark):
+    """The Spark fold must replay MarkovChain.java's walk semantics:
+    start at a (deterministically drawn) key, append a drawn successor,
+    slide the key window."""
+    _check_markov_walk(spark, None)
+
+
+def test_markov_text_budget_matches_python_walk(spark):
+    """With a character budget the walk stops before the first word
+    that would make the text longer than ``max_chars``."""
+    _check_markov_walk(spark, 60)
 
 
 def test_markov_char_budget(spark):
@@ -435,6 +455,18 @@ def test_markov_char_budget(spark):
     assert any(len(m) < len(free_rows[k]) for k, m in lim_rows.items())
     for k, m in lim_rows.items():
         assert free_rows[k].startswith(m)
+
+
+def test_markov_seed_text_quotes_match_oracle(spark):
+    """Seed words with quotes and backslashes reach both engines
+    unchanged (each side escapes its own string literals)."""
+    from nifi_datasynthesizer_spark import synthesizers as SZ
+    g = SZ.markov_text(40, words=12, seed=2, seed_text=(
+        "don't stop the c:\\dir now don't stop the band "
+        "now don't stop the c:\\dir later don't stop"))
+    compare_with_duckdb(g.df(spark), g.sql())
+    assert any("'" in r.message and "\\" in r.message
+               for r in g.df(spark).collect())
 
 
 def test_purchase_log_boost_semantics():
@@ -483,7 +515,7 @@ def test_element_numeric_tables_round_trip_exact(spark):
                           [math.pow(k + 1.0, -1.0) for k in range(500)],
                           table_size=4096)
     assert len(fk) == 4096
-    idx = X.D(None, "id", "id")
+    idx = X.D("id", "id")
     for values in (_n01_table(), _EXP_QUANTILES, fk):
         d = X.element(idx, values)
         assert "split(" in d.ss and "array(" not in d.ss
@@ -505,7 +537,7 @@ def test_element_mixed_and_string_lists(spark):
     string lists keep the literal array() form."""
     from nifi_datasynthesizer_spark import dual as X
 
-    idx = X.D(None, "id", "id")
+    idx = X.D("id", "id")
     mixed = X.element(idx, [1, 2.5, -3, -0.0, 1e300])
     assert "ARRAY<DOUBLE>" in mixed.ss
     got = [v for _, v in sorted(spark.range(5).select(
@@ -516,3 +548,22 @@ def test_element_mixed_and_string_lists(spark):
     assert words.ss.startswith("element_at(array(")
     assert [v for _, v in sorted(spark.range(3).select(
         "id", words.c.alias("v")).collect())] == ["a", "b'c", "d\\e"]
+
+
+def test_nested_binds_do_not_shadow():
+    """An inner bind sees the outer variable, whether its value reads
+    that variable or repeats the outer value's text."""
+    import duckdb
+
+    from nifi_datasynthesizer_spark import dual as X
+
+    i = X.D("i", "i")
+    reads = X.bind(i * 3, lambda a: X.bind(a + 1, lambda b: a * 10 + b))
+    same = X.bind(i * 3, lambda a: X.bind(i * 3, lambda b: a * 10 + b))
+    for d in (reads, same):
+        names = re.findall(r"(__b[0-9a-f]+) ->", d.s)
+        assert len(names) == 2 and names[0] != names[1]
+        assert re.findall(r"(__b[0-9a-f]+) ->", d.ss) == names
+    got = duckdb.sql(f"SELECT {reads.s}, {same.s} FROM range(0, 4) t(i) "
+                     "ORDER BY i").fetchall()
+    assert got == [(30 * k + 3 * k + 1, 33 * k) for k in range(4)]
