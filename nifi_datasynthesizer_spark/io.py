@@ -436,8 +436,7 @@ def rowgroup_summary(audit: DataFrame, cores: int) -> DataFrame:
 
 
 def column_stats(df: DataFrame, cols: list[str],
-                 ndv_mode: str = "exact", m: int = 64,
-                 hash_col=None) -> DataFrame:
+                 ndv_mode: str = "exact", m: int = 64) -> DataFrame:
     """ANALYZE-style per-column statistics in ONE corpus pass:
     (col, n_non_null, n_null, ndv, min_s, max_s) — the table a
     cost-based planner (or a human sizing a join) reads before
@@ -452,13 +451,13 @@ def column_stats(df: DataFrame, cols: list[str],
 
     ``ndv_mode='sketch'``: the expand factor disappears — each
     column's ndv is estimated with the repo's engine-exact HyperLogLog
-    (the ``sketch_hll`` register layout: portable h60 hash, ``m``
-    MAX-combinable registers, scaled-integer harmonic mean, literal
-    linear-counting table — no transcendentals, so DuckDB replays it
-    bit-identically).  The m registers per column are plain
-    ``MAX(CASE)`` aggregates, all map-side partial-combinable: the
-    whole audit stays one scan + one single-row shuffle with ZERO row
-    multiplication, at ~1.04/√m relative ndv error.  At 100 TB × many
+    (``operators.sketches.HLL``, the ``sketch_hll`` arithmetic:
+    portable h60 hash, ``m`` MAX-combinable registers, NULLs set no
+    register — so DuckDB replays it bit-identically).  The m
+    registers per column are plain ``MAX(CASE)`` aggregates, all
+    map-side partial-combinable: the whole audit stays one scan + one
+    single-row shuffle with ZERO row multiplication, at ~1.04/√m
+    relative ndv error.  At 100 TB × many
     columns this is the mode to run.
 
     The wide one-row result is unpivoted driver-free with ``stack``.
@@ -470,21 +469,9 @@ def column_stats(df: DataFrame, cols: list[str],
     the gate ``operators.similarity`` uses) — they are interpolated
     into the ``stack`` expression, so anything else is rejected up
     front rather than parsed as SQL.
-
-    ``hash_col`` (sketch mode only): production fast path — pass
-    ``pyspark.sql.functions.xxhash64`` to replace the portable-but-md5
-    h60.  Measured 1.2× on the whole audit at 5M rows × 4 columns
-    (5.69 → 4.70 s): real but bounded, because at m=64 the register
-    MAX(CASE) chain, not the hash, dominates this operator (the pure
-    md5→xxhash gap is ~3×, phash.py).  The sign bit is masked so
-    register indexing stays non-negative, and NULLs are gated
-    explicitly (xxhash64 hashes NULL to the seed).  DuckDB cannot
-    replay xxhash64, so the ORACLE-GATED entry keeps the h60 default;
-    estimate quality is identical (both uniform hashes).
     """
     from .operators.similarity import _ident_ok
-    from .operators.sketches import (_HLL_S, _RHO_CAP, _hll_alpha1000,
-                                     _hll_lc_table)
+    from .operators.sketches import HLL
     from .phash import h60
 
     for c in cols:
@@ -510,34 +497,16 @@ def column_stats(df: DataFrame, cols: list[str],
     else:
         # per-column HLL registers: b/rho derived once per row, then
         # m MAX(CASE) register aggregates per column — constant-width
-        # map-side state, no expand
-        proj = list(df.columns)
-        for c in cols:
-            if hash_col is None:
-                h = h60(F.col(c).cast("string"))
-            else:
-                # mask the sign bit (uniform non-negative 63-bit) and
-                # null-gate explicitly: xxhash64 hashes NULL to the
-                # seed value instead of returning NULL, which would
-                # count nulls as a distinct value (h60's md5 returns
-                # NULL for NULL, so the default path skips them)
-                h = F.when(
-                    F.col(c).isNotNull(),
-                    hash_col(F.col(c).cast("string"))
-                    .bitwiseAND(F.lit((1 << 63) - 1)))
-            proj.append(h.alias(f"{c}__h"))
-        hashed = df.select(*proj)
+        # map-side state, no expand; a NULL hash has a NULL bucket, so
+        # it matches no register
+        hll = HLL(m)
+        hashed = df.select(*df.columns, *[
+            h60(F.col(c).cast("string")).alias(f"{c}__h") for c in cols])
         proj2 = []
         for c in cols:
-            proj2 += [
-                F.expr(f"pmod({c}__h, {m})").alias(f"{c}__b"),
-                F.expr(
-                    f"LEAST(CASE WHEN {c}__h div {m} = 0 THEN {_RHO_CAP} "
-                    f"ELSE bit_count((({c}__h div {m}) & "
-                    f"-({c}__h div {m})) - 1) + 1 END, {_HLL_S})"
-                ).alias(f"{c}__rho"),
-                F.col(c),
-            ]
+            b, rho = hll.register(f"{c}__h")
+            proj2 += [F.expr(b).alias(f"{c}__b"),
+                      F.expr(rho).alias(f"{c}__rho"), F.col(c)]
         binned = hashed.select(*proj2)
         # the whole aggregation is ONE selectExpr over SQL strings (a
         # select of aggregate functions without groupBy is a global
@@ -545,10 +514,7 @@ def column_stats(df: DataFrame, cols: list[str],
         # as individual Column objects cost ~6 py4j round-trips each
         # — measured ~1.8 s of pure driver-side construction at
         # 4 cols × m=64, dominating the warm query — while one string
-        # batch is a single call.  The SQL is expression-identical to
-        # the Column form (count/sum/min/max partials, CASE WHEN with
-        # no ELSE = NULL), so results and the audited zero-Expand
-        # plan shape are unchanged.
+        # batch is a single call.
         agg_sql = []
         for c in cols:
             agg_sql += [
@@ -562,43 +528,26 @@ def column_stats(df: DataFrame, cols: list[str],
                 f"max(CASE WHEN {c}__b = {j} THEN {c}__rho END) "
                 f"AS {c}__r{j}" for j in range(m)]
         wide = binned.selectExpr(*agg_sql)
-        # estimate on the ONE-row frame: harmonic sum over the m
-        # register columns (HOF lambdas here touch a single row).
-        # The four derivation levels (hits -> z -> raw -> ndv) are
-        # each added for ALL columns in ONE select: a per-column
-        # withColumn chain re-analyzes the whole ~(4+m)·#cols-column
-        # plan 4·#cols times, and on this operator that DRIVER-side
+        # estimate on the ONE-row frame: set-register count and
+        # harmonic sum over the m register columns (HOF lambdas here
+        # touch a single row), then HLL's estimate.  Each level is
+        # added for ALL columns in ONE select: a per-column withColumn
+        # chain re-analyzes the whole ~(4+m)·#cols-column plan once
+        # per column and level, and on this operator that DRIVER-side
         # analysis dominated the query (measured at sf0.1/4 cols/m=64:
-        # ~2.5 s of the 4.1 s warm total was DataFrame construction;
-        # the batched form is one analysis per level).  Expressions
-        # are unchanged, so results are bit-identical.
-        lc_items = ",".join(str(v) for v in _hll_lc_table(m))
-
-        def _lvl(exprs: dict[str, str]) -> None:
-            nonlocal wide
+        # ~2.5 s of the 4.1 s warm total was DataFrame construction).
+        set_regs = {c: f"filter(array({', '.join(f'{c}__r{j}' for j in range(m))}), "
+                       f"x -> x IS NOT NULL)" for c in cols}
+        sums = {}
+        for c, r in set_regs.items():
+            sums[f"{c}__hits"] = f"size({r})"
+            sums[f"{c}__z"] = (f"aggregate({r}, CAST(0 AS BIGINT), "
+                               f"(acc, x) -> acc + {hll.weight('x')})")
+        ndv = {f"{c}__ndv": hll.estimate(f"{c}__hits", f"{c}__z")
+               for c in cols}
+        for level in (sums, ndv):
             wide = wide.select(
-                "*", *[F.expr(e).alias(name) for name, e in exprs.items()])
-
-        _lvl({f"{c}__hits":
-              f"size(filter(array({', '.join(f'{c}__r{j}' for j in range(m))}), "
-              f"x -> x IS NOT NULL))" for c in cols})
-        _lvl({f"{c}__z":
-              f"aggregate(filter(array("
-              f"{', '.join(f'{c}__r{j}' for j in range(m))}), "
-              f"x -> x IS NOT NULL), CAST(0 AS BIGINT), "
-              f"(acc, x) -> acc + shiftleft(CAST(1 AS BIGINT), "
-              f"{_HLL_S} - x)) + (({m} - {c}__hits) * "
-              f"shiftleft(CAST(1 AS BIGINT), {_HLL_S}))" for c in cols})
-        _lvl({f"{c}__raw":
-              f"({_hll_alpha1000(m)} * "
-              f"(({m * m} * shiftleft(CAST(1 AS BIGINT), "
-              f"{_HLL_S})) div {c}__z)) div 1000" for c in cols})
-        _lvl({f"{c}__ndv":
-              f"CAST(CASE WHEN {c}__hits = 0 THEN 0 "
-              f"WHEN {c}__hits < {m} AND {c}__raw <= {int(2.5 * m)} "
-              f"THEN element_at(array({lc_items}), "
-              f"CAST({m} - {c}__hits AS INT) + 1) "
-              f"ELSE {c}__raw END AS BIGINT)" for c in cols})
+                "*", *[F.expr(e).alias(name) for name, e in level.items()])
     stacked = ", ".join(
         f"'{c}', `{c}__n`, `{c}__nulls`, `{c}__ndv`, `{c}__min`, `{c}__max`"
         for c in cols)

@@ -1,26 +1,34 @@
 """Sketch operators: fixed-size approximate aggregates for 100 TB.
 
-Exact distinct counts and full-vocabulary frequency tables are the two
-aggregations that stop scaling first: ``countDistinct`` shuffles every
-distinct id to its group's reducer, and a word-frequency table holds
-the whole vocabulary in the shuffle.  The classic fixes are sketches
-with *bounded* state that combines map-side:
+Exact distinct counts and full-vocabulary frequency tables stop
+scaling first: ``countDistinct`` shuffles every distinct id to its
+group's reducer, and a word-frequency table holds the whole vocabulary
+in the shuffle.  Sketches keep *bounded* state that combines map-side.
+Each family's state and estimator are written once:
 
-- Flajolet–Martin / PCSA registers (``fm_distinct``): per group,
-  ``buckets`` small integers, merged with MAX — constant bytes per
-  group no matter how many distinct ids flow through.
-- count-min (``cm_heavy_hitters``): a depth×width grid of counters,
-  merged with SUM — frequency estimates (one-sided: never under) for
-  any term without keeping per-term state.
+- registers (MAX-merged, ``m`` small ints per group): :func:`_registers`
+  derives them; FM/PCSA (``fm_distinct``, ``fm_distinct_rollup``)
+  estimates with :func:`_fm_estimate_sql`, HyperLogLog
+  (``hll_distinct``, ``io.column_stats``) with :class:`HLL`;
+- count-min (a SUM-merged depth×width grid; ``cm_heavy_hitters``,
+  ``cm_error_eval``): :func:`_cm_grid` and :func:`_cm_estimate`;
+- KMV bottom-k (``kmv_sketch``, ``kmv_id_sketch``): :func:`_kmv_pairs`
+  and :func:`_kmv_est`;
+- bloom (``bloom_build``, ``bloom_semi_join_stats``):
+  :func:`_bloom_positions`;
+- one operator each: ``hist_quantiles``, ``log_histogram``,
+  ``upper_quantile``, ``ams_f2``.
 
-Both hash with the portable ``h60`` (phash.py), so every register and
+All hash with the portable ``h60`` (phash.py), so every register and
 cell is replayable bit-exactly in the DuckDB oracle — the sketches are
 deterministic under any partitioning, retry, or engine.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cache import pin
@@ -33,46 +41,6 @@ PHI = 0.77351  # Flajolet–Martin bias correction constant
 # a remainder of exactly 0 gets the "all zeros" register value
 _RHO_CAP = 55
 
-
-def fm_distinct(df: DataFrame, group_col: str = "event_type",
-                id_col: str = "user_id", buckets: int = 64) -> DataFrame:
-    """Per-group distinct-count sketch (Flajolet–Martin / PCSA).
-
-    Each id hashes once; the low bits pick one of ``buckets``
-    registers and the register keeps the MAX of
-    ``trailing_zeros(remaining bits) + 1`` — computed with the
-    portable ``bit_count((r & -r) - 1)`` trick (no log2, whose libm
-    rounding differs across engines).  Registers merge map-side with
-    MAX, so per-group state is ``buckets`` small ints regardless of
-    cardinality — the whole point at 100 TB.  The estimate
-    ``floor(buckets/φ) << (Σreg div buckets)`` is integer-only
-    (coarser than the float 2^mean form but engine-exact); the exact
-    distinct rides along for calibration.
-    """
-    e = (df.select(F.col(group_col).alias("grp"),
-                   h60(F.col(id_col).cast("string")).alias("h"))
-         .select("grp",
-                 F.expr(f"pmod(h, {buckets})").alias("b"),
-                 F.expr(f"h div {buckets}").alias("r")))
-    rho = F.expr(f"CASE WHEN r = 0 THEN {_RHO_CAP} "
-                 f"ELSE bit_count((r & -r) - 1) + 1 END")
-    regs = (e.select("grp", "b", rho.alias("rho"))
-            .groupBy("grp", "b").agg(F.max("rho").alias("reg")))
-    summary = regs.groupBy("grp").agg(
-        F.count("*").alias("buckets_hit"),
-        F.sum("reg").alias("sum_reg"),
-        F.max("reg").alias("max_reg"))
-    scale = int(buckets / PHI)
-    est = F.expr(f"shiftleft(CAST({scale} AS BIGINT), "
-                 f"CAST(sum_reg div {buckets} AS INT))")
-    exact = df.groupBy(F.col(group_col).alias("grp")).agg(
-        F.countDistinct(id_col).alias("exact_distinct"))
-    return (summary.join(F.broadcast(exact), "grp")
-            .select(F.col("grp").alias(group_col), "buckets_hit",
-                    "sum_reg", "max_reg", est.alias("est_distinct"),
-                    "exact_distinct"))
-
-
 # HLL register cap / harmonic-sum scale: registers are clipped to
 # _HLL_S so 2^(_HLL_S - reg) stays a non-negative BIGINT shift and the
 # scaled harmonic sum is pure integer arithmetic (no float 2^-reg
@@ -80,13 +48,49 @@ def fm_distinct(df: DataFrame, group_col: str = "event_type",
 _HLL_S = 40
 
 
+def _register_sql(h: str, m: int, clip: bool = False) -> tuple[str, str]:
+    """Spark SQL for the ``(bucket, rho)`` of hash column ``h`` over
+    ``m`` registers: the low bits pick the bucket and rho is
+    ``trailing_zeros(remaining bits) + 1``, computed with the portable
+    ``bit_count((r & -r) - 1)`` trick (no log2, whose libm rounding
+    differs across engines).  ``clip`` caps rho at ``_HLL_S`` (HLL
+    only).  A NULL ``h`` has no bucket: callers drop NULL hashes."""
+    r = f"({h} div {m})"
+    rho = (f"CASE WHEN {r} = 0 THEN {_RHO_CAP} "
+           f"ELSE bit_count(({r} & -{r}) - 1) + 1 END")
+    if clip:
+        rho = f"LEAST({rho}, {_HLL_S})"
+    return f"pmod({h}, {m})", rho
+
+
+def _registers(df: DataFrame, keys: dict[str, Column], id_col: str,
+               m: int, clip: bool = False) -> DataFrame:
+    """Register frame ``(*keys, b, reg)``: each id hashed once with
+    h60, NULL hashes (NULL ids) dropped — a NULL is no value, so it
+    sets no register — and each register the MAX of its rhos,
+    partial-aggregated map-side."""
+    b, rho = _register_sql("h", m, clip)
+    return (df.select(*[c.alias(k) for k, c in keys.items()],
+                      h60(F.col(id_col).cast("string")).alias("h"))
+            .filter(F.col("h").isNotNull())
+            .select(*keys, F.expr(b).alias("b"), F.expr(rho).alias("rho"))
+            .groupBy(*keys, "b").agg(F.max("rho").alias("reg")))
+
+
+def _fm_estimate_sql(sum_reg: str, buckets: int) -> str:
+    """FM/PCSA estimate ``floor(buckets/φ) << (Σreg div buckets)``:
+    integer-only (coarser than the float 2^mean form but
+    engine-exact)."""
+    return (f"shiftleft(CAST({int(buckets / PHI)} AS BIGINT), "
+            f"CAST({sum_reg} div {buckets} AS INT))")
+
+
 def _hll_alpha1000(m: int) -> int:
     """HLL bias constant alpha_m scaled by 1000 (Flajolet et al. 2007,
     Fig. 3): the published exact values for m in {16, 32, 64}, the
     asymptotic 0.7213/(1 + 1.079/m) above — evaluated once in Python
     at plan-build time so Spark and the DuckDB oracle interpolate the
-    SAME integer (previously every site hardcoded 709, which is only
-    alpha_64)."""
+    SAME integer."""
     table = {16: 673, 32: 697, 64: 709}
     if m in table:
         return table[m]
@@ -103,82 +107,120 @@ def _hll_lc_table(m: int) -> list[int]:
     return [0] + [int(round(m * math.log(m / v))) for v in range(1, m)]
 
 
+class HLL:
+    """Engine-exact HyperLogLog over ``m`` registers, as Spark SQL
+    text: the one place its register clip, harmonic-sum weights and
+    estimator live, so ``hll_distinct`` and ``io.column_stats`` render
+    the same arithmetic.
+
+    The harmonic sum Σ 2^-reg is the scaled integer Σ 2^(S-reg)
+    (registers clipped to S = ``_HLL_S``), the raw estimate is
+    α·m²·2^S/Z in integer floor ops (α applied as the alpha_m/1000
+    ratio AFTER the division so every intermediate fits BIGINT), and
+    the small-range linear-counting correction ``m·ln(m/V)`` comes
+    from an m-entry literal table — no transcendentals, no floats,
+    bit-identical in Spark and DuckDB."""
+
+    def __init__(self, m: int):
+        self.m = m
+        self.alpha1000 = _hll_alpha1000(m)
+
+    def register(self, h: str) -> tuple[str, str]:
+        """``(bucket, rho)`` of hash column ``h``, rho clipped."""
+        return _register_sql(h, self.m, clip=True)
+
+    @staticmethod
+    def weight(reg: str) -> str:
+        """A register's term 2^(S - reg) of the scaled harmonic sum."""
+        return f"shiftleft(CAST(1 AS BIGINT), {_HLL_S} - {reg})"
+
+    def z_scaled(self, hits: str, z_num: str) -> str:
+        """The scaled harmonic sum: ``z_num`` (Σ weight over the
+        ``hits`` set registers) plus 2^S per empty register."""
+        return (f"({z_num} + (({self.m} - {hits}) * "
+                f"shiftleft(CAST(1 AS BIGINT), {_HLL_S})))")
+
+    def estimate(self, hits: str, z_num: str) -> str:
+        """BIGINT estimate from the set-register count and ``z_num``:
+        0 with no register set, linear counting while a register is
+        empty and the raw estimate is <= 2.5m, else the raw estimate."""
+        m = self.m
+        raw = (f"(({self.alpha1000} * (({m * m} * "
+               f"shiftleft(CAST(1 AS BIGINT), {_HLL_S})) div "
+               f"{self.z_scaled(hits, z_num)})) div 1000)")
+        lc_items = ",".join(str(v) for v in _hll_lc_table(m))
+        return (f"CAST(CASE WHEN {hits} = 0 THEN 0 "
+                f"WHEN {hits} < {m} AND {raw} <= {int(2.5 * m)} "
+                f"THEN element_at(array({lc_items}), "
+                f"CAST({m} - {hits} AS INT) + 1) "
+                f"ELSE {raw} END AS BIGINT)")
+
+
+def _with_exact(sketch: DataFrame, df: DataFrame, group_col: str,
+                id_col: str) -> DataFrame:
+    """``sketch`` with the exact distinct per group joined on by
+    broadcast; a group whose ids are all NULL has no sketch row."""
+    exact = df.groupBy(group_col).agg(
+        F.countDistinct(id_col).alias("exact_distinct"))
+    return sketch.join(F.broadcast(exact), group_col)
+
+
+def fm_distinct(df: DataFrame, group_col: str = "event_type",
+                id_col: str = "user_id", buckets: int = 64) -> DataFrame:
+    """Per-group distinct-count sketch (Flajolet–Martin / PCSA).
+
+    Each id hashes once into one of ``buckets`` registers
+    (:func:`_registers`), merged map-side with MAX, so per-group state
+    is ``buckets`` small ints regardless of cardinality — the whole
+    point at 100 TB.  The estimate is :func:`_fm_estimate_sql`; the
+    exact distinct rides along for calibration.
+
+    NULL ids are skipped, as ``COUNT(DISTINCT)`` skips them: they set
+    no register, and a group whose ids are all NULL has no row.
+    """
+    regs = _registers(df, {"grp": F.col(group_col)}, id_col, buckets)
+    summary = (regs.groupBy("grp").agg(
+        F.count("*").alias("buckets_hit"),
+        F.sum("reg").alias("sum_reg"),
+        F.max("reg").alias("max_reg"))
+        .select(F.col("grp").alias(group_col), "buckets_hit", "sum_reg",
+                "max_reg", F.expr(_fm_estimate_sql("sum_reg", buckets))
+                .alias("est_distinct")))
+    return _with_exact(summary, df, group_col, id_col)
+
+
 def hll_distinct(df: DataFrame, group_col: str = "event_type",
                  id_col: str = "user_id", m: int = 64,
-                 hash_col=None, include_exact: bool = True) -> DataFrame:
+                 include_exact: bool = True) -> DataFrame:
     """Per-group HyperLogLog distinct count (Flajolet et al. 2007) —
     the industry-standard refinement of :func:`fm_distinct`'s PCSA:
     same MAX-combinable register layout (constant bytes per group at
     any cardinality), but the estimate uses the *harmonic* mean of
-    register values, cutting the standard error to ~1.04/√m.
-
-    Engine-exact arithmetic: the harmonic sum Σ 2^-reg is computed as
-    the scaled integer Σ 2^(S-reg) (registers clipped to S=40), the
-    raw estimate is α·m²·2^S/Z in integer floor ops (α applied as the
-    alpha_m/1000 ratio AFTER the division so every intermediate fits
-    BIGINT), and the small-range linear-counting correction
-    ``m·ln(m/V)`` comes from a 64-entry literal table — no
-    transcendentals, no floats, bit-identical in Spark and DuckDB.
+    register values, cutting the standard error to ~1.04/√m.  The
+    arithmetic is :class:`HLL`'s, engine-exact.
 
     Plan shape at 100 TB: one narrow hash pass, groupBy(grp, register)
     MAX partial-aggregates map-side, then m rows per group reduce to
     one — the same two-exchange shape as fm_distinct.  The exact
-    distinct rides along for calibration (drop it in production; it
-    is the expensive id shuffle the sketch replaces).
+    distinct rides along for calibration unless ``include_exact`` is
+    False, the production shape (corpus_stats_sketch): it is the
+    expensive id shuffle the sketch replaces.
 
-    ``hash_col``: production fast path — pass ``F.xxhash64`` to
-    replace the portable-but-md5 h60 (phash.py's documented ~3× hot-
-    path cost; sign bit masked, nulls gated).  The oracle-gated entry
-    keeps the h60 default so DuckDB replays the registers.
+    NULL ids are skipped, as ``COUNT(DISTINCT)`` skips them: they set
+    no register, and a group whose ids are all NULL has no row.
     """
-    if hash_col is None:
-        h = h60(F.col(id_col).cast("string"))
-    else:
-        # xxhash64 hashes NULL to the seed instead of NULL — gate it
-        h = F.when(F.col(id_col).isNotNull(),
-                   hash_col(F.col(id_col).cast("string"))
-                   .bitwiseAND(F.lit((1 << 63) - 1)))
-    e = (df.select(F.col(group_col).alias("grp"), h.alias("h"))
-         .select("grp",
-                 F.expr(f"pmod(h, {m})").alias("b"),
-                 F.expr(f"h div {m}").alias("r")))
-    rho = F.expr(f"LEAST(CASE WHEN r = 0 THEN {_RHO_CAP} "
-                 f"ELSE bit_count((r & -r) - 1) + 1 END, {_HLL_S})")
-    regs = (e.select("grp", "b", rho.alias("rho"))
-            .groupBy("grp", "b").agg(F.max("rho").alias("reg")))
-    summary = regs.groupBy("grp").agg(
+    hll = HLL(m)
+    regs = _registers(df, {"grp": F.col(group_col)}, id_col, m, clip=True)
+    core = (regs.groupBy("grp").agg(
         F.count("*").alias("buckets_hit"),
-        F.sum(F.expr(f"shiftleft(CAST(1 AS BIGINT), {_HLL_S} - reg)"))
-        .alias("z_num"))
-    # empty registers contribute 2^0 = 1 each → + (m - hit) * 2^S
-    z = F.expr(f"z_num + (({m} - buckets_hit) * "
-               f"shiftleft(CAST(1 AS BIGINT), {_HLL_S}))")
-    raw = F.expr(f"({_hll_alpha1000(m)} * (({m * m} * "
-                 f"shiftleft(CAST(1 AS BIGINT), {_HLL_S})) div z_scaled)) "
-                 f"div 1000")
-    lc_items = ",".join(str(v) for v in _hll_lc_table(m))
-    # small-range regime: any empty register and raw <= 2.5m → linear
-    # counting (array is 1-indexed; V = m - buckets_hit ∈ [1, m-1])
-    est = F.expr(
-        f"CASE WHEN buckets_hit < {m} AND est_raw <= {int(2.5 * m)} "
-        f"THEN element_at(array({lc_items}), "
-        f"CAST({m} - buckets_hit AS INT) + 1) "
-        f"ELSE est_raw END")
-    core = (summary.withColumn("z_scaled", z)
-            .withColumn("est_raw", raw))
-    if not include_exact:
-        # production shape: the sketch WITHOUT the calibration rider —
-        # the exact distinct is precisely the id shuffle the sketch
-        # exists to avoid (r11: corpus_stats_sketch composes this)
-        return core.select(F.col("grp").alias(group_col), "buckets_hit",
-                           "z_scaled", est.cast("long").alias("est_hll"))
-    exact = df.groupBy(F.col(group_col).alias("grp")).agg(
-        F.countDistinct(id_col).alias("exact_distinct"))
-    return (core
-            .join(F.broadcast(exact), "grp")
-            .select(F.col("grp").alias(group_col), "buckets_hit",
-                    "z_scaled", est.cast("long").alias("est_hll"),
-                    "exact_distinct"))
+        F.sum(F.expr(hll.weight("reg"))).alias("z_num"))
+        .select(F.col("grp").alias(group_col), "buckets_hit",
+                F.expr(hll.z_scaled("buckets_hit", "z_num"))
+                .alias("z_scaled"),
+                F.expr(hll.estimate("buckets_hit", "z_num"))
+                .alias("est_hll")))
+    return (_with_exact(core, df, group_col, id_col) if include_exact
+            else core)
 
 
 def _cm_buckets(word, depth: int, width: int):
@@ -187,19 +229,12 @@ def _cm_buckets(word, depth: int, width: int):
         for r in range(depth)]))
 
 
-def cm_heavy_hitters(docs: DataFrame, k: int = 10, depth: int = 4,
-                     width: int = 1024,
-                     text_col: str = "text") -> DataFrame:
-    """Count-min frequency estimates for the corpus's top-k words.
-
-    The sketch grid is depth×width counter cells (SUM-merged, map-side
-    combinable — constant state however large the vocabulary); a
-    term's estimate is the MIN over its ``depth`` cells, always ≥ the
-    true count.  Candidates here are the exact top-k (TakeOrdered —
-    k-bounded partial sort, never a global window over the vocab) so
-    the gated output exposes exact vs estimate side by side; at 100 TB
-    the same grid answers ad-hoc frequency probes without re-scanning.
-    """
+def _cm_grid(docs: DataFrame, text_col: str, depth: int,
+             width: int) -> tuple[DataFrame, DataFrame]:
+    """The count-min grid over the corpus's normalized words: returns
+    the word counts ``(w, n)`` and the ``(r, bkt, cell)`` grid, whose
+    depth×width cells SUM-merge map-side — constant state however
+    large the vocabulary."""
     words = (docs.select(F.explode(
         F.split(normalize_text(F.col(text_col)), " ")).alias("w"))
         .filter(F.col("w") != ""))
@@ -208,17 +243,42 @@ def cm_heavy_hitters(docs: DataFrame, k: int = 10, depth: int = 4,
                        _cm_buckets(F.col("w"), depth, width)
                        .alias("r", "bkt"))
              .groupBy("r", "bkt").agg(F.sum("n").alias("cell")))
+    return wc, cells
+
+
+def _cm_estimate(cand: DataFrame, cells: DataFrame, depth: int,
+                 width: int) -> DataFrame:
+    """Count-min estimate per candidate word: ``cand``'s columns (a
+    ``w`` column among them) plus ``cm_est``, the MIN over the word's
+    ``depth`` cells — never under the true count.  The grid is
+    depth×width rows, so it broadcasts."""
+    return (cand.select("*", _cm_buckets(F.col("w"), depth, width)
+                        .alias("r", "bkt"))
+            .join(F.broadcast(cells), ["r", "bkt"])
+            .groupBy(*cand.columns)
+            .agg(F.min("cell").alias("cm_est")))
+
+
+def cm_heavy_hitters(docs: DataFrame, k: int = 10, depth: int = 4,
+                     width: int = 1024,
+                     text_col: str = "text") -> DataFrame:
+    """Count-min frequency estimates for the corpus's top-k words.
+
+    The sketch grid is :func:`_cm_grid`; a term's estimate
+    (:func:`_cm_estimate`) is the MIN over its ``depth`` cells, always
+    ≥ the true count.  Candidates here are the exact top-k
+    (TakeOrdered — k-bounded partial sort, never a global window over
+    the vocab) so the gated output exposes exact vs estimate side by
+    side; at 100 TB the same grid answers ad-hoc frequency probes
+    without re-scanning.
+    """
+    wc, cells = _cm_grid(docs, text_col, depth, width)
     # exact top-k candidates: bounded orderBy+limit, deterministic
     # (count desc, word) tie-break; ranking happens over k rows only
     topk = wc.orderBy(F.desc("n"), "w").limit(k)
     ranked = topk.withColumn(
         "rank", F.row_number().over(Window.orderBy(F.desc("n"), "w")))
-    est = (ranked.select("w", "n", "rank",
-                         _cm_buckets(F.col("w"), depth, width)
-                         .alias("r", "bkt"))
-           .join(F.broadcast(cells), ["r", "bkt"])
-           .groupBy("w", "n", "rank")
-           .agg(F.min("cell").alias("cm_est")))
+    est = _cm_estimate(ranked, cells, depth, width)
     return est.select(F.col("w").alias("word"),
                       F.col("n").alias("exact_n"), "cm_est", "rank")
 
@@ -240,67 +300,53 @@ def fm_distinct_rollup(df: DataFrame, group_col: str = "event_type",
     row per scope — ``scope`` ∈ ('day', 'group', 'all'), sentinel
     values fill the collapsed keys.
     """
-
-    e = (df.select(F.col(group_col).alias("grp"),
-                   F.to_date(ts_col).alias("day"),
-                   h60(F.col(id_col).cast("string")).alias("h"))
-         .select("grp", "day",
-                 F.expr(f"pmod(h, {buckets})").alias("b"),
-                 F.expr(f"h div {buckets}").alias("r")))
-    rho = F.expr(f"CASE WHEN r = 0 THEN {_RHO_CAP} "
-                 f"ELSE bit_count((r & -r) - 1) + 1 END")
     # the daily register frame IS the stored artifact — pinned so the
     # three scope levels merge registers instead of re-hashing the
     # corpus (release with cache.release_caches)
-    daily = pin(e.select("grp", "day", "b", rho.alias("rho"))
-                .groupBy("grp", "day", "b").agg(F.max("rho").alias("reg")))
-    per_group = daily.groupBy("grp", "b").agg(F.max("reg").alias("reg"))
-    overall = daily.groupBy("b").agg(F.max("reg").alias("reg"))
-
-    scale = int(buckets / PHI)
-    est = F.expr(f"shiftleft(CAST({scale} AS BIGINT), "
-                 f"CAST(sum_reg div {buckets} AS INT))")
-
-    def level(regs, keys, scope):
-        s = (regs.groupBy(*keys)
-             .agg(F.sum("reg").alias("sum_reg"))
-             .select(*keys, est.alias("est_distinct")))
-        return s.select(
-            F.lit(scope).alias("scope"),
-            (F.col("grp") if "grp" in keys
-             else F.lit("(all)")).alias(group_col),
-            (F.col("day") if "day" in keys
-             else F.lit("1900-01-01").cast("date")).alias("day"),
-            "est_distinct")
-
-    sk = (level(daily, ["grp", "day"], "day")
-          .unionByName(level(per_group, ["grp"], "group"))
-          .unionByName(level(overall, [], "all")))
-
+    daily = pin(_registers(
+        df, {"grp": F.col(group_col), "day": F.to_date(ts_col)},
+        id_col, buckets))
     # exact self-check: ONE distinct pass over (grp, day, id) tuples,
     # pinned; coarser exact counts reduce that frame, not the corpus
     tup = pin(df.select(F.col(group_col).alias("grp"),
                         F.to_date(ts_col).alias("day"), F.col(id_col))
               .distinct())
-    ex_day = (tup.groupBy("grp", "day")
-              .agg(F.count("*").alias("exact_distinct"))
-              .select(F.lit("day").alias("scope"),
-                      F.col("grp").alias(group_col), "day",
-                      "exact_distinct"))
-    ex_grp = (tup.select("grp", id_col).distinct().groupBy("grp")
-              .agg(F.count("*").alias("exact_distinct"))
-              .select(F.lit("group").alias("scope"),
-                      F.col("grp").alias(group_col),
-                      F.lit("1900-01-01").cast("date").alias("day"),
-                      "exact_distinct"))
-    ex_all = (tup.select(id_col).distinct()
-              .agg(F.count("*").alias("exact_distinct"))
-              .select(F.lit("all").alias("scope"),
-                      F.lit("(all)").alias(group_col),
-                      F.lit("1900-01-01").cast("date").alias("day"),
-                      "exact_distinct"))
-    exact = ex_day.unionByName(ex_grp).unionByName(ex_all)
+    levels = [
+        (daily, tup, ["grp", "day"], "day"),
+        (daily.groupBy("grp", "b").agg(F.max("reg").alias("reg")),
+         tup.select("grp", id_col).distinct(), ["grp"], "group"),
+        (daily.groupBy("b").agg(F.max("reg").alias("reg")),
+         tup.select(id_col).distinct(), [], "all")]
+    est = F.expr(_fm_estimate_sql("sum_reg", buckets))
+
+    def scoped(frame, keys, scope, value):
+        return frame.select(
+            F.lit(scope).alias("scope"),
+            (F.col("grp") if "grp" in keys
+             else F.lit("(all)")).alias(group_col),
+            (F.col("day") if "day" in keys
+             else F.lit("1900-01-01").cast("date")).alias("day"),
+            value)
+
+    sk = reduce(DataFrame.unionByName, [
+        scoped(regs.groupBy(*keys).agg(F.sum("reg").alias("sum_reg")),
+               keys, scope, est.alias("est_distinct"))
+        for regs, _, keys, scope in levels])
+    exact = reduce(DataFrame.unionByName, [
+        scoped(ids.groupBy(*keys).agg(F.count("*").alias("exact_distinct")),
+               keys, scope, "exact_distinct")
+        for _, ids, keys, scope in levels])
     return sk.join(exact, ["scope", group_col, "day"])
+
+
+def _bloom_positions(key: Column, m_bits: int,
+                     k_hashes: int) -> list[Column]:
+    """The ``k_hashes`` bit positions ``h60(key || '#bf{i}') % m_bits``
+    of a key — the one expression the bitmap build and the probe
+    share."""
+    return [F.pmod(h60(F.concat(key.cast("string"), F.lit(f"#bf{i}"))),
+                   F.lit(m_bits))
+            for i in range(k_hashes)]
 
 
 def bloom_build(keys: DataFrame, key_col: str, m_bits: int = 8192,
@@ -314,13 +360,11 @@ def bloom_build(keys: DataFrame, key_col: str, m_bits: int = 8192,
     Bits are 32-per-word inside BIGINTs so every shift stays positive
     and engine-exact (bit 63 of a packed 64-bit word flips the sign,
     and signed-overflow semantics differ across engines).  Each key
-    sets ``k_hashes`` positions ``h60(key || '#bf{i}') % m_bits``;
-    words merge with bit_or — map-side combinable, constant size.
+    sets its :func:`_bloom_positions`; words merge with bit_or —
+    map-side combinable, constant size.
     """
-    pos = F.explode(F.array(*[
-        F.pmod(h60(F.concat(F.col(key_col).cast("string"),
-                            F.lit(f"#bf{i}"))), F.lit(m_bits))
-        for i in range(k_hashes)])).alias("pos")
+    pos = F.explode(F.array(*_bloom_positions(
+        F.col(key_col), m_bits, k_hashes))).alias("pos")
     rows = (keys.select(pos)
             .select(F.expr("pos div 32").alias("w"),
                     F.expr("shiftleft(CAST(1 AS BIGINT), "
@@ -352,17 +396,17 @@ def bloom_semi_join_stats(fact: DataFrame, keys: DataFrame,
     the column is the self-check).
     """
     bitmap = bloom_build(keys, dim_key, m_bits, k_hashes)
-    probed = fact.withColumn("__bf", F.lit(bitmap))
-    hit = None
-    for i in range(k_hashes):
-        pos = f"pmod({h60_sparksql(fact_key, i)}, {m_bits})"
-        c = F.expr(f"(shiftright(element_at(__bf, "
-                   f"CAST({pos} div 32 AS INT) + 1), "
-                   f"CAST({pos} % 32 AS INT)) & 1) = 1")
-        hit = c if hit is None else (hit & c)
+    pcols = [f"__p{i}" for i in range(k_hashes)]
+    probed = fact.select(
+        "*", F.lit(bitmap).alias("__bf"),
+        *[p.alias(c) for p, c in zip(
+            _bloom_positions(F.col(fact_key), m_bits, k_hashes), pcols)])
+    hit = reduce(Column.__and__, [
+        F.expr(f"(shiftright(element_at(__bf, CAST({c} div 32 AS INT) + 1), "
+               f"CAST({c} % 32 AS INT)) & 1) = 1") for c in pcols])
     dim = keys.select(F.col(dim_key).alias("__k"),
                       F.lit(1).alias("__m")).distinct()
-    joined = (probed.withColumn("__bloom", hit).drop("__bf")
+    joined = (probed.withColumn("__bloom", hit).drop("__bf", *pcols)
               .join(F.broadcast(dim),
                     F.col(fact_key) == F.col("__k"), "left"))
     return (joined.groupBy(group_col)
@@ -373,13 +417,6 @@ def bloom_semi_join_stats(fact: DataFrame, keys: DataFrame,
                  .alias("n_exact"),
                  F.sum(F.when(F.col("__m").isNotNull() & ~F.col("__bloom"),
                               1).otherwise(0)).alias("n_false_neg")))
-
-
-def h60_sparksql(col: str, i: int) -> str:
-    """Spark-SQL h60 of ``col || '#bf{i}'`` (string form for use
-    inside F.expr where shift amounts must be expressions)."""
-    return (f"CAST(conv(substring(md5(concat(CAST({col} AS STRING), "
-            f"'#bf{i}')), 1, 15), 16, 10) AS BIGINT)")
 
 
 def hist_quantiles(df: DataFrame, group_col: str = "event_type",
@@ -430,30 +467,19 @@ def kmv_sketch(docs: DataFrame, group_col: str = "source",
     group's word ``n``-shingle set (shingles, not single words — the
     synthetic corpus shares one vocabulary, and any real corpus's
     unigram overlap saturates the same way), sketches of different
-    groups COMPOSE — the
-    bottom-k of a union is computable from the two sketches alone,
-    and membership of a union-sample hash in both sketches estimates
-    Jaccard (the KMV coincidence estimator: J ≈ |K(A∪B) ∩ A ∩ B| /
-    |K(A∪B)|).  The corpus overlap matrix between sources is the
+    groups COMPOSE — the bottom-k of a union is computable from the
+    two sketches alone, and membership of a union-sample hash in both
+    sketches estimates Jaccard (the KMV coincidence estimator:
+    J ≈ |K(A∪B) ∩ A ∩ B| / |K(A∪B)|).  The corpus overlap matrix between sources is the
     pipeline question this answers at 100 TB without any cross-group
     token join.
 
     Plan shape: one explode+distinct pass builds (group, token-hash)
-    — the only corpus-sized work, shuffled on the uniform digest.
-    Bottom-k is TWO-LEVEL: a per-(group, h mod ``salt``) window keeps
-    k rows per slice (the vocab-sized sort runs parallel across
-    salts), then the final per-group window merges ≤ ``salt·k`` rows
-    — no group-sized single-task sort.  Everything downstream
-    (estimates, pair unions) touches only k-row sketches.
-
-    Exactness: estimates are ``floor((k-1)·2^60 / kth)`` with one
-    IEEE double division (both operands exactly representable,
-    bit-identical across engines; groups with < k distinct tokens
-    report their exact count), Jaccard is integer ppm.  Returns one
-    row per unordered group pair (ga < gb):
-    (ga, gb, est_a, est_b, inter_k, kk, jaccard_ppm).
+    — the only corpus-sized work, shuffled on the uniform digest;
+    :func:`_kmv_pairs` does the rest on k-row sketches.  Returns one
+    row per unordered group pair (ga < gb): (ga, gb, est_a, est_b,
+    inter_k, kk, jaccard_ppm), Jaccard in integer ppm.
     """
-    two60 = float(1 << 60)
     base = (ensure_parallelism(docs)
             .select(F.col(group_col).alias("grp"),
                     F.explode(F.array_distinct(
@@ -461,6 +487,34 @@ def kmv_sketch(docs: DataFrame, group_col: str = "source",
             .filter(F.col("w") != "")
             .select("grp", h60(F.col("w")).alias("h"))
             .distinct())
+    return _kmv_pairs(base, k, salt).drop("u_kth")
+
+
+def _kmv_est(n: str, kth: str, k: int) -> Column:
+    """KMV distinct estimate of a bottom-k sample of ``n`` hashes whose
+    largest is ``kth``: the exact ``n`` while it is under k, else
+    ``floor((k-1)·2^60 / kth)`` with one IEEE double division (both
+    operands exactly representable, bit-identical across engines)."""
+    return F.when(F.col(n) < k, F.col(n)).otherwise(
+        F.floor(F.lit(float(k - 1)) * F.lit(float(1 << 60))
+                / F.col(kth).cast("double"))).cast("long")
+
+
+def _kmv_pairs(base: DataFrame, k: int, salt: int) -> DataFrame:
+    """The bottom-k core of :func:`kmv_sketch` and
+    :func:`kmv_id_sketch`, over a distinct ``(grp, h)`` frame.
+
+    Bottom-k is TWO-LEVEL: a per-(group, h mod ``salt``) window keeps
+    k rows per slice (the big sort runs parallel across salts), then
+    the final per-group window merges ≤ ``salt·k`` rows — no
+    group-sized single-task sort.  Pairs come from a broadcast
+    ``ga < gb`` list joined against the k-row sketches: the bottom-k
+    of a pair's union, ``inter_k`` of its hashes in both sketches.
+
+    Returns one row per unordered group pair: (ga, gb, est_a, est_b,
+    inter_k, kk, jaccard_ppm, u_kth) — ``u_kth`` the largest hash of
+    the union's bottom-k, for union estimates.
+    """
     ws = Window.partitionBy("grp", "s").orderBy("h")
     cand = (base.withColumn("s", F.pmod("h", F.lit(salt)))
             .withColumn("rs", F.row_number().over(ws))
@@ -470,33 +524,27 @@ def kmv_sketch(docs: DataFrame, group_col: str = "source",
           .filter(F.col("rnk") <= k).select("grp", "h"))
     # the k-row-per-group sketch feeds FOUR derivations (estimates +
     # both pair sides); without a pin each one replays the
-    # corpus-sized explode+distinct chain (audited: 8 Generate nodes,
-    # zero ReusedExchange).  Pin EAGERLY (count() forces the build —
-    # a lazily-pinned frame fanned out in one job degrades to
+    # corpus-sized distinct chain (audited: 8 Generate nodes, zero
+    # ReusedExchange).  Pin EAGERLY (count() forces the build — a
+    # lazily-pinned frame fanned out in one job degrades to
     # recomputation) and register for release_caches().  The cache is
     # k×|groups| rows — driver-tiny at any corpus size.
     sk = pin(sk)
     sk.count()
 
-    gstats = sk.groupBy("grp").agg(F.count("*").alias("nk"),
-                                   F.max("h").alias("kth"))
-    est = F.when(F.col("nk") < k, F.col("nk")).otherwise(
-        F.floor(F.lit(float(k - 1)) * F.lit(two60)
-                / F.col("kth").cast("double"))).cast("long")
-    gest = gstats.select("grp", est.alias("est_distinct"))
-
+    gest = (sk.groupBy("grp").agg(F.count("*").alias("nk"),
+                                  F.max("h").alias("kth"))
+            .select("grp", _kmv_est("nk", "kth", k).alias("est_distinct")))
     groups = gest.select("grp")
     pairs = (groups.select(F.col("grp").alias("ga"))
              .crossJoin(groups.select(F.col("grp").alias("gb")))
              .filter(F.col("ga") < F.col("gb")))
-    ua = (F.broadcast(pairs)
-          .join(sk.select(F.col("grp").alias("ga"), "h"), "ga")
-          .select("ga", "gb", "h", F.lit(1).alias("ia"),
-                  F.lit(0).alias("ib")))
-    ub = (F.broadcast(pairs)
-          .join(sk.select(F.col("grp").alias("gb"), "h"), "gb")
-          .select("ga", "gb", "h", F.lit(0).alias("ia"),
-                  F.lit(1).alias("ib")))
+    # each pair's two sketches, flagged by side
+    ua, ub = [F.broadcast(pairs)
+              .join(sk.select(F.col("grp").alias(g), "h"), g)
+              .select("ga", "gb", "h", F.lit(int(g == "ga")).alias("ia"),
+                      F.lit(int(g == "gb")).alias("ib"))
+              for g in ("ga", "gb")]
     u = (ua.unionByName(ub)
          .groupBy("ga", "gb", "h")
          .agg(F.max("ia").alias("ia"), F.max("ib").alias("ib")))
@@ -506,7 +554,8 @@ def kmv_sketch(docs: DataFrame, group_col: str = "source",
         F.sum(F.when((F.col("rnk") <= k) & (F.col("ia") == 1)
                      & (F.col("ib") == 1), 1).otherwise(0))
         .cast("long").alias("inter_k"),
-        F.least(F.count("*"), F.lit(k).cast("long")).alias("kk"))
+        F.least(F.count("*"), F.lit(k).cast("long")).alias("kk"),
+        F.max(F.when(F.col("rnk") <= k, F.col("h"))).alias("u_kth"))
     return (pagg
             .join(gest.select(F.col("grp").alias("ga"),
                               F.col("est_distinct").alias("est_a")), "ga")
@@ -514,7 +563,7 @@ def kmv_sketch(docs: DataFrame, group_col: str = "source",
                               F.col("est_distinct").alias("est_b")), "gb")
             .select("ga", "gb", "est_a", "est_b", "inter_k", "kk",
                     F.floor(F.col("inter_k") * 1_000_000 / F.col("kk"))
-                    .cast("long").alias("jaccard_ppm")))
+                    .cast("long").alias("jaccard_ppm"), "u_kth"))
 
 
 def upper_quantile(df: DataFrame, group_col: str = "event_type",
@@ -696,28 +745,17 @@ def cm_error_eval(docs: DataFrame, sample_mod: int = 101,
     actually errs — the light tail — before a (depth, width) config
     is trusted for 100 TB of ad-hoc frequency probes.
 
-    Same SUM-combinable grid as cm_heavy_hitters; the candidate set
+    Same grid (:func:`_cm_grid`) and estimate (:func:`_cm_estimate`)
+    as cm_heavy_hitters; the candidate set
     is every word with h60(word) % sample_mod == 0 (≈1/mod of the
     vocab, deterministic and replayable).  Returns per sampled word
     (word, exact_n, cm_est, over_ppm) with the one-sided relative
     overestimate in integer ppm — CMS never underestimates, so
     over_ppm ≥ 0 is also a self-check.
     """
-    words = (docs.select(F.explode(
-        F.split(normalize_text(F.col(text_col)), " ")).alias("w"))
-        .filter(F.col("w") != ""))
-    wc = words.groupBy("w").agg(F.count("*").alias("n"))
-    cells = (wc.select("w", "n",
-                       _cm_buckets(F.col("w"), depth, width)
-                       .alias("r", "bkt"))
-             .groupBy("r", "bkt").agg(F.sum("n").alias("cell")))
+    wc, cells = _cm_grid(docs, text_col, depth, width)
     cand = wc.filter(F.pmod(h60(F.col("w")), F.lit(sample_mod)) == 0)
-    est = (cand.select("w", "n",
-                       _cm_buckets(F.col("w"), depth, width)
-                       .alias("r", "bkt"))
-           .join(F.broadcast(cells), ["r", "bkt"])
-           .groupBy("w", "n")
-           .agg(F.min("cell").alias("cm_est")))
+    est = _cm_estimate(cand, cells, depth, width)
     return est.select(F.col("w").alias("word"),
                       F.col("n").alias("exact_n"),
                       F.col("cm_est").cast("long"),
@@ -740,77 +778,18 @@ def kmv_id_sketch(df: DataFrame, group_col: str = "event_type",
     all from k-row sketches, no cross-group ID join anywhere.
 
     Plan shape: one (group, h60(id)) distinct pass is the only
-    corpus-sized work; the two-level bottom-k (per-(group, h mod
-    salt) slice window, then the ≤ salt·k merge) avoids any
-    group-sized single-task sort; pair math touches only k-row
-    sketches joined off a broadcast pair list.  Estimates use one
-    IEEE double division with exactly-representable operands —
-    bit-identical across engines; groups under k distinct IDs report
-    exact counts.
-
-    Returns one row per unordered group pair:
-    (ga, gb, est_a, est_b, inter_k, kk, jaccard_ppm, union_est,
-    inter_est).
+    corpus-sized work; :func:`_kmv_pairs` does the rest on k-row
+    sketches.  Returns one row per unordered group pair: (ga, gb,
+    est_a, est_b, inter_k, kk, jaccard_ppm, union_est, inter_est).
     """
-    two60 = float(1 << 60)
     base = (ensure_parallelism(df)
             .select(F.col(group_col).alias("grp"),
                     h60(F.col(id_col).cast("string")).alias("h"))
             .filter(F.col("h").isNotNull())
             .distinct())
-    ws = Window.partitionBy("grp", "s").orderBy("h")
-    cand = (base.withColumn("s", F.pmod("h", F.lit(salt)))
-            .withColumn("rs", F.row_number().over(ws))
-            .filter(F.col("rs") <= k).select("grp", "h"))
-    wg = Window.partitionBy("grp").orderBy("h")
-    sk = (cand.withColumn("rnk", F.row_number().over(wg))
-          .filter(F.col("rnk") <= k).select("grp", "h"))
-    sk = pin(sk)
-    sk.count()
-
-    gstats = sk.groupBy("grp").agg(F.count("*").alias("nk"),
-                                   F.max("h").alias("kth"))
-    est = F.when(F.col("nk") < k, F.col("nk")).otherwise(
-        F.floor(F.lit(float(k - 1)) * F.lit(two60)
-                / F.col("kth").cast("double"))).cast("long")
-    gest = gstats.select("grp", est.alias("est_distinct"))
-
-    groups = gest.select("grp")
-    pairs = (groups.select(F.col("grp").alias("ga"))
-             .crossJoin(groups.select(F.col("grp").alias("gb")))
-             .filter(F.col("ga") < F.col("gb")))
-    ua = (F.broadcast(pairs)
-          .join(sk.select(F.col("grp").alias("ga"), "h"), "ga")
-          .select("ga", "gb", "h", F.lit(1).alias("ia"),
-                  F.lit(0).alias("ib")))
-    ub = (F.broadcast(pairs)
-          .join(sk.select(F.col("grp").alias("gb"), "h"), "gb")
-          .select("ga", "gb", "h", F.lit(0).alias("ia"),
-                  F.lit(1).alias("ib")))
-    u = (ua.unionByName(ub)
-         .groupBy("ga", "gb", "h")
-         .agg(F.max("ia").alias("ia"), F.max("ib").alias("ib")))
-    wu = Window.partitionBy("ga", "gb").orderBy("h")
-    ru = u.withColumn("rnk", F.row_number().over(wu))
-    pagg = ru.groupBy("ga", "gb").agg(
-        F.sum(F.when((F.col("rnk") <= k) & (F.col("ia") == 1)
-                     & (F.col("ib") == 1), 1).otherwise(0))
-        .cast("long").alias("inter_k"),
-        F.least(F.count("*"), F.lit(k).cast("long")).alias("kk"),
-        F.max(F.when(F.col("rnk") <= k, F.col("h"))).alias("u_kth"))
-    union_est = F.when(F.col("kk") < k, F.col("kk")).otherwise(
-        F.floor(F.lit(float(k - 1)) * F.lit(two60)
-                / F.col("u_kth").cast("double"))).cast("long")
-    out = (pagg
-           .join(gest.select(F.col("grp").alias("ga"),
-                             F.col("est_distinct").alias("est_a")), "ga")
-           .join(gest.select(F.col("grp").alias("gb"),
-                             F.col("est_distinct").alias("est_b")), "gb")
-           .withColumn("union_est", union_est)
-           .select("ga", "gb", "est_a", "est_b", "inter_k", "kk",
-                   F.floor(F.col("inter_k") * 1_000_000 / F.col("kk"))
-                   .cast("long").alias("jaccard_ppm"),
-                   "union_est",
-                   F.expr("(inter_k * union_est) div kk")
-                   .cast("long").alias("inter_est")))
-    return out
+    return (_kmv_pairs(base, k, salt)
+            .withColumn("union_est", _kmv_est("kk", "u_kth", k))
+            .select("ga", "gb", "est_a", "est_b", "inter_k", "kk",
+                    "jaccard_ppm", "union_est",
+                    F.expr("(inter_k * union_est) div kk")
+                    .cast("long").alias("inter_est")))

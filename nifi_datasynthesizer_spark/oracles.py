@@ -553,7 +553,8 @@ stats AS (SELECT lang, COUNT(*) AS n_docs,
           FROM ann GROUP BY lang),
 wds AS (SELECT lang, unnest({_WORDS}) AS word FROM ann),
 hh AS (SELECT lang AS grp, {h} AS h FROM wds),
-e AS (SELECT grp, h % {m} AS b, h // {m} AS r FROM hh),
+e AS (SELECT grp, h % {m} AS b, h // {m} AS r FROM hh
+      WHERE h IS NOT NULL),
 rr AS (SELECT grp, b,
               LEAST(CASE WHEN r = 0 THEN {_RHO_CAP}
                          ELSE bit_count((r & -r) - 1) + 1 END,
@@ -1877,14 +1878,16 @@ FROM x CROSS JOIN {prev} ORDER BY vec_id""")
 def fm_distinct_sql(group_col: str = "event_type",
                     id_col: str = "user_id", buckets: int = 64,
                     table: str = "events") -> str:
-    """Mirror of sketches.fm_distinct (registers + integer estimate)."""
+    """Mirror of sketches.fm_distinct (registers + integer estimate;
+    NULL hashes set no register)."""
     from .operators.sketches import PHI, _RHO_CAP
     scale = int(buckets / PHI)
     return f"""
 WITH h AS (SELECT {group_col} AS grp,
                   {h60_sql(f"CAST({id_col} AS VARCHAR)")} AS h
            FROM {table}),
-e AS (SELECT grp, h % {buckets} AS b, h // {buckets} AS r FROM h),
+e AS (SELECT grp, h % {buckets} AS b, h // {buckets} AS r FROM h
+      WHERE h IS NOT NULL),
 rr AS (SELECT grp, b,
               CASE WHEN r = 0 THEN {_RHO_CAP}
                    ELSE bit_count((r & -r) - 1) + 1 END AS rho
@@ -1908,7 +1911,8 @@ def hll_distinct_sql(group_col: str = "event_type",
                      id_col: str = "user_id", m: int = 64,
                      table: str = "events") -> str:
     """Mirror of sketches.hll_distinct (scaled-integer harmonic sum,
-    literal linear-counting table — transcendental-free)."""
+    literal linear-counting table — transcendental-free; NULL hashes
+    set no register)."""
     from .operators.sketches import (_HLL_S, _RHO_CAP, _hll_alpha1000,
                                      _hll_lc_table)
     lc_items = ",".join(str(v) for v in _hll_lc_table(m))
@@ -1916,7 +1920,8 @@ def hll_distinct_sql(group_col: str = "event_type",
 WITH h AS (SELECT {group_col} AS grp,
                   {h60_sql(f"CAST({id_col} AS VARCHAR)")} AS h
            FROM {table}),
-e AS (SELECT grp, h % {m} AS b, h // {m} AS r FROM h),
+e AS (SELECT grp, h % {m} AS b, h // {m} AS r FROM h
+      WHERE h IS NOT NULL),
 rr AS (SELECT grp, b,
               LEAST(CASE WHEN r = 0 THEN {_RHO_CAP}
                          ELSE bit_count((r & -r) - 1) + 1 END,

@@ -7,8 +7,8 @@ bucketing, correlation keys) *oracle-checkable*: DuckDB can replay the
 exact hash, so the driver's value-hash compare covers them.
 
 Scale note: md5 is ~3× slower than xxhash64 but still JVM-side inside
-whole-stage codegen; operators that don't need cross-engine parity can
-pass their ``hash_col=F.xxhash64`` override.
+whole-stage codegen, and the sketches keep it so DuckDB replays every
+register and cell.
 """
 
 from __future__ import annotations

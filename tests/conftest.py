@@ -16,6 +16,19 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+@pytest.fixture(scope="session", autouse=True)
+def _own_tempdir():
+    """Give this test process its own temp directory for the session:
+    ``cache.scratch()`` and the leak check below then see only this
+    process's ``spark_graft_*`` entries, never those of another run
+    (say a ``scripts/check_sf.py``) sharing the system temp directory."""
+    d = tempfile.mkdtemp(prefix="tier1_tmp_")
+    saved, tempfile.tempdir = tempfile.tempdir, d
+    yield d
+    tempfile.tempdir = saved
+    shutil.rmtree(d, ignore_errors=True)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from nifi_datasynthesizer_spark import get_spark

@@ -3048,10 +3048,10 @@ def test_ngram_lm_score_known_values(spark):
         assert r.avg_nll_q4 == r.sum_nll_q4 // r.n_bigrams
 
 
-def test_sketch_hash_fastpath(spark):
-    """xxhash64 fast path: estimates stay in the HLL error envelope,
-    NULLs are excluded (xxhash64 hashes NULL to the seed — the gate
-    must drop them), and non-ndv stats are unaffected."""
+def test_sketch_ndv_envelope_skips_nulls(spark):
+    """h60 register sketches: estimates stay in the HLL error
+    envelope, NULLs are excluded from the ndv, and non-ndv stats are
+    unaffected."""
     from nifi_datasynthesizer_spark.io import column_stats
     from nifi_datasynthesizer_spark.operators.sketches import \
         hll_distinct
@@ -3060,18 +3060,83 @@ def test_sketch_hash_fastpath(spark):
         F.when(F.col("id") % 4 == 0, None)
         .otherwise(F.col("id") % 50).alias("n"))
     got = {r.col: r for r in
-           column_stats(df, ["k", "n"], ndv_mode="sketch",
-                        hash_col=F.xxhash64).collect()}
+           column_stats(df, ["k", "n"], ndv_mode="sketch").collect()}
     # m=64 -> ~13% std error; 300 and 50 true distincts
     assert 200 <= got["k"].ndv <= 450
     assert 35 <= got["n"].ndv <= 70
     assert got["n"].n_null == 5000 and got["n"].n_non_null == 15000
-    h = hll_distinct(
-        df.select(F.lit("g").alias("event_type"),
-                  F.col("k").alias("user_id")),
-        m=64, hash_col=F.xxhash64).first()
-    assert h.exact_distinct == 300
-    assert 200 <= h.est_hll <= 450
+    ids = df.select(F.lit("k").alias("event_type"),
+                    F.col("k").alias("user_id")).unionByName(
+        df.select(F.lit("n").alias("event_type"),
+                  F.col("n").alias("user_id")))
+    h = {r.event_type: r for r in hll_distinct(ids, m=64).collect()}
+    assert h["k"].exact_distinct == 300 and 200 <= h["k"].est_hll <= 450
+    assert h["n"].exact_distinct == 50 and 35 <= h["n"].est_hll <= 70
+    assert h["n"].buckets_hit <= 64
+
+
+def test_register_sketches_skip_null_ids(spark):
+    """A NULL id sets no FM/HLL register.  It used to hash to a NULL
+    bucket that counted as a 65th of 64 registers, which drove HLL's
+    estimate negative.  20,000 rows over 5,000 ids in one group plus 3
+    NULL ids give the NULL-free rows, a group of only NULL ids has no
+    row, and the DuckDB mirrors agree on the same frame."""
+    import duckdb
+
+    from nifi_datasynthesizer_spark.operators.sketches import (
+        fm_distinct, hll_distinct)
+    from nifi_datasynthesizer_spark.oracles import (fm_distinct_sql,
+                                                    hll_distinct_sql)
+    schema = "event_type string, user_id string"
+    clean = [("g", f"u{i % 5000}") for i in range(20_000)]
+    dfc = spark.createDataFrame(clean, schema)
+    dfd = spark.createDataFrame(
+        clean + [("g", None)] * 3 + [("nulls", None)] * 2, schema)
+    con = duckdb.connect()
+    con.register("events", dfd.toPandas())
+    for op, sql in ((fm_distinct, fm_distinct_sql),
+                    (hll_distinct, hll_distinct_sql)):
+        want = [tuple(r) for r in op(dfc).collect()]
+        got = [tuple(r) for r in op(dfd).collect()]
+        assert got == want, (op.__name__, got, want)
+        assert want[0][0] == "g" and want[0][1] <= 64   # buckets_hit
+        assert con.sql(sql()).fetchall() == got, op.__name__
+
+
+def test_kmv_twins_share_one_core(spark):
+    """kmv_sketch over one lowercase token per doc (n=1) equals
+    kmv_id_sketch over the same (group, token) pairs on every shared
+    column: the two differ only in how they build (group, hash)."""
+    from nifi_datasynthesizer_spark.operators.sketches import (
+        kmv_id_sketch, kmv_sketch)
+    # three overlapping 60-token groups, past k so the estimates and
+    # the pair unions take the bottom-k path
+    rows = [(f"s{g}", f"tok{j}") for g in range(3)
+            for j in range(g * 20, g * 20 + 60)]
+    docs = spark.createDataFrame(rows, ["source", "text"])
+    ids = docs.select(F.col("source").alias("event_type"),
+                      F.col("text").alias("user_id"))
+    a = kmv_sketch(docs, "source", k=16, n=1)
+    b = kmv_id_sketch(ids, k=16).select(*a.columns)
+    got, want = sorted(map(tuple, a.collect())), sorted(map(tuple,
+                                                            b.collect()))
+    assert len(got) == 3 and got == want
+
+
+def test_cm_twins_share_one_core(spark):
+    """Every cm_heavy_hitters(docs, k=10) row appears, with the same
+    exact_n and cm_est, in cm_error_eval(docs, sample_mod=1): one grid,
+    one estimate join, two candidate sets."""
+    from nifi_datasynthesizer_spark.operators.sketches import (
+        cm_error_eval, cm_heavy_hitters)
+    docs = spark.createDataFrame(
+        [(" ".join(f"w{j}" for j in range(i % 30)),) for i in range(200)],
+        ["text"])
+    top = {(r.word, r.exact_n, r.cm_est)
+           for r in cm_heavy_hitters(docs, k=10).collect()}
+    evald = {(r.word, r.exact_n, r.cm_est)
+             for r in cm_error_eval(docs, sample_mod=1).collect()}
+    assert len(top) == 10 and top <= evald
 
 
 def test_strip_repeated_substrings_planted(spark):
