@@ -13,7 +13,7 @@ Ours::
 - ``--format``: json | csv | tsv | parquet | orc | avro  (XML has no
   Spark writer; the reference's TSV is csv with a tab separator; avro
   uses spark-avro when on the classpath, else the avro_io pure-Python
-  container encoder for flat schemas).
+  container encoder).
 - ``--threads`` maps to local[] parallelism (on a cluster, submit with
   spark-submit and the flag is ignored in favor of the cluster's
   executors — generation parallelism follows partitions either way).
@@ -90,9 +90,10 @@ def main(argv: list[str] | None = None) -> int:
         d.write.mode("overwrite").option("sep", "\t") \
             .option("header", "true").csv(args.output)
     elif args.format == "avro" and not nio._has_avro(spark):
-        # no spark-avro DataSource on the classpath: flat schemas go
+        # no spark-avro DataSource on the classpath: the frame goes
         # through the spec-compliant pure-Python container encoder
-        # (avro_io; cross-validated against Java avro in tests)
+        # (avro_io, nested columns included; cross-validated against
+        # Java avro in tests)
         from . import avro_io as av
         av.write_avro(df, args.output, codec=args.avro_codec)
     else:

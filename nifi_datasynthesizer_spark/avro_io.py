@@ -24,6 +24,12 @@ columns as ``["null", T]`` unions with the null branch at either
 index.  Unions wider than the nullable 2-branch form raise
 ``TypeError`` — they cannot map onto one Spark column type.
 
+Decoding has ONE compiler, :func:`_make_decoder`: it implements the
+spec's Schema Resolution rules for a (writer, reader) schema pair, and
+reading a file under its own schema is that resolution with reader =
+writer.  The container header's metadata map goes through the same
+codecs as a ``{"type": "map", "values": "bytes"}`` value.
+
 Spec compliance is proven against the OFFICIAL Java implementation
 bundled with pyspark (``avro-1.12.1.jar``): tests write files here and
 read them back with ``org.apache.avro.file.DataFileReader``, and write
@@ -45,8 +51,8 @@ the two.
 """
 from __future__ import annotations
 
+import decimal
 import hashlib
-import io as _io
 import json
 import os
 import struct
@@ -327,8 +333,8 @@ def _ns_of(full: str) -> str:
     return full.rsplit(".", 1)[0] if "." in full else ""
 
 
-def _named_ref(target: dict, names: dict, target_ns: str, compile_fn):
-    """Lazy codec for a named-type REFERENCE: resolution is deferred
+def _named_ref(target: dict, names: dict, target_ns: str):
+    """Lazy encoder for a named-type REFERENCE: compiling is deferred
     to first use so self-referential records (linked lists, trees —
     legal in the spec when the recursion is union-guarded) compile
     without infinite regress.  ``target_ns`` is the namespace of the
@@ -337,11 +343,33 @@ def _named_ref(target: dict, names: dict, target_ns: str, compile_fn):
     as Java does."""
     cell: dict = {}
 
-    def ref(*args):
+    def ref(v):
         if "fn" not in cell:
-            cell["fn"] = compile_fn(target, names, target_ns)
-        return cell["fn"](*args)
+            cell["fn"] = _make_encoder(target, names, target_ns)
+        return cell["fn"](v)
     return ref
+
+
+def _to_unscaled(v, scale: int) -> int:
+    """Decimal → the unscaled integer the wire carries.  Exact at ANY
+    precision: scaleb under the ambient decimal context (prec=28)
+    silently ROUNDS values with more than 28 significant digits (Spark
+    decimals go to 38), so the shift runs under a context wide enough
+    to hold every digit; int() then truncates-toward-zero any fraction
+    deeper than the schema scale."""
+    with decimal.localcontext() as ctx:
+        ctx.prec = len(v.as_tuple().digits) + abs(scale) + 2
+        return int(v.scaleb(scale))
+
+
+def _from_unscaled(unscaled: int, scale: int):
+    """Unscaled wire integer → Decimal.  The Decimal(int) constructor
+    is context-exempt but .scaleb is an OPERATION — rounded to the
+    ambient prec=28 — so the context is widened for the same reason
+    as in :func:`_to_unscaled`."""
+    with decimal.localcontext() as ctx:
+        ctx.prec = len(str(abs(unscaled))) + abs(scale) + 2
+        return decimal.Decimal(unscaled).scaleb(-scale)
 
 
 def _make_encoder(at, names: dict | None = None, ns: str = ""):
@@ -402,7 +430,21 @@ def _make_encoder(at, names: dict | None = None, ns: str = ""):
             def enc_enum(v):
                 return enc_long(idx[v])
             return enc_enum
-        if t == "fixed" and at.get("logicalType") != "decimal":
+        if at.get("logicalType") == "decimal":
+            s = at["scale"]
+            if t == "fixed":
+                # decimal-over-fixed: unscaled two's-complement int in
+                # EXACTLY size bytes, no length prefix
+                size = at["size"]
+                return lambda v: _to_unscaled(v, s).to_bytes(
+                    size, "big", signed=True)
+
+            def enc_decimal(v):
+                u = _to_unscaled(v, s)
+                return enc_bytes(u.to_bytes(u.bit_length() // 8 + 1,
+                                            "big", signed=True))
+            return enc_decimal
+        if t == "fixed":
             size = at["size"]
 
             def enc_fixed(v):
@@ -412,41 +454,12 @@ def _make_encoder(at, names: dict | None = None, ns: str = ""):
                         f"fixed({size}) value has {len(b)} bytes")
                 return b
             return enc_fixed
-        if at.get("logicalType") == "decimal":
-            s = at["scale"]
-            if t == "fixed":
-                # decimal-over-fixed: unscaled two's-complement int in
-                # EXACTLY size bytes, no length prefix
-                size = at["size"]
-
-                def enc_decimal_fixed(v):
-                    import decimal
-                    with decimal.localcontext() as ctx:
-                        ctx.prec = len(v.as_tuple().digits) + abs(s) + 2
-                        unscaled = int(v.scaleb(s))
-                    return unscaled.to_bytes(size, "big", signed=True)
-                return enc_decimal_fixed
-
-            def enc_decimal(v):
-                # exact at ANY precision: scaleb under the ambient
-                # decimal context (prec=28) silently ROUNDS values with
-                # more than 28 significant digits (Spark decimals go to
-                # 38), so the shift runs under a context wide enough to
-                # hold every digit; int() then truncates-toward-zero any
-                # fraction deeper than the schema scale, as before
-                import decimal
-                with decimal.localcontext() as ctx:
-                    ctx.prec = len(v.as_tuple().digits) + abs(s) + 2
-                    unscaled = int(v.scaleb(s))
-                return enc_bytes(unscaled.to_bytes(
-                    unscaled.bit_length() // 8 + 1, "big", signed=True))
-            return enc_decimal
         return _ENC_PRIM[t]  # logical-type wrapper over a primitive
     if at in _ENC_PRIM:
         return _ENC_PRIM[at]
     target, full = _resolve_named(at, names, ns)
     if target is not None:  # reference to a defined named type
-        return _named_ref(target, names, _ns_of(full), _make_encoder)
+        return _named_ref(target, names, _ns_of(full))
     raise TypeError(f"unsupported avro type: {at!r}")
 
 
@@ -474,131 +487,21 @@ _DEC_PRIM = {
 }
 
 
-def _make_decoder(at, names: dict | None = None, ns: str = ""):
-    """Compile an avro type into ``fn(buf, pos) -> (value, pos)``.
-    Array/map blocks honour the spec's negative-count form (abs count
-    followed by a byte size); named types register in ``names`` as
-    defined and may be referenced by name afterwards."""
-    if names is None:
-        names = {}
-    if isinstance(at, list):
-        branch, nb = _union_branch(at)
-        inner = _make_decoder(branch, names, ns)
-
-        def dec_union(buf, pos):
-            br, pos = dec_long(buf, pos)
-            if br == nb:
-                return None, pos
-            return inner(buf, pos)
-        return dec_union
-    if isinstance(at, dict):
-        t = at["type"]
-        if t in ("record", "enum", "fixed"):
-            ns = _register_named(at, names, ns)
-        if t == "record":
-            fdecs = [(f["name"], _make_decoder(f["type"], names, ns))
-                     for f in at["fields"]]
-
-            def dec_record(buf, pos):
-                row = {}
-                for n, fd in fdecs:
-                    row[n], pos = fd(buf, pos)
-                return row, pos
-            return dec_record
-        if t == "array":
-            idec = _make_decoder(at["items"], names, ns)
-
-            def dec_array(buf, pos):
-                out = []
-                while True:
-                    cnt, pos = dec_long(buf, pos)
-                    if cnt == 0:
-                        return out, pos
-                    if cnt < 0:
-                        cnt = -cnt
-                        _, pos = dec_long(buf, pos)
-                    for _ in range(cnt):
-                        v, pos = idec(buf, pos)
-                        out.append(v)
-            return dec_array
-        if t == "map":
-            vdec = _make_decoder(at["values"], names, ns)
-
-            def dec_map(buf, pos):
-                out = {}
-                while True:
-                    cnt, pos = dec_long(buf, pos)
-                    if cnt == 0:
-                        return out, pos
-                    if cnt < 0:
-                        cnt = -cnt
-                        _, pos = dec_long(buf, pos)
-                    for _ in range(cnt):
-                        k, pos = _dec_str(buf, pos)
-                        out[k], pos = vdec(buf, pos)
-            return dec_map
-        if t == "enum":
-            syms = at["symbols"]
-
-            def dec_enum(buf, pos):
-                i, pos = dec_long(buf, pos)
-                return syms[i], pos
-            return dec_enum
-        if t == "fixed" and at.get("logicalType") != "decimal":
-            size = at["size"]
-
-            def dec_fixed(buf, pos):
-                return bytes(buf[pos:pos + size]), pos + size
-            return dec_fixed
-        if at.get("logicalType") == "decimal":
-            s = at["scale"]
-            if t == "fixed":
-                size = at["size"]
-
-                def dec_decimal_fixed(buf, pos):
-                    import decimal
-                    unscaled = int.from_bytes(buf[pos:pos + size],
-                                              "big", signed=True)
-                    with decimal.localcontext() as ctx:
-                        ctx.prec = len(str(abs(unscaled))) + abs(s) + 2
-                        return (decimal.Decimal(unscaled).scaleb(-s),
-                                pos + size)
-                return dec_decimal_fixed
-
-            def dec_decimal(buf, pos):
-                # the Decimal(int) constructor is context-exempt but
-                # .scaleb is an OPERATION — rounded to the ambient
-                # prec=28; widen the context so >28-digit unscaled
-                # values (Spark precision up to 38) survive exactly
-                import decimal
-                raw, pos = _dec_bytes(buf, pos)
-                unscaled = int.from_bytes(raw, "big", signed=True)
-                with decimal.localcontext() as ctx:
-                    ctx.prec = len(str(abs(unscaled))) + abs(s) + 2
-                    return decimal.Decimal(unscaled).scaleb(-s), pos
-            return dec_decimal
-        return _DEC_PRIM[t]
-    if at in _DEC_PRIM:
-        return _DEC_PRIM[at]
-    target, full = _resolve_named(at, names, ns)
-    if target is not None:  # reference to a defined named type
-        return _named_ref(target, names, _ns_of(full), _make_decoder)
-    raise TypeError(f"unsupported avro type: {at!r}")
-
-
-# ------------------------------------------------ schema resolution
+# ------------------------------------------------------------ decoding
 #
-# The spec's "Schema Resolution" rules (reader schema != writer
-# schema): records match fields by name (reader aliases honoured),
-# writer-only fields are decoded and discarded, reader-only fields
-# take their declared default; enums map writer symbols onto reader
-# symbols with the reader's enum ``default`` as the fallback;
-# primitives promote int→long/float/double, long→float/double,
-# float→double, string↔bytes; arrays/maps resolve element-wise; fixed
-# requires matching size and name.  This is what lets a consumer
-# evolve its schema (add a column with a default, widen an int,
-# rename via aliases) and still read every historical file — the
-# contract any long-lived 100 TB archive depends on.
+# One decoder compiler implements the spec's "Schema Resolution" rules
+# (reader schema vs writer schema); reading a file under its own schema
+# is the same resolution with reader = writer.  Records match fields
+# by name (reader aliases honoured), writer-only fields are decoded
+# (resolved against themselves) and discarded, reader-only fields take
+# their declared default; enums map writer symbols onto reader symbols
+# with the reader's enum ``default`` as the fallback; primitives
+# promote int→long/float/double, long→float/double, float→double,
+# string↔bytes; arrays/maps resolve element-wise; fixed requires
+# matching size and name.  This is what lets a consumer evolve its
+# schema (add a column with a default, widen an int, rename via
+# aliases) and still read every historical file — the contract any
+# long-lived 100 TB archive depends on.
 
 _PROMOTE = {
     ("int", "long"): None, ("int", "float"): float,
@@ -612,7 +515,7 @@ _PROMOTE = {
 def _effective(at, names, ns):
     """(resolved type, effective ns): follows named references and
     unwraps nothing else."""
-    if isinstance(at, str) and at != "null" and at not in _DEC_PRIM:
+    if isinstance(at, str) and at not in _DEC_PRIM:
         target, full = _resolve_named(at, names, ns)
         if target is None:
             raise TypeError(f"unsupported avro type: {at!r}")
@@ -638,12 +541,9 @@ def _json_default(rt, names, ns, dflt, path):
         return _json_default(rt[0], names, ns, dflt, path)
     t = rt["type"] if isinstance(rt, dict) else rt
     if isinstance(rt, dict) and rt.get("logicalType") == "decimal":
-        import decimal
-        unscaled = int.from_bytes(dflt.encode("latin-1"), "big",
-                                  signed=True) if dflt else 0
-        with decimal.localcontext() as ctx:
-            ctx.prec = len(str(abs(unscaled))) + abs(rt["scale"]) + 2
-            return decimal.Decimal(unscaled).scaleb(-rt["scale"])
+        return _from_unscaled(int.from_bytes(
+            dflt.encode("latin-1"), "big", signed=True) if dflt else 0,
+            rt["scale"])
     if t == "null":
         return None
     if t == "boolean":
@@ -683,64 +583,54 @@ def _base_type(at):
     return at["type"] if isinstance(at, dict) else at
 
 
-def _resolved_fullname(at, names, ns):
-    """Fullname of a named type (reference or inline definition), else
-    None — the memo key component for the resolved decoder's lazy
-    recursion guard."""
-    if isinstance(at, str) and at != "null" and at not in _DEC_PRIM:
-        _, full = _resolve_named(at, names, ns)
-        return full
-    if isinstance(at, dict) and at.get("type") in ("record", "enum",
-                                                   "fixed"):
-        nm = at.get("name")
-        eff = at.get("namespace", ns)
-        return f"{eff}.{nm}" if eff else nm
-    return None
-
-
-def _make_resolved_decoder(wt, rt, wnames, rnames, wns="", rns="",
-                           path="$", _cells=None):
+def _make_decoder(wt, rt=None, wnames: dict | None = None,
+                  rnames: dict | None = None, wns: str = "",
+                  rns: str = "", path: str = "$", _cells=None):
     """Compile (writer type, reader type) → ``fn(buf, pos) →
-    (reader-shaped value, pos)`` per the spec's resolution rules.
-    Raises TypeError at COMPILE time for unresolvable pairs (the spec
-    calls these errors), so a bad evolution fails before any data is
-    touched.
+    (reader-shaped value, pos)`` per the spec's resolution rules;
+    ``rt`` defaults to ``wt`` (a file read under its own schema).
+    Array/map blocks honour the spec's negative-count form (abs count
+    followed by a byte size).  Raises TypeError at COMPILE time for
+    unresolvable pairs (the spec calls these errors), so a bad
+    evolution fails before any data is touched.
 
     Named writer/reader pairs compile through a lazy memo cell keyed
-    on (writer fullname, reader fullname) — the resolved-path
-    counterpart of ``_named_ref``'s deferred cell — so a spec-legal
-    RECURSIVE record (linked list, tree; recursion union-guarded)
-    resolves in one pass instead of re-entering ``_effective``
-    eagerly until RecursionError (r11 ADVICE fix)."""
+    on the identity of the two DEFINITIONS, so a spec-legal RECURSIVE
+    record (linked list, tree; recursion union-guarded) resolves in
+    one pass, and a writer-only field resolved against itself never
+    shares a cell with the same type resolved against the reader's."""
+    if rt is None:
+        rt = wt
+    if wnames is None:
+        wnames = {}
+    if rnames is None:
+        rnames = {}
     if _cells is None:
         _cells = {}
-    wkey = _resolved_fullname(wt, wnames, wns)
-    rkey = _resolved_fullname(rt, rnames, rns)
-    if wkey is not None and rkey is not None:
-        cell = _cells.get((wkey, rkey))
-        if cell is not None:          # in progress or finished: defer
-
-            def ref(buf, pos):
-                return cell["fn"](buf, pos)
-            return ref
-        _cells[(wkey, rkey)] = cell = {}
-
-        def _finish(fn):
-            cell["fn"] = fn
-            return fn
-    else:
-        def _finish(fn):
-            return fn
-
     wt, wns = _effective(wt, wnames, wns)
     rt, rns = _effective(rt, rnames, rns)
+    args = (wnames, rnames, wns, rns, path, _cells)
+    if not (isinstance(wt, dict) and "name" in wt
+            and isinstance(rt, dict) and "name" in rt):
+        return _resolve_pair(wt, rt, *args)
+    key = (id(wt), id(rt))
+    cell = _cells.get(key)
+    if cell is not None:             # in progress or finished
+        return cell.get("fn") or (lambda buf, pos: cell["fn"](buf, pos))
+    _cells[key] = cell = {}
+    cell["fn"] = fn = _resolve_pair(wt, rt, *args)
+    return fn
 
+
+def _resolve_pair(wt, rt, wnames, rnames, wns, rns, path, cells):
+    """The body of :func:`_make_decoder` for one (writer, reader)
+    pair with named references already followed."""
     if isinstance(wt, list):
         branch, nb = _union_branch(wt)
         r_nullable = isinstance(rt, list)
         rbranch = _union_branch(rt)[0] if r_nullable else rt
-        inner = _make_resolved_decoder(branch, rbranch, wnames, rnames,
-                                       wns, rns, path, _cells)
+        inner = _make_decoder(branch, rbranch, wnames, rnames, wns, rns,
+                              path, cells)
 
         def dec_union(buf, pos):
             br, pos = dec_long(buf, pos)
@@ -751,35 +641,20 @@ def _make_resolved_decoder(wt, rt, wnames, rnames, wns="", rns="",
                         "not nullable")
                 return None, pos
             return inner(buf, pos)
-        return _finish(dec_union)
+        return dec_union
     if isinstance(rt, list):  # writer non-union, reader nullable
         if _base_type(wt) == "null":
             # spec: writer null resolves against the reader union's
-            # null branch (r11 ADVICE fix — picking only the non-null
-            # branch made this spec-legal pair a compile error)
+            # null branch
             if "null" not in rt:
                 raise TypeError(
                     f"writer null at {path} but reader union has no "
                     "null branch")
-
-            def dec_wnull(buf, pos):
-                return None, pos
-            return _finish(dec_wnull)
-        rbranch, _ = _union_branch(rt)
-        return _finish(_make_resolved_decoder(wt, rbranch, wnames,
-                                              rnames, wns, rns, path,
-                                              _cells))
+            return _DEC_PRIM["null"]
+        return _make_decoder(wt, _union_branch(rt)[0], wnames, rnames,
+                             wns, rns, path, cells)
 
     wb, rb = _base_type(wt), _base_type(rt)
-    wlog = wt.get("logicalType") if isinstance(wt, dict) else None
-    rlog = rt.get("logicalType") if isinstance(rt, dict) else None
-    if wlog == "decimal" or rlog == "decimal":
-        if (wlog != rlog or wt.get("precision") != rt.get("precision")
-                or wt.get("scale") != rt.get("scale")):
-            raise TypeError(f"decimal mismatch at {path}: "
-                            f"{wt!r} vs {rt!r}")
-        return _finish(_make_decoder(wt, wnames, wns))
-
     if wb == rb and wb in ("record", "enum", "fixed"):
         if not _names_match(wt, rt, wns, rns):
             raise TypeError(
@@ -788,6 +663,29 @@ def _make_resolved_decoder(wt, rt, wnames, rnames, wns="", rns="",
                 "(no alias)")
         _register_named(wt, wnames, wns)
         _register_named(rt, rnames, rns)
+
+    wlog = wt.get("logicalType") if isinstance(wt, dict) else None
+    rlog = rt.get("logicalType") if isinstance(rt, dict) else None
+    if wlog == "decimal" or rlog == "decimal":
+        if (wlog != rlog or wt.get("precision") != rt.get("precision")
+                or wt.get("scale") != rt.get("scale")):
+            raise TypeError(f"decimal mismatch at {path}: "
+                            f"{wt!r} vs {rt!r}")
+        s = wt["scale"]
+        if wb == "fixed":
+            size = wt["size"]
+
+            def dec_decimal_fixed(buf, pos):
+                return (_from_unscaled(int.from_bytes(
+                    buf[pos:pos + size], "big", signed=True), s),
+                    pos + size)
+            return dec_decimal_fixed
+
+        def dec_decimal(buf, pos):
+            raw, pos = _dec_bytes(buf, pos)
+            return _from_unscaled(int.from_bytes(raw, "big", signed=True),
+                                  s), pos
+        return dec_decimal
 
     if wb == "record" and rb == "record":
         wns2 = wt.get("namespace", wns)
@@ -801,14 +699,16 @@ def _make_resolved_decoder(wt, rt, wnames, rnames, wns="", rns="",
         steps = []  # (reader_name | None, decoder)
         for f in wt["fields"]:
             rf = rfields.get(f["name"])
+            fpath = f"{path}.{f['name']}"
             if rf is not None and id(rf) not in consumed:
                 consumed.add(id(rf))
-                steps.append((rf["name"], _make_resolved_decoder(
+                steps.append((rf["name"], _make_decoder(
                     f["type"], rf["type"], wnames, rnames, wns2, rns2,
-                    f"{path}.{f['name']}", _cells)))
-            else:  # writer-only: decode and discard
-                steps.append((None, _make_decoder(f["type"], wnames,
-                                                  wns2)))
+                    fpath, cells)))
+            else:  # writer-only: decode under itself and discard
+                steps.append((None, _make_decoder(
+                    f["type"], f["type"], wnames, wnames, wns2, wns2,
+                    fpath, cells)))
         defaults = {}
         for f in rt["fields"]:
             if id(f) not in consumed:
@@ -821,24 +721,18 @@ def _make_resolved_decoder(wt, rt, wnames, rnames, wns="", rns="",
                     f"{path}.{f['name']}")
 
         def dec_record(buf, pos):
-            row = dict(defaults)
+            row = defaults.copy()
             for name, fd in steps:
                 v, pos = fd(buf, pos)
                 if name is not None:
                     row[name] = v
             return row, pos
-        return _finish(dec_record)
+        return dec_record
     if wb == "enum" and rb == "enum":
         rsyms = set(rt["symbols"])
         rdef = rt.get("default")
-        table = []
-        for s in wt["symbols"]:
-            if s in rsyms:
-                table.append(s)
-            elif rdef is not None:
-                table.append(rdef)
-            else:
-                table.append(None)  # error if actually written
+        # None: not in the reader enum, no default — an error if written
+        table = [s if s in rsyms else rdef for s in wt["symbols"]]
 
         def dec_enum(buf, pos):
             i, pos = dec_long(buf, pos)
@@ -848,16 +742,19 @@ def _make_resolved_decoder(wt, rt, wnames, rnames, wns="", rns="",
                     f"enum symbol {wt['symbols'][i]!r} at {path} not "
                     "in reader enum and reader declares no default")
             return s, pos
-        return _finish(dec_enum)
+        return dec_enum
     if wb == "fixed" and rb == "fixed":
         if wt["size"] != rt["size"]:
             raise TypeError(f"fixed size mismatch at {path}: "
                             f"{wt['size']} vs {rt['size']}")
-        return _finish(_make_decoder(wt, wnames, wns))
+        size = wt["size"]
+
+        def dec_fixed(buf, pos):
+            return bytes(buf[pos:pos + size]), pos + size
+        return dec_fixed
     if wb == "array" and rb == "array":
-        idec = _make_resolved_decoder(wt["items"], rt["items"], wnames,
-                                      rnames, wns, rns, path + "[]",
-                                      _cells)
+        idec = _make_decoder(wt["items"], rt["items"], wnames, rnames,
+                             wns, rns, path + "[]", cells)
 
         def dec_array(buf, pos):
             out = []
@@ -871,11 +768,10 @@ def _make_resolved_decoder(wt, rt, wnames, rnames, wns="", rns="",
                 for _ in range(cnt):
                     v, pos = idec(buf, pos)
                     out.append(v)
-        return _finish(dec_array)
+        return dec_array
     if wb == "map" and rb == "map":
-        vdec = _make_resolved_decoder(wt["values"], rt["values"],
-                                      wnames, rnames, wns, rns,
-                                      path + "{}", _cells)
+        vdec = _make_decoder(wt["values"], rt["values"], wnames, rnames,
+                             wns, rns, path + "{}", cells)
 
         def dec_map(buf, pos):
             out = {}
@@ -889,21 +785,26 @@ def _make_resolved_decoder(wt, rt, wnames, rnames, wns="", rns="",
                 for _ in range(cnt):
                     k, pos = _dec_str(buf, pos)
                     out[k], pos = vdec(buf, pos)
-        return _finish(dec_map)
+        return dec_map
     if wb == rb and wb in _DEC_PRIM:
-        return _finish(_make_decoder(wt, wnames, wns))
+        return _DEC_PRIM[wb]
     conv = _PROMOTE.get((wb, rb), "missing")
-    if conv != "missing":
-        base = _make_decoder(wt, wnames, wns)
-        if conv is None:
-            return _finish(base)
+    if conv == "missing":
+        raise TypeError(
+            f"cannot resolve writer {wb!r} against reader {rb!r} "
+            f"at {path}")
+    base = _DEC_PRIM[wb]
+    if conv is None:
+        return base
 
-        def dec_promoted(buf, pos):
-            v, pos = base(buf, pos)
-            return conv(v), pos
-        return _finish(dec_promoted)
-    raise TypeError(
-        f"cannot resolve writer {wb!r} against reader {rb!r} at {path}")
+    def dec_promoted(buf, pos):
+        v, pos = base(buf, pos)
+        return conv(v), pos
+    return dec_promoted
+
+
+# the container header's metadata: string keys → bytes values
+_META = {"type": "map", "values": "bytes"}
 
 
 def write_container(fh, avro_schema: dict, row_lists: list[list],
@@ -918,13 +819,9 @@ def write_container(fh, avro_schema: dict, row_lists: list[list],
         raise ValueError(f"unsupported avro codec {codec!r}")
     sync = _sync_marker(sync_seed)
     fh.write(MAGIC)
-    meta = {"avro.schema": json.dumps(avro_schema).encode(),
-            "avro.codec": codec.encode()}
-    fh.write(enc_long(len(meta)))
-    for k, v in meta.items():
-        fh.write(enc_str(k))
-        fh.write(enc_bytes(v))
-    fh.write(enc_long(0))
+    fh.write(_make_encoder(_META)(
+        {"avro.schema": json.dumps(avro_schema).encode(),
+         "avro.codec": codec.encode()}))
     fh.write(sync)
 
     enc_names: dict = {}
@@ -957,6 +854,19 @@ def write_container(fh, avro_schema: dict, row_lists: list[list],
     return total
 
 
+def _read_header(buf: memoryview) -> tuple[dict, bytes, bytes, int]:
+    """A container's header → (writer schema, codec, sync marker,
+    position of the first block)."""
+    if bytes(buf[:4]) != MAGIC:
+        raise ValueError("not an avro container file")
+    meta, pos = _make_decoder(_META)(buf, 4)
+    codec = meta.get("avro.codec", b"null")
+    if codec not in (b"null", b"", b"deflate"):
+        raise ValueError(f"unsupported avro codec {codec!r}")
+    return (json.loads(meta["avro.schema"].decode()), codec,
+            bytes(buf[pos:pos + 16]), pos + 16)
+
+
 def read_container(data: bytes,
                    reader_schema: dict | None = None
                    ) -> tuple[dict, list[dict]]:
@@ -967,47 +877,12 @@ def read_container(data: bytes,
     instead of the file's writer schema — added fields take their
     defaults, removed fields are skipped, renamed fields resolve via
     reader aliases, promotable primitives widen, enum gaps fall to the
-    reader's enum default (see :func:`_make_resolved_decoder`).  Rows
-    come back reader-shaped; the returned schema dict is still the
-    WRITER's (what the file physically carries)."""
+    reader's enum default (see :func:`_make_decoder`).  Rows come back
+    reader-shaped; the returned schema dict is still the WRITER's
+    (what the file physically carries)."""
     buf = memoryview(data)
-    if bytes(buf[:4]) != MAGIC:
-        raise ValueError("not an avro container file")
-    pos = 4
-    meta = {}
-    while True:
-        cnt, pos = dec_long(buf, pos)
-        if cnt == 0:
-            break
-        if cnt < 0:  # negative-count map block: abs count + byte size
-            cnt = -cnt
-            _, pos = dec_long(buf, pos)
-        for _ in range(cnt):
-            klen, pos = dec_long(buf, pos)
-            key = bytes(buf[pos:pos + klen]).decode()
-            pos += klen
-            vlen, pos = dec_long(buf, pos)
-            meta[key] = bytes(buf[pos:pos + vlen])
-            pos += vlen
-    schema = json.loads(meta["avro.schema"].decode())
-    codec = meta.get("avro.codec", b"null")
-    if codec not in (b"null", b"", b"deflate"):
-        raise ValueError(f"unsupported avro codec {codec!r}")
-    sync = bytes(buf[pos:pos + 16])
-    pos += 16
-
-    dec_names: dict = {}
-    top_ns = _register_named(schema, dec_names)
-    if reader_schema is not None:
-        rnames: dict = {}
-        rns = _register_named(reader_schema, rnames)
-        rdec = _make_resolved_decoder(schema, reader_schema, dec_names,
-                                      rnames, top_ns, rns)
-        fdecs = None
-    else:
-        fdecs = [(f["name"], _make_decoder(f["type"], dec_names,
-                                           top_ns))
-                 for f in schema["fields"]]
+    schema, codec, sync, pos = _read_header(buf)
+    dec = _make_decoder(schema, reader_schema or schema)
     rows = []
     end = len(buf)
     while pos < end:
@@ -1021,12 +896,7 @@ def read_container(data: bytes,
             block = memoryview(zlib.decompress(bytes(block), -15))
         bpos = 0
         for _ in range(cnt):
-            if fdecs is None:
-                row, bpos = rdec(block, bpos)
-            else:
-                row = {}
-                for name, fd in fdecs:
-                    row[name], bpos = fd(block, bpos)
+            row, bpos = dec(block, bpos)
             rows.append(row)
         if bytes(buf[pos:pos + 16]) != sync:
             raise ValueError("sync marker mismatch")
@@ -1145,7 +1015,8 @@ def read_avro(spark: SparkSession, path: str,
               reader_schema: dict | None = None) -> DataFrame:
     """Read a directory (or glob) of Avro container files written by
     any spec-compliant implementation (primitive, nullable-union,
-    record/array/map, and timestamp-micros/date logical types).
+    record/array/map, enum, fixed, named-type references, and
+    timestamp-micros/date/decimal logical types).
     Decode is distributed over the ``binaryFile`` source; the schema
     comes from the first file's embedded header.
 
@@ -1162,42 +1033,17 @@ def read_avro(spark: SparkSession, path: str,
     head = bf.select("content").limit(1).collect()
     if not head:
         raise ValueError(f"no avro files under {path}")
-    if reader_schema is not None:
-        avro = reader_schema
-    else:
-        avro, _ = read_container(bytes(head[0].content))
+    # the header alone gives the schema: no rows decode on the driver
+    avro = reader_schema or _read_header(memoryview(head[0].content))[0]
     sschema = avro_to_spark_schema(avro)
-    tz = spark.conf.get("spark.sql.session.timeZone")
-
-    # avro type → arrow type, declared explicitly so nullable integer
-    # columns round-trip exact (a pandas DataFrame would coerce an
-    # [int, None] list to float64, rounding |v| > 2^53)
-    def _arrow_type(at):
-        import pyarrow as pa
-        if isinstance(at, list):
-            at = [t for t in at if t != "null"][0]
-        if isinstance(at, dict):
-            lt = at.get("logicalType")
-            if lt == "timestamp-micros":
-                return pa.timestamp("us", tz=tz)
-            if lt == "date":
-                return pa.date32()
-            if lt == "decimal":
-                return pa.decimal128(at["precision"], at["scale"])
-            t = at["type"]
-            if t == "record":
-                return pa.struct([pa.field(f["name"],
-                                           _arrow_type(f["type"]))
-                                  for f in at["fields"]])
-            if t == "array":
-                return pa.list_(_arrow_type(at["items"]))
-            if t == "map":
-                return pa.map_(pa.string(), _arrow_type(at["values"]))
-            at = t
-        return {"long": pa.int64(), "int": pa.int32(),
-                "double": pa.float64(), "float": pa.float32(),
-                "string": pa.string(), "boolean": pa.bool_(),
-                "bytes": pa.binary()}[at]
+    # the Arrow schema comes from the Spark one, so every column type
+    # the schema mapping accepts (enum, fixed, named references) has
+    # an Arrow type; building from Python lists under it keeps nullable
+    # integers exact (a pandas frame would coerce an [int, None] list
+    # to float64, rounding |v| > 2^53) and takes avro's UTC epoch
+    # micros / epoch days as timestamp / date values directly
+    from pyspark.sql.pandas.types import to_arrow_schema
+    aschema = to_arrow_schema(sschema)
 
     def dec(batches):
         import pyarrow as pa
@@ -1205,21 +1051,6 @@ def read_avro(spark: SparkSession, path: str,
             for content in batch.column(0).to_pylist():
                 _, rows = read_container(bytes(content),
                                          reader_schema=reader_schema)
-                arrays, names = [], []
-                for f in avro["fields"]:
-                    name = f["name"]
-                    vals = [r[name] for r in rows]
-                    atype = _arrow_type(f["type"])
-                    if pa.types.is_timestamp(atype):
-                        # avro micros are UTC epoch; an int64→timestamp
-                        # cast on a tz-aware type reinterprets exactly
-                        arr = pa.array(vals, pa.int64()).cast(atype)
-                    elif pa.types.is_date32(atype):
-                        arr = pa.array(vals, pa.int32()).cast(atype)
-                    else:
-                        arr = pa.array(vals, atype)
-                    arrays.append(arr)
-                    names.append(name)
-                yield pa.RecordBatch.from_arrays(arrays, names)
+                yield pa.RecordBatch.from_pylist(rows, schema=aschema)
 
     return bf.select("content").mapInArrow(dec, sschema)

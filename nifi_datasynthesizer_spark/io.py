@@ -212,15 +212,16 @@ def write(df: DataFrame, path: str, fmt: str = "parquet",
         # NiFi's Avro record writer maps to the external spark-avro
         # module (built-in since 2.4 but not on every classpath);
         # without it, avro_io.write_avro/read_avro provide a
-        # spec-compliant flat-record fallback (pure-Python container
-        # encoder, cross-validated against the bundled Java avro
-        # implementation in tests/test_io.py)
+        # spec-compliant pure-Python container codec (nested record,
+        # array and map columns, decimal, enum, fixed, schema
+        # resolution), cross-validated against the bundled Java avro
+        # implementation in tests/test_io.py
         raise NotImplementedError(
             "avro sink needs the spark-avro module on the classpath "
             "(--packages org.apache.spark:spark-avro_2.13:<spark-version>); "
             "available here: parquet, orc, json, csv — or use "
-            "nifi_datasynthesizer_spark.avro_io.write_avro for flat "
-            "record schemas without the module")
+            "nifi_datasynthesizer_spark.avro_io.write_avro, the "
+            "pure-Python container writer, without the module")
     if partition_by:
         # co-locate each output partition's rows before the write:
         # without this every task writes a file per partition value

@@ -332,8 +332,9 @@ def fm_distinct_rollup(df: DataFrame, group_col: str = "event_type",
         scoped(regs.groupBy(*keys).agg(F.sum("reg").alias("sum_reg")),
                keys, scope, est.alias("est_distinct"))
         for regs, _, keys, scope in levels])
+    # count(id), not count(*): a NULL id is no distinct value
     exact = reduce(DataFrame.unionByName, [
-        scoped(ids.groupBy(*keys).agg(F.count("*").alias("exact_distinct")),
+        scoped(ids.groupBy(*keys).agg(F.count(id_col).alias("exact_distinct")),
                keys, scope, "exact_distinct")
         for _, ids, keys, scope in levels])
     return sk.join(exact, ["scope", group_col, "day"])

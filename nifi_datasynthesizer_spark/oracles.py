@@ -1963,7 +1963,8 @@ def fm_rollup_sql(group_col: str = "event_type", id_col: str = "user_id",
 WITH h AS (SELECT {group_col} AS grp, CAST(ts AS DATE) AS day,
                   {h60_sql(f"CAST({id_col} AS VARCHAR)")} AS h
            FROM {table}),
-e AS (SELECT grp, day, h % {buckets} AS b, h // {buckets} AS r FROM h),
+e AS (SELECT grp, day, h % {buckets} AS b, h // {buckets} AS r FROM h
+      WHERE h IS NOT NULL),
 rr AS (SELECT grp, day, b,
               CASE WHEN r = 0 THEN {_RHO_CAP}
                    ELSE bit_count((r & -r) - 1) + 1 END AS rho

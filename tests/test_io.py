@@ -1154,6 +1154,41 @@ def test_read_avro_mixed_generations(spark, tmp_path):
     assert dict(df.dtypes)["score"] == "bigint"
 
 
+def test_read_avro_enum_fixed_named_reference_columns(spark, tmp_path):
+    """read_avro takes every column type the schema mapping accepts:
+    enum (string), fixed (binary) and a named reference to an earlier
+    record come back as Spark columns, decoded per file on the
+    executors — with and without a reader schema."""
+    from nifi_datasynthesizer_spark import avro_io as AV
+
+    schema = {"type": "record", "name": "top", "fields": [
+        {"name": "color", "type": {"type": "enum", "name": "col",
+                                   "symbols": ["RED", "GREEN"]}},
+        {"name": "tag", "type": ["null", {"type": "fixed",
+                                          "name": "tag2", "size": 2}]},
+        {"name": "pt", "type": {"type": "record", "name": "pair",
+                                "fields": [{"name": "u", "type": "long"},
+                                           {"name": "c", "type": "col"}]}},
+        {"name": "pt2", "type": "pair"},
+    ]}
+    rows = [["RED", "GREEN"], [b"ab", None],
+            [{"u": 1, "c": "GREEN"}, {"u": 2, "c": "RED"}],
+            [{"u": 3, "c": "RED"}, {"u": 4, "c": "GREEN"}]]
+    with open(tmp_path / "part-0.avro", "wb") as fh:
+        AV.write_container(fh, schema, rows, sync_seed="efn")
+    want = [("RED", b"ab", (1, "GREEN"), (3, "RED")),
+            ("GREEN", None, (2, "RED"), (4, "GREEN"))]
+    for rs in (None, schema):
+        df = AV.read_avro(spark, str(tmp_path), reader_schema=rs)
+        assert dict(df.dtypes) == {
+            "color": "string", "tag": "binary",
+            "pt": "struct<u:bigint,c:string>",
+            "pt2": "struct<u:bigint,c:string>"}
+        got = sorted((r.color, None if r.tag is None else bytes(r.tag),
+                      tuple(r.pt), tuple(r.pt2)) for r in df.collect())
+        assert got == sorted(want)
+
+
 def test_avro_resolution_recursive_and_writer_null(spark):
     """Two r11 ADVICE fixes on the resolved-decoder path: (a) a
     spec-legal union-guarded RECURSIVE record passed as reader_schema
@@ -1211,6 +1246,37 @@ def test_avro_resolution_recursive_and_writer_null(spark):
         {"name": "gone", "type": ["string", "long"]}]}
     with _pt.raises(TypeError, match="null"):
         AV.read_container(buf2.getvalue(), reader_schema=rbad)
+
+
+def test_avro_writer_only_field_shares_named_type():
+    """A writer-only field is decoded under its own schema and
+    discarded, even when its named type is also resolved against an
+    evolved reader type elsewhere: the two compile to separate
+    decoders, so the kept field still takes the reader's shape."""
+    import io as _bio
+
+    from nifi_datasynthesizer_spark import avro_io as AV
+
+    wnode = {"type": "record", "name": "node", "fields": [
+        {"name": "val", "type": "long"},
+        {"name": "next", "type": ["null", "node"]}]}
+    rnode = {"type": "record", "name": "node", "fields": [
+        {"name": "val", "type": "long"},
+        {"name": "tag", "type": "string", "default": "t"},
+        {"name": "next", "type": ["null", "node"]}]}
+    wsch = {"type": "record", "name": "l", "fields": [
+        {"name": "old", "type": wnode}, {"name": "head", "type": "node"}]}
+    rsch = {"type": "record", "name": "l", "fields": [
+        {"name": "head", "type": rnode}]}
+    buf = _bio.BytesIO()
+    AV.write_container(buf, wsch, [[{"val": 9, "next": None}],
+                                   [{"val": 1, "next": {"val": 2,
+                                                        "next": None}}]],
+                       sync_seed="wonly")
+    _, got = AV.read_container(buf.getvalue(), reader_schema=rsch)
+    assert got == [{"head": {"val": 1, "tag": "t",
+                             "next": {"val": 2, "tag": "t",
+                                      "next": None}}}]
 
 
 def test_avro_resolution_of_java_written_file(spark):

@@ -3080,18 +3080,23 @@ def test_register_sketches_skip_null_ids(spark):
     bucket that counted as a 65th of 64 registers, which drove HLL's
     estimate negative.  20,000 rows over 5,000 ids in one group plus 3
     NULL ids give the NULL-free rows, a group of only NULL ids has no
-    row, and the DuckDB mirrors agree on the same frame."""
+    row, and the DuckDB mirrors agree on the same frame.  The rollup's
+    exact rider counts no NULL id either, at any scope."""
+    import datetime
+
     import duckdb
 
     from nifi_datasynthesizer_spark.operators.sketches import (
-        fm_distinct, hll_distinct)
+        fm_distinct, fm_distinct_rollup, hll_distinct)
     from nifi_datasynthesizer_spark.oracles import (fm_distinct_sql,
+                                                    fm_rollup_sql,
                                                     hll_distinct_sql)
-    schema = "event_type string, user_id string"
-    clean = [("g", f"u{i % 5000}") for i in range(20_000)]
+    schema = "event_type string, user_id string, ts timestamp"
+    ts = datetime.datetime(2024, 3, 1, 12)
+    clean = [("g", f"u{i % 5000}", ts) for i in range(20_000)]
     dfc = spark.createDataFrame(clean, schema)
     dfd = spark.createDataFrame(
-        clean + [("g", None)] * 3 + [("nulls", None)] * 2, schema)
+        clean + [("g", None, ts)] * 3 + [("nulls", None, ts)] * 2, schema)
     con = duckdb.connect()
     con.register("events", dfd.toPandas())
     for op, sql in ((fm_distinct, fm_distinct_sql),
@@ -3101,6 +3106,11 @@ def test_register_sketches_skip_null_ids(spark):
         assert got == want, (op.__name__, got, want)
         assert want[0][0] == "g" and want[0][1] <= 64   # buckets_hit
         assert con.sql(sql()).fetchall() == got, op.__name__
+    want = sorted(tuple(r) for r in fm_distinct_rollup(dfc).collect())
+    got = sorted(tuple(r) for r in fm_distinct_rollup(dfd).collect())
+    assert got == want and len(want) == 3
+    assert {r[-1] for r in want} == {5000}              # exact_distinct
+    assert sorted(con.sql(fm_rollup_sql()).fetchall()) == got
 
 
 def test_kmv_twins_share_one_core(spark):
