@@ -1195,15 +1195,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["synth_identifiers"] = synth_identifiers
 
     def synth_phone_numbers(spark, sf):
-        return SZ.phone_numbers(SYNTH_N, area_code=555, seed=3).df(spark)
+        return SZ.phone_numbers(SYNTH_N, area_code=555, seed=3).dataframe(spark)
     q["synth_phone_numbers"] = synth_phone_numbers
 
     def synth_text_messages(spark, sf):
-        return SZ.text_messages(SYNTH_N, words=12, seed=4).df(spark)
+        return SZ.text_messages(SYNTH_N, words=12, seed=4).dataframe(spark)
     q["synth_text_messages"] = synth_text_messages
 
     def synth_text_blocks(spark, sf):
-        return SZ.text_blocks(SYNTH_N, words=40, seed=13).df(spark)
+        return SZ.text_blocks(SYNTH_N, words=40, seed=13).dataframe(spark)
     q["synth_text_blocks"] = synth_text_blocks
 
     def remove_path(spark, sf):
@@ -1220,13 +1220,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def synth_markov_text(spark, sf):
         # n/words sized so the DuckDB list_reduce replay stays cheap
-        return SZ.markov_text(5000, words=16, seed=5).df(spark)
+        return SZ.markov_text(5000, words=16, seed=5).dataframe(spark)
     q["synth_markov_text"] = synth_markov_text
 
     def synth_markov_sms(spark, sf):
         # TextMessage.java parity: produceText char-budget message
         return SZ.text_messages(2000, source_area=212, words=20, seed=6,
-                                markov_chars=80).df(spark)
+                                markov_chars=80).dataframe(spark)
     q["synth_markov_sms"] = synth_markov_sms
 
     def synth_transactions(spark, sf):
@@ -1235,7 +1235,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["synth_transactions"] = synth_transactions
 
     def synth_iot(spark, sf):
-        return SZ.iot_data_flat(n_devices=200, readings=50, seed=6).df(spark)
+        return SZ.iot_data_flat(n_devices=200, readings=50, seed=6).dataframe(spark)
     q["synth_iot"] = synth_iot
 
     def synth_commuter(spark, sf):
@@ -1358,14 +1358,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         """LogGenerator.java family: correlated web/query logs — per
         user sticky cookie/IP/geo, Poisson-ish sessions, Pitman–Yor
         long-tail query terms, slow-word response times."""
-        return SZ.weblog(n_users=500, events_per_user=20, seed=19).df(spark)
+        return SZ.weblog(n_users=500, events_per_user=20, seed=19).dataframe(spark)
     q["synth_weblog"] = synth_weblog
 
     def synth_purchases(spark, sf):
         """PurchaseLog.java: web purchase logs — sticky user profiles,
         exponential session lengths (grid + mask, no explode), window
         cumsum hit times, campaign/keyword-boosted purchase events."""
-        return SZ.purchase_log(n_users=300, max_hits=128, seed=23).df(spark)
+        return SZ.purchase_log(n_users=300, max_hits=128, seed=23).dataframe(spark)
     q["synth_purchases"] = synth_purchases
 
     def synth_weblog_lines(spark, sf):
@@ -1379,7 +1379,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         values like 0.05-ms units differently from the reference),
         and the carry into the integer digit falls out of the same
         div/mod pair."""
-        w = SZ.weblog(n_users=200, events_per_user=10, seed=19).df(spark)
+        w = SZ.weblog(n_users=200, events_per_user=10, seed=19).dataframe(spark)
         t_str = F.expr(
             "concat(CAST((t_us + 500) div 1000000 AS STRING), '.', "
             "lpad(CAST(((t_us + 500) div 1000) % 1000 AS STRING), 3, '0'))")
@@ -3288,14 +3288,14 @@ GROUP BY cohort, day_offset ORDER BY cohort, day_offset"""
     # synthesis replays: exact SQL mirrors emitted by the compiler
     o["synth_basic"] = compile_schema(SYNTH_BASIC_SCHEMA, seed=1).duckdb_sql(SYNTH_N)
     o["synth_identifiers"] = compile_schema(SYNTH_IDENT_SCHEMA, seed=2).duckdb_sql(SYNTH_N)
-    o["synth_phone_numbers"] = SZ.phone_numbers(SYNTH_N, area_code=555, seed=3).sql()
-    o["synth_text_messages"] = SZ.text_messages(SYNTH_N, words=12, seed=4).sql()
-    o["synth_markov_text"] = SZ.markov_text(5000, words=16, seed=5).sql()
+    o["synth_phone_numbers"] = SZ.phone_numbers(SYNTH_N, area_code=555, seed=3).duckdb_sql()
+    o["synth_text_messages"] = SZ.text_messages(SYNTH_N, words=12, seed=4).duckdb_sql()
+    o["synth_markov_text"] = SZ.markov_text(5000, words=16, seed=5).duckdb_sql()
     o["synth_markov_sms"] = SZ.text_messages(2000, source_area=212, words=20,
-                                             seed=6, markov_chars=80).sql()
+                                             seed=6, markov_chars=80).duckdb_sql()
     o["synth_transactions"] = SZ.transactions_sql(
         n_people=2000, max_tx=5, n_terminals=100, invalid_rate=0.05, seed=5)
-    o["synth_iot"] = SZ.iot_data_flat(n_devices=200, readings=50, seed=6).sql()
+    o["synth_iot"] = SZ.iot_data_flat(n_devices=200, readings=50, seed=6).duckdb_sql()
     o["synth_exotic_scalar"] = compile_schema(
         SYNTH_EXOTIC_SCALAR_SCHEMA, seed=11).duckdb_sql(SYNTH_N)
     _ex_nested = compile_schema(
@@ -3307,7 +3307,7 @@ SELECT rec_id,
        {_sql_arr_ppm('vec')} AS vec,
        {_sql_arr_str('grid')} AS grid
 FROM ({_ex_nested})"""
-    o["synth_text_blocks"] = SZ.text_blocks(SYNTH_N, words=40, seed=13).sql()
+    o["synth_text_blocks"] = SZ.text_blocks(SYNTH_N, words=40, seed=13).duckdb_sql()
     _rp = compile_schema(
         [{"name": "rec_id", "class": "id"},
          {"name": "meta", "class": "map", "value": [
@@ -3326,11 +3326,11 @@ FROM ({_ex_nested})"""
         seed=17).duckdb_sql(SYNTH_N)
     o["synth_cpoc"] = SZ.cpoc_events_sql(n_users=1000, max_tx=16, seed=12)
     o["synth_weblog"] = SZ.weblog(n_users=500, events_per_user=20,
-                                  seed=19).sql()
+                                  seed=19).duckdb_sql()
     o["synth_purchases"] = SZ.purchase_log(n_users=300, max_hits=128,
-                                           seed=23).sql()
+                                           seed=23).duckdb_sql()
     o["synth_weblog_lines"] = f"""
-WITH w AS ({SZ.weblog(n_users=200, events_per_user=10, seed=19).sql()})
+WITH w AS ({SZ.weblog(n_users=200, events_per_user=10, seed=19).duckdb_sql()})
 SELECT line_id,
        concat_ws(',',
          CAST((t_us + 500) // 1000000 AS VARCHAR) || '.' ||

@@ -141,7 +141,7 @@ def main() -> None:
                  .dataframe(spark, BENCH_SYNTH_N))
     _synth_bench("synth_iot_2m",
                  lambda: SZ.iot_data_flat(n_devices=BENCH_SYNTH_N // 100,
-                                          readings=100, seed=6).df(spark))
+                                          readings=100, seed=6).dataframe(spark))
     _synth_bench("synth_transactions_2m",
                  lambda: SZ.transactions_df(
                      spark, n_people=BENCH_SYNTH_N // 5, max_tx=5,

@@ -579,7 +579,7 @@ def _json_default(rt, names, ns, dflt, path):
     raise TypeError(f"unsupported default for {rt!r} at {path}")
 
 
-def _base_type(at):
+def _type_name(at):
     return at["type"] if isinstance(at, dict) else at
 
 
@@ -643,7 +643,7 @@ def _resolve_pair(wt, rt, wnames, rnames, wns, rns, path, cells):
             return inner(buf, pos)
         return dec_union
     if isinstance(rt, list):  # writer non-union, reader nullable
-        if _base_type(wt) == "null":
+        if _type_name(wt) == "null":
             # spec: writer null resolves against the reader union's
             # null branch
             if "null" not in rt:
@@ -654,7 +654,7 @@ def _resolve_pair(wt, rt, wnames, rnames, wns, rns, path, cells):
         return _make_decoder(wt, _union_branch(rt)[0], wnames, rnames,
                              wns, rns, path, cells)
 
-    wb, rb = _base_type(wt), _base_type(rt)
+    wb, rb = _type_name(wt), _type_name(rt)
     if wb == rb and wb in ("record", "enum", "fixed"):
         if not _names_match(wt, rt, wns, rns):
             raise TypeError(

@@ -27,40 +27,36 @@ DAY_S = 86400
 
 
 class Ctx:
-    """Compilation context: row-index expr + salt path.
+    """Compilation context: row-index expr + salt path + the table's lets.
 
-    ``helpers`` (when the schema compiler passes a shared dict) is the
-    column-level common-subexpression stage: a sampler whose VALUE
-    expression is referenced many times can ``bind_col`` it once and
-    reference it by name — the duplicated subtree becomes a projected
-    column in a preceding select, which whole-stage codegen fuses away
-    at runtime but which cuts Catalyst ANALYSIS from O(refs·|subtree|)
-    to O(refs) (imei: 4.5 s → 0.1 s of driver time).  Contexts built
-    outside the schema compiler (synthesizers compose their own
-    selects) leave ``helpers`` as None and get the inline expression
-    back unchanged.
+    ``lets`` is the generated table's dict of named intermediates
+    (:class:`~.schema.CompiledSchema`'s first projection), shared by
+    every context of one table: a sampler whose VALUE expression is
+    referenced many times can ``bind_col`` it once and reference it by
+    name — the duplicated subtree becomes a projected column in a
+    preceding select, which whole-stage codegen fuses away at runtime
+    but which cuts Catalyst ANALYSIS from O(refs·|subtree|) to O(refs)
+    (imei: 4.5 s → 0.1 s of driver time).
     """
 
-    def __init__(self, i: D, seed: int = 0, path: str = "$",
-                 helpers: dict | None = None):
+    def __init__(self, i: D, seed: int, path: str, lets: dict[str, D]):
         self.i = i
         self.seed = seed
         self.path = path
-        self.helpers = helpers
+        self.lets = lets
 
     def child(self, name: str) -> "Ctx":
-        return Ctx(self.i, self.seed, f"{self.path}.{name}", self.helpers)
+        return Ctx(self.i, self.seed, f"{self.path}.{name}", self.lets)
 
     def salt(self, *extra) -> int:
         return salt_of(self.seed, self.path, *extra)
 
     def bind_col(self, tag: str, d: D) -> D:
-        """Bind ``d`` as a named helper column and return a reference
-        to it (both dialects); no-op passthrough without a registry."""
-        if self.helpers is None:
-            return d
-        name = f"__b{len(self.helpers)}_{tag}"
-        self.helpers[name] = d
+        """Bind ``d`` as a named let and return a reference to it (both
+        dialects).  ``d`` may reference only the row index ``i``, never
+        another let: all lets render in ONE projection over the index."""
+        name = f"__b{len(self.lets)}_{tag}"
+        self.lets[name] = d
         return D(f'"{name}"', f"`{name}`")
 
 
@@ -792,7 +788,8 @@ def s_changer(spec, ctx):
     every = int(spec.get("every", 10))
     sub = dict(spec.get("value", {"class": "word"}))
     block = X.cast_long(X.idiv(ctx.i, every))
-    return compile_field(sub, Ctx(block, ctx.seed, ctx.path + ".changer"))
+    return compile_field(sub, Ctx(block, ctx.seed, ctx.path + ".changer",
+                                  ctx.lets))
 
 
 def s_long_tail(spec, ctx):

@@ -12,6 +12,8 @@ JIT-compile, and the session's ``spark.sql.codegen.hugeMethodLimit``
 then sends it to Spark's split, compiled projection instead of the
 bytecode interpreter (see ``session.get_spark``).  ``duckdb_sql(n)``
 returns the exact replay query used for the correctness oracle.
+:class:`CompiledSchema` is the one generated-table type: the canned
+generators in ``synthesizers.py`` build it by hand, with a fixed ``n``.
 """
 
 from __future__ import annotations
@@ -29,23 +31,40 @@ DEFAULT_ROWS_PER_PARTITION = 2_000_000
 
 
 class CompiledSchema:
+    """A generated table: ``(name, D)`` columns over the row index ``i``.
+
+    ``lets`` holds the named intermediates (``Ctx.bind_col``), projected
+    in a FIRST select so a many-referenced value expression is ANALYZED
+    once; Catalyst keeps the two selects apart when merging would
+    duplicate non-cheap expressions (CollapseProject's cost check), and
+    whole-stage codegen fuses them into one stage at runtime.  ``where``
+    is an optional row mask evaluated after the lets (it may reference
+    them) — variable-length generators emit a fixed grid and mask the
+    tail, keeping generation a narrow map with no per-row explode.
+    ``n`` is an optional fixed row count (the canned generators'), used
+    when ``dataframe``/``duckdb_sql`` get none.
+    """
+
     def __init__(self, columns: list[tuple[str, D]],
-                 helpers: dict[str, D] | None = None):
+                 lets: dict[str, D] | None = None,
+                 where: D | None = None, n: int | None = None):
         self.columns = columns
-        # column-level CSE stage (Ctx.bind_col): helper columns are
-        # projected in a preceding select so a many-referenced value
-        # expression is ANALYZED once; whole-stage codegen fuses the
-        # two selects back into one stage at runtime
-        self.helpers = helpers or {}
+        self.lets = lets or {}
+        self.where = where
+        self.n = n
 
-    def _with_helpers(self, base: DataFrame) -> DataFrame:
-        if not self.helpers:
-            return base
+    def _select(self, base: DataFrame, keep=()) -> DataFrame:
+        if self.lets:
+            base = base.select(
+                "*", *[d.c.alias(name) for name, d in self.lets.items()])
+        if self.where is not None:
+            base = base.filter(self.where.c)
         return base.select(
-            "*", *[d.c.alias(n) for n, d in self.helpers.items()])
+            *keep, *[d.c.alias(name) for name, d in self.columns])
 
-    def dataframe(self, spark: SparkSession, n: int,
+    def dataframe(self, spark: SparkSession, n: int | None = None,
                   partitions: int | None = None) -> DataFrame:
+        n = self.n if n is None else n
         if partitions is None:
             # use every core as soon as n is non-trivial; above
             # ROWS_PER_PARTITION per core, grow the task count so a
@@ -53,17 +72,18 @@ class CompiledSchema:
             par = spark.sparkContext.defaultParallelism
             partitions = max(1, min(n, max(par, n // DEFAULT_ROWS_PER_PARTITION)))
         base = spark.range(0, n, 1, partitions).withColumnRenamed("id", "i")
-        return self._with_helpers(base).select(
-            *[d.c.alias(name) for name, d in self.columns])
+        return self._select(base)
 
-    def duckdb_sql(self, n: int) -> str:
+    def duckdb_sql(self, n: int | None = None) -> str:
+        n = self.n if n is None else n
         cols = ", ".join(f'{d.s} AS "{name}"' for name, d in self.columns)
         src = f"range(0, {n}) AS t(i)"
-        if self.helpers:
-            hcols = ", ".join(f'{d.s} AS "{n_}"'
-                           for n_, d in self.helpers.items())
-            src = f"(SELECT i, {hcols} FROM range(0, {n}) AS r(i)) AS t"
-        return f"SELECT {cols} FROM {src}"
+        if self.lets:
+            lcols = ", ".join(f'{d.s} AS "{name}"'
+                              for name, d in self.lets.items())
+            src = f"(SELECT i, {lcols} FROM range(0, {n}) AS r(i)) AS t"
+        where = "" if self.where is None else f" WHERE {self.where.s}"
+        return f"SELECT {cols} FROM {src}{where}"
 
     def project(self, df: DataFrame, index_col: str = "i",
                 keep: list[str] | None = None) -> DataFrame:
@@ -71,9 +91,7 @@ class CompiledSchema:
         row-index column (batch or streaming) — e.g. a rate source's
         ``value``.  ``keep`` passes through extra input columns."""
         base = df.withColumn("i", F.col(index_col).cast("long"))
-        extra = [F.col(c) for c in (keep or []) if c != "i"]
-        return self._with_helpers(base).select(
-            *extra, *[d.c.alias(name) for name, d in self.columns])
+        return self._select(base, [c for c in keep or [] if c != "i"])
 
 
 def compile_schema(schema, seed: int = 0) -> CompiledSchema:
@@ -84,11 +102,11 @@ def compile_schema(schema, seed: int = 0) -> CompiledSchema:
         raise ValueError("schema must be a JSON array of field specs")
     i = D("i", "i")
     out: list[tuple[str, D]] = []
-    helpers: dict[str, D] = {}
+    lets: dict[str, D] = {}
     for spec in schema:
         spec = dict(spec)
         name = spec.get("name", spec.get("class"))
-        ctx = Ctx(i, seed, f"$.{name}", helpers)
+        ctx = Ctx(i, seed, f"$.{name}", lets)
         r = compile_field(spec, ctx)
         if isinstance(r, dict):
             if spec.get("class") == "flatten" or "name" not in spec:
@@ -99,7 +117,7 @@ def compile_schema(schema, seed: int = 0) -> CompiledSchema:
                 out.append((name, X.struct_(r)))
         else:
             out.append((name, r))
-    return CompiledSchema(out, helpers)
+    return CompiledSchema(out, lets)
 
 
 def synthesize(spark: SparkSession, schema, n: int, seed: int = 0,

@@ -2,9 +2,13 @@
 
 Each processor from ``nifi-datasynthesizer-processors/src/main/java/
 org/apache/nifi/datasynthesizer/processors/synthesizers/`` becomes a
-function returning a DataFrame.  All are built on the same pure
-column algebra as the schema compiler, so they parallelize without
-shuffle and replay exactly in DuckDB.
+function returning the schema compiler's one table type, a
+:class:`~.schema.CompiledSchema` with a fixed row count (the reference
+runs its canned JSON schemas through log-synth's one SchemaSampler):
+``.dataframe(spark)`` builds it, ``.duckdb_sql()`` is its oracle
+replay.  A few (nested, simulated or joined outputs) return a
+DataFrame directly.  All are built on the same pure column algebra, so
+they parallelize without shuffle and replay exactly in DuckDB.
 
 Hierarchical outputs (device → readings) are produced by *index
 arithmetic* instead of explode: a grid of ``n_parent × n_child`` rows
@@ -45,80 +49,17 @@ from .samplers import (
     s_uuid,
     s_zip,
 )
+from .schema import CompiledSchema, compile_schema
 
 
 def _i() -> D:
     return D("i", "i")
 
 
-def _base(spark: SparkSession, n: int, partitions: int | None = None):
-    if partitions is None:
-        par = spark.sparkContext.defaultParallelism
-        partitions = max(1, min(n, max(par, n // 2_000_000)))
-    return spark.range(0, n, 1, partitions).withColumnRenamed("id", "i")
-
-
-class Generated:
-    """A generated table plus its DuckDB replay SQL (oracle mirror).
-
-    ``lets`` is an optional list of named intermediate bindings
-    evaluated in a FIRST projection; the output columns then reference
-    them by name (``_ref``).  This is the expression-level "let" the
-    string-composed dual layer otherwise lacks: a draw referenced k
-    times would inline its (md5-heavy) text k times, and generators
-    like weblog blow up to tens of KB of SQL — pure parse/analyze/
-    codegen overhead.  Catalyst keeps the two projections separate
-    when merging would duplicate non-cheap expressions (CollapseProject
-    cost check), so the let evaluates once per row at execution too.
-    """
-
-    def __init__(self, columns: list[tuple[str, D]], n: int,
-                 post_sql: str | None = None,
-                 lets: list[tuple[str, D]] | None = None,
-                 where: D | None = None):
-        self.columns = columns
-        self.n = n
-        self.post_sql = post_sql  # e.g. trailing ORDER BY
-        self.lets = lets or []
-        # row predicate evaluated AFTER the lets projection (may
-        # reference let names) — variable-length generators emit a
-        # fixed grid and mask the tail, keeping generation a narrow
-        # map with no per-row explode
-        self.where = where
-
-    def df(self, spark: SparkSession, partitions: int | None = None) -> DataFrame:
-        base = _base(spark, self.n, partitions)
-        if self.lets:
-            base = base.select(
-                F.col("i"), *[d.c.alias(name) for name, d in self.lets])
-        if self.where is not None:
-            base = base.filter(self.where.c)
-        return base.select(*[d.c.alias(name) for name, d in self.columns])
-
-    def sql(self, n: int | None = None) -> str:
-        src = f"range(0, {n or self.n}) AS t(i)"
-        if self.lets:
-            lcols = ", ".join(f'{d.s} AS "{name}"' for name, d in self.lets)
-            src = (f"(SELECT i, {lcols} FROM range(0, {n or self.n}) "
-                   f"AS t(i)) AS t")
-        cols = ", ".join(f'{d.s} AS "{name}"' for name, d in self.columns)
-        q = f"SELECT {cols} FROM {src}"
-        if self.where is not None:
-            q += f" WHERE {self.where.s}"
-        if self.post_sql:
-            q += " " + self.post_sql
-        return q
-
-
-def _ref(name: str) -> D:
-    """Reference a ``lets`` binding (or the row index) by column name."""
-    return D(name, name)
-
-
 # ------------------------------------------------------------------ iot
 
 def iot_data_flat(n_devices: int = 100, readings: int = 100,
-                  seed: int = 0) -> Generated:
+                  seed: int = 0) -> CompiledSchema:
     """IotData.java + resources/generators/iot-data.json, flattened:
     one row per (device, reading).  device-id uuid, device-ip, home
     lat/lon from the zip universe, a 1/min arrival `time` and a
@@ -128,8 +69,9 @@ def iot_data_flat(n_devices: int = 100, readings: int = 100,
     i = _i()
     dev = X.cast_long(X.idiv(i, readings))
     j = X.cast_long(i % readings)
-    dctx = Ctx(dev, seed, "$.iot")
-    rctx = Ctx(i, seed, "$.iot.read")
+    lets: dict[str, D] = {}
+    dctx = Ctx(dev, seed, "$.iot", lets)
+    rctx = Ctx(i, seed, "$.iot.read", lets)
     zsub = s_zip({"onlyContinental": True, "fields": "latitude, longitude"}, dctx)
     t = X.cast_long(j * 60) + (X.floor(u01(i, rctx.salt("jit")) * 59.0) % 60) \
         + EPOCH_2013_08_01_S
@@ -152,14 +94,14 @@ def iot_data_flat(n_devices: int = 100, readings: int = 100,
         ("time", _fmt_epoch_s(t, "yyyy-MM-dd HH:mm:ss")),
         ("temp", temp_d),
     ]
-    return Generated(cols, n)
+    return CompiledSchema(cols, lets, n=n)
 
 
 def iot_data(spark: SparkSession, n_devices: int = 100, readings: int = 100,
              seed: int = 0) -> DataFrame:
     """Nested form matching the reference record shape: one row per
     device with an array<struct> of readings."""
-    flat = iot_data_flat(n_devices, readings, seed).df(spark)
+    flat = iot_data_flat(n_devices, readings, seed).dataframe(spark)
     return (flat.groupBy("device_seq", "device_id", "device_ip",
                          "latitude", "longitude")
             .agg(F.sort_array(F.collect_list(F.struct("reading_idx", "time", "temp")))
@@ -168,17 +110,19 @@ def iot_data(spark: SparkSession, n_devices: int = 100, readings: int = 100,
 
 # ------------------------------------------------------------ telephony
 
-def phone_numbers(n: int, area_code: int | None = None, seed: int = 0) -> Generated:
+def phone_numbers(n: int, area_code: int | None = None,
+                  seed: int = 0) -> CompiledSchema:
     """PhoneNumber.java: {phone_number: 'NNN-NNN-NNNN'}."""
-    ctx = Ctx(_i(), seed, "$.phone")
+    lets: dict[str, D] = {}
+    ctx = Ctx(_i(), seed, "$.phone", lets)
     spec = {"area_code": area_code} if area_code else {}
-    return Generated([("phone_number", s_phone(spec, ctx))], n)
+    return CompiledSchema([("phone_number", s_phone(spec, ctx))], lets, n=n)
 
 
 def text_messages(n: int, source_area: int | None = None,
                   dest_area: int | None = None, words: int = 20,
                   seed: int = 0,
-                  markov_chars: int | None = None) -> Generated:
+                  markov_chars: int | None = None) -> CompiledSchema:
     """TextMessage.java: src/dst numbers + IMEIs, timestamp, message.
 
     ``markov_chars`` switches the message body to the reference's
@@ -187,33 +131,35 @@ def text_messages(n: int, source_area: int | None = None,
     schema from ``textGen.produceText(textLength)``); default stays
     the cheap hash-chain text."""
     i = _i()
-    sctx = Ctx(i, seed, "$.sms.src")
-    dctx = Ctx(i, seed, "$.sms.dst")
-    mctx = Ctx(i, seed, "$.sms.msg")
+    lets: dict[str, D] = {}
+    sctx = Ctx(i, seed, "$.sms.src", lets)
+    dctx = Ctx(i, seed, "$.sms.dst", lets)
+    mctx = Ctx(i, seed, "$.sms.msg", lets)
     t = X.floor(u01(i, mctx.salt("ts")) * (3 * 365 * 86400.0)) + 1577836800
     if markov_chars is not None:
         msg = markov_message(words=3 + markov_chars // 3, seed=seed,
                              max_chars=markov_chars)
     else:
         msg = s_text({"length": words}, mctx)
-    return Generated([
+    return CompiledSchema([
         ("source_phone", s_phone({"area_code": source_area} if source_area else {}, sctx)),
         ("source_imei", s_imei({}, sctx)),
         ("destination_phone", s_phone({"area_code": dest_area} if dest_area else {}, dctx)),
         ("timestamp", _fmt_epoch_s(t, "yyyy-MM-dd HH:mm:ss")),
         ("message", msg),
-    ], n)
+    ], lets, n=n)
 
 
 # ----------------------------------------------------------------- text
 
-def text_blocks(n: int, words: int = 100, seed: int = 0) -> Generated:
+def text_blocks(n: int, words: int = 100, seed: int = 0) -> CompiledSchema:
     """TextGenerator.java: free-form text records.  The reference uses
     a Markov chain over a seed corpus (processors/data/MarkovChain.java);
     we chain word picks through the hash of the previous word index so
     bigram statistics are stable without any driver-side model."""
     i = _i()
-    ctx = Ctx(i, seed, "$.textgen")
+    lets: dict[str, D] = {}
+    ctx = Ctx(i, seed, "$.textgen", lets)
     # Markov-ish bigram coupling WITHOUT chaining whole index trees
     # (a k-deep chain is O(words²) expression text and trips the
     # analyzer's fixed-point limit): word_k mixes its own draw with the
@@ -229,7 +175,7 @@ def text_blocks(n: int, words: int = 100, seed: int = 0) -> Generated:
     joined = parts[0]
     for p in parts[1:]:
         joined = X.concat(joined, " ", p)
-    return Generated([("text", joined)], n)
+    return CompiledSchema([("text", joined)], lets, n=n)
 
 
 # A small original seed corpus for the Markov generator (the reference
@@ -360,7 +306,7 @@ def markov_message(words: int = 24, key_size: int = 3, seed: int = 0,
 
 def markov_text(n: int, words: int = 24, key_size: int = 3,
                 seed: int = 0, seed_text: str | None = None,
-                max_chars: int | None = None) -> Generated:
+                max_chars: int | None = None) -> CompiledSchema:
     """TextGenerator.java / MarkovChain.java: Markov-chain text.
 
     The reference walks a ``key_size``-gram chain over a seed corpus
@@ -384,14 +330,14 @@ def markov_text(n: int, words: int = 24, key_size: int = 3,
     """
     rec = D("CAST(i AS BIGINT)", "CAST(i AS BIGINT)")
     msg = markov_message(words, key_size, seed, seed_text, max_chars)
-    return Generated([("rec_id", rec), ("message", msg)], n)
+    return CompiledSchema([("rec_id", rec), ("message", msg)], n=n)
 
 
 # -------------------------------------------------------------- finance
 
 def transactions(n_people: int = 100, max_tx: int = 5,
                  n_terminals: int = 50, invalid_rate: float = 0.05,
-                 seed: int = 0) -> Generated:
+                 seed: int = 0) -> CompiledSchema:
     """Transactions.java: credit-card transactions.
 
     Flat grid n_people × max_tx; per-row keep-probability emulates the
@@ -405,8 +351,9 @@ def transactions(n_people: int = 100, max_tx: int = 5,
     i = _i()
     person = X.cast_long(X.idiv(i, max_tx))
     k = i % max_tx
-    pctx = Ctx(person, seed, "$.tx.person")
-    tctx = Ctx(i, seed, "$.tx")
+    lets: dict[str, D] = {}
+    pctx = Ctx(person, seed, "$.tx.person", lets)
+    tctx = Ctx(i, seed, "$.tx", lets)
     n_tx = uint(person, pctx.salt("ntx"), 0, max_tx + 1)  # per-person count
     keep = X.cast_long(k) < n_tx
     terminal = uint(i, tctx.salt("term"), 0, n_terminals)
@@ -424,21 +371,16 @@ def transactions(n_people: int = 100, max_tx: int = 5,
         ("transaction_timestamp", X.cast_long(t)),
         ("transaction_amount", X.when_chain([(is_invalid, amt_invalid)], amt_valid)),
         ("is_valid", X.when_chain([(is_invalid, X.lit(False))], X.lit(True))),
-        ("__keep", keep),
     ]
-    g = Generated(cols, n)
-    return g
+    return CompiledSchema(cols, lets, where=keep, n=n)
 
 
 def transactions_df(spark: SparkSession, **kw) -> DataFrame:
-    g = transactions(**kw)
-    return g.df(spark).filter(F.col("__keep")).drop("__keep")
+    return transactions(**kw).dataframe(spark)
 
 
-def transactions_sql(n: int | None = None, **kw) -> str:
-    g = transactions(**kw)
-    inner = g.sql(n)
-    return (f'SELECT * EXCLUDE ("__keep") FROM ({inner}) WHERE "__keep"')
+def transactions_sql(**kw) -> str:
+    return transactions(**kw).duckdb_sql()
 
 
 # ------------------------------------------------------------- commuter
@@ -574,7 +516,6 @@ def correlate(input_df: DataFrame, schema, key_col: str, universe: int,
     from pyspark.sql.functions import broadcast
 
     from .phash import h60
-    from .schema import compile_schema
 
     spark = input_df.sparkSession
     key_field = {"name": "__corr_i", "class": "id"}
@@ -593,7 +534,6 @@ def correlate_sql(table: str, schema, key_col: str, universe: int,
                   seed: int = 0, prefix: str = "corr_") -> str:
     """DuckDB oracle mirror of :func:`correlate` over a registered view."""
     from .phash import h60_sql
-    from .schema import compile_schema
 
     key_field = {"name": "__corr_i", "class": "id"}
     cs = compile_schema([key_field] + list(schema), seed)
@@ -640,7 +580,6 @@ _CPOC_DEFAULTS = {
 
 def _cpoc_parts(n_users: int, max_tx: int, seed: int):
     from .samplers import _epoch_utc
-    from .schema import compile_schema
     schema = [{"name": "user_id", "class": "id"},
               {"class": "common-point-of-compromise",
                "maxTransactions": max_tx, **_CPOC_DEFAULTS}]
@@ -789,7 +728,7 @@ def _pareto_rank(u: D, tail_pow: int, universe: int) -> D:
 
 
 def weblog(n_users: int = 500, events_per_user: int = 20,
-           seed: int = 0) -> Generated:
+           seed: int = 0) -> CompiledSchema:
     """LogGenerator.java web/query-log family: correlated log lines
     with per-user sticky identity and long-tail query terms.
 
@@ -821,11 +760,12 @@ def weblog(n_users: int = 500, events_per_user: int = 20,
     i = _i()
     user = X.cast_long(X.idiv(i, events_per_user))
     j = X.cast_long(i % events_per_user)
-    uctx = Ctx(user, seed, "$.weblog.user")
-    lctx = Ctx(i, seed, "$.weblog.line")
+    lets: dict[str, D] = {}
+    uctx = Ctx(user, seed, "$.weblog.user", lets)
+    lctx = Ctx(i, seed, "$.weblog.line", lets)
 
     # ---- let layer: every draw referenced more than once binds to a
-    # named intermediate (Generated.lets).  Before this, ip_rank's
+    # named intermediate (CompiledSchema.lets).  Before this, ip_rank's
     # text appeared 8× inside the dotted quad and each term rank 3×
     # (word syllables + slow test) — ~50 KB of SQL whose parse/analyze/
     # codegen dominated the query (~6 s plan + first-run compile for
@@ -853,26 +793,21 @@ def weblog(n_users: int = 500, events_per_user: int = 20,
     # Pitman–Yor pool), rank → dotted quad (same rank ⇒ same IP);
     # Pitman–Yor(1, 0.8) term tail ≈ Pareto with p=4 (analytic — no
     # literal rank table)
-    lets = [
-        ("u", user),
-        ("isn", is_new),
-        ("gus", gap_us),
-        ("ipr", _pareto_rank(u01(user, uctx.salt("iprank")), 2,
-                             _WL_IP_UNIVERSE)),
-        ("nt", n_terms),
-    ] + [(f"r{k}", _pareto_rank(u01(i, lctx.salt("term", k)), 4,
-                                _WL_TERM_UNIVERSE))
-         for k in range(_WL_MAX_TERMS)]
-
-    user_r, is_new_r, gap_us_r = _ref("u"), _ref("isn"), _ref("gus")
-    n_terms_r = _ref("nt")
-    ranks = [_ref(f"r{k}") for k in range(_WL_MAX_TERMS)]
-    uctx = Ctx(user_r, seed, "$.weblog.user")
+    user_r = lctx.bind_col("u", user)
+    is_new_r = lctx.bind_col("isn", is_new)
+    gap_us_r = lctx.bind_col("gus", gap_us)
+    ip_rank_r = lctx.bind_col("ipr", _pareto_rank(
+        u01(user, uctx.salt("iprank")), 2, _WL_IP_UNIVERSE))
+    n_terms_r = lctx.bind_col("nt", n_terms)
+    ranks = [lctx.bind_col(f"r{k}", _pareto_rank(
+        u01(i, lctx.salt("term", k)), 4, _WL_TERM_UNIVERSE))
+        for k in range(_WL_MAX_TERMS)]
+    uctx = Ctx(user_r, seed, "$.weblog.user", lets)
 
     # sticky per-user identity -----------------------------------------
     cookie = X.concat(_hex4(uint(user_r, uctx.salt("ck0"), 0, 65536)),
                       _hex4(uint(user_r, uctx.salt("ck1"), 0, 65536)))
-    ip = s_ipv4({}, Ctx(_ref("ipr"), seed, "$.weblog.ip"))
+    ip = s_ipv4({}, Ctx(ip_rank_r, seed, "$.weblog.ip", lets))
     geo_table = quantize_weights(
         _GEO_CODES, [(k + 1.0) ** -0.5 for k in range(len(_GEO_CODES))],
         table_size=256)
@@ -928,7 +863,7 @@ def weblog(n_users: int = 500, events_per_user: int = 20,
         ("query", query),
         ("response_us", response_us),
     ]
-    return Generated(cols, n, lets=lets)
+    return CompiledSchema(cols, lets, n=n)
 
 
 # --------------------------------------------------------- purchase log
@@ -940,7 +875,7 @@ _PL_HOT_TERMS = (V.WORDS[303], V.WORDS[777])
 
 
 def purchase_log(n_users: int = 300, max_hits: int = 128,
-                 seed: int = 0) -> Generated:
+                 seed: int = 0) -> CompiledSchema:
     """PurchaseLog.java web purchase logs (reference
     nifi-datasynthesizer-generators/src/main/java/com/mapr/
     PurchaseLog.java:52-131 with resources user-schema.txt and
@@ -971,8 +906,9 @@ def purchase_log(n_users: int = 300, max_hits: int = 128,
     i = _i()
     user = X.cast_long(X.idiv(i, max_hits))
     j = X.cast_long(i % max_hits)
-    uctx = Ctx(user, seed, "$.purchase.user")
-    hctx = Ctx(i, seed, "$.purchase.hit")
+    lets: dict[str, D] = {}
+    uctx = Ctx(user, seed, "$.purchase.user", lets)
+    hctx = Ctx(i, seed, "$.purchase.hit", lets)
 
     # session length floor(Exp(mean 30)), capped at the grid width
     n_hits = X.cast_long(X.least([
@@ -983,28 +919,27 @@ def purchase_log(n_users: int = 300, max_hits: int = 128,
         X.element(uint(i, hctx.salt("dwell"), 0, 256), _WL_EXPQ)
         * 20000.0))
     start_ms = X.cast_long(X.floor(
-        u01(user, uctx.salt("start")) * 2_592_000_000.0))
+        u01(user, uctx.salt("start")) * (30 * 86_400_000.0)))
 
-    lets = [
-        ("u", user), ("j", j), ("nh", n_hits), ("dt", dt_ms),
-        ("st", start_ms),
-        ("ctry", s_country({}, uctx)),
-        ("kw", pick(i, hctx.salt("kw"), V.WORDS)),
-        ("c0", X.cast_long(uint(i, hctx.salt("camp", 0), 0, 20))),
-        ("c1", X.cast_long(uint(i, hctx.salt("camp", 1), 0, 20))),
-        ("c2", X.cast_long(uint(i, hctx.salt("camp", 2), 0, 20))),
-    ]
-    user_r, j_r, nh_r = _ref("u"), _ref("j"), _ref("nh")
-    ctry, kw = _ref("ctry"), _ref("kw")
-    c0, c1, c2 = _ref("c0"), _ref("c1"), _ref("c2")
-    uctx = Ctx(user_r, seed, "$.purchase.user")
+    user_r = hctx.bind_col("u", user)
+    j_r = hctx.bind_col("j", j)
+    nh_r = hctx.bind_col("nh", n_hits)
+    dt_r = hctx.bind_col("dt", dt_ms)
+    st_r = hctx.bind_col("st", start_ms)
+    ctry = hctx.bind_col("ctry", s_country({}, uctx))
+    kw = hctx.bind_col("kw", pick(i, hctx.salt("kw"), V.WORDS))
+    c0, c1, c2 = (hctx.bind_col(f"c{k}", X.cast_long(
+        uint(i, hctx.salt("camp", k), 0, 20))) for k in range(3))
+    uctx = Ctx(user_r, seed, "$.purchase.user", lets)
 
     # per-user cumulative hit time — window cumsum partitioned by
     # user, parallel at any user count; DuckDB SUM(BIGINT)→HUGEINT,
     # cast straight back
-    cum = ("CAST((st + SUM(dt) OVER (PARTITION BY u ORDER BY j "
-           "ROWS UNBOUNDED PRECEDING)) AS BIGINT)")
-    hit_time = D(cum, cum)
+    def cum(st: str, dt: str, u: str, j: str) -> str:
+        return (f"CAST(({st} + SUM({dt}) OVER (PARTITION BY {u} ORDER BY "
+                f"{j} ROWS UNBOUNDED PRECEDING)) AS BIGINT)")
+    hit_time = D(cum(st_r.s, dt_r.s, user_r.s, j_r.s),
+                 cum(st_r.ss, dt_r.ss, user_r.ss, j_r.ss))
 
     # indicator algebra: c XOR k is 0 iff c = k, so 1 - min(1, c XOR k)
     # is the equality indicator (same trick as the weblog slow words)
@@ -1046,7 +981,7 @@ def purchase_log(n_users: int = 300, max_hits: int = 128,
         ("search_keywords", kw),
         ("event_list", events),
     ]
-    return Generated(cols, n, lets=lets, where=(j_r < nh_r))
+    return CompiledSchema(cols, lets, where=(j_r < nh_r), n=n)
 
 
 def remove_record_path(df: DataFrame, path: str) -> DataFrame:

@@ -10,6 +10,7 @@ measurement from bench ordering effects.
 """
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -25,11 +26,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    runs = 3
-    for a in sys.argv[1:]:
-        if a.startswith("--runs"):
-            runs = int(a.split("=", 1)[1])
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("names", nargs="+", help="registry query names")
+    ap.add_argument("--runs", type=int, default=3, help="runs per query")
+    args = ap.parse_args()
     spark = get_spark(app="time_query")
     spark.sparkContext.setLogLevel("ERROR")
     q = entrymod.queries()
@@ -40,9 +40,9 @@ def main() -> None:
      .agg(F.sum("l_quantity"))
      .write.format("noop").mode("overwrite").save())
     out = {}
-    for name in args:
+    for name in args.names:
         ts = []
-        for _ in range(runs):
+        for _ in range(args.runs):
             spark.sparkContext.setJobDescription(name)
             t0 = time.perf_counter()
             q[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()

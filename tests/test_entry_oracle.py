@@ -40,15 +40,19 @@ def test_window_names_resolve():
 
 def test_rendering_is_pure():
     """Compiled SQL depends only on schema and seed: compiling a schema
-    again, or building every oracle again, renders the same text on
-    both sides (lambda-variable names included)."""
+    or a canned generator again, or building every oracle again,
+    renders the same text on both sides (lambda-variable and let names
+    included)."""
     from nifi_datasynthesizer_spark import compile_schema
+    from nifi_datasynthesizer_spark import synthesizers as SZ
 
-    a, b = (compile_schema(entrymod.SYNTH_IDENT_SCHEMA, seed=2)
-            for _ in range(2))
-    assert a.duckdb_sql(100) == b.duckdb_sql(100)
-    assert ([d.ss for _, d in a.columns] + [d.ss for d in a.helpers.values()]
-            == [d.ss for _, d in b.columns] + [d.ss for d in b.helpers.values()])
+    for make in (lambda: compile_schema(entrymod.SYNTH_IDENT_SCHEMA, seed=2),
+                 lambda: SZ.weblog(n_users=20, events_per_user=5, seed=19)):
+        a, b = make(), make()
+        assert a.lets
+        assert a.duckdb_sql(100) == b.duckdb_sql(100)
+        assert ([d.ss for _, d in a.columns] + [d.ss for d in a.lets.values()]
+                == [d.ss for _, d in b.columns] + [d.ss for d in b.lets.values()])
     assert entrymod.oracle_sql() == _oracles
 
 

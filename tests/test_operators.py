@@ -1237,7 +1237,7 @@ def test_weblog_structure(spark):
     pool is long-tail shared (fewer distinct IPs than users), and
     query terms are head-heavy."""
     from nifi_datasynthesizer_spark import synthesizers as SZ
-    df = SZ.weblog(n_users=200, events_per_user=10, seed=19).df(spark)
+    df = SZ.weblog(n_users=200, events_per_user=10, seed=19).dataframe(spark)
     rows = df.orderBy("line_id").collect()
     assert len(rows) == 2000
     by_user = {}

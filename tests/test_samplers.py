@@ -127,6 +127,17 @@ def test_sampler_parity(spark, cls):
     compare_with_duckdb(cs.dataframe(spark, 400), cs.duckdb_sql(400))
 
 
+def test_changer_over_imei_parity(spark):
+    """A sampler under ``changer`` binds its draws into the table's lets
+    like a top-level one does, and still matches its DuckDB mirror."""
+    schema = [{"name": "rid", "class": "id"},
+              {"name": "v", "class": "changer", "every": 7,
+               "value": {"class": "imei"}}]
+    cs = compile_schema(schema, seed=13)
+    assert cs.lets
+    compare_with_duckdb(cs.dataframe(spark, 400), cs.duckdb_sql(400))
+
+
 def test_normal_moments():
     vals = [v for (v,) in rows([{"name": "v", "class": "normal",
                                  "mean": 50, "sd": 10}], n=5000)]
@@ -418,13 +429,13 @@ def _check_markov_walk(spark, max_chars):
 
     got = [r.message for r in
            SZ.markov_text(n, words=words, seed=seed, max_chars=max_chars)
-           .df(spark).orderBy("rec_id").collect()]
+           .dataframe(spark).orderBy("rec_id").collect()]
     assert got == expected
     # texts branch (not one degenerate walk stamped everywhere)
     assert len(set(got)) > 5
     if max_chars is not None:
         # the budget binds on some rows, else this case shows nothing
-        free = SZ.markov_text(n, words=words, seed=seed).sql()
+        free = SZ.markov_text(n, words=words, seed=seed).duckdb_sql()
         longer = duckdb.sql(f"SELECT count(*) FROM ({free}) "
                             f"WHERE length(message) > {max_chars}").fetchone()
         assert longer[0] > 0
@@ -447,8 +458,8 @@ def test_markov_char_budget(spark):
     """produceText mode: no message exceeds the char budget, and the
     walk stays a valid chain prefix (budget only truncates)."""
     from nifi_datasynthesizer_spark import synthesizers as SZ
-    lim = SZ.markov_text(40, words=30, seed=7, max_chars=60).df(spark)
-    free = SZ.markov_text(40, words=30, seed=7).df(spark)
+    lim = SZ.markov_text(40, words=30, seed=7, max_chars=60).dataframe(spark)
+    free = SZ.markov_text(40, words=30, seed=7).dataframe(spark)
     lim_rows = {r.rec_id: r.message for r in lim.collect()}
     free_rows = {r.rec_id: r.message for r in free.collect()}
     assert all(len(m) <= 60 for m in lim_rows.values())
@@ -464,9 +475,9 @@ def test_markov_seed_text_quotes_match_oracle(spark):
     g = SZ.markov_text(40, words=12, seed=2, seed_text=(
         "don't stop the c:\\dir now don't stop the band "
         "now don't stop the c:\\dir later don't stop"))
-    compare_with_duckdb(g.df(spark), g.sql())
+    compare_with_duckdb(g.dataframe(spark), g.duckdb_sql())
     assert any("'" in r.message and "\\" in r.message
-               for r in g.df(spark).collect())
+               for r in g.dataframe(spark).collect())
 
 
 def test_purchase_log_boost_semantics():
@@ -478,7 +489,7 @@ def test_purchase_log_boost_semantics():
     g = SZ.purchase_log(n_users=600, max_hits=64, seed=5)
     h0, h1 = SZ._PL_HOT_TERMS
     rates = duckdb.sql(f"""
-        WITH t AS ({g.sql()}),
+        WITH t AS ({g.duckdb_sql()}),
         f AS (SELECT event_list = '1' AS buy,
                      (country = 'United States'
                         AND list_contains(string_split(campaign_list, ','), '5'))
@@ -492,7 +503,7 @@ def test_purchase_log_boost_semantics():
     assert 0.35 < by_hot[True] < 0.65      # boosted ≈ 0.5
     assert by_hot[False] < 0.03            # base ≈ 0.01
     # session lengths vary per user (exponential mask, not a flat grid)
-    nper = duckdb.sql(f"WITH t AS ({g.sql()}) "
+    nper = duckdb.sql(f"WITH t AS ({g.duckdb_sql()}) "
                       "SELECT COUNT(DISTINCT cnt) FROM ("
                       "SELECT user_id, COUNT(*) AS cnt FROM t GROUP BY user_id)"
                       ).fetchone()[0]

@@ -15,6 +15,9 @@ SCHEMA = [
     {"name": "rec_id", "class": "id"},
     {"name": "qty", "class": "int", "min": 1, "max": 50},
     {"name": "who", "class": "name"},
+    # binds its two draws as lets: project() runs the lets projection
+    # beside the kept columns
+    {"name": "dev", "class": "imei"},
 ]
 
 
@@ -31,8 +34,8 @@ def test_project_streaming_matches_batch(spark, tmp_path):
         F.col("id").alias("value"),
         F.timestamp_seconds(F.lit(1700000000) + F.col("id")).alias("event_time"))
     stream = _file_stream(spark, tmp_path, idx, idx.schema)
-    out = cs.project(stream.withColumnRenamed("timestamp", "event_time"),
-                     index_col="value", keep=["event_time"])
+    assert cs.lets
+    out = cs.project(stream, index_col="value", keep=["event_time"])
     q = ST.run_to_memory(out, "synth_stream")
     q.awaitTermination(120)
     got = (spark.table("synth_stream").drop("event_time")
